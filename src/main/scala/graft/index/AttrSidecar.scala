@@ -111,8 +111,7 @@ object AttrSidecar {
         kwFields.map(f => expr(s"coalesce(CAST((${f.sql}) AS STRING), '')").as(s"kw_${f.name}")) ++
         numFields.map(f => expr(s"coalesce(CAST((${f.sql}) AS BIGINT), 0L)").as(s"num_${f.name}"))
 
-    spark.read.parquet(s"$indexDir/docs")
-      .select(cols: _*)
+    IndexBuilder.withDocsTable(spark, indexDir)(_.select(cols: _*))
       .repartition(nSlices, col("slice"))
       .sortWithinPartitions(col("slice"), col("doc_id"))
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>

@@ -1,8 +1,9 @@
 package graft.index
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft._
 import graft.functions.{Analyzer, Codec, DenseId}
 import graft.sources.HtmlText
@@ -272,8 +273,10 @@ object IndexBuilder {
     val nDocs = math.max(1L, readStats(spark, indexDir).n_docs)
     val nSlices = cfg.nSlices
     val withPos = cfg.positions
+    // the docs this build staged itself: `text` is there by construction,
+    // so even this text read opens the table with its declared schema
     def groupDocs(g: Int) =
-      spark.read.parquet(s"$indexDir/docs")
+      openTable(spark, indexDir, "docs", StagedDocsSchema)
         .where($"grp" === g) // partition pruning: 1/nGroups of the bytes
         .select($"doc_id", $"text")
         .as[(Long, String)]
@@ -1124,12 +1127,78 @@ object IndexBuilder {
     }
   }
 
-  // ---- readers --------------------------------------------------------
+  // ---- table schemas + readers ---------------------------------------
+  // Index tables open with DECLARED schemas (≙ Delta Lake keeping the
+  // table schema in its log): a bare spark.read.parquet runs a one-task
+  // job to read a footer and infer a schema the engine already knows —
+  // on small requests that job was up to 2 of every 5 per query. The
+  // schemas derive from the row types in model.scala, in the writers'
+  // column order with the `grp` partition column last, all nullable as
+  // parquet inference reports them (IndexSchemaSpec pins every writer to them).
+
+  private def nullable(s: StructType): StructType =
+    StructType(s.map(_.copy(nullable = true)))
+
+  /** `terms`: the dictionary, one [[TermStat]] row per term. */
+  val TermsSchema: StructType = nullable(Encoders.product[TermStat].schema)
+
+  /** `postings`: [[PostingRow]] with `grp` moved last (it is the
+    * directory partition column, so it is not stored in the files).
+    */
+  val PostingsSchema: StructType = {
+    val s = Encoders.product[PostingRow].schema
+    nullable(StructType(s.filterNot(_.name == "grp") :+ s("grp")))
+  }
+
+  /** Core `docs` columns every writer keeps: [[Doc]] + `slice` + `grp`.
+    * A from-scratch build also stores `text` (before `slice`); merged and
+    * purged indexes do not, so `text` is not part of the declared core.
+    */
+  val DocsSchema: StructType = nullable(StructType(Encoders.product[Doc].schema.fields ++
+    Seq(StructField("slice", IntegerType), StructField("grp", IntegerType))))
+
+  private val StagedDocsSchema: StructType = {
+    val (core, routing) = DocsSchema.fields.splitAt(DocsSchema.fieldIndex("slice"))
+    StructType((core :+ StructField("text", StringType)) ++ routing)
+  }
+
+  /** Opens table `name` of `indexDir` with `declared` when the index
+    * carries the current format stamp. An older index keeps the
+    * schema-inferring read: it may lack a declared column, and a declared
+    * read would turn a missing column into nulls instead of failing.
+    */
+  private def openTable(spark: SparkSession, indexDir: String, name: String,
+                        declared: StructType): DataFrame = {
+    val path = s"$indexDir/$name"
+    val reader = spark.read.option("basePath", path)
+    if (readFormatVersion(indexDir) >= FormatVersion) reader.schema(declared).parquet(path)
+    else reader.parquet(path)
+  }
+
+  /** The `docs` table. `withText` reads infer the on-disk schema: only a
+    * from-scratch build stores `text`, and a merged or purged index must
+    * fail such a read loudly rather than return null texts.
+    */
+  def readDocsTable(spark: SparkSession, indexDir: String, withText: Boolean = false): DataFrame =
+    if (withText) spark.read.option("basePath", s"$indexDir/docs").parquet(s"$indexDir/docs")
+    else openTable(spark, indexDir, "docs", DocsSchema)
+
+  /** `use` over the `docs` table, for caller-supplied expressions (doc
+    * filters, attribute SQL) that may name any docs column. When `use`
+    * does not resolve against the declared core columns (e.g. it reads
+    * `text`), it runs over the inferred schema, so such a read succeeds
+    * or fails exactly as the on-disk table allows. Analysis is eager, so
+    * no job runs twice.
+    */
+  def withDocsTable(spark: SparkSession, indexDir: String)(use: DataFrame => DataFrame): DataFrame =
+    try use(readDocsTable(spark, indexDir))
+    catch { case _: AnalysisException => use(readDocsTable(spark, indexDir, withText = true)) }
+
   def readDocs(spark: SparkSession, indexDir: String): Dataset[Doc] = {
     import spark.implicits._
     // built indexes carry (text, grp) in the docs table — column pruning
     // means this select never reads the text column off disk
-    spark.read.parquet(s"$indexDir/docs")
+    readDocsTable(spark, indexDir)
       .select("doc_id", "url", "warc_ts", "lang", "doc_len")
       .as[Doc]
   }
@@ -1156,11 +1225,10 @@ object IndexBuilder {
       s"""{"n_docs":${st.n_docs},"avg_dl":${st.avg_dl},"total_tokens":${st.total_tokens}}""")
   def readTerms(spark: SparkSession, indexDir: String): Dataset[TermStat] = {
     import spark.implicits._
-    spark.read.parquet(s"$indexDir/terms").as[TermStat]
+    openTable(spark, indexDir, "terms", TermsSchema).as[TermStat]
   }
   def readPostings(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.option("basePath", s"$indexDir/postings")
-      .parquet(s"$indexDir/postings")
+    openTable(spark, indexDir, "postings", PostingsSchema)
   def readMetrics(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.option("basePath", s"$indexDir/build_metrics")
       .parquet(s"$indexDir/build_metrics")

@@ -142,7 +142,7 @@ object SegmentFamily {
     IndexBuilder.build(spark, pages, segDir, cfg)
     // urls read back from the BUILT segment (resume-safe: identical on
     // every retry even if `pages` is a non-deterministic stream source)
-    val urls = spark.read.parquet(s"$segDir/docs").select($"url").as[String]
+    val urls = IndexBuilder.readDocsTable(spark, segDir).select($"url").as[String]
     read(root).filterNot(_.dir == segDir) // never tombstone the new segment
       .foreach(seg => Tombstones.deleteByUrls(spark, seg.dir, urls))
     append(spark, root, segDir)

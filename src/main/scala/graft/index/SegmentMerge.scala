@@ -54,8 +54,8 @@ object SegmentMerge {
       // dimension columns carry over — the merged postings are rebuilt
       // from the segments' blocks, so staged text isn't needed again.
       val docCols = Seq($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len")
-      val docsA = spark.read.parquet(s"$idxA/docs").select(docCols: _*)
-      val docsB = spark.read.parquet(s"$idxB/docs").select(docCols: _*)
+      val docsA = IndexBuilder.readDocsTable(spark, idxA).select(docCols: _*)
+      val docsB = IndexBuilder.readDocsTable(spark, idxB).select(docCols: _*)
         .withColumn("doc_id", $"doc_id" + offset)
       val nDocsAll = Seq(idxA, idxB).map(IndexBuilder.readStats(spark, _).n_docs).sum.max(1L)
       // same integral slice/grp formulas as IndexBuilder.build — one
@@ -70,7 +70,7 @@ object SegmentMerge {
         .partitionBy("grp")
         .parquet(s"$outDir/docs")
 
-      val st = spark.read.parquet(s"$outDir/docs")
+      val st = IndexBuilder.readDocsTable(spark, outDir)
         .agg(
           count(lit(1)).as("n_docs"),
           coalesce(avg($"doc_len"), lit(0.0)).as("avg_dl"),
@@ -193,7 +193,7 @@ object SegmentMerge {
     // docs: ids shift by base, slice/grp renumber — still disjoint ranges
     segDirs.zipWithIndex
       .map { case (d, i) =>
-        spark.read.option("basePath", s"$d/docs").parquet(s"$d/docs")
+        IndexBuilder.readDocsTable(spark, d)
           .select($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len", $"slice", $"grp")
           .withColumn("doc_id", $"doc_id" + bases(i))
           .withColumn("slice", $"slice" + sliceOffs(i))

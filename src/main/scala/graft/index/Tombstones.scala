@@ -154,8 +154,7 @@ object Tombstones {
     */
   def delete(spark: SparkSession, indexDir: String, pred: Column): Long = {
     import spark.implicits._
-    val ids = spark.read.parquet(s"$indexDir/docs")
-      .where(pred)
+    val ids = IndexBuilder.withDocsTable(spark, indexDir)(_.where(pred))
       .select($"slice".cast("int"), $"doc_id")
     applyDeletes(spark, indexDir, ids)
   }
@@ -165,7 +164,7 @@ object Tombstones {
     */
   def deleteByIds(spark: SparkSession, indexDir: String, ids: org.apache.spark.sql.Dataset[Long]): Long = {
     import spark.implicits._
-    val withSlice = spark.read.parquet(s"$indexDir/docs")
+    val withSlice = IndexBuilder.readDocsTable(spark, indexDir)
       .join(ids.toDF("doc_id"), Seq("doc_id"), "left_semi")
       .select($"slice".cast("int"), $"doc_id")
     applyDeletes(spark, indexDir, withSlice)
@@ -178,7 +177,7 @@ object Tombstones {
     */
   def deleteByUrls(spark: SparkSession, indexDir: String, urls: org.apache.spark.sql.Dataset[String]): Long = {
     import spark.implicits._
-    val withSlice = spark.read.parquet(s"$indexDir/docs")
+    val withSlice = IndexBuilder.readDocsTable(spark, indexDir)
       .join(urls.toDF("url"), Seq("url"), "left_semi")
       .select($"slice".cast("int"), $"doc_id")
     applyDeletes(spark, indexDir, withSlice)
@@ -340,7 +339,7 @@ object Tombstones {
       val deleted = deletedDf(spark, indexDir, gen, srcMeta.nSlices)
 
       // survivors keep relative order: new_id = dense rank of old doc_id
-      val survivors = spark.read.parquet(s"$indexDir/docs")
+      val survivors = IndexBuilder.readDocsTable(spark, indexDir)
         .select($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len")
         .join(deleted, Seq("doc_id"), "left_anti")
       val (remapped, nDocsL) =

@@ -557,8 +557,8 @@ object Facets {
     // semi-join BELOW the aggregation: the broadcast filter runs map-side,
     // so even the shuffle carries only fg-key rows, not the full corpus
     // histogram
-    spark.read.parquet(s"$indexDir/docs")
-      .select(expr(s"coalesce(CAST(($fieldSql) AS STRING), '')").as("v"))
+    IndexBuilder.withDocsTable(spark, indexDir)(
+      _.select(expr(s"coalesce(CAST(($fieldSql) AS STRING), '')").as("v")))
       .join(broadcast(keys), Seq("v"), "left_semi")
       .groupBy($"v")
       .agg(count(lit(1)).as("n"))
@@ -760,7 +760,7 @@ object Facets {
     // semantics, matching the dictionary's bg side). Tokenization MUST be
     // the index analyzer's — a `split(' ')` here diverges from the
     // dictionary on any multi-separator text and silently skews scores
-    val fg = spark.read.parquet(s"$indexDir/docs")
+    val fg = IndexBuilder.readDocsTable(spark, indexDir, withText = true)
       .select($"doc_id", $"text")
       .join(ids, Seq("doc_id"), "left_semi")
       .select($"text").as[String]

@@ -147,8 +147,7 @@ object FieldedSearch {
             finally cur.close()
           }
       } else {
-        val filterIds = spark.read.parquet(s"${fields.head.indexDir}/docs")
-          .where(docFilter)
+        val filterIds = IndexBuilder.withDocsTable(spark, fields.head.indexDir)(_.where(docFilter))
           .select($"slice".cast("int"), $"doc_id")
           .as[(Int, Long)]
         blocks
@@ -393,8 +392,7 @@ object FieldedSearch {
           run(slice, rows, () => AttrSidecar.openCursor(attrDir, slice, pred))
         }
       } else {
-        val filterIds = spark.read.parquet(s"$attrDir/docs")
-          .where(docFilter)
+        val filterIds = IndexBuilder.withDocsTable(spark, attrDir)(_.where(docFilter))
           .select($"slice".cast("int"), $"doc_id")
           .as[(Int, Long)]
         blocks
@@ -622,7 +620,7 @@ object FieldedSearch {
     // terms' postings), so AQE broadcasts it under the usual regimes.
     val candIds = candidates.select($"doc_id").distinct()
     val dlc = fields.map { f =>
-      spark.read.parquet(s"${f.indexDir}/docs")
+      IndexBuilder.readDocsTable(spark, f.indexDir)
         .select($"doc_id", ($"doc_len".cast("double") * f.boost).as("wdl"))
     }.reduce(_ unionByName _)
       .join(candIds, Seq("doc_id"), "left_semi")

@@ -5,6 +5,25 @@ import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
 import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
 
+/** Iterator wrapper used by the family export walks: offsets local ids
+  * to global and closes the sidecar cursor on exhaustion. Top-level (not
+  * an inner class) so task closures don't capture the MultiSearcher.
+  */
+private[query] final class GlobalHitIterator(
+    base: Iterator[(Long, Double)], docBase: Long, onExhausted: () => Unit
+) extends Iterator[Search.QueryHit] {
+  private var closed = false
+  def hasNext: Boolean = {
+    val h = base.hasNext
+    if (!h && !closed) { closed = true; onExhausted() }
+    h
+  }
+  def next(): Search.QueryHit = {
+    val (id, s) = base.next()
+    Search.QueryHit(docBase + id, s)
+  }
+}
+
 /** Query N immutable index segments as ONE logical index — no physical
   * merge (≙ Elasticsearch serving a search across its `{prefix}-yyyyMMdd`
   * indices, `ElasticSearchStorage.cs:293-320`; streaming micro-batch
@@ -39,26 +58,13 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   * unpruned family's. Defaults to `segmentDirs`. (Term-dict lookups over
   * non-selected segments are tiny — posting blocks of pruned segments are
   * still never opened.)
+  *
+  * Segments are assumed immutable for the searcher's lifetime: corpus
+  * stats are read once at construction and [[dfOf]] memoizes document
+  * frequencies. A segment directory rebuilt in place under a live
+  * searcher yields stale stats; construct a new searcher instead.
+  * [[dfOf]] is safe to call from several threads at once.
   */
-/** Iterator wrapper used by the family export walks: offsets local ids
-  * to global and closes the sidecar cursor on exhaustion. Top-level (not
-  * an inner class) so task closures don't capture the MultiSearcher.
-  */
-private[query] final class GlobalHitIterator(
-    base: Iterator[(Long, Double)], docBase: Long, onExhausted: () => Unit
-) extends Iterator[Search.QueryHit] {
-  private var closed = false
-  def hasNext: Boolean = {
-    val h = base.hasNext
-    if (!h && !closed) { closed = true; onExhausted() }
-    h
-  }
-  def next(): Search.QueryHit = {
-    val (id, s) = base.next()
-    Search.QueryHit(docBase + id, s)
-  }
-}
-
 final class MultiSearcher(
     val spark: SparkSession,
     segmentDirs: Seq[String],
@@ -92,11 +98,16 @@ final class MultiSearcher(
   // invocation, so nothing persists across bench runs.
   private val dfMemo = scala.collection.mutable.HashMap.empty[String, Option[Long]]
 
-  def dfOf(queryTerms: Seq[String]): Map[String, Long] = dfMemo.synchronized {
+  // The monitor guards only the memo, never the Spark job: concurrent
+  // callers snapshot their missing terms, resolve them unlocked (two
+  // callers may both resolve an overlapping term — same immutable
+  // dictionary, same answer) and store the results under the lock again.
+  def dfOf(queryTerms: Seq[String]): Map[String, Long] = {
     val t = queryTerms.distinct
-    val missing = t.filterNot(dfMemo.contains)
-    if (missing.nonEmpty) {
-      val got = familyDirs
+    val missing = dfMemo.synchronized(t.filterNot(dfMemo.contains))
+    val got =
+      if (missing.isEmpty) Map.empty[String, Long]
+      else familyDirs
         .map(d =>
           IndexBuilder.readTerms(spark, d).where($"term".isin(missing: _*)).toDF())
         .reduce(_ unionByName _)
@@ -104,9 +115,10 @@ final class MultiSearcher(
         .collect()
         .map(r => r.getString(0) -> r.getLong(1))
         .toMap
+    dfMemo.synchronized {
       missing.foreach(m => dfMemo(m) = got.get(m))
+      t.flatMap(x => dfMemo(x).map(x -> _)).toMap
     }
-    t.flatMap(x => dfMemo(x).map(x -> _)).toMap
   }
 
   private type BlockRow =
@@ -212,8 +224,7 @@ final class MultiSearcher(
       } else {
         val filterIds = segmentDirs.zipWithIndex
           .map { case (d, i) =>
-            spark.read.parquet(s"$d/docs")
-              .where(docFilter)
+            IndexBuilder.withDocsTable(spark, d)(_.where(docFilter))
               .select(lit(i).as("seg"), $"slice".cast("int"), $"doc_id")
           }
           .reduce(_ unionByName _)
@@ -375,8 +386,7 @@ final class MultiSearcher(
       } else {
         val filterIds = segmentDirs.zipWithIndex
           .map { case (d, i) =>
-            spark.read.parquet(s"$d/docs")
-              .where(docFilter)
+            IndexBuilder.withDocsTable(spark, d)(_.where(docFilter))
               .select(lit(i).as("seg"), $"slice".cast("int"), $"doc_id")
           }
           .reduce(_ unionByName _)

@@ -382,9 +382,12 @@ object QueryString {
     * streaming dual of [[Search.phraseTopK]] ([[BlockMaxWand.phraseMatches]]
     * walk, BM25 phrase-freq scoring, tombstones + pushed filter
     * composed). No top-k gate: a composed bool needs every match.
+    * `dfs`: the phrase terms' document frequencies (absent terms left
+    * out), resolved by the caller's per-query dictionary memo.
     */
   private def exportPhrase(spark: SparkSession, indexDir: String,
-                           phraseTerms: Seq[String], attrFilter: AttrPred): DataFrame = {
+                           phraseTerms: Seq[String], attrFilter: AttrPred,
+                           dfs: Map[String, Long]): DataFrame = {
     import spark.implicits._
     import BlockMaxWand.{BlockRef, PostingIter}
     val distinctTerms = phraseTerms.distinct
@@ -393,9 +396,6 @@ object QueryString {
     }.toArray
     val stats = IndexBuilder.readStats(spark, indexDir)
     val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".isin(distinctTerms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
     if (distinctTerms.exists(t => !dfs.contains(t)))
       return spark.emptyDataset[Search.QueryHit].toDF()
     val idfSum = phraseTerms.map(t => NaiveBm25.idf(stats.n_docs, dfs(t))).sum
@@ -497,7 +497,7 @@ object QueryString {
         knownDfs = dfsFor(dir, terms))
     }
     def exportPhrase(terms: Seq[String], ctx: AttrPred): DataFrame =
-      QueryString.exportPhrase(spark, indexDir, terms, ctx)
+      QueryString.exportPhrase(spark, indexDir, terms, ctx, dfsFor(indexDir, terms))
     def filterIds(pred: AttrPred): DataFrame =
       filterDocIds(spark, indexDir, pred)
     def expandPattern(p: String, max: Int, field: Option[String]): Seq[String] =
@@ -521,12 +521,14 @@ object QueryString {
       msOf(field).expandFuzzyTerms(t, edits, max)
   }
 
-  /** Plain (non-fuzzy) term leaves of the AST grouped by field — the
-    * prefetch set for one-job term-stats resolution in the tree paths.
+  /** Plain (non-fuzzy) term leaves and phrase terms of the AST grouped
+    * by field (phrases search the default field) — the prefetch set for
+    * one-job term-stats resolution in the tree paths.
     */
   private def plainTermsByField(n: Node): Map[Option[String], Seq[String]] = {
     def walk(n: Node): Seq[(Option[String], String)] = n match {
       case TermLeaf(t, _, 0, f) => Seq((f, t))
+      case PhraseLeaf(ts, _)    => ts.map(t => (None, t))
       case Bool(m, s, x)        => (m ++ s ++ x).flatMap(walk)
       case _                    => Nil
     }

@@ -23,6 +23,15 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   *
   * Slices are disjoint doc ranges, so slice-local top-k union ⊇ global
   * top-k — the merge is exact.
+  *
+  * Steps 1 and 2 open `terms` and `postings` with the schemas declared in
+  * [[graft.index.IndexBuilder]], so neither pays a schema-inference job
+  * (a bare parquet read runs one per table just to read a footer): a
+  * term query is three jobs — the dictionary collect, the slice shuffle's
+  * map stage and the result. An index stamped below the current format
+  * falls back to inference, and reads of the docs `text` column keep it,
+  * since merged and purged indexes store no text and must fail such a
+  * read loudly instead of returning nulls.
   */
 object Search {
 
@@ -208,8 +217,7 @@ object Search {
         // ad-hoc Column path: matching doc ids per slice (12-byte rows;
         // docs scan is column-pruned to the predicate columns + slice +
         // doc_id)
-        val filterIds = spark.read.parquet(s"$indexDir/docs")
-          .where(docFilter)
+        val filterIds = IndexBuilder.withDocsTable(spark, indexDir)(_.where(docFilter))
           .select($"slice".cast("int"), $"doc_id")
           .as[(Int, Long)]
         blocks
@@ -752,7 +760,7 @@ object Search {
   ): DataFrame = {
     import spark.implicits._
     require(maxQueryTerms > 0, "maxQueryTerms must be positive")
-    val srcRows = spark.read.parquet(s"$indexDir/docs")
+    val srcRows = IndexBuilder.readDocsTable(spark, indexDir, withText = true)
       .where($"doc_id" === docId) // pushdown: row-group skip on doc_id
       .select($"text").collect()
     require(srcRows.nonEmpty, s"more_like_this: doc $docId not found")
@@ -795,7 +803,7 @@ object Search {
     val cols =
       if (withText) Seq($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len", $"text")
       else Seq($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len")
-    val docs = spark.read.parquet(s"$indexDir/docs")
+    val docs = IndexBuilder.readDocsTable(spark, indexDir, withText)
       .where($"doc_id".isin(ids: _*)) // pushdown: row-group skip on doc_id
       .select(cols: _*)
     hits.join(broadcast(docs), Seq("doc_id"), "left")
@@ -893,8 +901,7 @@ object Search {
           finally cur.close()
         }
       } else {
-        val filterIds = spark.read.parquet(s"$indexDir/docs")
-          .where(docFilter)
+        val filterIds = IndexBuilder.withDocsTable(spark, indexDir)(_.where(docFilter))
           .select($"slice".cast("int"), $"doc_id")
           .as[(Int, Long)]
         blocks
@@ -1229,8 +1236,7 @@ object Search {
           out.iterator
         }
       } else {
-        val filterIds = spark.read.parquet(s"$indexDir/docs")
-          .where(docFilter)
+        val filterIds = IndexBuilder.withDocsTable(spark, indexDir)(_.where(docFilter))
           .select($"slice".cast("int"), $"doc_id")
           .as[(Int, Long)]
         blocks

@@ -1,0 +1,89 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, CyclicBarrier, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.index.IndexBuilder
+import graft.index.IndexBuilder.BuildConfig
+import graft.query.{MultiSearcher, QueryString, Search}
+import graft.sources.PagesGen
+
+/** The Spark jobs a query runs, on a small index. Index tables open with
+  * declared schemas, so no query runs a parquet schema-inference job (its
+  * stage is named `parquet at ...`); a term query is dictionary lookup +
+  * shuffle map stage + result, at most 3 jobs; a query_string tree
+  * resolves all its leaves' terms in one dictionary job.
+  */
+class QueryJobsSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+
+  private lazy val dir: String = {
+    val d = Files.createTempDirectory("graft-jobs").toString
+    IndexBuilder.build(spark, PagesGen.pages(spark, 300, 4), d,
+      BuildConfig(nPartitions = 4, nGroups = 2, nSlices = 4, blockSize = 16))
+    d
+  }
+
+  /** Stage names of every job `body` runs, one entry per job. */
+  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val seen = new ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          seen.add(e.stageInfos.map(_.name))
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try { body; TestBus.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    seen.asScala.toSeq
+  }
+
+  private def assertNoInference(what: String, jobs: Seq[Seq[String]]): Unit = {
+    val inferring = jobs.flatten.filter(_.startsWith("parquet at"))
+    assert(inferring.isEmpty, s"$what ran schema-inference jobs: $inferring")
+  }
+
+  test("term, phrase, prefix and query_string queries run no schema-inference job") {
+    val dir = this.dir // build outside the measured windows
+    val term = jobsOf(Search.topK(spark, dir, Seq("w0", "w1"), "or", 10).collect())
+    assertNoInference("Search.topK", term)
+    assert(term.size <= 3, s"Search.topK ran ${term.size} jobs: $term")
+    assertNoInference("Search.phraseTopK", jobsOf(Search.phraseTopK(spark, dir, Seq("w0", "w1"), 10).collect()))
+    assertNoInference("Search.prefixTopK", jobsOf(Search.prefixTopK(spark, dir, "w1", 10).collect()))
+    // a two-leaf tree (phrase + term) takes the tree evaluator
+    val tree = jobsOf(QueryString.topK(spark, dir, "\"w0 w1\" w2", 10).collect())
+    assertNoInference("QueryString.topK", tree)
+    val dictionary = tree.filter(_.exists(_.startsWith("collect at QueryString.scala")))
+    assert(dictionary.size == 1, s"tree dictionary jobs: $tree")
+  }
+
+  test("MultiSearcher.dfOf from two threads equals the serial answers") {
+    val a = Seq("w0", "w1", "w2", "nosuchterm")
+    val b = Seq("w2", "w3", "w1", "w4")
+    val serialA = new MultiSearcher(spark, Seq(dir)).dfOf(a)
+    val serialB = new MultiSearcher(spark, Seq(dir)).dfOf(b)
+    assert(serialA.size == 3 && serialB.size == 4)
+    val shared = new MultiSearcher(spark, Seq(dir))
+    val start = new CyclicBarrier(2)
+    def call(ts: Seq[String]) = new Callable[Map[String, Long]] {
+      def call(): Map[String, Long] = { start.await(60, TimeUnit.SECONDS); shared.dfOf(ts) }
+    }
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val fa = pool.submit(call(a))
+      val fb = pool.submit(call(b))
+      assert(fa.get(120, TimeUnit.SECONDS) == serialA)
+      assert(fb.get(120, TimeUnit.SECONDS) == serialB)
+    } finally pool.shutdown()
+    // answers now come from the memo, still equal
+    assert(shared.dfOf(a ++ b) == serialA ++ serialB)
+  }
+}
