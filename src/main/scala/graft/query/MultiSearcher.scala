@@ -1,9 +1,12 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
+import graft.index.{AttrPred, AttrSidecar, IndexBuilder, Tombstones}
 import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
+import graft.query.Search.QueryHit
+import MultiSearcher.{Block, PhraseQ, SegCtx, TermQ}
 
 /** Iterator wrapper used by the family export walks: offsets local ids
   * to global and closes the sidecar cursor on exhaustion. Top-level (not
@@ -24,10 +27,13 @@ private[query] final class GlobalHitIterator(
   }
 }
 
-/** Query N immutable index segments as ONE logical index — no physical
-  * merge (≙ Elasticsearch serving a search across its `{prefix}-yyyyMMdd`
-  * indices, `ElasticSearchStorage.cs:293-320`; streaming micro-batch
-  * segments become queryable the moment they commit).
+/** The BM25 searcher over a segment set: N immutable index segments
+  * queried as ONE logical index, no physical merge (≙ Elasticsearch
+  * answering one index or a whole `{prefix}-yyyyMMdd` family through the
+  * same search path, `ElasticSearchStorage.cs:293-320`; streaming
+  * micro-batch segments become queryable the moment they commit). A
+  * single index is a one-segment view: [[Search]]'s term-level
+  * operators are `new MultiSearcher(spark, Seq(indexDir))` calls.
   *
   * Semantics (rank-identical to searching the physically merged index):
   *   - global stats: N = Σ n_docs, avgdl = Σ tokens / N;
@@ -42,10 +48,19 @@ private[query] final class GlobalHitIterator(
   *     posting for the global avgdl). Bounds only gate skips — scores are
   *     always exact.
   *
-  * Scale shape: one job; the only shuffle moves the matched posting
+  * One-segment rules — a single index answers, scores and skips exactly
+  * as a dedicated single-index path would: when the stats family is one
+  * segment, avgdl is that segment's stored `avg_dl`, the WAND bound is its
+  * stored per-block `max_impact`, and the doc-id base is 0.
+  *
+  * Scale shape: a top-k query is three jobs — the dictionary collect
+  * (≤ |terms| × |segments| rows, summed on the driver), the exchange's
+  * map stage and the result. The only shuffle moves the matched posting
   * blocks (and filter ids) of all segments keyed by (segment, slice) —
   * disjoint doc ranges, so per-key local top-k union ⊇ global top-k and
-  * the final merge is exact over (Σ nSlices)·k rows.
+  * the final merge is exact over (Σ nSlices)·k rows. Each query's task
+  * context (terms, idfs, dirs, bases, tombstone generations) rides one
+  * broadcast; task closures never capture the searcher.
   *
   * `explicitBases`: global docID base per segment. Defaults to cumulative
   * n_docs in `segmentDirs` order; pass absolute bases when querying a
@@ -79,354 +94,78 @@ final class MultiSearcher(
   private val familyStats =
     if (statsFamily.isEmpty) segStats
     else familyDirs.map(IndexBuilder.readStats(spark, _))
+  private val oneSegment = familyDirs.size == 1
   val bases: Seq[Long] =
     explicitBases.getOrElse(segStats.map(_.n_docs).scanLeft(0L)(_ + _).init)
   require(bases.length == segmentDirs.length)
   val nDocs: Long = familyStats.map(_.n_docs).sum
   private val totalTokens = familyStats.map(_.total_tokens).sum
   val avgDl: Double =
-    if (nDocs > 0 && totalTokens > 0) totalTokens.toDouble / nDocs else 1.0
+    if (oneSegment) { val s = familyStats.head.avg_dl; if (s > 0) s else 1.0 }
+    else if (nDocs > 0 && totalTokens > 0) totalTokens.toDouble / nDocs
+    else 1.0
 
-  /** Global df per query term: Σ over the stats family (one tiny job;
-    * per-segment terms tables are term-sorted parquet → pushdown each).
-    */
   // Per-searcher dictionary memo: the dictionary is immutable for this
   // searcher's fixed segment list, and a composed query (query_string
   // tree) resolves term stats leaf by leaf — without the memo a Q-leaf
   // tree runs Q sequential dictionary jobs. Absent terms memo as None so
-  // repeated misses cost nothing. Searchers are constructed per query
-  // invocation, so nothing persists across bench runs.
+  // repeated misses cost nothing; expansions seed it with the doc_freq
+  // their own dictionary read returned. Searchers are constructed per
+  // query invocation, so nothing persists across bench runs.
   private val dfMemo = scala.collection.mutable.HashMap.empty[String, Option[Long]]
 
-  // The monitor guards only the memo, never the Spark job: concurrent
-  // callers snapshot their missing terms, resolve them unlocked (two
-  // callers may both resolve an overlapping term — same immutable
-  // dictionary, same answer) and store the results under the lock again.
+  /** Global df per query term: Σ over the stats family of each segment's
+    * pushdown dictionary read, in one job with no shuffle.
+    *
+    * The monitor guards only the memo, never the Spark job: concurrent
+    * callers snapshot their missing terms, resolve them unlocked (two
+    * callers may both resolve an overlapping term — same immutable
+    * dictionary, same answer) and store the results under the lock again.
+    */
   def dfOf(queryTerms: Seq[String]): Map[String, Long] = {
     val t = queryTerms.distinct
     val missing = dfMemo.synchronized(t.filterNot(dfMemo.contains))
-    val got =
-      if (missing.isEmpty) Map.empty[String, Long]
+    val got: Map[String, Long] =
+      if (missing.isEmpty) Map.empty
       else familyDirs
-        .map(d =>
-          IndexBuilder.readTerms(spark, d).where($"term".isin(missing: _*)).toDF())
+        .map(d => IndexBuilder.readTerms(spark, d).where($"term".isin(missing: _*))
+          .select($"term", $"doc_freq"))
         .reduce(_ unionByName _)
-        .groupBy($"term").agg(sum($"doc_freq").as("df"))
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
+        .as[(String, Long)]
+        .collect() // ≤ |missing| × |family| rows
+        .groupMapReduce(_._1)(_._2)(_ + _)
     dfMemo.synchronized {
       missing.foreach(m => dfMemo(m) = got.get(m))
       t.flatMap(x => dfMemo(x).map(x -> _)).toMap
     }
   }
 
-  private type BlockRow =
-    (Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Int, Int)
-
-  /** Matched blocks of all segments, keyed by (seg, slice); the WAND bound
-    * column is derived from max_tf/min_dl at the GLOBAL avgdl.
-    */
-  private def segBlocks(terms: Seq[String]): org.apache.spark.sql.Dataset[BlockRow] =
-    segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
-            $"max_tf", $"min_dl"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[BlockRow]
-
-  /** BM25 top-k over all segments; filter context applies per segment
-    * (scores unchanged): `attrFilter` streams each segment's slice
-    * sidecar node-locally (no doc-id exchange — see
-    * [[graft.index.AttrSidecar]]); `docFilter` is the ad-hoc Column path.
-    */
-  def topK(
-      queryTerms: Seq[String],
-      mode: String,
-      k: Int,
-      docFilter: Column = null,
-      attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil,
-      minShouldMatch: Int = 1
-  ): DataFrame = {
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val terms = queryTerms.distinct
-    val dfs = dfOf(terms)
-    if (mode == "and" && terms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-
-    val n = nDocs
-    val idfs = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bTerms = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    // per-segment tombstone generation, resolved once driver-side
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val avg = avgDl
-    val isAnd = mode == "and"
-    val msm = minShouldMatch
-
-    def wand(seg: Int, slice: Int, rows: Iterator[BlockRow], base: DocFilter): Iterator[Search.QueryHit] = {
-      val (qTerms, qIdfs, exT) = bTerms.value
-      val byTerm = rows.toArray.groupBy(_._3)
-      def iterOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs
-            .sortBy(r => (r._5, r._4))
-            .map(r =>
-              BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11,
-                IndexBuilder.impact(r._12, r._13, avg)))
-          new PostingIter(ti, idf, refs, avg)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => iterOf(t, ti, qIdfs(ti)) }.toArray
-      var filter = base
-      val exIters = exT.iterator.flatMap(t => iterOf(t, 0, 0.0)).toArray
-      if (exIters.nonEmpty)
-        filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-      val tomb = bTombs.value(seg)
-      if (tomb != null) filter = tomb.compose(slice, filter)
-      val hits =
-        if (isAnd) {
-          if (iters.length < qTerms.length) Array.empty[BlockMaxWand.Hit]
-          else BlockMaxWand.and(iters, k, filter)
-        } else BlockMaxWand.or(iters, k, filter, msm)
-      val docBase = bBases.value(seg)
-      hits.iterator.map(h => Search.QueryHit(docBase + h.docId, h.score))
-    }
-
-    val blocks = segBlocks(present ++ exTerms)
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks
-          .groupByKey(r => (r._1, r._2))
-          .flatMapGroups { (key, rows) => wand(key._1, key._2, rows, null) }
-      else if (attrFilter != null) {
-        val pred = attrFilter
-        blocks
-          .groupByKey(r => (r._1, r._2))
-          .flatMapGroups { (key, rows) =>
-            val cur = AttrSidecar.openCursor(bDirs.value(key._1), key._2, pred)
-            try wand(key._1, key._2, rows, cur)
-            finally cur.close()
-          }
-      } else {
-        val filterIds = segmentDirs.zipWithIndex
-          .map { case (d, i) =>
-            IndexBuilder.withDocsTable(spark, d)(_.where(docFilter))
-              .select(lit(i).as("seg"), $"slice".cast("int"), $"doc_id")
-          }
-          .reduce(_ unionByName _)
-          .as[(Int, Int, Long)]
-        blocks
-          .groupByKey(r => (r._1, r._2))
-          .cogroup(filterIds.groupByKey(r => (r._1, r._2))) { (key, rows, fids) =>
-            val allow = fids.map(_._3).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              wand(key._1, key._2, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
-  }
-
-  /** Dictionary expansion over the whole family: candidates come from
+  /** Dictionary expansion over the stats family: candidates come from
     * each segment's term-sorted parquet (pushdown range/regex cut),
     * global df = Σ per-segment df, cap by (global df desc, term) —
     * exactly the expansion the physically MERGED index would produce, so
-    * family answers stay rank-identical to merged-index answers.
+    * family answers stay rank-identical to merged-index answers. The
+    * expanded terms' dfs seed the memo, so the walk that follows runs no
+    * second dictionary job.
     */
-  private def expand(where: Column, maxExpansions: Int): Seq[String] =
-    familyDirs
-      .map(d => IndexBuilder.readTerms(spark, d).where(where).toDF())
-      .reduce(_ unionByName _)
-      .groupBy($"term").agg(sum($"doc_freq").as("doc_freq"))
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
-
-  /** ES prefix query over the segment family (Search.prefixTopK's
-    * multi-segment rendition — streaming-ingest families get the full
-    * term-level query surface without a physical merge).
-    */
-  def prefixTopK(
-      prefix: String, k: Int, maxExpansions: Int = 128,
-      docFilter: Column = null, attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    require(prefix.nonEmpty, "empty prefix")
-    val exps = expand($"term".startsWith(prefix), maxExpansions)
-    if (exps.isEmpty) spark.emptyDataset[Search.QueryHit].toDF()
-    else topK(exps, "or", k, docFilter, attrFilter, mustNot)
+  private def expand(where: Column, maxExpansions: Int): Seq[String] = {
+    val reads = familyDirs.map(d =>
+      IndexBuilder.readTerms(spark, d).where(where).select($"term", $"doc_freq"))
+    val dfs =
+      if (reads.size == 1) reads.head
+      else reads.reduce(_ unionByName _).groupBy($"term").agg(sum($"doc_freq").as("doc_freq"))
+    val rows = dfs.orderBy(desc("doc_freq"), asc("term")).limit(maxExpansions)
+      .as[(String, Long)].collect() // ≤ maxExpansions rows
+    dfMemo.synchronized(rows.foreach { case (t, df) => dfMemo(t) = Some(df) })
+    rows.map(_._1).toSeq
   }
-
-  /** ES fuzzy query over the family (per-family global-df cap). */
-  def fuzzyTopK(
-      term: String, k: Int, maxEdits: Int = 1, maxExpansions: Int = 64,
-      docFilter: Column = null, attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    require(term.nonEmpty, "empty term")
-    require(maxEdits >= 0 && maxEdits <= 2, "ES caps fuzziness at 2 edits")
-    val exps = expand(
-      abs(length($"term") - lit(term.length)) <= maxEdits &&
-        levenshtein($"term", lit(term)) <= maxEdits,
-      maxExpansions)
-    if (exps.isEmpty) spark.emptyDataset[Search.QueryHit].toDF()
-    else topK(exps, "or", k, docFilter, attrFilter, mustNot)
-  }
-
-  /** ES wildcard query over the family (`*`/`?`; literal-prefix cut). */
-  def wildcardTopK(
-      pattern: String, k: Int, maxExpansions: Int = 128,
-      docFilter: Column = null, attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    require(pattern.nonEmpty, "empty wildcard pattern")
-    val sb = new StringBuilder
-    pattern.foreach {
-      case '*' => sb.append(".*")
-      case '?' => sb.append('.')
-      case c   => sb.append(java.util.regex.Pattern.quote(c.toString))
-    }
-    val prefix = pattern.takeWhile(c => c != '*' && c != '?')
-    regexpTopK(sb.toString(), k, maxExpansions, docFilter, attrFilter, mustNot, prefix)
-  }
-
-  /** ES regexp query over the family (anchored Java regex). */
-  def regexpTopK(
-      regex: String, k: Int, maxExpansions: Int = 128,
-      docFilter: Column = null, attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil, prefixHint: String = ""
-  ): DataFrame = {
-    require(regex.nonEmpty, "empty regex")
-    val base = $"term".rlike(s"^(?:$regex)$$")
-    val exps = expand(
-      if (prefixHint.isEmpty) base else $"term".startsWith(prefixHint) && base,
-      maxExpansions)
-    if (exps.isEmpty) spark.emptyDataset[Search.QueryHit].toDF()
-    else topK(exps, "or", k, docFilter, attrFilter, mustNot)
-  }
-
-  /** Exact-phrase top-k across segments (BlockMaxWand.phrase contract). */
-  def phraseTopK(
-      phraseTerms: Seq[String],
-      k: Int,
-      docFilter: Column = null,
-      attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    val dfs = dfOf(distinctTerms)
-    if (distinctTerms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-    val idfSum = phraseTerms.map(t => NaiveBm25.idf(nDocs, dfs(t))).sum
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets, idfSum, exTerms.toArray))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val avg = avgDl
-
-    def run(seg: Int, slice: Int, rows: Iterator[BlockRow], base: DocFilter): Iterator[Search.QueryHit] = {
-      val (qTerms, offs, idfS, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._3)
-      def refsOf(t: String) = byTerm(t)
-        .sortBy(r => (r._5, r._4))
-        .map(r =>
-          BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11,
-            IndexBuilder.impact(r._12, r._13, avg)))
-      var filter = base
-      val exIters = exT.iterator.filter(byTerm.contains)
-        .map(t => new PostingIter(0, 0.0, refsOf(t), avg)).toArray
-      if (exIters.nonEmpty)
-        filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-      val tomb = bTombs.value(seg)
-      if (tomb != null) filter = tomb.compose(slice, filter)
-      if (!qTerms.forall(byTerm.contains)) return Iterator.empty
-      val iters = qTerms.map(t => new PostingIter(0, 0.0, refsOf(t), avg))
-      val docBase = bBases.value(seg)
-      BlockMaxWand.phrase(iters, offs, idfS, k, filter)
-        .iterator.map(h => Search.QueryHit(docBase + h.docId, h.score))
-    }
-
-    val blocks = segBlocks(distinctTerms ++ exTerms)
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(r => (r._1, r._2)).flatMapGroups { (key, rows) => run(key._1, key._2, rows, null) }
-      else if (attrFilter != null) {
-        val pred = attrFilter
-        blocks
-          .groupByKey(r => (r._1, r._2))
-          .flatMapGroups { (key, rows) =>
-            val cur = AttrSidecar.openCursor(bDirs.value(key._1), key._2, pred)
-            try run(key._1, key._2, rows, cur)
-            finally cur.close()
-          }
-      } else {
-        val filterIds = segmentDirs.zipWithIndex
-          .map { case (d, i) =>
-            IndexBuilder.withDocsTable(spark, d)(_.where(docFilter))
-              .select(lit(i).as("seg"), $"slice".cast("int"), $"doc_id")
-          }
-          .reduce(_ unionByName _)
-          .as[(Int, Int, Long)]
-        blocks
-          .groupByKey(r => (r._1, r._2))
-          .cogroup(filterIds.groupByKey(r => (r._1, r._2))) { (key, rows, fids) =>
-            val allow = fids.map(_._3).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(key._1, key._2, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
-  }
-
-  /** Declared attribute schema (name → kind) — segments of one family
-    * share it by construction (merges regenerate sidecars from the same
-    * spec), so the head segment's meta is authoritative.
-    */
-  def attrSchema: Map[String, String] =
-    IndexBuilder.readMeta(segmentDirs.head).attrs.map(a => a.name -> a.kind).toMap
 
   /** Public expansion lists for the composed-query layer (same global-df
-    * ordering as the family rewrites above).
+    * ordering as the rewrites below).
     */
   def expandPatternTerms(pattern: String, maxExpansions: Int): Seq[String] = {
-    require(pattern.nonEmpty, "empty wildcard pattern")
-    val sb = new StringBuilder
-    pattern.foreach {
-      case '*' => sb.append(".*")
-      case '?' => sb.append('.')
-      case c   => sb.append(java.util.regex.Pattern.quote(c.toString))
-    }
-    val prefix = pattern.takeWhile(c => c != '*' && c != '?')
-    val base = $"term".rlike(s"^(?:${sb.toString()})$$")
-    expand(if (prefix.isEmpty) base else $"term".startsWith(prefix) && base, maxExpansions)
+    val (regex, prefix) = Search.wildcardToRegex(pattern)
+    expandRegex(regex, prefix, maxExpansions)
   }
 
   def expandFuzzyTerms(term: String, maxEdits: Int, maxExpansions: Int): Seq[String] = {
@@ -438,10 +177,237 @@ final class MultiSearcher(
       maxExpansions)
   }
 
-  /** FULL match set (global doc_id, exact BM25 score) — the family dual
-    * of [[Search.exportMatches]], the building block the composed
-    * query_string tree needs. Streams each (segment, slice)'s walk; no
-    * top-k cut, no block-max gate (no threshold exists).
+  private def expandRegex(regex: String, prefixHint: String, maxExpansions: Int): Seq[String] = {
+    require(regex.nonEmpty, "empty regex")
+    val base = $"term".rlike(s"^(?:$regex)$$")
+    expand(if (prefixHint.isEmpty) base else $"term".startsWith(prefixHint) && base, maxExpansions)
+  }
+
+  private def none: DataFrame = spark.emptyDataset[QueryHit].toDF()
+
+  private def topOf(hits: Dataset[QueryHit], k: Int): DataFrame =
+    hits.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
+
+  /** This query's task context, in one broadcast. */
+  private def context[Q](q: Q): Broadcast[SegCtx[Q]] =
+    spark.sparkContext.broadcast(SegCtx(segmentDirs.toArray, bases.toArray,
+      segmentDirs.map(Tombstones.handle).toArray, avgDl, oneSegment, q))
+
+  /** Posting blocks of `terms` in every segment (pushdown `term IN` on
+    * each segment's term-sorted postings).
+    */
+  private def blocks(terms: Seq[String]): Dataset[Block] =
+    segmentDirs.zipWithIndex
+      .map { case (d, i) =>
+        IndexBuilder.readPostings(spark, d)
+          .where($"term".isin(terms: _*))
+          .select(
+            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
+            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
+            $"max_impact", $"max_tf", $"min_dl"
+          )
+      }
+      .reduce(_ unionByName _)
+      .as[Block]
+
+  /** Blocks of `terms` grouped by (segment, slice), each group handed to
+    * `walk` with this query's broadcast context.
+    */
+  private def walkGroups[Q, R: Encoder](terms: Seq[String], q: Q)(
+      walk: (SegCtx[Q], Int, Int, Array[Block]) => Iterator[R]
+  ): Dataset[R] = {
+    val b = context(q)
+    blocks(terms).groupByKey(r => (r.seg, r.slice))
+      .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, rows.toArray))
+  }
+
+  /** The filter-context dispatch of the top-k walks: no filter;
+    * `attrFilter` streamed from the slice's own sidecar (no doc-id
+    * exchange — see [[graft.index.AttrSidecar]]); or the ad-hoc
+    * `docFilter` Column, whose matching (segment, slice, doc_id) rows
+    * co-group with the blocks. `walk` is eager (it returns a materialized
+    * top-k), so the sidecar cursor closes right after it.
+    */
+  private def walkSlices[Q](terms: Seq[String], docFilter: Column, attrFilter: AttrPred, q: Q)(
+      walk: (SegCtx[Q], Int, Int, Array[Block], DocFilter) => Iterator[QueryHit]
+  ): Dataset[QueryHit] =
+    if (docFilter == null) {
+      val pred = attrFilter
+      walkGroups(terms, q) { (c, seg, slice, rows) =>
+        if (pred == null) walk(c, seg, slice, rows, null)
+        else {
+          val cur = AttrSidecar.openCursor(c.dirs(seg), slice, pred)
+          try walk(c, seg, slice, rows, cur)
+          finally cur.close()
+        }
+      }
+    } else {
+      val b = context(q)
+      val filterIds = segmentDirs.zipWithIndex
+        .map { case (d, i) =>
+          IndexBuilder.withDocsTable(spark, d)(_.where(docFilter))
+            .select(lit(i).as("seg"), $"slice".cast("int"), $"doc_id")
+        }
+        .reduce(_ unionByName _)
+        .as[(Int, Int, Long)]
+      blocks(terms).groupByKey(r => (r.seg, r.slice))
+        .cogroup(filterIds.groupByKey(r => (r._1, r._2))) { (key, rows, fids) =>
+          val allow = fids.map(_._3).toArray
+          if (allow.isEmpty) Iterator.empty
+          else {
+            java.util.Arrays.sort(allow)
+            walk(b.value, key._1, key._2, rows.toArray, new FilterIter(allow))
+          }
+        }
+    }
+
+  /** A term query compiled against the view's stats, with the terms that
+    * are present; None when nothing can match (AND with an absent term,
+    * or fewer present terms than `minShouldMatch`). An ES term boost
+    * multiplies the term's whole contribution, so it folds into the
+    * term's idf and WAND's block bounds scale with it.
+    */
+  private def termQuery(
+      queryTerms: Seq[String], mode: String, mustNot: Seq[String], minShouldMatch: Int,
+      k: Int = 0, boosts: Seq[Double] = null, after: BlockMaxWand.Hit = null,
+      msmField: String = null
+  ): Option[(Seq[String], TermQ)] = {
+    val terms = queryTerms.distinct
+    val dfs = dfOf(terms)
+    val isAnd = mode == "and"
+    val present = terms.filter(dfs.contains)
+    if ((isAnd && present.size < terms.size) || present.isEmpty || present.size < minShouldMatch)
+      None
+    else {
+      val boostOf: Map[String, Double] =
+        if (boosts == null) Map.empty[String, Double].withDefaultValue(1.0)
+        else queryTerms.zip(boosts).toMap.withDefaultValue(1.0)
+      val idfs = terms.map(t => boostOf(t) * NaiveBm25.idf(nDocs, dfs.getOrElse(t, 0L))).toArray
+      Some((present, TermQ(terms.toArray, idfs, mustNot.distinct.toArray, isAnd,
+        minShouldMatch, k, after, msmField)))
+    }
+  }
+
+  /** BM25 top-k over the view — the contract of [[Search.topK]] (filter
+    * context, must_not, tombstones, msm, terms_set, search_after, boosts)
+    * with family-global stats and ids. `searchAfter`'s doc id is global.
+    */
+  def topK(
+      queryTerms: Seq[String],
+      mode: String,
+      k: Int,
+      docFilter: Column = null,
+      attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil,
+      minShouldMatch: Int = 1,
+      searchAfter: (Double, Long) = null,
+      boosts: Seq[Double] = null,
+      msmField: String = null
+  ): DataFrame = {
+    require(docFilter == null || attrFilter == null,
+      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
+    require(msmField == null || mode != "and", "terms_set (msmField) is OR-mode only")
+    require(boosts == null || boosts.size == queryTerms.size,
+      "boosts must align 1:1 with queryTerms")
+    require(boosts == null || boosts.forall(_ > 0.0), "boosts must be positive")
+    val after = if (searchAfter == null) null else BlockMaxWand.Hit(searchAfter._2, searchAfter._1)
+    termQuery(queryTerms, mode, mustNot, minShouldMatch, k, boosts, after, msmField) match {
+      case None => none
+      case Some((present, q)) =>
+        topOf(walkSlices(present ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.termWalk), k)
+    }
+  }
+
+  /** [[Search.prefixTopK]] over the view: family-df expansion cap. */
+  def prefixTopK(
+      prefix: String, k: Int, maxExpansions: Int = 128,
+      docFilter: Column = null, attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil
+  ): DataFrame = {
+    require(prefix.nonEmpty, "empty prefix")
+    orTopK(expand($"term".startsWith(prefix), maxExpansions), k, docFilter, attrFilter, mustNot)
+  }
+
+  /** [[Search.fuzzyTopK]] over the view. */
+  def fuzzyTopK(
+      term: String, k: Int, maxEdits: Int = 1, maxExpansions: Int = 64,
+      docFilter: Column = null, attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil
+  ): DataFrame =
+    orTopK(expandFuzzyTerms(term, maxEdits, maxExpansions), k, docFilter, attrFilter, mustNot)
+
+  /** [[Search.wildcardTopK]] over the view. */
+  def wildcardTopK(
+      pattern: String, k: Int, maxExpansions: Int = 128,
+      docFilter: Column = null, attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil
+  ): DataFrame =
+    orTopK(expandPatternTerms(pattern, maxExpansions), k, docFilter, attrFilter, mustNot)
+
+  /** [[Search.regexpTopK]] over the view. */
+  def regexpTopK(
+      regex: String, k: Int, maxExpansions: Int = 128,
+      docFilter: Column = null, attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil, prefixHint: String = ""
+  ): DataFrame =
+    orTopK(expandRegex(regex, prefixHint, maxExpansions), k, docFilter, attrFilter, mustNot)
+
+  private def orTopK(exps: Seq[String], k: Int, docFilter: Column, attrFilter: AttrPred,
+                     mustNot: Seq[String]): DataFrame =
+    if (exps.isEmpty) none else topK(exps, "or", k, docFilter, attrFilter, mustNot)
+
+  /** Phrase query compiled against the view's stats; None when a phrase
+    * term is absent.
+    */
+  private def phraseQuery(phraseTerms: Seq[String], mustNot: Seq[String], k: Int = 0,
+                          slop: Int = 0): Option[PhraseQ] = {
+    val distinctTerms = phraseTerms.distinct // first-occurrence order
+    val dfs = dfOf(distinctTerms)
+    if (distinctTerms.exists(t => !dfs.contains(t))) None
+    else Some(PhraseQ(
+      distinctTerms.toArray,
+      distinctTerms.map(t =>
+        phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray).toArray,
+      // phrase position j → distinct-term index (slop > 0 walk)
+      phraseTerms.map(distinctTerms.indexOf).toArray,
+      slop,
+      // idf summed over every phrase POSITION (duplicate terms count per
+      // occurrence — Lucene PhraseQuery shape; the oracle mirrors it)
+      phraseTerms.map(t => NaiveBm25.idf(nDocs, dfs(t))).sum,
+      mustNot.distinct.toArray,
+      k))
+  }
+
+  /** [[Search.phraseTopK]] over the view (phrase idf from global dfs). */
+  def phraseTopK(
+      phraseTerms: Seq[String],
+      k: Int,
+      docFilter: Column = null,
+      attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil,
+      slop: Int = 0
+  ): DataFrame = {
+    require(phraseTerms.nonEmpty, "empty phrase")
+    require(slop >= 0, "negative slop")
+    require(docFilter == null || attrFilter == null,
+      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
+    phraseQuery(phraseTerms, mustNot, k, slop) match {
+      case None => none
+      case Some(q) =>
+        topOf(walkSlices(q.terms.toSeq ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.phraseWalk), k)
+    }
+  }
+
+  /** Declared attribute schema (name → kind) — segments of one family
+    * share it by construction (merges regenerate sidecars from the same
+    * spec), so the head segment's meta is authoritative.
+    */
+  def attrSchema: Map[String, String] =
+    IndexBuilder.readMeta(segmentDirs.head).attrs.map(a => a.name -> a.kind).toMap
+
+  /** [[Search.exportMatches]] over the view: each (segment, slice)
+    * streams its full scored match set with global ids — the term leaf
+    * of the composed query_string tree.
     */
   def exportMatches(
       queryTerms: Seq[String],
@@ -449,133 +415,293 @@ final class MultiSearcher(
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
-  ): DataFrame = {
-    val terms = queryTerms.distinct
-    val dfs = dfOf(terms)
-    val isAnd = mode == "and"
-    if (isAnd && terms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[Search.QueryHit].toDF()
-    val idfs = terms.map(t => NaiveBm25.idf(nDocs, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bTerms = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val avg = avgDl
-    val msm = minShouldMatch
-    val pred = attrFilter
+  ): DataFrame =
+    termQuery(queryTerms, mode, mustNot, minShouldMatch) match {
+      case None => none
+      case Some((present, q)) =>
+        val pred = attrFilter
+        walkGroups(present ++ q.exclude, q)(MultiSearcher.exportWalk(_, _, _, _, pred)).toDF()
+    }
 
-    segBlocks(present ++ exTerms)
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val (qTerms, qIdfs, exT) = bTerms.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def iterOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11,
-                IndexBuilder.impact(r._12, r._13, avg)))
-            new PostingIter(ti, idf, refs, avg)
-          }
-        val iters = qTerms.iterator.zipWithIndex
-          .flatMap { case (t, ti) => iterOf(t, ti, qIdfs(ti)) }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(bDirs.value(seg), slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(t => iterOf(t, 0, 0.0)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val docBase = bBases.value(seg)
-          val baseIt = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-          new GlobalHitIterator(baseIt, docBase, () => predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          })
-        }
-      }
-      .toDF()
-  }
-
-  /** FULL exact-phrase match set over the family (global ids, BM25
-    * phrase-freq scores at the GLOBAL avgdl) — the family dual of the
-    * single-index phrase export.
+  /** FULL exact-phrase match set (global ids, BM25 phrase-freq scores) —
+    * the phrase leaf of the query_string tree. No top-k gate: a composed
+    * bool needs every match.
     */
-  def exportPhrase(
-      phraseTerms: Seq[String],
-      attrFilter: AttrPred = null
+  def exportPhrase(phraseTerms: Seq[String], attrFilter: AttrPred = null): DataFrame =
+    phraseQuery(phraseTerms, Nil) match {
+      case None => none
+      case Some(q) =>
+        val pred = attrFilter
+        walkGroups(q.terms.toSeq, q)(MultiSearcher.phraseExportWalk(_, _, _, _, pred)).toDF()
+    }
+
+  /** [[Search.collapseTopK]] over the view: one best hit per keyword
+    * value per (segment, slice) task, then one global winner per value,
+    * top-k. Global stats and ids, so a family's answer equals the merged
+    * index's.
+    */
+  def collapseTopK(
+      queryTerms: Seq[String],
+      mode: String,
+      kwField: String,
+      k: Int,
+      attrFilter: AttrPred = null,
+      mustNot: Seq[String] = Nil,
+      minShouldMatch: Int = 1,
+      valueCap: Int = 1 << 20
   ): DataFrame = {
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    val dfs = dfOf(distinctTerms)
-    if (distinctTerms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-    val idfSum = phraseTerms.map(t => NaiveBm25.idf(nDocs, dfs(t))).sum
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets, idfSum))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val avg = avgDl
-    val pred = attrFilter
-    segBlocks(distinctTerms)
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val (qTerms, offs, idfS) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        if (!qTerms.forall(byTerm.contains)) Iterator.empty
-        else {
-          def refsOf(t: String) = byTerm(t).sortBy(r => (r._5, r._4))
-            .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-          val iters = qTerms.map(t => new PostingIter(0, 0.0, refsOf(t), avg))
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(bDirs.value(seg), slice, pred)
-          val cur = filter
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val docBase = bBases.value(seg)
-          val out = BlockMaxWand.phraseMatches(iters, offs, filter)
-            .map { case (id, freq, dl) =>
-              Search.QueryHit(docBase + id, idfS * IndexBuilder.impact(freq, dl, avg))
-            }
-          cur match { case c: AutoCloseable => c.close(); case _ => }
-          out
-        }
-      }
-      .toDF()
+    require(valueCap > 0, "valueCap must be positive")
+    termQuery(queryTerms, mode, mustNot, minShouldMatch) match {
+      case None => spark.emptyDataset[(String, Long, Double)].toDF(kwField, "doc_id", "score")
+      case Some((present, q)) =>
+        val pred = attrFilter
+        val fld = kwField
+        val perSlice = walkGroups(present ++ q.exclude, q)(
+          MultiSearcher.collapseWalk(_, _, _, _, pred, fld, valueCap)).toDF(fld, "doc_id", "score")
+        // global: one winner per value, then top-k groups by their winner
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(fld)).orderBy(desc("score"), asc("doc_id"))
+        perSlice
+          .withColumn("rn", row_number().over(w))
+          .where($"rn" === 1)
+          .drop("rn")
+          .orderBy(desc("score"), asc("doc_id"))
+          .limit(k)
+    }
   }
 
-  /** Global doc ids admitted by a pure filter, score 0 — per-segment
-    * sidecar enumeration (tombstones composed), base-offset to global.
+  /** Global doc ids admitted by a pure filter, score 0 — per-(segment,
+    * slice) sidecar enumeration (tombstones composed), base-offset to
+    * global. STREAMED, never buffered: a broad filter like lang:en admits
+    * most of a slice.
     */
   def filterDocIds(pred: AttrPred): DataFrame = {
-    val slicesOf = segmentDirs.map(d => IndexBuilder.readMeta(d).nSlices)
-    val tasks = segmentDirs.indices.flatMap(s => (0 until slicesOf(s)).map(sl => (s, sl)))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    spark.createDataset(tasks).repartition(math.min(tasks.size, 32))
-      .flatMap { case (seg, slice) =>
-        val cursor = AttrSidecar.openCursor(bDirs.value(seg), slice, pred)
-        val tomb = bTombs.value(seg)
-        val f: DocFilter = if (tomb == null) cursor else tomb.compose(slice, cursor)
-        val docBase = bBases.value(seg)
-        // streamed, never buffered (broad filters admit most of a slice)
-        Filters.enumerate(f, 0L, () => cursor.close())
-          .map(id => Search.QueryHit(docBase + id, 0.0))
+    val tasks = segmentDirs.indices.flatMap(s =>
+      (0 until IndexBuilder.readMeta(segmentDirs(s)).nSlices).map(sl => (s, sl))).toArray
+    val b = context(tasks)
+    spark.range(tasks.length).as[Long]
+      .flatMap { i =>
+        val c = b.value
+        val (seg, slice) = c.q(i.toInt)
+        val cursor = AttrSidecar.openCursor(c.dirs(seg), slice, pred)
+        val docBase = c.bases(seg)
+        Filters.enumerate(c.filter(seg, slice, cursor, Array.empty), 0L, () => cursor.close())
+          .map(id => QueryHit(docBase + id, 0.0))
       }
       .toDF()
+  }
+}
+
+object MultiSearcher {
+
+  /** A matched posting block of segment `seg`. */
+  private[query] final case class Block(
+      seg: Int, slice: Int, term: String, block_id: Int, doc_id_min: Long, doc_id_max: Long,
+      count: Int, deltas: Array[Byte], tfs: Array[Byte], dls: Array[Byte], poss: Array[Byte],
+      max_impact: Double, max_tf: Int, min_dl: Int)
+
+  /** A compiled term query: distinct terms with their (boosted) idfs. */
+  private[query] final case class TermQ(
+      terms: Array[String], idfs: Array[Double], exclude: Array[String], isAnd: Boolean,
+      msm: Int, k: Int, after: BlockMaxWand.Hit, msmField: String)
+
+  /** A compiled phrase: distinct terms, their phrase offsets, the
+    * position → distinct-term chain and the positional idf sum.
+    */
+  private[query] final case class PhraseQ(
+      terms: Array[String], offsets: Array[Array[Int]], chain: Array[Int], slop: Int,
+      idfSum: Double, exclude: Array[String], k: Int)
+
+  /** One query's task context: the view's segments (dirs, doc-id bases,
+    * tombstone generations), avgdl, its bound rule and the query `q`.
+    */
+  private[query] final case class SegCtx[Q](
+      dirs: Array[String], bases: Array[Long], tombs: Array[Tombstones.Handle],
+      avgDl: Double, storedBounds: Boolean, q: Q) {
+
+    /** One term's blocks as a doc-ordered cursor. The WAND bound is the
+      * stored `max_impact` on a one-segment view, else impact(max_tf,
+      * min_dl) at the view's avgdl.
+      */
+    def iter(rows: Array[Block], termIdx: Int, idf: Double): PostingIter =
+      new PostingIter(termIdx, idf,
+        rows.sortBy(r => (r.doc_id_min, r.block_id)).map(r =>
+          BlockRef(r.doc_id_min, r.doc_id_max, r.count, r.deltas, r.tfs, r.dls, r.poss,
+            if (storedBounds) r.max_impact else IndexBuilder.impact(r.max_tf, r.min_dl, avgDl))),
+        avgDl)
+
+    /** `base` ∧ none of `exclude` ∧ not tombstoned, in one (segment, slice). */
+    def filter(seg: Int, slice: Int, base: DocFilter, exclude: Array[PostingIter]): DocFilter = {
+      val f = if (exclude.isEmpty) base else Filters.and(base, new NotFilter(new PostingSet(exclude)))
+      val tomb = tombs(seg)
+      if (tomb == null) f else tomb.compose(slice, f)
+    }
+
+    def global(seg: Int, hits: Array[BlockMaxWand.Hit]): Iterator[QueryHit] = {
+      val docBase = bases(seg)
+      hits.iterator.map(h => QueryHit(docBase + h.docId, h.score))
+    }
+  }
+
+  /** Query-term cursors (termIdx = query position) of the present terms. */
+  private def termIters(c: SegCtx[TermQ], terms: Map[String, Array[Block]]): Array[PostingIter] =
+    c.q.terms.indices.flatMap(ti => terms.get(c.q.terms(ti)).map(c.iter(_, ti, c.q.idfs(ti)))).toArray
+
+  private def excludeIters(c: SegCtx[_], exclude: Array[String],
+                           terms: Map[String, Array[Block]]): Array[PostingIter] =
+    exclude.flatMap(t => terms.get(t).map(c.iter(_, 0, 0.0)))
+
+  private def closeOf(cursor: AutoCloseable): () => Unit =
+    () => if (cursor != null) cursor.close()
+
+  /** Block-max WAND top-k of one (segment, slice): AND, or OR with a
+    * fixed or per-doc (terms_set) minimum_should_match.
+    */
+  private def termWalk(c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
+                       base: DocFilter): Iterator[QueryHit] = {
+    val q = c.q
+    val terms = rows.groupBy(_.term)
+    val iters = termIters(c, terms)
+    val filter = c.filter(seg, slice, base, excludeIters(c, q.exclude, terms))
+    // terms_set: the per-doc required count streams from this slice's own
+    // sidecar (monotone cursor — scored pivots strictly increase); closed
+    // eagerly since or() returns a materialized Array
+    val msmReader = if (q.msmField == null) null else AttrSidecar.openReader(c.dirs(seg), slice)
+    val msmOf: Long => Int =
+      if (msmReader == null) null
+      else {
+        val fi = msmReader.numIndex(q.msmField) // loud on undeclared
+        id =>
+          if (msmReader.seek(id)) {
+            // a required-count above Int.MaxValue must clamp, not wrap
+            // negative (a wrapped toInt would silently turn "required"
+            // into "match any one term")
+            val v = msmReader.numValue(fi)
+            if (v < 0L || v > Int.MaxValue.toLong) Int.MaxValue else v.toInt
+          } else Int.MaxValue
+      }
+    // search_after in segment-local ids: a cursor in an earlier segment
+    // sits below every local id, one in a later segment above them all
+    val after =
+      if (q.after == null) null else BlockMaxWand.Hit(q.after.docId - c.bases(seg), q.after.score)
+    val hits =
+      try {
+        if (q.isAnd) {
+          if (iters.length < q.terms.length) Array.empty[BlockMaxWand.Hit]
+          else BlockMaxWand.and(iters, q.k, filter, after)
+        } else BlockMaxWand.or(iters, q.k, filter, q.msm, after, msmOf)
+      } finally if (msmReader != null) msmReader.close()
+    c.global(seg, hits)
+  }
+
+  /** Positional phrase top-k of one (segment, slice). */
+  private def phraseWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, rows: Array[Block],
+                         base: DocFilter): Iterator[QueryHit] = {
+    val q = c.q
+    val terms = rows.groupBy(_.term)
+    val filter = c.filter(seg, slice, base, excludeIters(c, q.exclude, terms))
+    if (!q.terms.forall(terms.contains)) Iterator.empty
+    else {
+      val iters = q.terms.map(t => c.iter(terms(t), 0, 0.0)) // idf unused in phrase scoring
+      c.global(seg,
+        if (q.slop == 0) BlockMaxWand.phrase(iters, q.offsets, q.idfSum, q.k, filter)
+        else BlockMaxWand.phraseSlop(iters, q.chain, q.slop, q.idfSum, q.k, filter))
+    }
+  }
+
+  /** Full scored match set of one (segment, slice), STREAMED (a hot
+    * term's slice can match 10^8 docs); the sidecar cursor closes when
+    * the consumer exhausts the iterator.
+    */
+  private def exportWalk(c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
+                         pred: AttrPred): Iterator[QueryHit] = {
+    val terms = rows.groupBy(_.term)
+    val iters = termIters(c, terms)
+    if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) Iterator.empty
+    else {
+      val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)
+      val filter = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, terms))
+      new GlobalHitIterator(BlockMaxWand.scoredMatches(iters, c.q.isAnd, c.q.msm, filter),
+        c.bases(seg), closeOf(cursor))
+    }
+  }
+
+  /** Full phrase match set of one (segment, slice); phraseMatches
+    * materializes it, so the sidecar cursor closes eagerly.
+    */
+  private def phraseExportWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, rows: Array[Block],
+                               pred: AttrPred): Iterator[QueryHit] = {
+    val terms = rows.groupBy(_.term)
+    if (!c.q.terms.forall(terms.contains)) Iterator.empty
+    else {
+      val iters = c.q.terms.map(t => c.iter(terms(t), 0, 0.0))
+      val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)
+      val docBase = c.bases(seg)
+      try BlockMaxWand.phraseMatches(iters, c.q.offsets, c.filter(seg, slice, cursor, Array.empty))
+        .map { case (id, freq, dl) =>
+          QueryHit(docBase + id, c.q.idfSum * IndexBuilder.impact(freq, dl, c.avgDl))
+        }
+      finally closeOf(cursor)()
+    }
+  }
+
+  /** One best hit per keyword value of one (segment, slice). */
+  private def collapseWalk(c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
+                           pred: AttrPred, fld: String,
+                           valueCap: Int): Iterator[(String, Long, Double)] = {
+    val terms = rows.groupBy(_.term)
+    val iters = termIters(c, terms)
+    if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) return Iterator.empty
+    val segDir = c.dirs(seg)
+    val docBase = c.bases(seg)
+    val cursor = if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
+    val filter = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, terms))
+    val reader = AttrSidecar.openReader(segDir, slice)
+    val kwIdx = reader.kwIndex(fld)
+    // One best hit per value within the task — a task-local COMBINER
+    // capped at `valueCap` distinct values: beyond the cap NEW values
+    // stream straight through to the global winner-per-value window
+    // (Spark's shuffle spills; task memory stays ≤ cap entries), existing
+    // values keep combining. Results are identical either way — the
+    // downstream window already picks one global winner per value; the
+    // map only shrinks the exchange from match-count to
+    // nSlices×|values| when the keyword honors its bounded-cardinality
+    // contract (the batch-filter cap treatment, `Searcher.attrAllowListCap`).
+    var closed = false
+    def closeAll(): Unit = if (!closed) {
+      closed = true
+      reader.close()
+      closeOf(cursor)()
+    }
+    val tc = org.apache.spark.TaskContext.get()
+    if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeAll())
+    val best = scala.collection.mutable.HashMap.empty[String, (Long, Double)]
+    val streamed = BlockMaxWand.scoredMatches(iters, c.q.isAnd, c.q.msm, filter)
+      .flatMap { case (id, s) =>
+        if (!reader.seek(id)) Nil
+        else {
+          val v = reader.kwValue(kwIdx)
+          val gid = docBase + id
+          best.get(v) match {
+            case Some((bid, bs)) =>
+              if (s > bs || (s == bs && gid < bid)) best.update(v, (gid, s))
+              Nil
+            case None =>
+              if (best.size < valueCap) { best.update(v, (gid, s)); Nil }
+              else (v, gid, s) :: Nil
+          }
+        }
+      }
+    // the map drains only AFTER the match stream exhausts (++ takes its
+    // right side by name)
+    val drained = streamed ++ best.iterator.map { case (v, (id, s)) => (v, id, s) }
+    new scala.collection.AbstractIterator[(String, Long, Double)] {
+      def hasNext: Boolean = {
+        val h = drained.hasNext
+        if (!h) closeAll()
+        h
+      }
+      def next(): (String, Long, Double) = drained.next()
+    }
   }
 }

@@ -2,8 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSchema, AttrSidecar, IndexBuilder, Tombstones}
-import graft.index.IndexBuilder.impact
+import graft.index.{AttrPred, AttrSchema}
 
 /** ES/Lucene `query_string` — the Kibana search-bar mini-language the
   * reference's users type all day (its exporter provisions the index
@@ -49,14 +48,16 @@ import graft.index.IndexBuilder.impact
   *
   * Scale shape: the tree is evaluated bottom-up as full per-clause match
   * sets (ES pays the same — a composed bool has no cross-clause WAND
-  * bound). Every scoring leaf is one [[Search.exportMatches]] /
-  * positional walk that STREAMS its slice's matches (never buffered);
-  * every filter that is AND-reachable from the root is compiled into ONE
-  * composed [[AttrPred]] and pushed into every leaf walk's sidecar
-  * cursor — zero-exchange, so `source:x AND (a OR b)` scans only x's
-  * docs. Combines are doc_id equi-joins/aggregations (shuffle bounded by
-  * match-set sizes, AQE-planned). Flat single-level queries short-circuit
-  * to the block-max-gated [[Search.topK]] fast path.
+  * bound) on [[MultiSearcher]] views — a single index is a one-segment
+  * view, a segment family a multi-segment one, and the tree logic is the
+  * same. Every scoring leaf is one [[MultiSearcher.exportMatches]] /
+  * [[MultiSearcher.exportPhrase]] walk that STREAMS its slice's matches
+  * (never buffered); every filter that is AND-reachable from the root is
+  * compiled into ONE composed [[AttrPred]] and pushed into every leaf
+  * walk's sidecar cursor — zero-exchange, so `source:x AND (a OR b)` scans
+  * only x's docs. Combines are doc_id equi-joins/aggregations (shuffle
+  * bounded by match-set sizes, AQE-planned). Flat single-level queries
+  * short-circuit to the block-max-gated [[MultiSearcher.topK]] fast path.
   */
 object QueryString {
 
@@ -354,173 +355,6 @@ object QueryString {
   private def conj(a: AttrPred, b: AttrPred): AttrPred =
     if (a == null) b else if (b == null) a else AttrPred.And(Seq(a, b))
 
-  // ----------------------------------------------------------- leaf eval
-  private def expandPattern(spark: SparkSession, indexDir: String,
-                            pattern: String, maxExpansions: Int): Seq[String] = {
-    import spark.implicits._
-    val (regex, prefix) = Search.wildcardToRegex(pattern)
-    val base = IndexBuilder.readTerms(spark, indexDir)
-    val cut = if (prefix.isEmpty) base else base.where($"term".startsWith(prefix))
-    cut.where($"term".rlike(s"^(?:$regex)$$"))
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-  }
-
-  private def expandFuzzy(spark: SparkSession, indexDir: String,
-                          term: String, maxEdits: Int, maxExpansions: Int): Seq[String] = {
-    import spark.implicits._
-    IndexBuilder.readTerms(spark, indexDir)
-      .where(abs(length($"term") - lit(term.length)) <= maxEdits)
-      .where(levenshtein($"term", lit(term)) <= maxEdits)
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-  }
-
-  /** Full match set of an exact phrase as (doc_id, score) — the
-    * streaming dual of [[Search.phraseTopK]] ([[BlockMaxWand.phraseMatches]]
-    * walk, BM25 phrase-freq scoring, tombstones + pushed filter
-    * composed). No top-k gate: a composed bool needs every match.
-    * `dfs`: the phrase terms' document frequencies (absent terms left
-    * out), resolved by the caller's per-query dictionary memo.
-    */
-  private def exportPhrase(spark: SparkSession, indexDir: String,
-                           phraseTerms: Seq[String], attrFilter: AttrPred,
-                           dfs: Map[String, Long]): DataFrame = {
-    import spark.implicits._
-    import BlockMaxWand.{BlockRef, PostingIter}
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    if (distinctTerms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-    val idfSum = phraseTerms.map(t => NaiveBm25.idf(stats.n_docs, dfs(t))).sum
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets, idfSum))
-    val tomb = Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
-    val blocks = IndexBuilder.readPostings(spark, indexDir)
-      .where($"term".isin(distinctTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qTerms, offs, idfS) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      if (!qTerms.forall(byTerm.contains)) Iterator.empty
-      else {
-        val iters = qTerms.map { t =>
-          val refs = byTerm(t).sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(0, 0.0, refs, avgDl)
-        }
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val cur = filter
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        val out = BlockMaxWand.phraseMatches(iters, offs, filter)
-          .map { case (id, freq, dl) => Search.QueryHit(id, idfS * impact(freq, dl, avgDl)) }
-        cur match { case c: AutoCloseable => c.close(); case _ => }
-        out
-      }
-    }.toDF()
-  }
-
-  /** Doc ids admitted by a pure filter (sidecar enumeration per slice,
-    * tombstones composed) as (doc_id, score=0) — the membership set a
-    * filter contributes when it must stand alone (OR position, or a
-    * pure-filter root). AND-reachable filters never take this path (they
-    * ride the leaf cursors).
-    */
-  private def filterDocIds(spark: SparkSession, indexDir: String, pred: AttrPred): DataFrame = {
-    import spark.implicits._
-    val meta = IndexBuilder.readMeta(indexDir)
-    val tomb = Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    // STREAM the enumeration (never buffer a slice's id set — a broad
-    // filter like lang:en admits most of the slice); the cursor closes
-    // when the consumer exhausts the iterator
-    spark.range(meta.nSlices).as[Long].flatMap { sl =>
-      val slice = sl.toInt
-      val cursor = AttrSidecar.openCursor(idxDir, slice, pred)
-      val f: DocFilter = if (tomb == null) cursor else tomb.compose(slice, cursor)
-      Filters.enumerate(f, 0L, () => cursor.close()).map(Search.QueryHit(_, 0.0))
-    }.toDF()
-  }
-
-  // ------------------------------------------------------------ backends
-  /** Execution target for the tree evaluator: a single index or a whole
-    * segment family — the tree logic is identical, only the leaf walks
-    * differ (per-index vs family-global stats).
-    */
-  private trait Backend {
-    def spark: SparkSession
-    def exportTerms(terms: Seq[String], ctx: AttrPred, field: Option[String]): DataFrame
-    def exportPhrase(terms: Seq[String], ctx: AttrPred): DataFrame
-    def filterIds(pred: AttrPred): DataFrame
-    def expandPattern(p: String, max: Int, field: Option[String]): Seq[String]
-    def expandFuzzy(t: String, edits: Int, max: Int, field: Option[String]): Seq[String]
-  }
-
-  private final class IndexBackend(
-      val spark: SparkSession, indexDir: String, fields: Map[String, String]
-  ) extends Backend {
-    // a fielded leaf walks ITS index (own postings, stats, sidecar — the
-    // shared doc-id space makes the combines field-agnostic)
-    private def dirOf(f: Option[String]): String = f.map(fields).getOrElse(indexDir)
-    // per-query dictionary memo, warmed by [[prefetchDfs]] with every
-    // plain term in the AST — a Q-leaf tree then resolves term stats in
-    // one dictionary job per index instead of one per leaf. Negative
-    // results memo as None.
-    private val dfMemo = scala.collection.mutable.HashMap.empty[(String, String), Option[Long]]
-    private def dfsFor(dir: String, terms: Seq[String]): Map[String, Long] = {
-      import spark.implicits._
-      val t = terms.distinct
-      val missing = t.filterNot(x => dfMemo.contains((dir, x)))
-      if (missing.nonEmpty) {
-        val got = IndexBuilder.readTerms(spark, dir)
-          .where($"term".isin(missing: _*))
-          .collect().map(r => r.term -> r.doc_freq).toMap
-        missing.foreach(m => dfMemo((dir, m)) = got.get(m))
-      }
-      t.flatMap(x => dfMemo((dir, x)).map(x -> _)).toMap
-    }
-    def prefetchDfs(byField: Map[Option[String], Seq[String]]): Unit =
-      byField.foreach { case (f, ts) => dfsFor(dirOf(f), ts) }
-    def exportTerms(terms: Seq[String], ctx: AttrPred, field: Option[String]): DataFrame = {
-      val dir = dirOf(field)
-      Search.exportMatches(spark, dir, terms, "or", attrFilter = ctx,
-        knownDfs = dfsFor(dir, terms))
-    }
-    def exportPhrase(terms: Seq[String], ctx: AttrPred): DataFrame =
-      QueryString.exportPhrase(spark, indexDir, terms, ctx, dfsFor(indexDir, terms))
-    def filterIds(pred: AttrPred): DataFrame =
-      filterDocIds(spark, indexDir, pred)
-    def expandPattern(p: String, max: Int, field: Option[String]): Seq[String] =
-      QueryString.expandPattern(spark, dirOf(field), p, max)
-    def expandFuzzy(t: String, edits: Int, max: Int, field: Option[String]): Seq[String] =
-      QueryString.expandFuzzy(spark, dirOf(field), t, edits, max)
-  }
-
-  private final class FamilyBackend(
-      val spark: SparkSession, ms: MultiSearcher, fields: Map[String, MultiSearcher]
-  ) extends Backend {
-    private def msOf(f: Option[String]): MultiSearcher = f.map(fields).getOrElse(ms)
-    def exportTerms(terms: Seq[String], ctx: AttrPred, field: Option[String]): DataFrame =
-      msOf(field).exportMatches(terms, "or", attrFilter = ctx)
-    def exportPhrase(terms: Seq[String], ctx: AttrPred): DataFrame =
-      ms.exportPhrase(terms, ctx)
-    def filterIds(pred: AttrPred): DataFrame = ms.filterDocIds(pred)
-    def expandPattern(p: String, max: Int, field: Option[String]): Seq[String] =
-      msOf(field).expandPatternTerms(p, max)
-    def expandFuzzy(t: String, edits: Int, max: Int, field: Option[String]): Seq[String] =
-      msOf(field).expandFuzzyTerms(t, edits, max)
-  }
-
   /** Plain (non-fuzzy) term leaves and phrase terms of the AST grouped
     * by field (phrases search the default field) — the prefetch set for
     * one-job term-stats resolution in the tree paths.
@@ -537,43 +371,44 @@ object QueryString {
 
   // ----------------------------------------------------------- tree eval
   /** Evaluate to the full (doc_id, score) match set; `ctx` is the
-    * AND-context filter pushed into every walk below this node.
+    * AND-context filter pushed into every walk below this node. `view`
+    * maps a leaf's field to the searcher it scores against (None = the
+    * default field; phrases and filters always use it).
     */
-  private def eval(be: Backend, node: Node, ctx: AttrPred, maxExpansions: Int): DataFrame = {
-    val spark = be.spark
-    import spark.implicits._
+  private def eval(view: Option[String] => MultiSearcher, node: Node, ctx: AttrPred,
+                   maxExpansions: Int): DataFrame = {
+    val ms = view(None)
+    import ms.spark.implicits._
     def boosted(df: DataFrame, b: Double): DataFrame =
       if (b == 1.0) df else df.withColumn("score", $"score" * b)
     node match {
       case TermLeaf(t, b, 0, f) =>
-        boosted(be.exportTerms(Seq(t), ctx, f), b)
+        boosted(view(f).exportMatches(Seq(t), "or", attrFilter = ctx), b)
       case TermLeaf(t, b, edits, f) =>
-        val exp = be.expandFuzzy(t, edits, maxExpansions, f)
-        if (exp.isEmpty) spark.emptyDataset[Search.QueryHit].toDF()
-        else boosted(be.exportTerms(exp, ctx, f), b)
+        val v = view(f)
+        boosted(v.exportMatches(v.expandFuzzyTerms(t, edits, maxExpansions), "or", attrFilter = ctx), b)
       case PatternLeaf(p, b, f) =>
-        val exp = be.expandPattern(p, maxExpansions, f)
-        if (exp.isEmpty) spark.emptyDataset[Search.QueryHit].toDF()
-        else boosted(be.exportTerms(exp, ctx, f), b)
+        val v = view(f)
+        boosted(v.exportMatches(v.expandPatternTerms(p, maxExpansions), "or", attrFilter = ctx), b)
       case PhraseLeaf(terms, b) =>
-        boosted(be.exportPhrase(terms, ctx), b)
+        boosted(ms.exportPhrase(terms, ctx), b)
       case FilterLeaf(p) =>
-        be.filterIds(conj(ctx, p))
-      case b: Bool => evalBool(be, b, ctx, maxExpansions)
+        ms.filterDocIds(conj(ctx, p))
+      case b: Bool => evalBool(view, b, ctx, maxExpansions)
     }
   }
 
-  private def evalBool(be: Backend,
+  private def evalBool(view: Option[String] => MultiSearcher,
                        b: Bool, ctx: AttrPred, maxExpansions: Int): DataFrame = {
-    val spark = be.spark
-    import spark.implicits._
+    val ms = view(None)
+    import ms.spark.implicits._
     // 1. every pure-filter MUST / MUST_NOT folds into the pushdown context
     val (filterMusts, scoringMusts) = b.must.partition(asFilter(_).isDefined)
     val (filterNots, scoringNots) = b.mustNot.partition(asFilter(_).isDefined)
     val ctx2 = (filterMusts.flatMap(asFilter) ++ filterNots.flatMap(asFilter).map(AttrPred.Not))
       .foldLeft(ctx)(conj)
 
-    val mustDfs = scoringMusts.map(eval(be, _, ctx2, maxExpansions))
+    val mustDfs = scoringMusts.map(eval(view, _, ctx2, maxExpansions))
     val hasMust = mustDfs.nonEmpty || filterMusts.nonEmpty || filterNots.nonEmpty
 
     // 2. SHOULD clauses: with a MUST present, a pure-filter should is a
@@ -582,7 +417,7 @@ object QueryString {
     val shouldChildren =
       if (mustDfs.nonEmpty || filterMusts.nonEmpty) b.should.filter(asFilter(_).isEmpty)
       else b.should
-    val shouldDfs = shouldChildren.map(eval(be, _, ctx2, maxExpansions))
+    val shouldDfs = shouldChildren.map(eval(view, _, ctx2, maxExpansions))
     val shouldSum =
       if (shouldDfs.isEmpty) None
       else Some(
@@ -599,7 +434,7 @@ object QueryString {
         }
       else shouldSum.getOrElse {
         require(hasMust, "query has no positive clause")
-        be.filterIds(if (ctx2 != null) ctx2 else AttrPred.And(Nil))
+        ms.filterDocIds(if (ctx2 != null) ctx2 else AttrPred.And(Nil))
       }
 
     // 4. optional should boost on top of musts (left join, coalesce)
@@ -610,7 +445,7 @@ object QueryString {
 
     // 5. scoring MUST_NOTs: one union'd anti join
     if (scoringNots.nonEmpty) {
-      val ex = scoringNots.map(eval(be, _, null, maxExpansions))
+      val ex = scoringNots.map(eval(view, _, null, maxExpansions))
         .reduce(_ unionByName _)
       base = base.join(ex.select($"doc_id"), Seq("doc_id"), "left_anti")
     }
@@ -622,45 +457,37 @@ object QueryString {
   }
 
   // ------------------------------------------------------------- public
-  /** Parse and run `q` against the index, top-k by (score desc, doc_id).
-    * Flat single-level term queries short-circuit to the block-max
-    * [[Search.topK]] path; anything composed takes the tree evaluator.
+  /** Parse and run `q` against the index, top-k by (score desc, doc_id):
+    * [[topKFamily]] over one-segment views of `indexDir` and of each
+    * registered text field's index.
     */
   def topK(spark: SparkSession, indexDir: String, q: String, k: Int,
            maxExpansions: Int = 128,
-           textFields: Map[String, String] = Map.empty): DataFrame = {
-    val attrs = IndexBuilder.readMeta(indexDir).attrs.map(a => a.name -> a.kind).toMap
-    val ast = parse(q, attrs, textFields.keySet)
-    fastPath(spark, indexDir, ast, k).getOrElse {
-      val be = new IndexBackend(spark, indexDir, textFields)
-      be.prefetchDfs(plainTermsByField(ast))
-      eval(be, ast, null, maxExpansions)
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(k)
-    }
-  }
+           textFields: Map[String, String] = Map.empty): DataFrame =
+    topKFamily(new MultiSearcher(spark, Seq(indexDir)), q, k, maxExpansions,
+      textFields.map { case (f, d) => f -> new MultiSearcher(spark, Seq(d)) })
 
   /** [[topK]] over a SEGMENT FAMILY (streaming-ingest segments, upserted
     * families): every leaf walks all segments with family-global stats
     * (N/avgdl/Σdf), ids are global — answers rank-identical to querying
-    * the physically merged index. Flat term queries (all boosts 1) take
-    * the family WAND fast path; everything composed takes the tree.
+    * the physically merged index. Flat single-level term queries take the
+    * block-max WAND fast path ([[MultiSearcher.topK]]); mixed
+    * must+should, fuzzy, patterns, phrases or nested groups take the
+    * tree.
     */
   def topKFamily(ms: MultiSearcher, q: String, k: Int,
                  maxExpansions: Int = 128,
                  textFields: Map[String, MultiSearcher] = Map.empty): DataFrame = {
     val ast = parse(q, ms.attrSchema, textFields.keySet)
-    val fast = compileFlat(ast).filter(_.boosts.forall(_ == 1.0)).map { f =>
-      ms.topK(f.terms, f.mode, k, attrFilter = f.attrFilter,
-        mustNot = f.mustNot, minShouldMatch = f.minShouldMatch)
-    }
-    fast.getOrElse {
+    compileFlat(ast).map { f =>
+      ms.topK(f.terms, f.mode, k, attrFilter = f.attrFilter, mustNot = f.mustNot,
+        minShouldMatch = f.minShouldMatch, boosts = f.boosts)
+    }.getOrElse {
+      val view = (f: Option[String]) => f.map(textFields).getOrElse(ms)
       // warm each searcher's dictionary memo with every plain term in
       // the AST: one dictionary job per searcher, not one per leaf
-      plainTermsByField(ast).foreach { case (f, ts) =>
-        f.map(textFields).getOrElse(ms).dfOf(ts)
-      }
-      eval(new FamilyBackend(ms.spark, ms, textFields), ast, null, maxExpansions)
+      plainTermsByField(ast).foreach { case (f, ts) => view(f).dfOf(ts) }
+      eval(view, ast, null, maxExpansions)
         .orderBy(desc("score"), asc("doc_id"))
         .limit(k)
     }
@@ -716,15 +543,4 @@ object QueryString {
     Some(Flat(terms.map(_._1), terms.map(_._2), mode, 1,
       notTerms.flatten.map(_._1), pred0))
   }
-
-  /** Flat bool of plain terms (+ AND-able filters) → [[Search.topK]]:
-    * the WAND fast path with block-max gates. Mixed must+should, fuzzy,
-    * patterns, phrases, or nested groups fall through to the tree.
-    */
-  private def fastPath(spark: SparkSession, indexDir: String, b: Bool, k: Int): Option[DataFrame] =
-    compileFlat(b).map { f =>
-      Search.topK(spark, indexDir, f.terms, f.mode, k,
-        attrFilter = f.attrFilter, mustNot = f.mustNot, boosts = f.boosts,
-        minShouldMatch = f.minShouldMatch)
-    }
 }

@@ -5,24 +5,33 @@ import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
 import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
 
-/** Distributed BM25 top-k over the on-disk index.
+/** Distributed BM25 over one on-disk index.
   *
-  * Plan (scale-first — nothing term-sized ever reaches the driver):
+  * The term-level operators — [[topK]], [[phraseTopK]], the
+  * prefix/fuzzy/wildcard/regexp rewrites, [[exportMatches]] and
+  * [[collapseTopK]] — run a single index as a one-segment
+  * [[MultiSearcher]] view: one implementation serves a single index and
+  * a segment family, and on one segment it keeps the index's stored
+  * avgdl and per-block `max_impact` bounds. The plan (scale-first —
+  * nothing term-sized ever reaches the driver):
   *   1. dictionary lookup: `terms` table filtered to the ≤ few query
   *      terms (parquet predicate pushdown on the term-sorted files) —
-  *      yields df per term → idf (collect of ≤ |q| rows);
+  *      yields df per term → idf (collect of ≤ |q| rows per segment,
+  *      summed on the driver);
   *   2. posting scan: postings filtered to query terms (pushdown again;
   *      files are sorted by term within partitions so row-group min/max
   *      skips almost everything);
-  *   3. shuffle the surviving blocks by doc-range `slice` — all query
-  *      terms' postings for one doc range land in one task (the only
-  *      shuffle, and it moves just the query terms' blocks);
+  *   3. shuffle the surviving blocks by (segment, doc-range `slice`) —
+  *      all query terms' postings for one doc range land in one task (the
+  *      only shuffle, and it moves just the query terms' blocks);
   *   4. per-slice block-max WAND → slice-local top-k (k rows per slice);
   *   5. global top-k = sort (score desc, doc_id asc) + limit over
   *      nSlices·k rows.
   *
   * Slices are disjoint doc ranges, so slice-local top-k union ⊇ global
-  * top-k — the merge is exact.
+  * top-k — the merge is exact. An expansion (prefix, fuzzy, wildcard,
+  * regexp) reads each candidate's doc_freq with the candidate itself, so
+  * it adds one dictionary job and no second lookup.
   *
   * Steps 1 and 2 open `terms` and `postings` with the schemas declared in
   * [[graft.index.IndexBuilder]], so neither pays a schema-inference job
@@ -32,12 +41,21 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   * falls back to inference, and reads of the docs `text` column keep it,
   * since merged and purged indexes store no text and must fail such a
   * read loudly instead of returning nulls.
+  *
+  * The remaining operators here (batch, explain, dis_max, synonyms,
+  * phrase counts and suggesters, phrase-prefix, more_like_this) are
+  * single-index only.
   */
 object Search {
 
   final case class QueryHit(doc_id: Long, score: Double)
 
-  /** Filter context, two renditions (ES semantics for both: scores are
+  private def view(spark: SparkSession, indexDir: String): MultiSearcher =
+    new MultiSearcher(spark, Seq(indexDir))
+
+  /** BM25 top-k over terms (ES bool query; block-max WAND).
+    *
+    * Filter context, two renditions (ES semantics for both: scores are
     * corpus-global and unchanged; the filter only gates candidates inside
     * WAND — `ElasticSearchStorage.cs:208-233` provisions keyword + date
     * fields next to the text fields for exactly this):
@@ -59,12 +77,14 @@ object Search {
     * For low-selectivity DATE ranges also consider time-bucketed segments
     * ([[graft.index.TimeBuckets]]): whole-segment pruning first, sidecar
     * as the residual intra-bucket cut.
-    */
-  /** `mustNot`: ES `bool.must_not` terms — docs containing ANY of them
+    *
+    * `mustNot`: ES `bool.must_not` terms — docs containing ANY of them
     * are excluded (non-scoring, like filter context). The excluded
     * terms' posting blocks ride the same single exchange as the query
     * terms'; each slice task walks them as a monotone exclusion cursor
-    * (block skip + binary search — untouched blocks never decode).
+    * (block skip + binary search — untouched blocks never decode). A term
+    * in BOTH must and must_not excludes its own matches (ES bool
+    * semantics).
     *
     * Tombstoned docs ([[graft.index.Tombstones]]) are ALWAYS excluded:
     * the live generation is resolved once driver-side, each slice task
@@ -79,6 +99,14 @@ object Search {
     * after it return. Unlike from+size, per-slice heaps stay k-sized at
     * any depth (page 10^5 of a 10^12-doc result set still moves only
     * nSlices·k rows).
+    *
+    * `boosts`: per-term `^boost` aligned 1:1 with `queryTerms` (ES
+    * query_string `term^2.5`); a boost multiplies the term's whole score
+    * contribution, so it folds into the term's idf and WAND's block-max
+    * bounds scale with it.
+    *
+    * `msmField`: ES terms_set (OR mode only) — the per-doc required-match
+    * count comes from a declared numeric attribute of the doc itself.
     */
   def topK(
       spark: SparkSession,
@@ -91,153 +119,11 @@ object Search {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1,
       searchAfter: (Double, Long) = null,
-      boosts: Seq[Double] = null, // per-term ^boost (ES query_string `term^2.5`)
-      msmField: String = null // ES terms_set: per-doc required-match count from a declared numeric attr
-  ): DataFrame = {
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    require(msmField == null || mode != "and", "terms_set (msmField) is OR-mode only")
-    require(boosts == null || boosts.size == queryTerms.size,
-      "boosts must align 1:1 with queryTerms")
-    require(boosts == null || boosts.forall(_ > 0.0), "boosts must be positive")
-    import spark.implicits._
-    // ES term boost multiplies the term's whole score contribution —
-    // fold it into the per-term idf so WAND's block-max bounds scale
-    // with it for free (a boosted rare term gets a proportionally
-    // higher bound; gates stay exact)
-    val boostOf: Map[String, Double] =
-      if (boosts == null) Map.empty.withDefaultValue(1.0)
-      else queryTerms.zip(boosts).toMap.withDefaultValue(1.0)
-    val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect()
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-
-    if (mode == "and" && terms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[QueryHit].toDF()
-
-    val idfs: Array[Double] =
-      terms.map(t => boostOf(t) * NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    // a term in BOTH must and must_not excludes its own matches (ES bool
-    // semantics) — the exclusion iterator is a separate cursor over the
-    // same blocks, so no special-casing needed
-    val exTerms = mustNot.distinct
-    val bTerms = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    val isAnd = mode == "and"
-    val msm = minShouldMatch
-    val msmF = msmField
-    val idxDir = indexDir
-    val after =
-      if (searchAfter == null) null
-      else BlockMaxWand.Hit(searchAfter._2, searchAfter._1)
-    type BlockRow = (Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)
-
-    def wand(slice: Int, rows: Iterator[BlockRow], base: DocFilter): Iterator[QueryHit] = {
-      val (qTerms, qIdfs, exT) = bTerms.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def itersOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs
-            .sortBy(r => (r._4, r._3)) // by doc_id_min, block_id
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(ti, idf, refs, avgDl)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => itersOf(t, ti, qIdfs(ti)) }.toArray
-      val exIters = exT.iterator.flatMap(t => itersOf(t, 0, 0.0)).toArray
-      var filter = base
-      if (exIters.nonEmpty)
-        filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-      if (tomb != null) filter = tomb.compose(slice, filter)
-      // terms_set: per-doc required count streams from this slice's OWN
-      // sidecar (monotone cursor — scored pivots strictly increase);
-      // closed eagerly since or() returns a materialized Array
-      val msmReader =
-        if (msmF == null) null else graft.index.AttrSidecar.openReader(idxDir, slice)
-      val msmOf: Long => Int =
-        if (msmReader == null) null
-        else {
-          val fi = msmReader.numIndex(msmF) // loud on undeclared
-          id =>
-            if (msmReader.seek(id)) {
-              // a required-count above Int.MaxValue must clamp, not wrap
-              // negative (a wrapped toInt would silently turn "required"
-              // into "match any one term")
-              val v = msmReader.numValue(fi)
-              if (v < 0L || v > Int.MaxValue.toLong) Int.MaxValue else v.toInt
-            } else Int.MaxValue
-        }
-      val hits =
-        try {
-          if (isAnd) {
-            if (iters.length < qTerms.length) Array.empty[BlockMaxWand.Hit]
-            else BlockMaxWand.and(iters, k, filter, after)
-          } else BlockMaxWand.or(iters, k, filter, msm, after, msmOf)
-        } finally if (msmReader != null) msmReader.close()
-      hits.iterator.map(h => QueryHit(h.docId, h.score))
-    }
-
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) => wand(slice, rows, null) }
-      else if (attrFilter != null) {
-        // sidecar path: plan-identical to the unfiltered search — the WAND
-        // task streams its slice's attribute file locally (no doc-id
-        // exchange at any selectivity). Cursor closed eagerly: wand() is
-        // eager (BlockMaxWand returns a materialized Array of hits).
-        val idxDir = indexDir
-        val pred = attrFilter
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-          val cur = AttrSidecar.openCursor(idxDir, slice, pred)
-          try wand(slice, rows, cur)
-          finally cur.close()
-        }
-      } else {
-        // ad-hoc Column path: matching doc ids per slice (12-byte rows;
-        // docs scan is column-pruned to the predicate columns + slice +
-        // doc_id)
-        val filterIds = IndexBuilder.withDocsTable(spark, indexDir)(_.where(docFilter))
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._1)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              wand(slice, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
-
+      boosts: Seq[Double] = null,
+      msmField: String = null
+  ): DataFrame =
+    view(spark, indexDir).topK(queryTerms, mode, k, docFilter, attrFilter, mustNot,
+      minShouldMatch, searchAfter, boosts, msmField)
   /** BATCHED top-k: run MANY bool term queries in ONE job — the offline
     * evaluation / RAG-training-retrieval shape (millions of queries a
     * day against the same index), where per-query jobs would drown in
@@ -273,7 +159,7 @@ object Search {
     val allTerms = queries.flatMap(_._2).distinct
     val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
       .where($"term".isin(allTerms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |distinct batch terms| rows
     // compile per query: distinct terms + idfs; drop queries that can't
     // match (AND with a missing term / no present term)
     val compiled: Array[(Long, Array[String], Array[Double], Boolean)] = queries.flatMap {
@@ -352,7 +238,7 @@ object Search {
     val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
     val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
       .where($"term".isin(terms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |terms| rows
     val bIds = spark.sparkContext.broadcast(docIds.toSet)
     val bDfs = spark.sparkContext.broadcast(dfs)
     val lo = docIds.min
@@ -394,17 +280,8 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(prefix.nonEmpty, "empty prefix")
-    val expansions = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".startsWith(prefix))
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-    if (expansions.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, expansions, "or", k, docFilter, attrFilter, mustNot)
-  }
+  ): DataFrame =
+    view(spark, indexDir).prefixTopK(prefix, k, maxExpansions, docFilter, attrFilter, mustNot)
 
   /** ES fuzzy query (`{"fuzzy": {"text": "..."}}`): expand to dictionary
     * terms within `maxEdits` Levenshtein distance, capped at
@@ -427,19 +304,8 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(term.nonEmpty, "empty term")
-    require(maxEdits >= 0 && maxEdits <= 2, "ES caps fuzziness at 2 edits")
-    val expansions = IndexBuilder.readTerms(spark, indexDir)
-      .where(abs(length($"term") - lit(term.length)) <= maxEdits)
-      .where(levenshtein($"term", lit(term)) <= maxEdits)
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-    if (expansions.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, expansions, "or", k, docFilter, attrFilter, mustNot)
-  }
+  ): DataFrame =
+    view(spark, indexDir).fuzzyTopK(term, k, maxEdits, maxExpansions, docFilter, attrFilter, mustNot)
 
   /** ES field collapsing (`collapse: {field: …}`): top-k hits with at
     * most ONE hit per value of a declared keyword attr — the "one event
@@ -448,10 +314,10 @@ object Search {
     * FULL match set ([[BlockMaxWand.scoredMatches]] — collapse semantics
     * need every group's best, which can rank anywhere) and keeps one
     * best (score desc, docId asc) hit per value — per-task memory ∝
-    * distinct values (the bounded-cardinality keyword contract), network
-    * = nSlices × |values| rows, independent of match count. Scores are
-    * unchanged BM25 (corpus-global); filter context / must_not /
-    * tombstones / msm compose as everywhere.
+    * distinct values, capped at `valueCap` (the bounded-cardinality
+    * keyword contract), network = nSlices × |values| rows, independent
+    * of match count. Scores are unchanged BM25 (corpus-global); filter
+    * context / must_not / tombstones / msm compose as everywhere.
     */
   def collapseTopK(
       spark: SparkSession,
@@ -467,188 +333,12 @@ object Search {
       valueCap: Int = 1 << 20
   ): DataFrame = {
     require(docFilter == null, "collapse uses typed filter context (attrFilter)")
-    collapseTopKMulti(spark, Seq(indexDir), queryTerms, mode, kwField, k,
-      attrFilter, mustNot, minShouldMatch, valueCap)
+    view(spark, indexDir).collapseTopK(queryTerms, mode, kwField, k, attrFilter, mustNot,
+      minShouldMatch, valueCap)
   }
 
-  /** [[collapseTopK]] over a SEGMENT FAMILY (streaming ingest serves the
-    * collapsed view directly, no merge): global stats/df (scores equal
-    * the merged index's), family-global ids, one best hit per keyword
-    * value per (segment, slice) task, global winner per value, top-k.
-    */
-  def collapseTopKMulti(
-      spark: SparkSession,
-      segmentDirs: Seq[String],
-      queryTerms: Seq[String],
-      mode: String,
-      kwField: String,
-      k: Int,
-      attrFilter: AttrPred = null,
-      mustNot: Seq[String] = Nil,
-      minShouldMatch: Int = 1,
-      valueCap: Int = 1 << 20
-  ): DataFrame = {
-    require(valueCap > 0, "valueCap must be positive")
-    import spark.implicits._
-    require(segmentDirs.nonEmpty, "no segments")
-    val terms = queryTerms.distinct
-    val segStats = segmentDirs.map(IndexBuilder.readStats(spark, _))
-    val n = segStats.map(_.n_docs).sum
-    val totTok = segStats.map(_.total_tokens).sum
-    val avgDl = if (n > 0 && totTok > 0) totTok.toDouble / n else 1.0
-    val bases = segStats.map(_.n_docs).scanLeft(0L)(_ + _).init
-    // global df = Σ per-segment (the merged index's df)
-    val dfs: Map[String, Long] = segmentDirs
-      .map(d => IndexBuilder.readTerms(spark, d).where($"term".isin(terms: _*)).toDF())
-      .reduce(_ unionByName _)
-      .groupBy($"term").agg(sum($"doc_freq").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (terms.isEmpty || (mode == "and" && terms.exists(t => !dfs.contains(t))))
-      return spark.emptyDataset[(String, Long, Double)].toDF(kwField, "doc_id", "score")
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[(String, Long, Double)].toDF(kwField, "doc_id", "score")
-    val idfs = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val pred = attrFilter
-    val isAnd = mode == "and"
-    val msm = minShouldMatch
-    val fld = kwField
-    val avg = avgDl
-    val single = segmentDirs.size == 1
-    val vCap = valueCap
-
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
-            $"max_impact", $"max_tf", $"min_dl"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double, Int, Int)]
-
-    val perSlice = blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val docBase = bBases.value(seg)
-        val (qTerms, qIdfs, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def itersOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11,
-                // single segment: stored exact bound (its own avgdl); family:
-                // avgdl-independent bound at the global avgdl (MultiSearcher's
-                // rule) — bounds are unused by scoredMatches but kept honest
-                if (single) r._12 else IndexBuilder.impact(r._13, r._14, avg)))
-            new PostingIter(ti, idf, refs, avg)
-          }
-        val iters = qTerms.iterator.zipWithIndex
-          .flatMap { case (t, ti) => itersOf(t, ti, qIdfs(ti)) }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(t => itersOf(t, 0, 0.0)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(segDir, slice)
-          val kwIdx = reader.kwIndex(fld)
-          // One best hit per value within the task — a task-local
-          // COMBINER capped at `valueCap` distinct values: beyond the cap
-          // NEW values stream straight through to the global
-          // winner-per-value window (Spark's shuffle spills; task memory
-          // stays ≤ cap entries), existing values keep combining. Results
-          // are identical either way — the downstream window already
-          // picks one global winner per value; the map only shrinks the
-          // exchange from match-count to nSlices×|values| when the
-          // keyword honors its bounded-cardinality contract
-          // (the batch-filter cap treatment, `Searcher.attrAllowListCap`).
-          var closed = false
-          def closeAll(): Unit = if (!closed) {
-            closed = true
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeAll())
-          val best = scala.collection.mutable.HashMap.empty[String, (Long, Double)]
-          val streamed = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-            .flatMap { case (id, s) =>
-              if (!reader.seek(id)) Nil
-              else {
-                val v = reader.kwValue(kwIdx)
-                val gid = docBase + id
-                best.get(v) match {
-                  case Some((bid, bs)) =>
-                    if (s > bs || (s == bs && gid < bid)) best.update(v, (gid, s))
-                    Nil
-                  case None =>
-                    if (best.size < vCap) { best.update(v, (gid, s)); Nil }
-                    else (v, gid, s) :: Nil
-                }
-              }
-            }
-          // map drains only AFTER the match stream exhausts (++ is lazy)
-          val drained = streamed ++ new scala.collection.AbstractIterator[(String, Long, Double)] {
-            private var it: Iterator[(String, Long, Double)] = null
-            private def u: Iterator[(String, Long, Double)] = {
-              if (it == null) it = best.iterator.map { case (v, (id, s)) => (v, id, s) }
-              it
-            }
-            def hasNext: Boolean = u.hasNext
-            def next(): (String, Long, Double) = u.next()
-          }
-          new scala.collection.AbstractIterator[(String, Long, Double)] {
-            def hasNext: Boolean = {
-              val h = drained.hasNext
-              if (!h) closeAll()
-              h
-            }
-            def next(): (String, Long, Double) = drained.next()
-          }
-        }
-      }
-      .toDF(fld, "doc_id", "score")
-
-    // global: one winner per value, then top-k groups by their winner
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(fld)).orderBy(desc("score"), asc("doc_id"))
-    perSlice
-      .withColumn("rn", row_number().over(w))
-      .where($"rn" === 1)
-      .drop("rn")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
-
-  /** ES wildcard query (`{"wildcard": {"text": "s?a*"}}`): `*` = any run,
-    * `?` = one char, anything else literal. Compiles to an anchored regex
-    * and rides [[regexpTopK]]'s dictionary expansion; a literal prefix
-    * before the first wildcard becomes a parquet `StringStartsWith`
-    * pre-cut so the dictionary scan stays a range read (a LEADING
-    * wildcard scans the full terms table — orders smaller than postings,
-    * but worth knowing, exactly as in ES).
-    */
   /** `*`/`?` wildcard → (anchored Java regex, literal-prefix pre-cut) —
-    * shared by the single-index and fielded wildcard rewrites.
+    * shared by the wildcard rewrites of every searcher.
     */
   private[query] def wildcardToRegex(pattern: String): (String, String) = {
     require(pattern.nonEmpty, "empty wildcard pattern")
@@ -661,6 +351,14 @@ object Search {
     (sb.toString(), pattern.takeWhile(c => c != '*' && c != '?'))
   }
 
+  /** ES wildcard query (`{"wildcard": {"text": "s?a*"}}`): `*` = any run,
+    * `?` = one char, anything else literal. Compiles to an anchored regex
+    * ([[wildcardToRegex]]) and rides [[regexpTopK]]'s dictionary
+    * expansion; a literal prefix before the first wildcard becomes a
+    * parquet `StringStartsWith` pre-cut so the dictionary scan stays a
+    * range read (a LEADING wildcard scans the full terms table — orders
+    * smaller than postings, but worth knowing, exactly as in ES).
+    */
   def wildcardTopK(
       spark: SparkSession,
       indexDir: String,
@@ -670,11 +368,8 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    val (regex, prefix) = wildcardToRegex(pattern)
-    regexpTopK(spark, indexDir, regex, k, maxExpansions,
-      docFilter, attrFilter, mustNot, prefixHint = prefix)
-  }
+  ): DataFrame =
+    view(spark, indexDir).wildcardTopK(pattern, k, maxExpansions, docFilter, attrFilter, mustNot)
 
   /** ES regexp query: expand the ANCHORED regex (Java syntax) against the
     * term dictionary — a distributed column-pruned scan with the codegen
@@ -694,20 +389,9 @@ object Search {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       prefixHint: String = ""
-  ): DataFrame = {
-    import spark.implicits._
-    require(regex.nonEmpty, "empty regex")
-    val base = IndexBuilder.readTerms(spark, indexDir)
-    val cut = if (prefixHint.isEmpty) base else base.where($"term".startsWith(prefixHint))
-    val expansions = cut
-      .where($"term".rlike(s"^(?:$regex)$$"))
-      .orderBy(desc("doc_freq"), asc("term"))
-      .limit(maxExpansions)
-      .collect().map(_.term).toSeq
-    if (expansions.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, expansions, "or", k, docFilter, attrFilter, mustNot)
-  }
-
+  ): DataFrame =
+    view(spark, indexDir).regexpTopK(regex, k, maxExpansions, docFilter, attrFilter, mustNot,
+      prefixHint)
   /** ES term suggester ("did you mean") — the SEARCH-AS-YOU-TYPE side of
     * the reference's Kibana surface: candidate corrections for a (likely
     * misspelled) term from the term dictionary within `maxEdits`
@@ -762,7 +446,7 @@ object Search {
     require(maxQueryTerms > 0, "maxQueryTerms must be positive")
     val srcRows = IndexBuilder.readDocsTable(spark, indexDir, withText = true)
       .where($"doc_id" === docId) // pushdown: row-group skip on doc_id
-      .select($"text").collect()
+      .select($"text").collect() // ≤ 1 row: doc_id is unique
     require(srcRows.nonEmpty, s"more_like_this: doc $docId not found")
     val tf: Map[String, Int] = graft.functions.Analyzer.tokenize(srcRows.head.getString(0))
       .groupBy(identity).map { case (t, occ) => t -> occ.size }
@@ -772,7 +456,7 @@ object Search {
     val dfs: Map[String, Long] = IndexBuilder
       .readTerms(spark, indexDir)
       .where($"term".isin(cand: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |doc's distinct terms| rows
     val selected = cand
       .filter(t => dfs.getOrElse(t, 0L) >= minDocFreq)
       .map(t => (t, tf(t) * NaiveBm25.idf(stats.n_docs, dfs(t))))
@@ -810,9 +494,12 @@ object Search {
   }
 
   /** Exact-phrase top-k (ES `match_phrase`); see BlockMaxWand.phrase for
-    * the scoring contract. Same scale shape as topK: pushdown on the ≤
-    * few distinct terms, one shuffle of matched blocks (+ filter ids) by
-    * slice, per-slice leapfrog+positional verify, nSlices·k global merge.
+    * the scoring contract, and BlockMaxWand.phraseSlop for `slop` > 0
+    * (total position displacement). Same scale shape as topK: pushdown on
+    * the ≤ few distinct terms, one shuffle of matched blocks (+ filter
+    * ids) by slice, per-slice leapfrog+positional verify, nSlices·k
+    * global merge. idf is summed over every phrase POSITION (duplicate
+    * terms count per occurrence — Lucene PhraseQuery shape).
     */
   def phraseTopK(
       spark: SparkSession,
@@ -823,105 +510,8 @@ object Search {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       slop: Int = 0
-  ): DataFrame = {
-    import spark.implicits._
-    require(phraseTerms.nonEmpty, "empty phrase")
-    require(slop >= 0, "negative slop")
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val distinctTerms = phraseTerms.distinct // first-occurrence order
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    // phrase position j → distinct-term index (slop > 0 path)
-    val chain: Array[Int] = phraseTerms.map(distinctTerms.indexOf).toArray
-
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(distinctTerms: _*))
-      .collect()
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-    if (distinctTerms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    // idf summed over every phrase POSITION (duplicate terms count per
-    // occurrence — Lucene PhraseQuery shape; oracle mirrors)
-    val idfSum = phraseTerms.map(t => NaiveBm25.idf(n, dfs(t))).sum
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast(
-      (distinctTerms.toArray, offsets, idfSum, exTerms.toArray, chain, slop))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(distinctTerms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    def run(
-        slice: Int,
-        rows: Iterator[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-        base: DocFilter
-    ): Iterator[QueryHit] = {
-      val (qTerms, offs, idfS, exT, chn, slp) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def refsOf(t: String) = byTerm(t)
-        .sortBy(r => (r._4, r._3))
-        .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-      var filter = base
-      val exIters = exT.iterator.filter(byTerm.contains)
-        .map(t => new PostingIter(0, 0.0, refsOf(t), avgDl)).toArray
-      if (exIters.nonEmpty)
-        filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-      if (tomb != null) filter = tomb.compose(slice, filter)
-      if (!qTerms.forall(byTerm.contains)) return Iterator.empty
-      val iters = qTerms.map(t =>
-        new PostingIter(0, 0.0, refsOf(t), avgDl)) // idf unused in phrase scoring
-      val hits =
-        if (slp == 0) BlockMaxWand.phrase(iters, offs, idfS, k, filter)
-        else BlockMaxWand.phraseSlop(iters, chn, slp, idfS, k, filter)
-      hits.iterator.map(h => QueryHit(h.docId, h.score))
-    }
-
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) => run(slice, rows, null) }
-      else if (attrFilter != null) {
-        val idxDir = indexDir
-        val pred = attrFilter
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-          val cur = AttrSidecar.openCursor(idxDir, slice, pred)
-          try run(slice, rows, cur)
-          finally cur.close()
-        }
-      } else {
-        val filterIds = IndexBuilder.withDocsTable(spark, indexDir)(_.where(docFilter))
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._1)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(slice, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
-
+  ): DataFrame =
+    view(spark, indexDir).phraseTopK(phraseTerms, k, docFilter, attrFilter, mustNot, slop)
   /** Corpus-wide exact-phrase occurrence count (Σ over docs of the
     * per-doc phrase freq) — the bigram-count primitive under
     * [[phraseSuggest]]'s language model. Same block machinery as
@@ -965,7 +555,7 @@ object Search {
             .map(_._2.toLong).sum
         }
       }
-    val row = counts.agg(sum("value")).head()
+    val row = counts.agg(sum("value")).head() // one aggregate row
     if (row.isNullAt(0)) 0L else row.getLong(0)
   }
 
@@ -1014,7 +604,7 @@ object Search {
             (pi, BlockMaxWand.phraseMatches(iters, offs, filter).map(_._2.toLong).sum)
           }
       }
-      .collect()
+      .collect() // ≤ nSlices × |pairs| rows
     val sums = new Array[Long](distinctPairs.length)
     perSlice.foreach { case (pi, c) => sums(pi) += c }
     distinctPairs.indices.map(i => distinctPairs(i) -> sums(i)).toMap
@@ -1074,6 +664,7 @@ object Search {
         .limit(perTermCandidates)
         .select(lit(i).as("pos"), $"term", $"doc_freq", $"total_tf")
     }
+    // ≤ |phrase| × (1 + perTermCandidates) rows
     val allRows = candBranches.foldLeft(inputBranch)(_ unionByName _).collect()
     allRows.foreach(r => ttfOf(r.getString(1)) = r.getLong(3))
     val candsAt: Seq[Seq[String]] = phraseTerms.indices.map { i =>
@@ -1146,14 +737,14 @@ object Search {
       .where($"term".startsWith(last))
       .orderBy(asc("term"))
       .limit(maxExpansions)
-      .collect()
+      .collect() // ≤ maxExpansions rows
     if (expRows.isEmpty) return spark.emptyDataset[QueryHit].toDF()
     val initTerms = phraseTerms.init.distinct
     val initDfs: Map[String, Long] =
       if (initTerms.isEmpty) Map.empty
       else IndexBuilder.readTerms(spark, indexDir)
         .where($"term".isin(initTerms: _*))
-        .collect()
+        .collect() // ≤ |phrase| rows
         .map(t => t.term -> t.doc_freq)
         .toMap
     // a missing non-last term empties every expansion
@@ -1285,7 +876,7 @@ object Search {
     val dfs: Map[String, Long] = IndexBuilder
       .readTerms(spark, indexDir)
       .where($"term".isin(terms: _*))
-      .collect()
+      .collect() // ≤ |terms| rows
       .map(t => t.term -> t.doc_freq)
       .toMap
     val present = terms.filter(dfs.contains)
@@ -1384,14 +975,11 @@ object Search {
     * 10^12 docs streams straight to the caller's sink (the
     * feed-the-training-pipeline read ES serves with scroll batches).
     * Per-slice [[BlockMaxWand.scoredMatches]] walk (scores exact BM25,
-    * block-decode-on-demand); output stays partitioned by slice until
-    * the caller repartitions/writes. filter/must_not/tombstones/msm
-    * compose as everywhere.
-    */
-  /** `knownDfs`: caller-supplied doc_freq map for `queryTerms` (present
-    * terms only) — skips this call's dictionary job. The query_string
-    * tree evaluator resolves a Q-leaf query with ONE batched dictionary
-    * lookup instead of Q sequential jobs (r6 opt round; guide §2.6).
+    * block-decode-on-demand), streamed, never buffered; output stays
+    * partitioned by slice until the caller repartitions/writes.
+    * filter/must_not/tombstones/msm compose as everywhere. A composed
+    * caller (the query_string tree) resolves its terms' dfs once through
+    * the view's memo ([[MultiSearcher.dfOf]]) instead of once per leaf.
     */
   def exportMatches(
       spark: SparkSession,
@@ -1400,92 +988,9 @@ object Search {
       mode: String,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
-      minShouldMatch: Int = 1,
-      knownDfs: Map[String, Long] = null
-  ): DataFrame = {
-    import spark.implicits._
-    val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] =
-      if (knownDfs != null) knownDfs
-      else IndexBuilder
-        .readTerms(spark, indexDir)
-        .where($"term".isin(terms: _*))
-        .collect()
-        .map(t => t.term -> t.doc_freq)
-        .toMap
-    val isAnd = mode == "and"
-    if (isAnd && terms.exists(t => !dfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch)
-      return spark.emptyDataset[QueryHit].toDF()
-    val idfs: Array[Double] = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
-    val msm = minShouldMatch
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qTerms, qIdfs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def iterOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs.sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(ti, idf, refs, avgDl)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => iterOf(t, ti, qIdfs(ti)) }.toArray
-      if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-      else {
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val predCursor = filter
-        val exIters = exT.iterator.flatMap(t => iterOf(t, 0, 0.0)).toArray
-        if (exIters.nonEmpty)
-          filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        // STREAM the walk (never buffer a slice's match set — it can be
-        // 10^8 rows on a hot term); the sidecar cursor closes when the
-        // consumer exhausts the iterator
-        val base = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-        var closed = false
-        def closeOnce(): Unit = if (!closed) {
-          closed = true
-          predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-        new scala.collection.AbstractIterator[QueryHit] {
-          def hasNext: Boolean = {
-            val h = base.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          def next(): QueryHit = {
-            val (id, s) = base.next()
-            QueryHit(id, s)
-          }
-        }
-      }
-    }.toDF()
-  }
-
+      minShouldMatch: Int = 1
+  ): DataFrame =
+    view(spark, indexDir).exportMatches(queryTerms, mode, attrFilter, mustNot, minShouldMatch)
   /** Query-time synonyms (ES `synonym_graph` at search time): each query
     * position is a GROUP of interchangeable terms, scored as ONE term —
     * Lucene SynonymQuery: tf = Σ member tfs in the doc, df = MAX member
@@ -1520,7 +1025,7 @@ object Search {
     val dfs: Map[String, Long] = IndexBuilder
       .readTerms(spark, indexDir)
       .where($"term".isin(allTerms: _*))
-      .collect()
+      .collect() // ≤ |distinct synonym members| rows
       .map(t => t.term -> t.doc_freq)
       .toMap
     val isAnd = mode == "and"

@@ -402,13 +402,41 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
         "family wildcard ≠ single-index wildcard")
       assert(got(ms.regexpTopK(".*42", 10)) == got(Search.regexpTopK(spark, dir.toString, ".*42", 10)),
         "family regexp ≠ single-index regexp")
+      // every parameter of the single-index queries, on the family
+      def same(fam: org.apache.spark.sql.DataFrame, single: org.apache.spark.sql.DataFrame,
+               what: String): Seq[(Long, Double)] = {
+        val f = got(fam)
+        val s = got(single)
+        assert(f.nonEmpty, s"$what: fixture must match")
+        assert(f.map(_._1) == s.map(_._1), s"family $what ids: $f vs $s")
+        f.zip(s).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9, s"family $what score") }
+        s
+      }
+      val one = dir.toString
+      val q = Seq("w1", "w2", "w3")
+      same(ms.topK(q, "or", 10, boosts = Seq(2.0, 1.0, 0.5)),
+        Search.topK(spark, one, q, "or", 10, boosts = Seq(2.0, 1.0, 0.5)), "boosted topK")
+      // two search_after pages, each resuming after the previous page's last hit
+      val page1 = got(Search.topK(spark, one, q, "or", 5))
+      val after1 = (page1.last._2, page1.last._1)
+      val page2 = same(ms.topK(q, "or", 5, searchAfter = after1),
+        Search.topK(spark, one, q, "or", 5, searchAfter = after1), "search_after page 2")
+      val after2 = (page2.last._2, page2.last._1)
+      val page3 = same(ms.topK(q, "or", 5, searchAfter = after2),
+        Search.topK(spark, one, q, "or", 5, searchAfter = after2), "search_after page 3")
+      assert((page1 ++ page2 ++ page3).map(_._1) == got(Search.topK(spark, one, q, "or", 15)).map(_._1),
+        "search_after pages ≠ one deep page")
+      same(ms.phraseTopK(Seq("w1", "w2"), 10, slop = 1),
+        Search.phraseTopK(spark, one, Seq("w1", "w2"), 10, slop = 1), "slop phrase")
+      same(ms.exportMatches(Seq("w1", "w2"), "and").orderBy("doc_id"),
+        Search.exportMatches(spark, one, Seq("w1", "w2"), "and").orderBy("doc_id"), "export")
       // family collapse ≡ single-index collapse (global stats + ids align)
       def gotC(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getString(0), r.getLong(1),
           math.round(r.getDouble(2) * 1e9))).toSeq
       assert(
-        gotC(Search.collapseTopKMulti(spark, Seq(s"$root/A", s"$root/B"),
-          Seq("w1", "w2"), "or", "lang", 10)) ==
+        gotC(new graft.query.MultiSearcher(spark, Seq(s"$root/A", s"$root/B"))
+          .collapseTopK(Seq("w1", "w2"), "or", "lang", 10)) ==
           gotC(Search.collapseTopK(spark, dir.toString,
             Seq("w1", "w2"), "or", "lang", 10)),
         "family collapse ≠ single-index collapse")
@@ -1583,6 +1611,7 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("terms_set: per-doc minimum_should_match from a declared numeric attr") {
     val root = Files.createTempDirectory("graft-termsset").toString
+    val segs = Files.createTempDirectory("graft-termsset-segs").toString
     try {
       val texts = Seq(
         "alpha beta gamma pad", "alpha pad pad pad", "beta gamma pad pad",
@@ -1613,9 +1642,22 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
         .sortBy { case (id, s) => (-s, id) }
       assert(got == expScores, s"terms_set: $got vs $expScores")
       assert(expIds.nonEmpty && expIds.size < texts.size, "fixture must discriminate")
+      // the same corpus as two url-ordered segments: each segment reads
+      // the required count from its own sidecar, ids and scores unchanged
+      val half = pages.size / 2
+      IndexBuilder.build(spark, spark.createDataset(pages.take(half)), s"$segs/A", ucfg)
+      IndexBuilder.build(spark, spark.createDataset(pages.drop(half)), s"$segs/B", ucfg)
+      val single = Search.topK(spark, root, terms, "or", texts.size, msmField = "req")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val fam = new MultiSearcher(spark, Seq(s"$segs/A", s"$segs/B"))
+        .topK(terms, "or", texts.size, msmField = "req")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(fam.map(_._1) == single.map(_._1), s"family terms_set ids: $fam vs $single")
+      fam.zip(single).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9, "family terms_set score") }
     } finally {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(root)).deleteRecursively()
+      new Directory(new java.io.File(segs)).deleteRecursively()
     }
   }
 

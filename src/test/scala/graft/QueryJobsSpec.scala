@@ -14,8 +14,10 @@ import graft.sources.PagesGen
 /** The Spark jobs a query runs, on a small index. Index tables open with
   * declared schemas, so no query runs a parquet schema-inference job (its
   * stage is named `parquet at ...`); a term query is dictionary lookup +
-  * shuffle map stage + result, at most 3 jobs; a query_string tree
-  * resolves all its leaves' terms in one dictionary job.
+  * shuffle map stage + result, at most 3 jobs, on one index or a segment
+  * family; an expansion query reuses its expansion's doc_freq rows, so it
+  * adds no second dictionary job; a query_string tree resolves all its
+  * leaves' terms in one dictionary job.
   */
 class QueryJobsSpec extends AnyFunSuite {
 
@@ -57,12 +59,31 @@ class QueryJobsSpec extends AnyFunSuite {
     assertNoInference("Search.topK", term)
     assert(term.size <= 3, s"Search.topK ran ${term.size} jobs: $term")
     assertNoInference("Search.phraseTopK", jobsOf(Search.phraseTopK(spark, dir, Seq("w0", "w1"), 10).collect()))
-    assertNoInference("Search.prefixTopK", jobsOf(Search.prefixTopK(spark, dir, "w1", 10).collect()))
+    val prefix = jobsOf(Search.prefixTopK(spark, dir, "w1", 10).collect())
+    assertNoInference("Search.prefixTopK", prefix)
+    assert(prefix.size <= 3, s"Search.prefixTopK ran ${prefix.size} jobs: $prefix")
     // a two-leaf tree (phrase + term) takes the tree evaluator
     val tree = jobsOf(QueryString.topK(spark, dir, "\"w0 w1\" w2", 10).collect())
     assertNoInference("QueryString.topK", tree)
-    val dictionary = tree.filter(_.exists(_.startsWith("collect at QueryString.scala")))
+    val dictionary = tree.filter(_.exists(_.startsWith("collect at MultiSearcher.scala")))
     assert(dictionary.size == 1, s"tree dictionary jobs: $tree")
+  }
+
+  test("a term query over a two-segment family runs at most 3 jobs; its dictionary lookup does not shuffle") {
+    val root = Files.createTempDirectory("graft-jobs-family").toString
+    val urls = (0L until 300L).map(PagesGen.pageFor(_).url).sorted
+    val cfg = BuildConfig(nPartitions = 4, nGroups = 1, nSlices = 2, blockSize = 16)
+    IndexBuilder.build(spark, PagesGen.pages(spark, 300, 4).filter(_.url < urls(150)), s"$root/A", cfg)
+    IndexBuilder.build(spark, PagesGen.pages(spark, 300, 4).filter(_.url >= urls(150)), s"$root/B", cfg)
+    val ms = new MultiSearcher(spark, Seq(s"$root/A", s"$root/B"))
+    val family = jobsOf(ms.topK(Seq("w0", "w1"), "or", 10).collect())
+    assertNoInference("MultiSearcher.topK", family)
+    assert(family.size <= 3, s"MultiSearcher.topK ran ${family.size} jobs: $family")
+    // the per-segment (term, doc_freq) rows are summed on the driver: one
+    // single-stage job, no shuffle map stage
+    val dictionary = family.filter(_.exists(_.startsWith("collect at MultiSearcher.scala")))
+    assert(dictionary.size == 1 && dictionary.head.size == 1, s"family dictionary jobs: $family")
+    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
   test("MultiSearcher.dfOf from two threads equals the serial answers") {

@@ -299,6 +299,7 @@ class QueryStringSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ms = new MultiSearcher(spark, Seq(dirA.toString, dirB.toString))
       val shapes = Seq(
         "w1 w2 -w3",                       // flat (family WAND fast path)
+        "w1^2 w2",                         // boosted flat (fast path with boosts)
         "(w1 AND w2) OR (w3 AND w4^2)",    // nested groups + boost (tree)
         "\"w1 w2\" OR w7",                 // phrase compose
         "lang:ru AND (w1 OR w2)",          // filter pushdown
