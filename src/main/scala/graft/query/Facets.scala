@@ -18,20 +18,21 @@ import graft.query.BlockMaxWand.{BlockRef, PostingIter}
   *
   * Both take ONE index or a SEGMENT FAMILY (`Multi` variants — streaming
   * segments / time buckets aggregate without any merge, ≙ ES aggregating
-  * across its `{prefix}-*` indices; counts need no docID remapping, so
-  * unlike search there are no base offsets at all).
+  * across its `{prefix}-*` indices). A single index is a one-segment
+  * view.
   *
-  * Scale shape (the part that matters at 10^12 docs): aggregation never
-  * scores and never ranks — each (segment, slice) task enumerates its
-  * matching doc ids ([[BlockMaxWand.matchingDocIds]]: leapfrog AND /
-  * counted OR over the same pushdown-filtered posting blocks retrieval
-  * uses) and reads each match's (lang, warc_ts) from its OWN slice's
-  * attribute sidecar with a monotone O(1)-memory value cursor
-  * ([[AttrSidecar.AttrReader]] — the ES doc-values read path). What
-  * crosses the network is only the per-slice partial (bucket → count)
-  * maps: bounded by the bucket cardinality, independent of match count.
-  * No corpus stats are read (nothing is scored). Filter context,
-  * must_not, and tombstones compose exactly as in retrieval.
+  * The walk is the view's: every aggregation here enumerates its matches
+  * through [[MultiSearcher.matchWalk]] (or [[MultiSearcher.scoredWalk]]
+  * for [[topHitsAgg]]) and keeps only its per-doc fold. Each (segment,
+  * slice) task streams its matching doc ids (leapfrog AND / counted OR
+  * over the same pushdown-filtered posting blocks retrieval uses) and
+  * reads each match's doc values from its OWN slice's attribute sidecar
+  * with a monotone O(1)-memory value cursor ([[AttrSidecar.AttrReader]]
+  * — the ES doc-values read path). What crosses the network is only the
+  * per-slice partials: bounded by the bucket cardinality, independent of
+  * match count. No dictionary is read and nothing is scored (except
+  * top_hits). Filter context, must_not and tombstones compose exactly as
+  * in retrieval.
   */
 object Facets {
 
@@ -374,107 +375,61 @@ object Facets {
       require(ts.nonEmpty, s"bucket $name has no terms")
       require(m == "and" || m == "or", s"bucket $name: unknown mode $m")
     }
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    val exTerms = mustNot.distinct
-    if (terms.isEmpty || terms.size < minShouldMatch)
-      return spark.emptyDataset[(String, Long)].toDF("bucket", "n_docs")
-
-    val bCtx = spark.sparkContext.broadcast(
-      (terms.toArray, exTerms.toArray,
-        buckets.map { case (n, ts, m) => (n, ts.distinct.toArray, m == "and") }.toArray))
-    val bTombs = spark.sparkContext.broadcast(graft.index.Tombstones.handle(indexDir))
-    val msm = minShouldMatch
-    val pred = attrFilter
-    val segDir = indexDir
-    val emitPairs = pairs
-    val allTerms = (terms ++ exTerms ++ buckets.flatMap(_._2)).distinct
-
-    IndexBuilder.readPostings(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, exT, bkts) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
+    val bkts = buckets.map { case (n, ts, m) => (n, ts.distinct.toArray, m == "and") }.toArray
+    new MultiSearcher(spark, Seq(indexDir))
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch,
+        extraTerms = buckets.flatMap(_._2)) { s =>
+        // bucket -> membership cursors: OR = one set over present terms
+        // (empty -> unmatchable); AND = one per term, all must contain
+        val sets: Array[Array[DocSet]] = bkts.map { case (_, bts, bAnd) =>
+          if (bAnd) {
+            val per = bts.flatMap(t => s.cursor(t).map(it => new PostingSet(Array(it)): DocSet))
+            if (per.length < bts.length) null else per // a term absent from the slice
+          } else {
+            val present = bts.flatMap(s.cursor)
+            if (present.isEmpty) null else Array(new PostingSet(present): DocSet)
           }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          // bucket -> membership cursors: OR = one set over present terms
-          // (empty -> unmatchable); AND = one per term, all must contain
-          val sets: Array[Array[DocSet]] = bkts.map { case (_, bts, bAnd) =>
-            if (bAnd) {
-              val per = bts.flatMap(t => iterOf(t).map(it => new PostingSet(Array(it)): DocSet))
-              if (per.length < bts.length) null else per // a term absent from the slice
-            } else {
-              val present = bts.flatMap(iterOf)
-              if (present.isEmpty) null else Array(new PostingSet(present): DocSet)
-            }
+        }
+        val nB = bkts.length
+        val counts = new Array[Long](nB)
+        val pairCounts = if (pairs) new Array[Long](nB * nB) else null
+        val okArr = new Array[Boolean](nB)
+        s.ids.foreach { id =>
+          var b = 0
+          while (b < nB) {
+            val ss = sets(b)
+            var ok = ss != null
+            var i = 0
+            while (ok && i < ss.length) { ok = ss(i).matches(id); i += 1 }
+            okArr(b) = ok
+            if (ok) counts(b) += 1L
+            b += 1
           }
-          val nB = bkts.length
-          val counts = new Array[Long](nB)
-          val pairCounts = if (emitPairs) new Array[Long](nB * nB) else null
-          val okArr = new Array[Boolean](nB)
-          try {
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              var b = 0
-              while (b < nB) {
-                val ss = sets(b)
-                var ok = ss != null
-                var i = 0
-                while (ok && i < ss.length) { ok = ss(i).matches(id); i += 1 }
-                okArr(b) = ok
-                if (ok) counts(b) += 1L
-                b += 1
-              }
-              if (emitPairs) {
-                var a = 0
-                while (a < nB) {
-                  if (okArr(a)) {
-                    var c = a + 1
-                    while (c < nB) {
-                      if (okArr(c)) pairCounts(a * nB + c) += 1L
-                      c += 1
-                    }
-                  }
-                  a += 1
+          if (pairs) {
+            var a = 0
+            while (a < nB) {
+              if (okArr(a)) {
+                var c = a + 1
+                while (c < nB) {
+                  if (okArr(c)) pairCounts(a * nB + c) += 1L
+                  c += 1
                 }
               }
-            }
-            val singles = bkts.indices.iterator
-              .filter(counts(_) > 0L)
-              .map(i => (bkts(i)._1, counts(i)))
-            val inter =
-              if (!emitPairs) Iterator.empty
-              else for {
-                a <- bkts.indices.iterator
-                c <- (a + 1 until nB).iterator
-                if pairCounts(a * nB + c) > 0L
-              } yield (s"${bkts(a)._1}&${bkts(c)._1}", pairCounts(a * nB + c))
-            (singles ++ inter).toArray.iterator
-          } finally {
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
+              a += 1
             }
           }
         }
+        val singles = bkts.indices.iterator
+          .filter(counts(_) > 0L)
+          .map(i => (bkts(i)._1, counts(i)))
+        val inter =
+          if (!pairs) Iterator.empty
+          else for {
+            a <- bkts.indices.iterator
+            c <- (a + 1 until nB).iterator
+            if pairCounts(a * nB + c) > 0L
+          } yield (s"${bkts(a)._1}&${bkts(c)._1}", pairCounts(a * nB + c))
+        singles ++ inter
       }
       .toDF("bucket", "n_docs")
       .groupBy($"bucket")
@@ -515,7 +470,8 @@ object Facets {
         s"'$kwField' is not a declared keyword attr of $indexDir"))
     val fg = termsAgg(spark, indexDir, queryTerms, mode, attrFilter, mustNot,
       minShouldMatch, kwField)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .collect() // ≤ |values| of a declared keyword field (bounded-cardinality contract)
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (fg.isEmpty)
       return spark.emptyDataset[(String, Long, Long, Long)]
         .toDF(kwField, "fg_count", "bg_count", "score_e4")
@@ -562,7 +518,8 @@ object Facets {
       .join(broadcast(keys), Seq("v"), "left_semi")
       .groupBy($"v")
       .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .collect() // ≤ |fgKeys| rows
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   /** ES `histogram` aggregation on a DECLARED numeric field: matching-doc
@@ -602,53 +559,13 @@ object Facets {
       minShouldMatch: Int = 1
   ): Long = {
     import spark.implicits._
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    if (terms.isEmpty || terms.size < minShouldMatch) return 0L
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val idxDir = indexDir
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val pred = attrFilter
-    val msm = minShouldMatch
-    val counts = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups { (slice, rows) =>
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) 0L
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val cursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          try {
-            var n = 0L
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach(_ => n += 1)
-            n
-          } finally cursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
+    val row = new MultiSearcher(spark, Seq(indexDir))
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
+        var n = 0L
+        s.ids.foreach(_ => n += 1L)
+        Iterator.single(n)
       }
-    val row = counts.agg(sum("value")).head()
+      .agg(sum("value")).head()
     if (row.isNullAt(0)) 0L else row.getLong(0) // no matched blocks → 0
   }
 
@@ -668,55 +585,8 @@ object Facets {
       minShouldMatch: Int = 1
   ): DataFrame = {
     import spark.implicits._
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    if (terms.isEmpty || terms.size < minShouldMatch)
-      return spark.emptyDataset[Long].toDF("doc_id")
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val idxDir = indexDir
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val pred = attrFilter
-    val msm = minShouldMatch
-    IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          // the id stream is LAZY (that is the point — no per-slice
-          // materialization), so the sidecar cursor cannot close in a
-          // finally here; hand it to the task lifecycle instead
-          predCursor match {
-            case c: AutoCloseable =>
-              val tc = org.apache.spark.TaskContext.get()
-              if (tc != null) tc.addTaskCompletionListener[Unit](_ => c.close())
-            case _ =>
-          }
-          BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter)
-        }
-      }
+    new MultiSearcher(spark, Seq(indexDir))
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch)(s => s.ids.map(s.docBase + _))
       .toDF("doc_id")
   }
 
@@ -1228,7 +1098,7 @@ object Facets {
     val rows = numericWalk(spark, Seq(indexDir), queryTerms, mode, numField,
       attrFilter, mustNot, minShouldMatch, histogram = true)
       .groupBy($"v").agg(sum($"n").as("n"))
-      .collect()
+      .collect() // ≤ distinct numField values in the match set: uncapped, grows on a continuous field
     if (rows.isEmpty)
       return Seq((0L, null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Long]))
         .toDF("n_docs", "median_v", "mad_v")
@@ -1353,70 +1223,21 @@ object Facets {
       sparseLimit: Int = 4096
   ): DataFrame = {
     import spark.implicits._
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    val exTerms = mustNot.distinct
-    if (terms.isEmpty || terms.size < minShouldMatch)
-      return Seq((0L, true)).toDF("n_distinct", "is_exact")
-
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val idxDir = indexDir
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val pred = attrFilter
-    val msm = minShouldMatch
-    val kwF = kwField
-    val prec = precision
-    val spl = sparseLimit
-
-    val partials = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val cursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(idxDir, slice)
-          val kwIdx = reader.kwIndex(kwF)
-          try {
-            val sketch = new graft.functions.Hll(prec, spl)
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              if (reader.seek(id))
-                sketch.add(graft.functions.Hll.hashString(reader.kwValue(kwIdx)))
-            }
-            Iterator.single(sketch.serialize())
-          } finally {
-            reader.close()
-            cursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
+    val partials = new MultiSearcher(spark, Seq(indexDir))
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
+        val reader = s.reader
+        val kwIdx = reader.kwIndex(kwField)
+        val sketch = new graft.functions.Hll(precision, sparseLimit)
+        s.ids.foreach { id =>
+          if (reader.seek(id))
+            sketch.add(graft.functions.Hll.hashString(reader.kwValue(kwIdx)))
         }
+        Iterator.single(sketch.serialize())
       }
       .collect() // nSlices sketches, each size-bounded — the coordinator reduce
 
-    val merged = new graft.functions.Hll(prec, spl)
-    partials.foreach(b => merged.merge(graft.functions.Hll.deserialize(b, spl)))
+    val merged = new graft.functions.Hll(precision, sparseLimit)
+    partials.foreach(b => merged.merge(graft.functions.Hll.deserialize(b, sparseLimit)))
     val (est, exact) = merged.estimate
     Seq((est, exact)).toDF("n_distinct", "is_exact")
   }
@@ -1449,128 +1270,51 @@ object Facets {
   ): DataFrame = {
     import spark.implicits._
     require(size > 0 && hitsPerBucket > 0, "size and hitsPerBucket must be positive")
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    val exTerms = mustNot.distinct
-    val emptyOut = spark
-      .emptyDataset[(String, Long, Int, Long, Double)]
-      .toDF(kwField, "n_docs", "rank", "doc_id", "score")
-    if (terms.isEmpty || terms.size < minShouldMatch) return emptyOut
-
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
-    if (isAnd && terms.exists(t => !dfs.contains(t))) return emptyOut
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty || present.size < minShouldMatch) return emptyOut
-    val idfs = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
-    val msm = minShouldMatch
-    val fld = kwField
-    val kHits = hitsPerBucket
-    val vCap = valueCap
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
     // per (slice, value): (value, countPartial, hits[(negScore, docId)])
     // negated score so a plain ascending array sort ranks (score desc,
     // docId asc) — sign flip is exact on doubles
-    val partials = blocks
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val (qTerms, qIdfs, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        def itersOf(t: String, ti: Int, idf: Double): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-            new PostingIter(ti, idf, refs, avgDl)
-          }
-        val iters = qTerms.iterator.zipWithIndex
-          .flatMap { case (t, ti) => itersOf(t, ti, qIdfs(ti)) }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(t => itersOf(t, 0, 0.0)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(idxDir, slice)
-          val kwIdx = reader.kwIndex(fld)
-          var closed = false
-          def closeAll(): Unit = if (!closed) {
-            closed = true
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeAll())
-          // value → (count, bounded best list) — kHits is small, an
-          // insertion-sorted ArrayBuffer beats a heap at these sizes
-          val acc = scala.collection.mutable.HashMap
-            .empty[String, (Array[Long], scala.collection.mutable.ArrayBuffer[(Double, Long)])]
-          val overflow = BlockMaxWand.scoredMatches(iters, isAnd, msm, filter)
-            .flatMap { case (id, s) =>
-              if (!reader.seek(id)) Nil
-              else {
-                val v = reader.kwValue(kwIdx)
-                val ns = -s
-                acc.get(v) match {
-                  case Some((cnt, buf)) =>
-                    cnt(0) += 1
-                    val pos = buf.indexWhere { case (bs, bid) =>
-                      ns < bs || (ns == bs && id < bid)
-                    }
-                    if (pos >= 0) buf.insert(pos, (ns, id))
-                    else if (buf.size < kHits) buf += ((ns, id))
-                    if (buf.size > kHits) buf.remove(kHits)
-                    Nil
-                  case None =>
-                    if (acc.size < vCap) {
-                      acc.update(v,
-                        (Array(1L), scala.collection.mutable.ArrayBuffer((ns, id))))
-                      Nil
-                    } else (v, 1L, Array((ns, id))) :: Nil
+    val partials = new MultiSearcher(spark, Seq(indexDir))
+      .scoredWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
+        val reader = s.reader
+        val kwIdx = reader.kwIndex(kwField)
+        // value → (count, bounded best list) — hitsPerBucket is small, an
+        // insertion-sorted ArrayBuffer beats a heap at these sizes
+        val acc = scala.collection.mutable.HashMap
+          .empty[String, (Array[Long], scala.collection.mutable.ArrayBuffer[(Double, Long)])]
+        val overflow = s.hits.flatMap { case (local, sc) =>
+          if (!reader.seek(local)) Nil
+          else {
+            val v = reader.kwValue(kwIdx)
+            val id = s.docBase + local
+            val ns = -sc
+            acc.get(v) match {
+              case Some((cnt, buf)) =>
+                cnt(0) += 1
+                val pos = buf.indexWhere { case (bs, bid) =>
+                  ns < bs || (ns == bs && id < bid)
                 }
-              }
+                if (pos >= 0) buf.insert(pos, (ns, id))
+                else if (buf.size < hitsPerBucket) buf += ((ns, id))
+                if (buf.size > hitsPerBucket) buf.remove(hitsPerBucket)
+                Nil
+              case None =>
+                if (acc.size < valueCap) {
+                  acc.update(v, (Array(1L), scala.collection.mutable.ArrayBuffer((ns, id))))
+                  Nil
+                } else (v, 1L, Array((ns, id))) :: Nil
             }
-          overflow ++ new scala.collection.AbstractIterator[(String, Long, Array[(Double, Long)])] {
-            private var it: Iterator[(String, Long, Array[(Double, Long)])] = null
-            private def u = {
-              if (it == null)
-                it = acc.iterator.map { case (v, (cnt, buf)) => (v, cnt(0), buf.toArray) }
-              it
-            }
-            def hasNext: Boolean = u.hasNext
-            def next(): (String, Long, Array[(Double, Long)]) = u.next()
           }
         }
+        // the map drains only AFTER the match stream exhausts (++ takes
+        // its right side by name)
+        overflow ++ acc.iterator.map { case (v, (cnt, buf)) => (v, cnt(0), buf.toArray) }
       }
       .toDF("v", "cnt", "hits")
 
     val buckets = partials
       .groupBy($"v")
       .agg(sum($"cnt").as("n_docs"),
-        slice(sort_array(flatten(collect_list($"hits"))), 1, kHits).as("top"))
+        slice(sort_array(flatten(collect_list($"hits"))), 1, hitsPerBucket).as("top"))
       .orderBy(desc("n_docs"), asc("v"))
       .limit(size)
 
@@ -1711,129 +1455,62 @@ object Facets {
       matrix: Boolean = false // matrix_stats: (sm,s2)=(Σv,Σv²), (mn,mx)=(Σw,Σw²), x1=Σvw — six exact sums, one pass
   ): DataFrame = {
     import spark.implicits._
-    require(segmentDirs.nonEmpty, "no segments")
     require(!(withS2 && weightField != null), "s2 slot is either Σv² or Σw, not both")
     require(!matrix || weightField != null, "matrix mode needs the second field in weightField")
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    val exTerms = mustNot.distinct
-    val emptyOut =
-      if (histogram) spark.emptyDataset[(Long, Long)].toDF("v", "n")
-      else spark.emptyDataset[(Long, Long, Long, Long, Long, Long)]
-        .toDF("n", "sm", "mn", "mx", "s2", "x1")
-    if (terms.isEmpty || terms.size < minShouldMatch) return emptyOut
-
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val msm = minShouldMatch
-    val pred = attrFilter
-    val numF = numField
-    val asHist = histogram
-    val lgS = logS
-    val wantS2 = withS2
-    val wF = weightField
-    val asMatrix = matrix
-
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    val partials = blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(segDir, slice)
-          val numIdx = reader.numIndex(numF) // loud on undeclared
-          val wIdx = if (wF != null) reader.numIndex(wF) else -1
-          try {
-            if (asHist) {
-              val counts = scala.collection.mutable.HashMap.empty[Long, Long]
-              BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-                if (reader.seek(id)) {
-                  val raw = reader.numValue(numIdx)
-                  val v = if (lgS >= 0) graft.functions.LogBuckets.bucketOf(raw, lgS) else raw
-                  counts.update(v, counts.getOrElse(v, 0L) + 1L)
-                }
-              }
-              counts.iterator.map { case (v, n) => (v, n, 0L, 0L, 0L, 0L) }.toArray.iterator
-            } else {
-              var n = 0L; var sm = 0L; var s2 = 0L; var x1 = 0L
-              var mn = if (asMatrix) 0L else Long.MaxValue
-              var mx = if (asMatrix) 0L else Long.MinValue
-              BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-                if (reader.seek(id)) {
-                  val v = reader.numValue(numIdx)
-                  n += 1
-                  // exact integer Σv² partials keep extended_stats
-                  // deterministic across slice orders; overflow is LOUD
-                  // (a warc_ts-scale field needs the double/t-digest
-                  // path, not a silent wrap). Opt-in: plain stats on
-                  // epoch-millis fields must not square them. Same
-                  // discipline for weighted_avg's Σ(v·w)/Σw and
-                  // matrix_stats' six sums.
-                  if (asMatrix) {
-                    val w = reader.numValue(wIdx)
-                    sm = Math.addExact(sm, v)
-                    s2 = Math.addExact(s2, Math.multiplyExact(v, v))
-                    mn = Math.addExact(mn, w)
-                    mx = Math.addExact(mx, Math.multiplyExact(w, w))
-                    x1 = Math.addExact(x1, Math.multiplyExact(v, w))
-                  } else if (wIdx >= 0) {
-                    val w = reader.numValue(wIdx)
-                    sm = Math.addExact(sm, Math.multiplyExact(v, w))
-                    s2 = Math.addExact(s2, w)
-                    if (v < mn) mn = v
-                    if (v > mx) mx = v
-                  } else {
-                    sm += v
-                    if (wantS2) s2 = Math.addExact(s2, Math.multiplyExact(v, v))
-                    if (v < mn) mn = v
-                    if (v > mx) mx = v
-                  }
-                }
-              }
-              if (n == 0) Iterator.empty else Iterator.single((n, sm, mn, mx, s2, x1))
-            }
-          } finally {
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
+    val partials = new MultiSearcher(spark, segmentDirs)
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
+        val reader = s.reader
+        val numIdx = reader.numIndex(numField) // loud on undeclared
+        val wIdx = if (weightField != null) reader.numIndex(weightField) else -1
+        if (histogram) {
+          val counts = scala.collection.mutable.HashMap.empty[Long, Long]
+          s.ids.foreach { id =>
+            if (reader.seek(id)) {
+              val raw = reader.numValue(numIdx)
+              val v = if (logS >= 0) graft.functions.LogBuckets.bucketOf(raw, logS) else raw
+              counts.update(v, counts.getOrElse(v, 0L) + 1L)
             }
           }
+          counts.iterator.map { case (v, n) => (v, n, 0L, 0L, 0L, 0L) }
+        } else {
+          var n = 0L; var sm = 0L; var s2 = 0L; var x1 = 0L
+          var mn = if (matrix) 0L else Long.MaxValue
+          var mx = if (matrix) 0L else Long.MinValue
+          s.ids.foreach { id =>
+            if (reader.seek(id)) {
+              val v = reader.numValue(numIdx)
+              n += 1
+              // exact integer Σv² partials keep extended_stats
+              // deterministic across slice orders; overflow is LOUD (a
+              // warc_ts-scale field needs the double/t-digest path, not a
+              // silent wrap). Opt-in: plain stats on epoch-millis fields
+              // must not square them. Same discipline for weighted_avg's
+              // Σ(v·w)/Σw and matrix_stats' six sums.
+              if (matrix) {
+                val w = reader.numValue(wIdx)
+                sm = Math.addExact(sm, v)
+                s2 = Math.addExact(s2, Math.multiplyExact(v, v))
+                mn = Math.addExact(mn, w)
+                mx = Math.addExact(mx, Math.multiplyExact(w, w))
+                x1 = Math.addExact(x1, Math.multiplyExact(v, w))
+              } else if (wIdx >= 0) {
+                val w = reader.numValue(wIdx)
+                sm = Math.addExact(sm, Math.multiplyExact(v, w))
+                s2 = Math.addExact(s2, w)
+                if (v < mn) mn = v
+                if (v > mx) mx = v
+              } else {
+                sm += v
+                if (withS2) s2 = Math.addExact(s2, Math.multiplyExact(v, v))
+                if (v < mn) mn = v
+                if (v > mx) mx = v
+              }
+            }
+          }
+          if (n == 0) Iterator.empty else Iterator.single((n, sm, mn, mx, s2, x1))
         }
       }
-    if (asHist) partials.toDF("v", "n", "_a", "_b", "_c", "_d").select($"v", $"n")
+    if (histogram) partials.toDF("v", "n", "_a", "_b", "_c", "_d").select($"v", $"n")
     else partials.toDF("n", "sm", "mn", "mx", "s2", "x1")
   }
 
@@ -1982,18 +1659,13 @@ object Facets {
       .agg(sum($"n").as("n"))
   }
 
-  /** Shared (segment, slice)-local walk. `keyPattern` null → key by
-    * lang; else key by UTC-formatted warc_ts. Returns a (k1, k2, n)
-    * frame — composite keys (terms × date) carry the two components as
-    * SEPARATE tuple fields, never a delimited string (a keyword value
-    * containing the delimiter would silently corrupt the split —
-    * ADVICE r4); single-key aggs leave k2 = "". The only exchange is the
-    * final tiny (k1, k2 → Σ count) groupBy.
-    *
-    * AND-mode early exit uses per-segment vocabulary: a term missing
-    * from segment S only empties S's contribution (each segment is its
-    * own corpus for matching), which the per-task iters check handles —
-    * no global df lookup is needed.
+  /** The keyed bucket fold over the view's match walk. `keyPattern` null
+    * → key by `kwField`; else key by UTC-formatted warc_ts. Returns a
+    * (k1, k2, n, sm, mn, mx) frame — composite keys (terms × date) carry
+    * the two components as SEPARATE tuple fields, never a delimited
+    * string (a keyword value containing the delimiter would silently
+    * corrupt the split — ADVICE r4); single-key aggs leave k2 = "". The
+    * only exchange after the walk is the tiny (k1, k2 → Σ count) groupBy.
     */
   private def aggregate(
       spark: SparkSession,
@@ -2012,117 +1684,45 @@ object Facets {
       idAllow: Array[Long] = null // sampler: SORTED segment-absolute id allow-list (single-segment callers only)
   ): DataFrame = {
     import spark.implicits._
-    require(segmentDirs.nonEmpty, "no segments")
-    require(idAllow == null || segmentDirs.size == 1,
-      "id allow-list is segment-absolute — single-segment callers only")
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    val exTerms = mustNot.distinct
-    if (terms.isEmpty || terms.size < minShouldMatch)
-      return spark.emptyDataset[(String, String, Long, Long, Long, Long)]
-        .toDF("k1", "k2", "n", "sm", "mn", "mx")
-
-    val bAllow = if (idAllow == null) null else spark.sparkContext.broadcast(idAllow)
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val msm = minShouldMatch
-    val pat = keyPattern
-    val kwF = kwField
-    val kwF2 = kwField2
-    val numF = numField
-    val numW = numWidth
-    val metF = metricField
-    val pred = attrFilter
-
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0) // scoring unused: bounds/avgdl moot
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter // close after the walk
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          if (bAllow != null)
-            filter = Filters.and(filter, new SortedIdsFilter(bAllow.value))
-          val fmt =
-            if (pat == null) null
-            else java.time.format.DateTimeFormatter.ofPattern(pat)
-              .withZone(java.time.ZoneOffset.UTC)
-          val reader = AttrSidecar.openReader(segDir, slice)
-          // resolve the field once per slice (loud on undeclared);
-          // kwField + pattern together = composite (terms × date) keys
-          val numIdx = if (numF != null) reader.numIndex(numF) else -1
-          val kwIdx = if (numF == null && kwF != null) reader.kwIndex(kwF) else -1
-          val kw2Idx = if (kwF2 != null) reader.kwIndex(kwF2) else -1
-          val metIdx = if (metF != null) reader.numIndex(metF) else -1
-          try {
-            // value = (n, sum, min, max) of the metric attr; count-only
-            // aggs leave the tail at (0, MaxValue, MinValue) and drop it
-            val counts = scala.collection.mutable.HashMap.empty[(String, String), Array[Long]]
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              if (reader.seek(id)) {
-                val k: (String, String) =
-                  if (numF != null)
-                    ((java.lang.Math.floorDiv(reader.numValue(numIdx), numW) * numW).toString, "")
-                  else if (kwF2 != null)
-                    (reader.kwValue(kwIdx), reader.kwValue(kw2Idx))
-                  else if (fmt != null && kwF != null)
-                    (reader.kwValue(kwIdx),
-                      fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)))
-                  else if (fmt == null) (reader.kwValue(kwIdx), "")
-                  else (fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)), "")
-                val acc = counts.getOrElseUpdate(k,
-                  Array(0L, 0L, Long.MaxValue, Long.MinValue))
-                acc(0) += 1L
-                if (metIdx >= 0) {
-                  val v = reader.numValue(metIdx)
-                  acc(1) += v
-                  if (v < acc(2)) acc(2) = v
-                  if (v > acc(3)) acc(3) = v
-                }
-              }
-            }
-            counts.iterator.map { case ((a, b), acc) =>
-              (a, b, acc(0), acc(1), acc(2), acc(3))
-            }.toArray.iterator
-          } finally {
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
+    new MultiSearcher(spark, segmentDirs)
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch, allow = idAllow) { s =>
+        val fmt =
+          if (keyPattern == null) null
+          else java.time.format.DateTimeFormatter.ofPattern(keyPattern)
+            .withZone(java.time.ZoneOffset.UTC)
+        val reader = s.reader
+        // resolve the field once per slice (loud on undeclared);
+        // kwField + pattern together = composite (terms × date) keys
+        val numIdx = if (numField != null) reader.numIndex(numField) else -1
+        val kwIdx = if (numField == null && kwField != null) reader.kwIndex(kwField) else -1
+        val kw2Idx = if (kwField2 != null) reader.kwIndex(kwField2) else -1
+        val metIdx = if (metricField != null) reader.numIndex(metricField) else -1
+        // value = (n, sum, min, max) of the metric attr; count-only
+        // aggs leave the tail at (0, MaxValue, MinValue) and drop it
+        val counts = scala.collection.mutable.HashMap.empty[(String, String), Array[Long]]
+        s.ids.foreach { id =>
+          if (reader.seek(id)) {
+            val k: (String, String) =
+              if (numField != null)
+                ((java.lang.Math.floorDiv(reader.numValue(numIdx), numWidth) * numWidth).toString, "")
+              else if (kwField2 != null)
+                (reader.kwValue(kwIdx), reader.kwValue(kw2Idx))
+              else if (fmt != null && kwField != null)
+                (reader.kwValue(kwIdx),
+                  fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)))
+              else if (fmt == null) (reader.kwValue(kwIdx), "")
+              else (fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis)), "")
+            val acc = counts.getOrElseUpdate(k, Array(0L, 0L, Long.MaxValue, Long.MinValue))
+            acc(0) += 1L
+            if (metIdx >= 0) {
+              val v = reader.numValue(metIdx)
+              acc(1) += v
+              if (v < acc(2)) acc(2) = v
+              if (v > acc(3)) acc(3) = v
             }
           }
         }
+        counts.iterator.map { case ((a, b), acc) => (a, b, acc(0), acc(1), acc(2), acc(3)) }
       }
       .toDF("k1", "k2", "n", "sm", "mn", "mx")
       .groupBy($"k1", $"k2")

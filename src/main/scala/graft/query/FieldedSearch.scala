@@ -37,8 +37,8 @@ object FieldedSearch {
     * share the docID space and attributes): `attrFilter` streams the first
     * field's slice sidecar node-locally (no doc-id exchange); `docFilter`
     * (nullable Column) is the ad-hoc allow-list path.
-    */
-  /** `perFieldTerms` (nullable): per-field allowed term subset — the
+    *
+    * `perFieldTerms` (nullable): per-field allowed term subset — the
     * fielded prefix/fuzzy rewrites expand PER FIELD dictionary (ES
     * multi_match rewrites each field against its own terms), so a term
     * may participate in one field and not another; masked-out (field,

@@ -6,26 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder, Tombstones}
 import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
 import graft.query.Search.QueryHit
-import MultiSearcher.{Block, PhraseQ, SegCtx, TermQ}
-
-/** Iterator wrapper used by the family export walks: offsets local ids
-  * to global and closes the sidecar cursor on exhaustion. Top-level (not
-  * an inner class) so task closures don't capture the MultiSearcher.
-  */
-private[query] final class GlobalHitIterator(
-    base: Iterator[(Long, Double)], docBase: Long, onExhausted: () => Unit
-) extends Iterator[Search.QueryHit] {
-  private var closed = false
-  def hasNext: Boolean = {
-    val h = base.hasNext
-    if (!h && !closed) { closed = true; onExhausted() }
-    h
-  }
-  def next(): Search.QueryHit = {
-    val (id, s) = base.next()
-    Search.QueryHit(docBase + id, s)
-  }
-}
+import MultiSearcher.{Block, MatchSlice, PhraseQ, SegCtx, TermQ}
 
 /** The BM25 searcher over a segment set: N immutable index segments
   * queried as ONE logical index, no physical merge (≙ Elasticsearch
@@ -62,6 +43,12 @@ private[query] final class GlobalHitIterator(
   * context (terms, idfs, dirs, bases, tombstone generations) rides one
   * broadcast; task closures never capture the searcher.
   *
+  * Every operator that enumerates a FULL match set — aggregations,
+  * `_count`, match-id and match export, collapse, sort-by-field — runs
+  * one match walk ([[matchWalk]] unscored, [[scoredWalk]] scored): the
+  * same scan, (segment, slice) exchange, AND early exit and filter
+  * composition, with only the per-doc fold left to the caller.
+  *
   * `explicitBases`: global docID base per segment. Defaults to cumulative
   * n_docs in `segmentDirs` order; pass absolute bases when querying a
   * SUBSET of a larger segment family (e.g. time-bucket pruning) so global
@@ -97,7 +84,7 @@ final class MultiSearcher(
   private val oneSegment = familyDirs.size == 1
   val bases: Seq[Long] =
     explicitBases.getOrElse(segStats.map(_.n_docs).scanLeft(0L)(_ + _).init)
-  require(bases.length == segmentDirs.length)
+  require(bases.length == segmentDirs.length, "bases must align with segments")
   val nDocs: Long = familyStats.map(_.n_docs).sum
   private val totalTokens = familyStats.map(_.total_tokens).sum
   val avgDl: Double =
@@ -288,6 +275,48 @@ final class MultiSearcher(
     }
   }
 
+  /** The unscored match walk — every aggregation, `_count`, match-id
+    * export and sort-by-field read enumerates its matches here. One
+    * pushdown scan of the query, must_not and `extraTerms` (bucket terms
+    * a consumer probes through [[MatchSlice.cursor]]), one exchange by
+    * (segment, slice); each task composes the `attrFilter` sidecar
+    * cursor, must_not and tombstones into the filter and hands
+    * `consume` a [[MatchSlice]] whose [[MatchSlice.ids]] stream the
+    * slice's matches in ascending local id. No dictionary is read:
+    * nothing is scored, and a slice where an AND term has no blocks is
+    * skipped in the task (each segment is its own vocabulary for
+    * matching). `allow` — a sorted allow-list of local ids, one-segment
+    * views only — joins the filter, so blocks outside it still skip.
+    */
+  private[query] def matchWalk[R: Encoder](
+      queryTerms: Seq[String], mode: String, attrFilter: AttrPred, mustNot: Seq[String],
+      minShouldMatch: Int, extraTerms: Seq[String] = Nil, allow: Array[Long] = null
+  )(consume: MatchSlice => Iterator[R]): Dataset[R] = {
+    require(allow == null || segmentDirs.size == 1, "an id allow-list needs a one-segment view")
+    val terms = queryTerms.distinct
+    if (terms.isEmpty || terms.size < minShouldMatch) spark.emptyDataset[R]
+    else {
+      val q = TermQ(terms.toArray, new Array[Double](terms.size), mustNot.distinct.toArray,
+        mode == "and", minShouldMatch, 0, null, null)
+      walkGroups((terms ++ q.exclude ++ extraTerms).distinct, q)(
+        MultiSearcher.sliceWalk(_, _, _, _, attrFilter, allow, consume))
+    }
+  }
+
+  /** [[matchWalk]] with exact BM25 scores: the query compiles against
+    * the view's stats ([[termQuery]]), and [[MatchSlice.hits]] streams
+    * (local id, score) in ascending id.
+    */
+  private[query] def scoredWalk[R: Encoder](
+      queryTerms: Seq[String], mode: String, attrFilter: AttrPred, mustNot: Seq[String],
+      minShouldMatch: Int
+  )(consume: MatchSlice => Iterator[R]): Dataset[R] =
+    termQuery(queryTerms, mode, mustNot, minShouldMatch) match {
+      case None => spark.emptyDataset[R]
+      case Some((present, q)) =>
+        walkGroups(present ++ q.exclude, q)(MultiSearcher.sliceWalk(_, _, _, _, attrFilter, null, consume))
+    }
+
   /** BM25 top-k over the view — the contract of [[Search.topK]] (filter
     * context, must_not, tombstones, msm, terms_set, search_after, boosts)
     * with family-global stats and ids. `searchAfter`'s doc id is global.
@@ -416,12 +445,9 @@ final class MultiSearcher(
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
   ): DataFrame =
-    termQuery(queryTerms, mode, mustNot, minShouldMatch) match {
-      case None => none
-      case Some((present, q)) =>
-        val pred = attrFilter
-        walkGroups(present ++ q.exclude, q)(MultiSearcher.exportWalk(_, _, _, _, pred)).toDF()
-    }
+    scoredWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
+      s.hits.map { case (id, score) => QueryHit(s.docBase + id, score) }
+    }.toDF()
 
   /** FULL exact-phrase match set (global ids, BM25 phrase-freq scores) —
     * the phrase leaf of the query_string tree. No top-k gate: a composed
@@ -451,23 +477,17 @@ final class MultiSearcher(
       valueCap: Int = 1 << 20
   ): DataFrame = {
     require(valueCap > 0, "valueCap must be positive")
-    termQuery(queryTerms, mode, mustNot, minShouldMatch) match {
-      case None => spark.emptyDataset[(String, Long, Double)].toDF(kwField, "doc_id", "score")
-      case Some((present, q)) =>
-        val pred = attrFilter
-        val fld = kwField
-        val perSlice = walkGroups(present ++ q.exclude, q)(
-          MultiSearcher.collapseWalk(_, _, _, _, pred, fld, valueCap)).toDF(fld, "doc_id", "score")
-        // global: one winner per value, then top-k groups by their winner
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(fld)).orderBy(desc("score"), asc("doc_id"))
-        perSlice
-          .withColumn("rn", row_number().over(w))
-          .where($"rn" === 1)
-          .drop("rn")
-          .orderBy(desc("score"), asc("doc_id"))
-          .limit(k)
-    }
+    val perSlice = scoredWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch)(
+      MultiSearcher.collapseSlice(_, kwField, valueCap)).toDF(kwField, "doc_id", "score")
+    // global: one winner per value, then top-k groups by their winner
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(kwField)).orderBy(desc("score"), asc("doc_id"))
+    perSlice
+      .withColumn("rn", row_number().over(w))
+      .where($"rn" === 1)
+      .drop("rn")
+      .orderBy(desc("score"), asc("doc_id"))
+      .limit(k)
   }
 
   /** Global doc ids admitted by a pure filter, score 0 — per-(segment,
@@ -551,9 +571,6 @@ object MultiSearcher {
                            terms: Map[String, Array[Block]]): Array[PostingIter] =
     exclude.flatMap(t => terms.get(t).map(c.iter(_, 0, 0.0)))
 
-  private def closeOf(cursor: AutoCloseable): () => Unit =
-    () => if (cursor != null) cursor.close()
-
   /** Block-max WAND top-k of one (segment, slice): AND, or OR with a
     * fixed or per-doc (terms_set) minimum_should_match.
     */
@@ -609,23 +626,6 @@ object MultiSearcher {
     }
   }
 
-  /** Full scored match set of one (segment, slice), STREAMED (a hot
-    * term's slice can match 10^8 docs); the sidecar cursor closes when
-    * the consumer exhausts the iterator.
-    */
-  private def exportWalk(c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
-                         pred: AttrPred): Iterator[QueryHit] = {
-    val terms = rows.groupBy(_.term)
-    val iters = termIters(c, terms)
-    if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) Iterator.empty
-    else {
-      val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)
-      val filter = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, terms))
-      new GlobalHitIterator(BlockMaxWand.scoredMatches(iters, c.q.isAnd, c.q.msm, filter),
-        c.bases(seg), closeOf(cursor))
-    }
-  }
-
   /** Full phrase match set of one (segment, slice); phraseMatches
     * materializes it, so the sidecar cursor closes eagerly.
     */
@@ -641,22 +641,73 @@ object MultiSearcher {
         .map { case (id, freq, dl) =>
           QueryHit(docBase + id, c.q.idfSum * IndexBuilder.impact(freq, dl, c.avgDl))
         }
-      finally closeOf(cursor)()
+      finally if (cursor != null) cursor.close()
+    }
+  }
+
+  /** One (segment, slice) of a match walk, as its consumer sees it: the
+    * segment dir, the slice, the doc-id base, the ascending match stream
+    * — [[ids]] unscored or [[hits]] with exact scores; a consumer reads
+    * one of them, once — a fresh cursor per pushed-down term
+    * ([[cursor]], for bucket membership) and the slice's attribute
+    * sidecar ([[reader]], opened on first use). The walk owns the reader
+    * and the filter's sidecar cursor.
+    */
+  private[query] final class MatchSlice private[MultiSearcher] (
+      c: SegCtx[TermQ], seg: Int, val slice: Int, terms: Map[String, Array[Block]],
+      iters: Array[PostingIter], filter: DocFilter, attrCursor: AutoCloseable) {
+    val dir: String = c.dirs(seg)
+    val docBase: Long = c.bases(seg)
+    def ids: Iterator[Long] = BlockMaxWand.matchingDocIds(iters, c.q.isAnd, c.q.msm, filter)
+    def hits: Iterator[(Long, Double)] = BlockMaxWand.scoredMatches(iters, c.q.isAnd, c.q.msm, filter)
+    def cursor(term: String): Option[PostingIter] = terms.get(term).map(c.iter(_, 0, 0.0))
+    private var rd: AttrSidecar.AttrReader = null
+    def reader: AttrSidecar.AttrReader = {
+      if (rd == null) rd = AttrSidecar.openReader(dir, slice)
+      rd
+    }
+    private var closed = false
+    private[MultiSearcher] def close(): Unit = if (!closed) {
+      closed = true
+      if (rd != null) rd.close()
+      if (attrCursor != null) attrCursor.close()
+    }
+  }
+
+  /** One (segment, slice) of [[MultiSearcher.matchWalk]] and
+    * [[MultiSearcher.scoredWalk]]: the AND early exit, the filter
+    * composition (sidecar cursor ∧ ¬must_not ∧ ¬tombstoned ∧ `allow`),
+    * then `consume`. The slice closes when the consumer's output is
+    * exhausted or at task completion, whichever comes first, so lazy and
+    * eager consumers follow one rule.
+    */
+  private def sliceWalk[R](c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
+                           pred: AttrPred, allow: Array[Long],
+                           consume: MatchSlice => Iterator[R]): Iterator[R] = {
+    val terms = rows.groupBy(_.term)
+    val iters = termIters(c, terms)
+    if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) return Iterator.empty
+    val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)
+    val f = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, terms))
+    val s = new MatchSlice(c, seg, slice, terms, iters,
+      if (allow == null) f else Filters.and(f, new SortedIdsFilter(allow)), cursor)
+    val tc = org.apache.spark.TaskContext.get()
+    if (tc != null) tc.addTaskCompletionListener[Unit](_ => s.close())
+    val out = consume(s)
+    new scala.collection.AbstractIterator[R] {
+      def hasNext: Boolean = {
+        val h = out.hasNext
+        if (!h) s.close()
+        h
+      }
+      def next(): R = out.next()
     }
   }
 
   /** One best hit per keyword value of one (segment, slice). */
-  private def collapseWalk(c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
-                           pred: AttrPred, fld: String,
-                           valueCap: Int): Iterator[(String, Long, Double)] = {
-    val terms = rows.groupBy(_.term)
-    val iters = termIters(c, terms)
-    if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) return Iterator.empty
-    val segDir = c.dirs(seg)
-    val docBase = c.bases(seg)
-    val cursor = if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-    val filter = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, terms))
-    val reader = AttrSidecar.openReader(segDir, slice)
+  private def collapseSlice(s: MatchSlice, fld: String,
+                            valueCap: Int): Iterator[(String, Long, Double)] = {
+    val reader = s.reader
     val kwIdx = reader.kwIndex(fld)
     // One best hit per value within the task — a task-local COMBINER
     // capped at `valueCap` distinct values: beyond the cap NEW values
@@ -667,41 +718,24 @@ object MultiSearcher {
     // map only shrinks the exchange from match-count to
     // nSlices×|values| when the keyword honors its bounded-cardinality
     // contract (the batch-filter cap treatment, `Searcher.attrAllowListCap`).
-    var closed = false
-    def closeAll(): Unit = if (!closed) {
-      closed = true
-      reader.close()
-      closeOf(cursor)()
-    }
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit](_ => closeAll())
     val best = scala.collection.mutable.HashMap.empty[String, (Long, Double)]
-    val streamed = BlockMaxWand.scoredMatches(iters, c.q.isAnd, c.q.msm, filter)
-      .flatMap { case (id, s) =>
-        if (!reader.seek(id)) Nil
-        else {
-          val v = reader.kwValue(kwIdx)
-          val gid = docBase + id
-          best.get(v) match {
-            case Some((bid, bs)) =>
-              if (s > bs || (s == bs && gid < bid)) best.update(v, (gid, s))
-              Nil
-            case None =>
-              if (best.size < valueCap) { best.update(v, (gid, s)); Nil }
-              else (v, gid, s) :: Nil
-          }
+    val streamed = s.hits.flatMap { case (id, sc) =>
+      if (!reader.seek(id)) Nil
+      else {
+        val v = reader.kwValue(kwIdx)
+        val gid = s.docBase + id
+        best.get(v) match {
+          case Some((bid, bs)) =>
+            if (sc > bs || (sc == bs && gid < bid)) best.update(v, (gid, sc))
+            Nil
+          case None =>
+            if (best.size < valueCap) { best.update(v, (gid, sc)); Nil }
+            else (v, gid, sc) :: Nil
         }
       }
+    }
     // the map drains only AFTER the match stream exhausts (++ takes its
     // right side by name)
-    val drained = streamed ++ best.iterator.map { case (v, (id, s)) => (v, id, s) }
-    new scala.collection.AbstractIterator[(String, Long, Double)] {
-      def hasNext: Boolean = {
-        val h = drained.hasNext
-        if (!h) closeAll()
-        h
-      }
-      def next(): (String, Long, Double) = drained.next()
-    }
+    streamed ++ best.iterator.map { case (v, (id, sc)) => (v, id, sc) }
   }
 }

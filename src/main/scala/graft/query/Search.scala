@@ -42,9 +42,9 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   * since merged and purged indexes store no text and must fail such a
   * read loudly instead of returning nulls.
   *
-  * The remaining operators here (batch, explain, dis_max, synonyms,
-  * phrase counts and suggesters, phrase-prefix, more_like_this) are
-  * single-index only.
+  * [[batchTopK]] runs [[Searcher.topKBatch]]. The remaining operators
+  * here (explain, dis_max, synonyms, phrase counts and suggesters,
+  * phrase-prefix, more_like_this) are single-index only.
   */
 object Search {
 
@@ -127,18 +127,14 @@ object Search {
   /** BATCHED top-k: run MANY bool term queries in ONE job — the offline
     * evaluation / RAG-training-retrieval shape (millions of queries a
     * day against the same index), where per-query jobs would drown in
-    * scheduling overhead and re-scan hot postings once per query.
-    *
-    * One postings scan covers the UNION of all queries' terms (pushdown
-    * `term IN (...)`); one shuffle keys blocks by slice; each slice task
-    * then runs every query's WAND walk against the slice's shared block
-    * set — a hot term's blocks are fetched and shuffled ONCE however
-    * many queries use it (decode stays per-query: posting cursors are
-    * stateful). Output is exact per-query top-k: per-slice k-heaps, then
-    * a per-qid window cut over nSlices·k·|queries| rows.
+    * scheduling overhead and re-scan hot postings once per query. The
+    * walk is [[Searcher.topKBatch]]'s: one postings scan of the UNION of
+    * all queries' terms, one shuffle by slice, every query's WAND per
+    * slice task, then a per-qid window cut — exact per-query top-k.
     *
     * `queries`: (qid, terms, mode) — driver-scale (broadcast), thousands
     * to low millions; beyond that, chunk the query set and union.
+    * Returns (qid, doc_id, score).
     */
   def batchTopK(
       spark: SparkSession,
@@ -146,71 +142,15 @@ object Search {
       queries: Seq[(Long, Seq[String], String)],
       k: Int
   ): DataFrame = {
-    import spark.implicits._
     require(queries.nonEmpty, "no queries")
     queries.foreach { case (qid, ts, mode) =>
       require(ts.nonEmpty, s"empty terms for qid $qid")
       require(mode == "and" || mode == "or", s"bad mode '$mode' for qid $qid")
     }
     require(queries.map(_._1).distinct.size == queries.size, "duplicate qids")
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val allTerms = queries.flatMap(_._2).distinct
-    val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |distinct batch terms| rows
-    // compile per query: distinct terms + idfs; drop queries that can't
-    // match (AND with a missing term / no present term)
-    val compiled: Array[(Long, Array[String], Array[Double], Boolean)] = queries.flatMap {
-      case (qid, ts, mode) =>
-        val isAnd = mode == "and"
-        val terms = ts.distinct
-        if (isAnd && terms.exists(t => !dfs.contains(t))) None
-        else if (!terms.exists(dfs.contains)) None
-        else Some((qid, terms.toArray,
-          terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray, isAnd))
-    }.toArray
-    if (compiled.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "doc_id", "score")
-    val neededTerms = compiled.flatMap(_._2).distinct.toSeq
-    val bQueries = spark.sparkContext.broadcast(compiled)
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder.readPostings(spark, indexDir)
-      .where($"term".isin(neededTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    val perSlice = blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val byTerm = rows.toArray.groupBy(_._2)
-      // block refs are built once per (slice, term) and SHARED across
-      // queries; each query gets fresh cursors over them
-      val refsOf: Map[String, Array[BlockRef]] = byTerm.map { case (t, rs) =>
-        t -> rs.sortBy(r => (r._4, r._3))
-          .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-      }
-      bQueries.value.iterator.flatMap { case (qid, qTerms, qIdfs, isAnd) =>
-        val iters = qTerms.iterator.zipWithIndex.flatMap { case (t, ti) =>
-          refsOf.get(t).map(refs => new PostingIter(ti, qIdfs(ti), refs, avgDl))
-        }.toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          val filter = if (tomb == null) null else tomb.compose(slice, null)
-          val hits =
-            if (isAnd) BlockMaxWand.and(iters, k, filter)
-            else BlockMaxWand.or(iters, k, filter)
-          hits.iterator.map(h => (qid, h.docId, h.score))
-        }
-      }
-    }.toDF("qid", "doc_id", "score")
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy(desc("score"), asc("doc_id"))
-    perSlice.withColumn("rn", row_number().over(w))
-      .where($"rn" <= k)
-      .drop("rn")
+    new Searcher(spark, indexDir)
+      .topKBatch(queries.map { case (qid, ts, mode) => Searcher.BatchQuery(qid, ts, mode) }, k)
+      .select("qid", "doc_id", "score")
   }
 
   /** ES `_explain`: per-term score decomposition for specific docs —

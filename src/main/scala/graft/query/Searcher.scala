@@ -58,7 +58,7 @@ final class Searcher(
 
   def dfOf(queryTerms: Seq[String]): Map[String, Long] =
     terms.where($"term".isin(queryTerms.distinct: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap
+      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |queryTerms| rows
 
   /** All queries in one job → (qid, doc_id, score, rank). Per-query
     * filter context composes here too (`BatchQuery.attr`): each slice
@@ -68,9 +68,15 @@ final class Searcher(
     * cursor over the shared array. No doc-id exchange, same as the ad-hoc
     * sidecar path.
     */
-  def topKBatch(queries: Seq[Searcher.BatchQuery], k: Int): DataFrame = {
-    val allTerms = (queries.flatMap(_.terms) ++ queries.flatMap(_.mustNot)).distinct
-    val dfs = dfOf(allTerms)
+  def topKBatch(queries: Seq[Searcher.BatchQuery], k: Int): DataFrame =
+    batchWalk(queries, k, dfOf(queries.flatMap(q => q.terms ++ q.mustNot)))
+
+  /** [[topKBatch]] over already-resolved dfs of every query and must_not
+    * term, so a caller that resolved them runs no second dictionary job.
+    */
+  private def batchWalk(queries: Seq[Searcher.BatchQuery], k: Int,
+                        dfs: Map[String, Long]): DataFrame = {
+    val allTerms = queries.flatMap(q => q.terms ++ q.mustNot).distinct
     // per-query resolved plan: (terms in fixed order, idfs, isAnd, attr,
     // must_not terms)
     val resolved = queries.map { q =>
@@ -184,11 +190,11 @@ final class Searcher(
       // ever scores a COMPLETE block set.
       .limit(maxBlocks + 1)
       .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-      .collect()
+      .collect() // ≤ maxBlocks + 1 rows
     if (rows.length > maxBlocks) {
-      // hot query — stay distributed
-      return topK(queryTerms, mode, k, mustNot, minShouldMatch, attr)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      // hot query — stay distributed, on the dfs already resolved
+      return ranked(queryTerms, mode, k, mustNot, minShouldMatch, attr, dfs)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq // ≤ k rows
     }
     val tomb = graft.index.Tombstones.handle(indexDir)
     val idfs = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
@@ -224,15 +230,21 @@ final class Searcher(
   def topK(queryTerms: Seq[String], mode: String, k: Int,
       mustNot: Seq[String] = Nil, minShouldMatch: Int = 1,
       attr: graft.index.AttrPred = null): DataFrame = {
-    // AND with a missing term can short-circuit to empty without a job
-    val dfs = dfOf(queryTerms)
+    // one dictionary job; AND with a missing term short-circuits to empty
+    val dfs = dfOf(queryTerms ++ mustNot)
     if (mode == "and" && queryTerms.distinct.exists(t => !dfs.contains(t)))
       return spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    topKBatch(Seq(Searcher.BatchQuery(0L, queryTerms, mode, attr = attr,
-      mustNot = mustNot, minShouldMatch = minShouldMatch)), k)
+    ranked(queryTerms, mode, k, mustNot, minShouldMatch, attr, dfs)
+  }
+
+  /** One query through the batch walk, as (doc_id, score) in rank order. */
+  private def ranked(queryTerms: Seq[String], mode: String, k: Int, mustNot: Seq[String],
+                     minShouldMatch: Int, attr: graft.index.AttrPred,
+                     dfs: Map[String, Long]): DataFrame =
+    batchWalk(Seq(Searcher.BatchQuery(0L, queryTerms, mode, attr = attr,
+      mustNot = mustNot, minShouldMatch = minShouldMatch)), k, dfs)
       .orderBy($"rank")
       .select($"doc_id", $"score")
-  }
 }
 
 object Searcher {

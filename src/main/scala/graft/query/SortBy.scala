@@ -2,8 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, PostingIter}
+import graft.index.AttrPred
 
 /** Sort-by-field retrieval — THE canonical event-log read the reference
   * serves through Kibana: `bool` filter + `sort: [{warc_ts: desc}]` +
@@ -13,13 +12,13 @@ import graft.query.BlockMaxWand.{BlockRef, PostingIter}
   * for exactly this). Engine rendition: top-k matching docs ordered by a
   * DECLARED numeric sidecar attribute instead of `_score`.
   *
-  * Scale shape (same discipline as ranked retrieval): one exchange of
-  * matched posting blocks by slice; each slice task enumerates its
-  * matches with NO scoring ([[BlockMaxWand.matchingDocIds]] — leapfrog
-  * AND / counted OR), streams each match's sort value from its OWN
-  * slice's sidecar ([[AttrSidecar.AttrReader]], monotone O(1)-memory),
-  * and keeps a k-sized heap by (value, docId); the global merge is
-  * nSlices·k rows. Filter context, must_not, tombstones, and
+  * Scale shape (same discipline as ranked retrieval): the view's
+  * unscored match walk ([[MultiSearcher.matchWalk]] — one exchange of
+  * matched posting blocks by (segment, slice), leapfrog AND / counted
+  * OR); each task streams each match's sort value from its OWN slice's
+  * sidecar ([[graft.index.AttrSidecar.AttrReader]], monotone
+  * O(1)-memory) and keeps a k-sized heap by (value, docId); the global
+  * merge is nSlices·k rows. Filter context, must_not, tombstones, and
   * minimum_should_match compose exactly as in ranked retrieval.
   *
   * `searchAfter` — deep pagination in sort order: pass the previous
@@ -53,13 +52,13 @@ object SortBy {
     * Output docIDs are family-global (manifest-order base offsets, same
     * convention as [[MultiSearcher]]); each (segment, slice) task reads
     * its own segment's sidecar.
-    */
-  /** `explicitBases`: global docID base per segment — pass them when
+    *
+    * `explicitBases`: global docID base per segment — pass them when
     * `segmentDirs` is a PRUNED subset of a larger family (time-bucket
-    * pruning) so ids stay stable across selections, exactly the
-    * [[MultiSearcher]] contract.
-    */
-  /** `metricFields`: extra declared numeric attributes read for each KEPT
+    * pruning) so ids stay stable across selections; they are the view's
+    * own `explicitBases`.
+    *
+    * `metricFields`: extra declared numeric attributes read for each KEPT
     * hit (the ES `top_metrics` agg — "the metrics at the docs with the
     * top sort values"): each metric rides the heap entry, so task memory
     * stays k·(2+nMetrics) longs and the sidecar is read once per match
@@ -82,103 +81,35 @@ object SortBy {
       metricFields: Seq[String] = Nil
   ): DataFrame = {
     import spark.implicits._
-    require(segmentDirs.nonEmpty, "no segments")
-    require(explicitBases.forall(_.size == segmentDirs.size), "bases must align with segments")
     val outCols = Seq("doc_id", "sort_value") ++ metricFields
     require(outCols.distinct == outCols, s"metric fields must be distinct, not 'doc_id'/'sort_value': $metricFields")
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    if (terms.isEmpty)
-      return spark.emptyDataset[(Long, Long, Array[Long])]
-        .toDF("doc_id", "sort_value", "m")
-        .select(col("doc_id") +: col("sort_value") +: metricFields.zipWithIndex
-          .map { case (f, i) => col("m")(i).as(f) }: _*)
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, exTerms.toArray))
-    val bDirs = spark.sparkContext.broadcast(segmentDirs.toArray)
-    val bases = explicitBases.getOrElse(
-      segmentDirs.map(IndexBuilder.readStats(spark, _).n_docs).scanLeft(0L)(_ + _).init)
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-    val bTombs = spark.sparkContext.broadcast(
-      segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    val pred = attrFilter
-    val msm = minShouldMatch
-    val asc0 = ascending
-    val fld = field
-    val after = searchAfter
-    val mFlds = metricFields.toArray
-
-    val blocks = segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms ++ exTerms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    val localTopK = blocks
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (seg, slice) = key
-        val segDir = bDirs.value(seg)
-        val docBase = bBases.value(seg)
-        val (qTerms, exT) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._3)
-        def iterOf(t: String): Option[PostingIter] =
-          byTerm.get(t).map { rs =>
-            val refs = rs.sortBy(r => (r._5, r._4))
-              .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0) // no scoring: bounds/avgdl moot
-          }
-        val iters = qTerms.iterator.flatMap(iterOf).toArray
-        if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Iterator.empty
-        else {
-          var filter: DocFilter =
-            if (pred == null) null else AttrSidecar.openCursor(segDir, slice, pred)
-          val predCursor = filter
-          val exIters = exT.iterator.flatMap(iterOf).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          val tomb = bTombs.value(seg)
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val reader = AttrSidecar.openReader(segDir, slice)
-          val numIdx = reader.numIndex(fld)
-          val mIdxs = mFlds.map(reader.numIndex) // loud on undeclared
-          try {
-            // rank = position tuple in the requested order (smaller ranks
-            // first): (value asc|desc, docId asc). The priority queue
-            // dequeues its MAX, i.e. head = worst kept hit.
-            val rankOrd: Ordering[(Long, Long, Array[Long])] =
-              if (asc0) Ordering.by[(Long, Long, Array[Long]), (Long, Long)] { case (v, id, _) => (v, id) }
-              else Ordering.by[(Long, Long, Array[Long]), (Long, Long)] { case (v, id, _) => (-v, id) }
-            val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long, Array[Long])](rankOrd)
-            def beats(a: (Long, Long, Array[Long]), b: (Long, Long, Array[Long])): Boolean =
-              rankOrd.compare(a, b) < 0 // a ranks strictly before b
-            val afterKey = if (after == null) null else (after._1, after._2, null: Array[Long])
-            BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).foreach { id =>
-              if (reader.seek(id)) {
-                // heap keys carry the FAMILY-GLOBAL id (base offset)
-                val cand = (reader.numValue(numIdx), docBase + id, mIdxs.map(reader.numValue))
-                // search_after: only hits strictly after the cursor
-                if (afterKey == null || beats(afterKey, cand)) {
-                  if (heap.size < k) heap.enqueue(cand)
-                  else if (beats(cand, heap.head)) { heap.dequeue(); heap.enqueue(cand) }
-                }
-              }
-            }
-            heap.toArray.iterator.map { case (v, id, ms) => (id, v, ms) }
-          } finally {
-            reader.close()
-            predCursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
+    // rank = position tuple in the requested order (smaller ranks first):
+    // (value asc|desc, docId asc). The priority queue dequeues its MAX,
+    // i.e. head = worst kept hit.
+    val rankOrd: Ordering[(Long, Long, Array[Long])] =
+      if (ascending) Ordering.by[(Long, Long, Array[Long]), (Long, Long)] { case (v, id, _) => (v, id) }
+      else Ordering.by[(Long, Long, Array[Long]), (Long, Long)] { case (v, id, _) => (-v, id) }
+    val localTopK = new MultiSearcher(spark, segmentDirs, explicitBases)
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
+        val reader = s.reader
+        val numIdx = reader.numIndex(field)
+        val mIdxs = metricFields.map(reader.numIndex).toArray // loud on undeclared
+        val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long, Array[Long])](rankOrd)
+        def beats(a: (Long, Long, Array[Long]), b: (Long, Long, Array[Long])): Boolean =
+          rankOrd.compare(a, b) < 0 // a ranks strictly before b
+        val afterKey = if (searchAfter == null) null else (searchAfter._1, searchAfter._2, null: Array[Long])
+        s.ids.foreach { id =>
+          if (reader.seek(id)) {
+            // heap keys carry the FAMILY-GLOBAL id (base offset)
+            val cand = (reader.numValue(numIdx), s.docBase + id, mIdxs.map(reader.numValue))
+            // search_after: only hits strictly after the cursor
+            if (afterKey == null || beats(afterKey, cand)) {
+              if (heap.size < k) heap.enqueue(cand)
+              else if (beats(cand, heap.head)) { heap.dequeue(); heap.enqueue(cand) }
             }
           }
         }
+        heap.iterator.map { case (v, id, ms) => (id, v, ms) }
       }
       .toDF("doc_id", "sort_value", "m")
 

@@ -232,6 +232,31 @@ class MergeStreamSpec extends AnyFunSuite {
     val aggOne = graft.query.Facets.termsAgg(spark, merged, Seq("w0", "w3"), "or")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(aggFam == aggOne, "family terms facet ≠ merged index")
+    // the numeric and date walks: each family partial set combines to the
+    // merged index's answer
+    import graft.query.Facets
+    val q = Seq("w0", "w3")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    def sameOnFamily(what: String, fam: org.apache.spark.sql.DataFrame,
+                     one: org.apache.spark.sql.DataFrame): Unit = {
+      val (f, o) = (rowsOf(fam), rowsOf(one))
+      assert(o.nonEmpty && f == o, s"family $what ≠ merged index: $f vs $o")
+    }
+    sameOnFamily("stats", Facets.statsAggMulti(spark, famDirs, q, "or", "doc_len"),
+      Facets.statsAgg(spark, merged, q, "or", "doc_len"))
+    sameOnFamily("extended_stats", Facets.extendedStatsAggMulti(spark, famDirs, q, "or", "doc_len"),
+      Facets.extendedStatsAgg(spark, merged, q, "or", "doc_len"))
+    sameOnFamily("weighted_avg",
+      Facets.weightedAvgAggMulti(spark, famDirs, q, "or", "warc_ts", "doc_len"),
+      Facets.weightedAvgAgg(spark, merged, q, "or", "warc_ts", "doc_len"))
+    sameOnFamily("date_histogram", Facets.dateHistogramMulti(spark, famDirs, q, "or", "hour"),
+      Facets.dateHistogram(spark, merged, q, "or", "hour"))
+    // the cut at the rarest bucket's count keeps at least one bucket
+    val rare = aggOne.map(_._2).min
+    sameOnFamily("rare_terms", Facets.rareTermsAggMulti(spark, famDirs, q, "or", rare),
+      Facets.rareTermsAgg(spark, merged, q, "or", rare))
+    assert(rowsOf(Facets.statsAgg(spark, merged, q, "or", "doc_len")).head.head != 0L,
+      "the family checks need matches")
     val preFam = live.prefixTopK("w1", 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val preOne = Search.prefixTopK(spark, merged, "w1", 10)

@@ -8,7 +8,7 @@ import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.index.IndexBuilder
 import graft.index.IndexBuilder.BuildConfig
-import graft.query.{MultiSearcher, QueryString, Search}
+import graft.query.{BlockMaxWand, Facets, MultiSearcher, QueryString, Search, Searcher, SortBy}
 import graft.sources.PagesGen
 
 /** The Spark jobs a query runs, on a small index. Index tables open with
@@ -17,7 +17,9 @@ import graft.sources.PagesGen
   * shuffle map stage + result, at most 3 jobs, on one index or a segment
   * family; an expansion query reuses its expansion's doc_freq rows, so it
   * adds no second dictionary job; a query_string tree resolves all its
-  * leaves' terms in one dictionary job.
+  * leaves' terms in one dictionary job; `Searcher` resolves a query's
+  * dictionary once, and the unscored match walks (aggregations, `_count`,
+  * sort-by-field) read no dictionary at all.
   */
 class QueryJobsSpec extends AnyFunSuite {
 
@@ -84,6 +86,41 @@ class QueryJobsSpec extends AnyFunSuite {
     val dictionary = family.filter(_.exists(_.startsWith("collect at MultiSearcher.scala")))
     assert(dictionary.size == 1 && dictionary.head.size == 1, s"family dictionary jobs: $family")
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
+  }
+
+  test("Searcher.topK and topKLocal's distributed fallback run one dictionary job") {
+    val dir = this.dir
+    val searcher = new Searcher(spark, dir)
+    def dictionary(jobs: Seq[Seq[String]]) = jobs.filter(_.exists(_.startsWith("collect at Searcher.scala")))
+    val topK = jobsOf(searcher.topK(Seq("w0", "w1"), "or", 10, mustNot = Seq("w2")).collect())
+    assertNoInference("Searcher.topK", topK)
+    assert(dictionary(topK).size == 1, s"Searcher.topK dictionary jobs: $topK")
+    assert(topK.size <= 6, s"Searcher.topK ran ${topK.size} jobs: $topK")
+    // maxBlocks = 1 forces the hot-query fallback: the block-count gate's
+    // collect, then the batch walk on the dfs already resolved
+    val local = jobsOf(searcher.topKLocal(Seq("w0", "w1"), "or", 10, maxBlocks = 1))
+    assertNoInference("Searcher.topKLocal", local)
+    assert(dictionary(local).size == 2, s"Searcher.topKLocal dictionary + gate jobs: $local")
+    assert(local.size <= 7, s"Searcher.topKLocal ran ${local.size} jobs: $local")
+  }
+
+  test("aggregations, _count and sort-by-field read no dictionary; jobs and block decodes pinned") {
+    val dir = this.dir
+    val q = Seq("w0", "w1")
+    BlockMaxWand.blockDecodes.reset()
+    val walks = Seq(
+      ("Facets.termsAgg", jobsOf(Facets.termsAgg(spark, dir, q, "or").collect()), 5),
+      ("Facets.matchCount", jobsOf(Facets.matchCount(spark, dir, q, "or")), 3),
+      ("SortBy.topKByAttr", jobsOf(SortBy.topKByAttr(spark, dir, q, "or", "warc_ts", 10).collect()), 2))
+    val decodes = BlockMaxWand.blockDecodes.sum()
+    walks.foreach { case (what, jobs, max) =>
+      assertNoInference(what, jobs)
+      assert(!jobs.flatten.exists(_.startsWith("collect at MultiSearcher.scala")),
+        s"$what read the dictionary: $jobs")
+      assert(jobs.size <= max, s"$what ran ${jobs.size} jobs: $jobs")
+    }
+    // 36 posting blocks per walk: every block of w0 and w1 decodes once
+    assert(decodes == 108, s"the three walks decoded $decodes blocks")
   }
 
   test("MultiSearcher.dfOf from two threads equals the serial answers") {
