@@ -829,6 +829,75 @@ object BlockMaxWand {
     }
   }
 
+  /** Document-at-a-time top-k over term groups — the walk of
+    * [[Search.synonymTopK]] (`members(g)`: group g's cursors) and
+    * [[Search.disMaxTopK]] (one-term groups, combined by `tieBreaker`;
+    * at tb = 1 that is not the sum's float). A one-term group scores
+    * exactly [[PostingIter.score]].
+    */
+  def groupTopK(
+      members: Array[Array[PostingIter]],
+      idfs: Array[Double],
+      avgDl: Double,
+      isAnd: Boolean,
+      minShouldMatch: Int,
+      k: Int,
+      filter: DocFilter,
+      tieBreaker: Option[Double]
+  ): Array[Hit] = {
+    val top = new TopK(k)
+    val all = members.flatten
+    val disMax = tieBreaker.isDefined
+    val tb = tieBreaker.getOrElse(0.0)
+    var continue = all.exists(!_.exhausted)
+    while (continue) {
+      var d = Long.MaxValue
+      var i = 0
+      while (i < all.length) {
+        val it = all(i)
+        if (!it.exhausted && it.doc < d) d = it.doc
+        i += 1
+      }
+      if (d == Long.MaxValue) continue = false
+      else {
+        val allowed = filter == null || filter.contains(d)
+        var total = 0.0
+        var best = 0.0
+        var matched = 0
+        var g = 0
+        while (g < members.length) {
+          var tfSum = 0
+          var dl = 0
+          val gm = members(g)
+          var m = 0
+          while (m < gm.length) {
+            val it = gm(m)
+            if (!it.exhausted && it.doc == d) { tfSum += it.tf; dl = it.docLen }
+            m += 1
+          }
+          if (tfSum > 0) {
+            matched += 1
+            if (allowed) {
+              val s = idfs(g) * impact(tfSum, dl, avgDl)
+              total += s
+              if (s > best) best = s
+            }
+          }
+          g += 1
+        }
+        if (allowed && (if (isAnd) matched == members.length else matched >= minShouldMatch))
+          top.offer(Hit(d, if (disMax) best + tb * (total - best) else total))
+        i = 0
+        while (i < all.length) {
+          val it = all(i)
+          if (!it.exhausted && it.doc == d) it.next()
+          i += 1
+        }
+      }
+    }
+    top.result
+  }
+
   /** Top-k conjunctive (AND) retrieval: leapfrog intersection with block
     * skipping; exact scores summed in query-term order.
     * `filter` (nullable) joins the leapfrog as a non-scoring conjunct.

@@ -6,15 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder, Tombstones}
 import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
 import graft.query.Search.QueryHit
-import MultiSearcher.{Block, MatchSlice, PhraseQ, SegCtx, TermQ}
+import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, TermBlocks, TermQ}
 
 /** The BM25 searcher over a segment set: N immutable index segments
   * queried as ONE logical index, no physical merge (≙ Elasticsearch
   * answering one index or a whole `{prefix}-yyyyMMdd` family through the
   * same search path, `ElasticSearchStorage.cs:293-320`; streaming
   * micro-batch segments become queryable the moment they commit). A
-  * single index is a one-segment view: [[Search]]'s term-level
-  * operators are `new MultiSearcher(spark, Seq(indexDir))` calls.
+  * single index is a one-segment view: [[Search]]'s retrieval operators
+  * (term, phrase, rewrites, dis_max, synonyms, phrase-prefix, phrase
+  * counts) are `new MultiSearcher(spark, Seq(indexDir))` calls.
   *
   * Semantics (rank-identical to searching the physically merged index):
   *   - global stats: N = Σ n_docs, avgdl = Σ tokens / N;
@@ -47,7 +48,11 @@ import MultiSearcher.{Block, MatchSlice, PhraseQ, SegCtx, TermQ}
   * `_count`, match-id and match export, collapse, sort-by-field — runs
   * one match walk ([[matchWalk]] unscored, [[scoredWalk]] scored): the
   * same scan, (segment, slice) exchange, AND early exit and filter
-  * composition, with only the per-doc fold left to the caller.
+  * composition, with only the per-doc fold left to the caller. Every
+  * top-k operator — term WAND, phrase, phrase-prefix (one phrase walk
+  * per expansion in one task) and the synonym/dis_max group walk
+  * ([[BlockMaxWand.groupTopK]]) — runs through [[walkSlices]], and
+  * [[phraseCounts]] counts a set of phrases in one walk.
   *
   * `explicitBases`: global docID base per segment. Defaults to cumulative
   * n_docs in `segmentDirs` order; pass absolute bases when querying a
@@ -129,19 +134,21 @@ final class MultiSearcher(
 
   /** Dictionary expansion over the stats family: candidates come from
     * each segment's term-sorted parquet (pushdown range/regex cut),
-    * global df = Σ per-segment df, cap by (global df desc, term) —
+    * global df = Σ per-segment df, cap by (global df desc, term), or by
+    * term alone with `termOrder` (match_phrase_prefix's rewrite) —
     * exactly the expansion the physically MERGED index would produce, so
     * family answers stay rank-identical to merged-index answers. The
     * expanded terms' dfs seed the memo, so the walk that follows runs no
     * second dictionary job.
     */
-  private def expand(where: Column, maxExpansions: Int): Seq[String] = {
+  private def expand(where: Column, maxExpansions: Int, termOrder: Boolean = false): Seq[String] = {
     val reads = familyDirs.map(d =>
       IndexBuilder.readTerms(spark, d).where(where).select($"term", $"doc_freq"))
     val dfs =
       if (reads.size == 1) reads.head
       else reads.reduce(_ unionByName _).groupBy($"term").agg(sum($"doc_freq").as("doc_freq"))
-    val rows = dfs.orderBy(desc("doc_freq"), asc("term")).limit(maxExpansions)
+    val order = if (termOrder) Seq(asc("term")) else Seq(desc("doc_freq"), asc("term"))
+    val rows = dfs.orderBy(order: _*).limit(maxExpansions)
       .as[(String, Long)].collect() // ≤ maxExpansions rows
     dfMemo.synchronized(rows.foreach { case (t, df) => dfMemo(t) = Some(df) })
     rows.map(_._1).toSeq
@@ -198,34 +205,40 @@ final class MultiSearcher(
       .as[Block]
 
   /** Blocks of `terms` grouped by (segment, slice), each group handed to
-    * `walk` with this query's broadcast context.
+    * `walk` by term, with this query's broadcast context.
     */
   private def walkGroups[Q, R: Encoder](terms: Seq[String], q: Q)(
-      walk: (SegCtx[Q], Int, Int, Array[Block]) => Iterator[R]
+      walk: (SegCtx[Q], Int, Int, TermBlocks) => Iterator[R]
   ): Dataset[R] = {
     val b = context(q)
     blocks(terms).groupByKey(r => (r.seg, r.slice))
-      .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, rows.toArray))
+      .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, rows.toArray.groupBy(_.term)))
   }
 
   /** The filter-context dispatch of the top-k walks: no filter;
     * `attrFilter` streamed from the slice's own sidecar (no doc-id
     * exchange — see [[graft.index.AttrSidecar]]); or the ad-hoc
     * `docFilter` Column, whose matching (segment, slice, doc_id) rows
-    * co-group with the blocks. `walk` is eager (it returns a materialized
-    * top-k), so the sidecar cursor closes right after it.
+    * co-group with the blocks. Filters are forward-only cursors, so
+    * `walk` gets a factory that makes a fresh base filter per use (one
+    * per independent sub-walk, e.g. per phrase-prefix expansion). The
+    * walk's top-k is materialized here, then every sidecar cursor it
+    * opened closes.
     */
   private def walkSlices[Q](terms: Seq[String], docFilter: Column, attrFilter: AttrPred, q: Q)(
-      walk: (SegCtx[Q], Int, Int, Array[Block], DocFilter) => Iterator[QueryHit]
+      walk: (SegCtx[Q], Int, Int, TermBlocks, () => DocFilter) => Iterator[QueryHit]
   ): Dataset[QueryHit] =
     if (docFilter == null) {
       val pred = attrFilter
-      walkGroups(terms, q) { (c, seg, slice, rows) =>
-        if (pred == null) walk(c, seg, slice, rows, null)
+      walkGroups(terms, q) { (c, seg, slice, byTerm) =>
+        if (pred == null) walk(c, seg, slice, byTerm, () => null)
         else {
-          val cur = AttrSidecar.openCursor(c.dirs(seg), slice, pred)
-          try walk(c, seg, slice, rows, cur)
-          finally cur.close()
+          val opened = scala.collection.mutable.ArrayBuffer.empty[AttrSidecar.AttrCursor]
+          try walk(c, seg, slice, byTerm, () => {
+            opened += AttrSidecar.openCursor(c.dirs(seg), slice, pred)
+            opened.last
+          }).toArray.iterator
+          finally opened.foreach(_.close())
         }
       }
     } else {
@@ -243,7 +256,7 @@ final class MultiSearcher(
           if (allow.isEmpty) Iterator.empty
           else {
             java.util.Arrays.sort(allow)
-            walk(b.value, key._1, key._2, rows.toArray, new FilterIter(allow))
+            walk(b.value, key._1, key._2, rows.toArray.groupBy(_.term), () => new FilterIter(allow))
           }
         }
     }
@@ -385,20 +398,60 @@ final class MultiSearcher(
                      mustNot: Seq[String]): DataFrame =
     if (exps.isEmpty) none else topK(exps, "or", k, docFilter, attrFilter, mustNot)
 
+  /** [[Search.disMaxTopK]] over the view: every distinct term is a
+    * one-term group, OR, combined as best + tieBreaker · (total − best).
+    */
+  def disMaxTopK(
+      queryTerms: Seq[String], k: Int, tieBreaker: Double = 0.0,
+      attrFilter: AttrPred = null, mustNot: Seq[String] = Nil
+  ): DataFrame = {
+    require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1]")
+    groupTopK(queryTerms.distinct.map(Seq(_)), isAnd = false, 1, k, attrFilter, mustNot,
+      Some(tieBreaker))
+  }
+
+  /** [[Search.synonymTopK]] over the view: group scores sum in group
+    * order; AND and `minShouldMatch` count matched groups.
+    */
+  def synonymTopK(
+      groups: Seq[Seq[String]], mode: String, k: Int,
+      attrFilter: AttrPred = null, mustNot: Seq[String] = Nil, minShouldMatch: Int = 1
+  ): DataFrame = {
+    require(groups.nonEmpty && groups.forall(_.nonEmpty), "empty synonym group")
+    groupTopK(groups.map(_.distinct), mode == "and", minShouldMatch, k, attrFilter, mustNot, None)
+  }
+
+  /** Top-k of a group query: a group's idf is that of its max member
+    * df (Lucene SynonymQuery), and a group is present when any member is.
+    */
+  private def groupTopK(groups: Seq[Seq[String]], isAnd: Boolean, minShouldMatch: Int, k: Int,
+                        attrFilter: AttrPred, mustNot: Seq[String],
+                        tieBreaker: Option[Double]): DataFrame = {
+    val dfs = dfOf(groups.flatten)
+    val present = groups.count(_.exists(dfs.contains))
+    if (present == 0 || (isAnd && present < groups.size) || present < minShouldMatch) none
+    else {
+      val q = GroupQ(groups.map(_.toArray).toArray,
+        groups.map(g => NaiveBm25.idf(nDocs, g.map(dfs.getOrElse(_, 0L)).max)).toArray,
+        mustNot.distinct.toArray, isAnd, minShouldMatch, k, tieBreaker)
+      topOf(walkSlices((groups.flatten ++ q.exclude).distinct, null, attrFilter, q)(
+        MultiSearcher.groupWalk), k)
+    }
+  }
+
   /** Phrase query compiled against the view's stats; None when a phrase
     * term is absent.
     */
   private def phraseQuery(phraseTerms: Seq[String], mustNot: Seq[String], k: Int = 0,
                           slop: Int = 0): Option[PhraseQ] = {
-    val distinctTerms = phraseTerms.distinct // first-occurrence order
-    val dfs = dfOf(distinctTerms)
-    if (distinctTerms.exists(t => !dfs.contains(t))) None
+    val shape = MultiSearcher.phraseShape(phraseTerms)
+    val dfs = dfOf(shape.terms.toSeq)
+    if (shape.terms.exists(t => !dfs.contains(t))) None
     else Some(PhraseQ(
-      distinctTerms.toArray,
-      distinctTerms.map(t =>
-        phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray).toArray,
+      shape.terms,
+      shape.offsets,
       // phrase position j → distinct-term index (slop > 0 walk)
-      phraseTerms.map(distinctTerms.indexOf).toArray,
+      phraseTerms.map(shape.terms.indexOf(_)).toArray,
       slop,
       // idf summed over every phrase POSITION (duplicate terms count per
       // occurrence — Lucene PhraseQuery shape; the oracle mirrors it)
@@ -425,6 +478,46 @@ final class MultiSearcher(
       case Some(q) =>
         topOf(walkSlices(q.terms.toSeq ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.phraseWalk), k)
     }
+  }
+
+  /** [[Search.phrasePrefixTopK]] over the view: the last term expands
+    * in term order, each expansion compiles with [[phraseQuery]], and
+    * each (segment, slice) task walks every expansion (one scan, one
+    * exchange); a doc keeps its best expansion's score.
+    */
+  def phrasePrefixTopK(
+      phraseTerms: Seq[String], k: Int, maxExpansions: Int = 8,
+      docFilter: Column = null, attrFilter: AttrPred = null, mustNot: Seq[String] = Nil
+  ): DataFrame = {
+    require(phraseTerms.nonEmpty, "empty phrase")
+    require(maxExpansions >= 1, "maxExpansions must be positive")
+    require(docFilter == null || attrFilter == null,
+      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
+    // a missing non-last term empties every expansion
+    val qs = expand($"term".startsWith(phraseTerms.last), maxExpansions, termOrder = true)
+      .flatMap(e => phraseQuery(phraseTerms.init :+ e, mustNot, k)).toArray
+    if (qs.isEmpty) none
+    else topOf(
+      walkSlices(qs.flatMap(_.terms).distinct.toSeq ++ mustNot.distinct, docFilter, attrFilter, qs) {
+        (c, seg, slice, byTerm, base) =>
+          c.q.iterator.flatMap(q => MultiSearcher.phraseWalk(c.copy(q = q), seg, slice, byTerm, base))
+      }.groupBy($"doc_id").agg(max($"score").as("score")).as[QueryHit], k)
+  }
+
+  /** Occurrence count of each phrase over the view's live docs (Σ of
+    * the per-doc phrase freq): one scan of every phrase's terms, one
+    * exchange, no dictionary read (nothing is scored).
+    */
+  def phraseCounts(phrases: Seq[Seq[String]]): Seq[Long] = {
+    require(phrases.forall(_.nonEmpty), "empty phrase")
+    val shapes = phrases.map(MultiSearcher.phraseShape).toArray
+    val perSlice =
+      if (shapes.isEmpty) Array.empty[(Int, Long)]
+      else walkGroups(shapes.flatMap(_.terms).distinct.toSeq, shapes)(MultiSearcher.countWalk)
+        .collect() // ≤ nSlices × |phrases| rows per segment
+    val sums = new Array[Long](shapes.length)
+    perSlice.foreach { case (pi, n) => sums(pi) += n }
+    sums.toSeq
   }
 
   /** Declared attribute schema (name → kind) — segments of one family
@@ -456,9 +549,7 @@ final class MultiSearcher(
   def exportPhrase(phraseTerms: Seq[String], attrFilter: AttrPred = null): DataFrame =
     phraseQuery(phraseTerms, Nil) match {
       case None => none
-      case Some(q) =>
-        val pred = attrFilter
-        walkGroups(q.terms.toSeq, q)(MultiSearcher.phraseExportWalk(_, _, _, _, pred)).toDF()
+      case Some(q) => walkSlices(q.terms.toSeq, null, attrFilter, q)(MultiSearcher.phraseExportWalk).toDF()
     }
 
   /** [[Search.collapseTopK]] over the view: one best hit per keyword
@@ -520,10 +611,32 @@ object MultiSearcher {
       count: Int, deltas: Array[Byte], tfs: Array[Byte], dls: Array[Byte], poss: Array[Byte],
       max_impact: Double, max_tf: Int, min_dl: Int)
 
+  /** One (segment, slice)'s posting blocks by term. */
+  private[query] type TermBlocks = Map[String, Array[Block]]
+
   /** A compiled term query: distinct terms with their (boosted) idfs. */
   private[query] final case class TermQ(
       terms: Array[String], idfs: Array[Double], exclude: Array[String], isAnd: Boolean,
       msm: Int, k: Int, after: BlockMaxWand.Hit, msmField: String)
+
+  /** A phrase's distinct terms in first-occurrence order and, per
+    * distinct term, the phrase offsets where it occurs — a duplicate-term
+    * phrase (a a) walks one cursor at both offsets.
+    */
+  private[query] final case class PhraseShape(terms: Array[String], offsets: Array[Array[Int]])
+
+  private[query] def phraseShape(phraseTerms: Seq[String]): PhraseShape = {
+    val distinctTerms = phraseTerms.distinct
+    PhraseShape(distinctTerms.toArray, distinctTerms.map(t =>
+      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray).toArray)
+  }
+
+  /** A compiled synonym or dis_max query: member terms and one idf per
+    * group; `tieBreaker` is dis_max's, None for synonyms.
+    */
+  private[query] final case class GroupQ(
+      groups: Array[Array[String]], idfs: Array[Double], exclude: Array[String], isAnd: Boolean,
+      msm: Int, k: Int, tieBreaker: Option[Double])
 
   /** A compiled phrase: distinct terms, their phrase offsets, the
     * position → distinct-term chain and the positional idf sum.
@@ -564,22 +677,21 @@ object MultiSearcher {
   }
 
   /** Query-term cursors (termIdx = query position) of the present terms. */
-  private def termIters(c: SegCtx[TermQ], terms: Map[String, Array[Block]]): Array[PostingIter] =
+  private def termIters(c: SegCtx[TermQ], terms: TermBlocks): Array[PostingIter] =
     c.q.terms.indices.flatMap(ti => terms.get(c.q.terms(ti)).map(c.iter(_, ti, c.q.idfs(ti)))).toArray
 
   private def excludeIters(c: SegCtx[_], exclude: Array[String],
-                           terms: Map[String, Array[Block]]): Array[PostingIter] =
+                           terms: TermBlocks): Array[PostingIter] =
     exclude.flatMap(t => terms.get(t).map(c.iter(_, 0, 0.0)))
 
   /** Block-max WAND top-k of one (segment, slice): AND, or OR with a
     * fixed or per-doc (terms_set) minimum_should_match.
     */
-  private def termWalk(c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
-                       base: DocFilter): Iterator[QueryHit] = {
+  private def termWalk(c: SegCtx[TermQ], seg: Int, slice: Int, terms: TermBlocks,
+                       base: () => DocFilter): Iterator[QueryHit] = {
     val q = c.q
-    val terms = rows.groupBy(_.term)
     val iters = termIters(c, terms)
-    val filter = c.filter(seg, slice, base, excludeIters(c, q.exclude, terms))
+    val filter = c.filter(seg, slice, base(), excludeIters(c, q.exclude, terms))
     // terms_set: the per-doc required count streams from this slice's own
     // sidecar (monotone cursor — scored pivots strictly increase); closed
     // eagerly since or() returns a materialized Array
@@ -611,14 +723,15 @@ object MultiSearcher {
     c.global(seg, hits)
   }
 
-  /** Positional phrase top-k of one (segment, slice). */
-  private def phraseWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, rows: Array[Block],
-                         base: DocFilter): Iterator[QueryHit] = {
+  /** Positional phrase top-k of one (segment, slice); the filter is
+    * built only where every phrase term has blocks.
+    */
+  private def phraseWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, terms: TermBlocks,
+                         base: () => DocFilter): Iterator[QueryHit] = {
     val q = c.q
-    val terms = rows.groupBy(_.term)
-    val filter = c.filter(seg, slice, base, excludeIters(c, q.exclude, terms))
     if (!q.terms.forall(terms.contains)) Iterator.empty
     else {
+      val filter = c.filter(seg, slice, base(), excludeIters(c, q.exclude, terms))
       val iters = q.terms.map(t => c.iter(terms(t), 0, 0.0)) // idf unused in phrase scoring
       c.global(seg,
         if (q.slop == 0) BlockMaxWand.phrase(iters, q.offsets, q.idfSum, q.k, filter)
@@ -626,22 +739,42 @@ object MultiSearcher {
     }
   }
 
-  /** Full phrase match set of one (segment, slice); phraseMatches
-    * materializes it, so the sidecar cursor closes eagerly.
+  /** Synonym-group or dis_max top-k of one (segment, slice): one cursor
+    * per group member present in the slice; a slice where no group (or,
+    * under AND, not every group) has blocks is skipped.
     */
-  private def phraseExportWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, rows: Array[Block],
-                               pred: AttrPred): Iterator[QueryHit] = {
-    val terms = rows.groupBy(_.term)
+  private def groupWalk(c: SegCtx[GroupQ], seg: Int, slice: Int, terms: TermBlocks,
+                        base: () => DocFilter): Iterator[QueryHit] = {
+    val q = c.q
+    val members = q.groups.map(_.flatMap(t => terms.get(t).map(c.iter(_, 0, 0.0))))
+    if (members.forall(_.isEmpty) || (q.isAnd && members.exists(_.isEmpty))) Iterator.empty
+    else c.global(seg, BlockMaxWand.groupTopK(members, q.idfs, c.avgDl, q.isAnd, q.msm, q.k,
+      c.filter(seg, slice, base(), excludeIters(c, q.exclude, terms)), q.tieBreaker))
+  }
+
+  /** (phrase index, occurrence sum) of one (segment, slice) for every
+    * phrase whose terms all have blocks here; tombstoned docs excluded.
+    */
+  private def countWalk(c: SegCtx[Array[PhraseShape]], seg: Int, slice: Int,
+                        terms: TermBlocks): Iterator[(Int, Long)] = {
+    c.q.iterator.zipWithIndex.collect { case (p, pi) if p.terms.forall(terms.contains) =>
+      val iters = p.terms.map(t => c.iter(terms(t), 0, 0.0))
+      (pi, BlockMaxWand.phraseMatches(iters, p.offsets, c.filter(seg, slice, null, Array.empty))
+        .map(_._2.toLong).sum)
+    }
+  }
+
+  /** Full phrase match set of one (segment, slice). */
+  private def phraseExportWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, terms: TermBlocks,
+                               base: () => DocFilter): Iterator[QueryHit] = {
     if (!c.q.terms.forall(terms.contains)) Iterator.empty
     else {
       val iters = c.q.terms.map(t => c.iter(terms(t), 0, 0.0))
-      val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)
       val docBase = c.bases(seg)
-      try BlockMaxWand.phraseMatches(iters, c.q.offsets, c.filter(seg, slice, cursor, Array.empty))
+      BlockMaxWand.phraseMatches(iters, c.q.offsets, c.filter(seg, slice, base(), Array.empty))
         .map { case (id, freq, dl) =>
           QueryHit(docBase + id, c.q.idfSum * IndexBuilder.impact(freq, dl, c.avgDl))
         }
-      finally if (cursor != null) cursor.close()
     }
   }
 
@@ -654,7 +787,7 @@ object MultiSearcher {
     * and the filter's sidecar cursor.
     */
   private[query] final class MatchSlice private[MultiSearcher] (
-      c: SegCtx[TermQ], seg: Int, val slice: Int, terms: Map[String, Array[Block]],
+      c: SegCtx[TermQ], seg: Int, val slice: Int, terms: TermBlocks,
       iters: Array[PostingIter], filter: DocFilter, attrCursor: AutoCloseable) {
     val dir: String = c.dirs(seg)
     val docBase: Long = c.bases(seg)
@@ -681,10 +814,9 @@ object MultiSearcher {
     * exhausted or at task completion, whichever comes first, so lazy and
     * eager consumers follow one rule.
     */
-  private def sliceWalk[R](c: SegCtx[TermQ], seg: Int, slice: Int, rows: Array[Block],
+  private def sliceWalk[R](c: SegCtx[TermQ], seg: Int, slice: Int, terms: TermBlocks,
                            pred: AttrPred, allow: Array[Long],
                            consume: MatchSlice => Iterator[R]): Iterator[R] = {
-    val terms = rows.groupBy(_.term)
     val iters = termIters(c, terms)
     if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) return Iterator.empty
     val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)

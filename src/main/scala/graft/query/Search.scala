@@ -2,18 +2,17 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
+import graft.index.{AttrPred, IndexBuilder, Tombstones}
 
 /** Distributed BM25 over one on-disk index.
   *
-  * The term-level operators — [[topK]], [[phraseTopK]], the
-  * prefix/fuzzy/wildcard/regexp rewrites, [[exportMatches]] and
-  * [[collapseTopK]] — run a single index as a one-segment
-  * [[MultiSearcher]] view: one implementation serves a single index and
-  * a segment family, and on one segment it keeps the index's stored
-  * avgdl and per-block `max_impact` bounds. The plan (scale-first —
-  * nothing term-sized ever reaches the driver):
+  * Every retrieval operator — [[topK]], [[phraseTopK]], the rewrites,
+  * [[exportMatches]], [[collapseTopK]], [[disMaxTopK]], [[synonymTopK]],
+  * [[phrasePrefixTopK]] and the phrase counts — runs a single index as
+  * a one-segment [[MultiSearcher]] view: one implementation serves a
+  * single index and a segment family, and on one segment it keeps the
+  * index's stored avgdl and per-block `max_impact` bounds. The plan
+  * (scale-first — nothing term-sized ever reaches the driver):
   *   1. dictionary lookup: `terms` table filtered to the ≤ few query
   *      terms (parquet predicate pushdown on the term-sorted files) —
   *      yields df per term → idf (collect of ≤ |q| rows per segment,
@@ -42,9 +41,10 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   * since merged and purged indexes store no text and must fail such a
   * read loudly instead of returning nulls.
   *
-  * [[batchTopK]] runs [[Searcher.topKBatch]]. The remaining operators
-  * here (explain, dis_max, synonyms, phrase counts and suggesters,
-  * phrase-prefix, more_like_this) are single-index only.
+  * [[batchTopK]] runs [[Searcher.topKBatch]]. [[moreLikeThis]] selects
+  * its terms and retrieves on one view, and [[explain]] takes N, avgdl
+  * and df from a view; explain's range-pruned, unshuffled decode, the
+  * suggesters' dictionary reads and [[hydrate]] stay here.
   */
 object Search {
 
@@ -62,7 +62,7 @@ object Search {
     *
     *   - `attrFilter` ([[graft.index.AttrPred]], PREFERRED): evaluated by
     *     each WAND task against its own slice's attribute sidecar
-    *     ([[graft.index.AttrSidecar]] — the ES doc-values analog). The
+    *     (the index's per-slice ES doc-values analog). The
     *     plan is IDENTICAL to an unfiltered search: one exchange of
     *     matched posting blocks; no doc-id ever crosses the network, at
     *     ANY selectivity (PlanSpec asserts the docs table is absent from
@@ -158,7 +158,8 @@ object Search {
     * Returns one row per (doc, matching query term):
     * (doc_id, term, tf, doc_len, doc_freq, contrib) with
     * contrib = idf(df) · impact(tf, dl, avgdl); Σ contrib over a doc's
-    * rows = its topK score exactly (same float pipeline).
+    * rows = its topK score exactly (same float pipeline). A tombstoned
+    * doc, which no query returns, explains to no rows.
     *
     * Scale shape: posting scan pushdown-filtered to the query terms AND
     * the docs' id range (doc_id_min/max block metadata prune to the few
@@ -173,29 +174,35 @@ object Search {
     import spark.implicits._
     require(docIds.nonEmpty, "explain needs at least one doc id")
     val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |terms| rows
+    val v = view(spark, indexDir)
+    val n = v.nDocs
+    val avgDl = v.avgDl
     val bIds = spark.sparkContext.broadcast(docIds.toSet)
-    val bDfs = spark.sparkContext.broadcast(dfs)
+    val bDfs = spark.sparkContext.broadcast(v.dfOf(terms))
+    val tomb = Tombstones.handle(indexDir)
     val lo = docIds.min
     val hi = docIds.max
     IndexBuilder.readPostings(spark, indexDir)
       .where($"term".isin(terms: _*) && $"doc_id_max" >= lo && $"doc_id_min" <= hi)
-      .select($"term", $"count", $"doc_id_min", $"deltas", $"tfs", $"dls")
-      .as[(String, Int, Long, Array[Byte], Array[Byte], Array[Byte])]
-      .flatMap { case (term, cnt, idMin, deltas, tfs, dls) =>
-        val wanted = bIds.value
-        val ids = graft.functions.Codec.decodeGapsFromBase(idMin, deltas, cnt)
-        lazy val tf = graft.functions.Codec.decodeIntsAuto(tfs, cnt)
-        lazy val dl = graft.functions.Codec.decodeIntsAuto(dls, cnt)
-        Iterator.range(0, cnt).filter(i => wanted.contains(ids(i))).map { i =>
-          val df = bDfs.value(term)
-          val contrib = NaiveBm25.idf(n, df) * IndexBuilder.impact(tf(i), dl(i), avgDl)
-          (ids(i), term, tf(i).toLong, dl(i).toLong, df, contrib)
+      .select($"slice", $"term", $"count", $"doc_id_min", $"deltas", $"tfs", $"dls")
+      .as[(Int, String, Int, Long, Array[Byte], Array[Byte], Array[Byte])]
+      .mapPartitions { rows =>
+        // a tombstoned doc matches no query, so it explains to nothing;
+        // each slice's deleted ids are read once per task
+        val deleted = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+        def live(slice: Int, id: Long): Boolean = tomb == null ||
+          java.util.Arrays.binarySearch(
+            deleted.getOrElseUpdate(slice, Tombstones.readSlice(tomb.indexDir, tomb.gen, slice)), id) < 0
+        rows.flatMap { case (slice, term, cnt, idMin, deltas, tfs, dls) =>
+          val wanted = bIds.value
+          val ids = graft.functions.Codec.decodeGapsFromBase(idMin, deltas, cnt)
+          lazy val tf = graft.functions.Codec.decodeIntsAuto(tfs, cnt)
+          lazy val dl = graft.functions.Codec.decodeIntsAuto(dls, cnt)
+          Iterator.range(0, cnt).filter(i => wanted.contains(ids(i)) && live(slice, ids(i))).map { i =>
+            val df = bDfs.value(term)
+            val contrib = NaiveBm25.idf(n, df) * IndexBuilder.impact(tf(i), dl(i), avgDl)
+            (ids(i), term, tf(i).toLong, dl(i).toLong, df, contrib)
+          }
         }
       }
       .toDF("doc_id", "term", "tf", "doc_len", "doc_freq", "contrib")
@@ -392,20 +399,18 @@ object Search {
       .groupBy(identity).map { case (t, occ) => t -> occ.size }
     val cand = tf.filter(_._2 >= minTermFreq).keys.toSeq.sorted
     if (cand.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(cand: _*))
-      .collect().map(t => t.term -> t.doc_freq).toMap // ≤ |doc's distinct terms| rows
+    // one view: the retrieval's df lookup is answered by the memo this
+    // selection filled
+    val v = view(spark, indexDir)
+    val dfs = v.dfOf(cand)
     val selected = cand
       .filter(t => dfs.getOrElse(t, 0L) >= minDocFreq)
-      .map(t => (t, tf(t) * NaiveBm25.idf(stats.n_docs, dfs(t))))
+      .map(t => (t, tf(t) * NaiveBm25.idf(v.nDocs, dfs(t))))
       .sortBy { case (t, s) => (-s, t) }
       .take(maxQueryTerms)
       .map(_._1)
     if (selected.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    topK(spark, indexDir, selected, "or", k + 1, attrFilter = attrFilter,
-      mustNot = mustNot)
+    v.topK(selected, "or", k + 1, attrFilter = attrFilter, mustNot = mustNot)
       .where($"doc_id" =!= docId)
       .limit(k)
   }
@@ -464,90 +469,24 @@ object Search {
       spark: SparkSession,
       indexDir: String,
       phraseTerms: Seq[String]
-  ): Long = {
-    import spark.implicits._
-    require(phraseTerms.nonEmpty, "empty phrase")
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val counts = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(distinctTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups { (slice, rows) =>
-        val (qTerms, offs) = bCtx.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        if (!qTerms.forall(byTerm.contains)) 0L
-        else {
-          val iters = qTerms.map { t =>
-            val refs = byTerm(t).sortBy(r => (r._4, r._3))
-              .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0))
-            new PostingIter(0, 0.0, refs, 1.0)
-          }
-          val filter = if (tomb == null) null else tomb.compose(slice, null)
-          BlockMaxWand.phraseMatches(iters, offs, filter)
-            .map(_._2.toLong).sum
-        }
-      }
-    val row = counts.agg(sum("value")).head() // one aggregate row
-    if (row.isNullAt(0)) 0L else row.getLong(0)
-  }
+  ): Long =
+    view(spark, indexDir).phraseCounts(Seq(phraseTerms)).head
 
   /** Batched [[phraseCount]] for a SET of bigrams in ONE job: one scan
     * over the union of all pair terms' blocks, one per-slice task that
-    * runs every pair's positional walk against the slice's decoded refs
-    * (refs shared across pairs; cursors fresh per pair). Replaces the
-    * one-driver-job-per-bigram loop the phrase suggester used to run —
-    * O(candidates) sequential jobs became one (r6 opt round; guide §2.6).
+    * runs every pair's positional walk (cursors fresh per pair; a
+    * duplicate-term bigram (a a) walks one cursor at both offsets).
+    * Replaces the one-driver-job-per-bigram loop the phrase suggester
+    * used to run — O(candidates) sequential jobs became one (r6 opt
+    * round; guide §2.6).
     */
   def phraseCountBatch(
       spark: SparkSession,
       indexDir: String,
       pairs: Seq[(String, String)]
   ): Map[(String, String), Long] = {
-    import spark.implicits._
-    if (pairs.isEmpty) return Map.empty
-    val distinctPairs = pairs.distinct.toArray
-    val allTerms = distinctPairs.flatMap(p => Seq(p._1, p._2)).distinct.toSeq
-    val bPairs = spark.sparkContext.broadcast(distinctPairs)
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val perSlice = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .select($"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss")
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (slice, rows) =>
-        val prs = bPairs.value
-        val byTerm = rows.toArray.groupBy(_._2)
-        val refsCache = scala.collection.mutable.AnyRefMap.empty[String, Array[BlockRef]]
-        def refsOf(t: String) = refsCache.getOrElseUpdate(t, byTerm(t)
-          .sortBy(r => (r._4, r._3))
-          .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, 0.0)))
-        prs.iterator.zipWithIndex
-          .filter { case ((a, b), _) => byTerm.contains(a) && byTerm.contains(b) }
-          .map { case ((a, b), pi) =>
-            // duplicate-term bigram (a a): one iter, both offsets — the
-            // exact distinctTerms/offsets shape phraseCount derives
-            val (qTerms, offs) =
-              if (a == b) (Array(a), Array(Array(0, 1)))
-              else (Array(a, b), Array(Array(0), Array(1)))
-            val iters = qTerms.map(t => new PostingIter(0, 0.0, refsOf(t), 1.0))
-            val filter = if (tomb == null) null else tomb.compose(slice, null)
-            (pi, BlockMaxWand.phraseMatches(iters, offs, filter).map(_._2.toLong).sum)
-          }
-      }
-      .collect() // ≤ nSlices × |pairs| rows
-    val sums = new Array[Long](distinctPairs.length)
-    perSlice.foreach { case (pi, c) => sums(pi) += c }
-    distinctPairs.indices.map(i => distinctPairs(i) -> sums(i)).toMap
+    val ps = pairs.distinct
+    ps.zip(view(spark, indexDir).phraseCounts(ps.map { case (a, b) => Seq(a, b) })).toMap
   }
 
   /** ES `phrase` suggester ("did you mean") over the index's own
@@ -661,134 +600,9 @@ object Search {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(phraseTerms.nonEmpty, "empty phrase")
-    require(maxExpansions >= 1, "maxExpansions must be positive")
-    require(docFilter == null || attrFilter == null,
-      "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val last = phraseTerms.last
-    // ONE dictionary job: the expansion rows already carry doc_freq, so
-    // no per-expansion df lookup is needed (the per-expansion phraseTopK
-    // composition ran one driver collect AND one scan+shuffle per
-    // expansion — 8 dictionary jobs and 8 exchanges for the default cap;
-    // r6 opt round, guide §2.4: this shape is one scan, one exchange).
-    val expRows = IndexBuilder.readTerms(spark, indexDir)
-      .where($"term".startsWith(last))
-      .orderBy(asc("term"))
-      .limit(maxExpansions)
-      .collect() // ≤ maxExpansions rows
-    if (expRows.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    val initTerms = phraseTerms.init.distinct
-    val initDfs: Map[String, Long] =
-      if (initTerms.isEmpty) Map.empty
-      else IndexBuilder.readTerms(spark, indexDir)
-        .where($"term".isin(initTerms: _*))
-        .collect() // ≤ |phrase| rows
-        .map(t => t.term -> t.doc_freq)
-        .toMap
-    // a missing non-last term empties every expansion
-    if (initTerms.exists(t => !initDfs.contains(t)))
-      return spark.emptyDataset[QueryHit].toDF()
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfAll: Map[String, Long] = initDfs ++ expRows.map(t => t.term -> t.doc_freq)
-    // per-expansion walk context: distinct terms in first-occurrence
-    // order, per-term position offsets, positional idf sum — exactly the
-    // values phraseTopK derives for (init :+ expansion)
-    val expCtx: Array[(Array[String], Array[Array[Int]], Double)] = expRows.map { er =>
-      val terms = phraseTerms.init :+ er.term
-      val distinctTerms = terms.distinct
-      val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-        terms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-      }.toArray
-      val idfSum = terms.map(t => NaiveBm25.idf(n, dfAll(t))).sum
-      (distinctTerms.toArray, offsets, idfSum)
-    }
-    val allTerms = (phraseTerms.init ++ expRows.map(_.term)).distinct
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((expCtx, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(allTerms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    // baseFilter must yield a FRESH DocFilter per expansion: filters are
-    // forward-only cursors and each expansion is an independent walk.
-    def run(
-        slice: Int,
-        rows: Iterator[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-        baseFilter: () => DocFilter
-    ): Iterator[QueryHit] = {
-      val (ctxs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      val refsCache = scala.collection.mutable.AnyRefMap.empty[String, Array[BlockRef]]
-      def refsOf(t: String) = refsCache.getOrElseUpdate(t, byTerm(t)
-        .sortBy(r => (r._4, r._3))
-        .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11)))
-      ctxs.iterator.flatMap { case (qTerms, offs, idfS) =>
-        if (!qTerms.forall(byTerm.contains)) Iterator.empty
-        else {
-          var filter = baseFilter()
-          val exIters = exT.iterator.filter(byTerm.contains)
-            .map(t => new PostingIter(0, 0.0, refsOf(t), avgDl)).toArray
-          if (exIters.nonEmpty)
-            filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-          if (tomb != null) filter = tomb.compose(slice, filter)
-          val iters = qTerms.map(t => new PostingIter(0, 0.0, refsOf(t), avgDl))
-          BlockMaxWand.phrase(iters, offs, idfS, k, filter)
-            .iterator.map(h => QueryHit(h.docId, h.score))
-        }
-      }
-    }
-
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) => run(slice, rows, () => null) }
-      else if (attrFilter != null) {
-        val idxDir = indexDir
-        val pred = attrFilter
-        blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-          // one sidecar read per slice; fresh cursor per expansion walk
-          val cursors = scala.collection.mutable.ArrayBuffer.empty[AutoCloseable]
-          val out = run(slice, rows, () => {
-            val cur = AttrSidecar.openCursor(idxDir, slice, pred)
-            cursors += cur
-            cur
-          }).toArray
-          cursors.foreach(_.close())
-          out.iterator
-        }
-      } else {
-        val filterIds = IndexBuilder.withDocsTable(spark, indexDir)(_.where(docFilter))
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._1)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(slice, rows, () => new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK
-      .toDF()
-      .groupBy($"doc_id")
-      .agg(max($"score").as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    view(spark, indexDir).phrasePrefixTopK(phraseTerms, k, maxExpansions, docFilter, attrFilter,
+      mustNot)
 
   /** ES `dis_max` over term queries: score = best sub-score +
     * tieBreaker · (sum of the others) — "take the best field/term, don't
@@ -806,108 +620,8 @@ object Search {
       tieBreaker: Double = 0.0,
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil
-  ): DataFrame = {
-    import spark.implicits._
-    require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tie_breaker in [0,1]")
-    val terms = queryTerms.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(terms: _*))
-      .collect() // ≤ |terms| rows
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-    val present = terms.filter(dfs.contains)
-    if (present.isEmpty) return spark.emptyDataset[QueryHit].toDF()
-    val idfs: Array[Double] = terms.map(t => NaiveBm25.idf(n, dfs.getOrElse(t, 0L))).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast((terms.toArray, idfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val idxDir = indexDir
-    val pred = attrFilter
-    val tb = tieBreaker
-    val kk = k
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(terms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qTerms, qIdfs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def iterOf(t: String, idf: Double): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs.sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(0, idf, refs, avgDl)
-        }
-      val iters = qTerms.iterator.zipWithIndex
-        .flatMap { case (t, ti) => iterOf(t, qIdfs(ti)) }.toArray
-      if (iters.isEmpty) Iterator.empty
-      else {
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val predCursor = filter
-        val exIters = exT.iterator.flatMap(iterOf(_, 0.0)).toArray
-        if (exIters.nonEmpty)
-          filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        val top = new BlockMaxWand.TopK(kk)
-        try {
-          var continue = iters.exists(!_.exhausted)
-          while (continue) {
-            var d = Long.MaxValue
-            var i = 0
-            while (i < iters.length) {
-              val it = iters(i)
-              if (!it.exhausted && it.doc < d) d = it.doc
-              i += 1
-            }
-            if (d == Long.MaxValue) continue = false
-            else {
-              if (filter == null || filter.contains(d)) {
-                var best = 0.0
-                var total = 0.0
-                i = 0
-                while (i < iters.length) {
-                  val it = iters(i)
-                  if (!it.exhausted && it.doc == d) {
-                    val s = it.score // idf · impact (idf carried per iter)
-                    total += s
-                    if (s > best) best = s
-                  }
-                  i += 1
-                }
-                top.offer(BlockMaxWand.Hit(d, best + tb * (total - best)))
-              }
-              i = 0
-              while (i < iters.length) {
-                val it = iters(i)
-                if (!it.exhausted && it.doc == d) it.next()
-                i += 1
-              }
-            }
-          }
-          top.result.iterator.map(h => QueryHit(h.docId, h.score))
-        } finally {
-          predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-      }
-    }
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    view(spark, indexDir).disMaxTopK(queryTerms, k, tieBreaker, attrFilter, mustNot)
 
   /** ES scroll / point-in-time EXPORT: the query's FULL match set as a
     * distributed DataFrame (doc_id, score) — no top-k, no driver
@@ -954,122 +668,6 @@ object Search {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
-  ): DataFrame = {
-    import spark.implicits._
-    require(groups.nonEmpty && groups.forall(_.nonEmpty), "empty synonym group")
-    val gs = groups.map(_.distinct)
-    val allTerms = gs.flatten.distinct
-    val stats = IndexBuilder.readStats(spark, indexDir)
-    val n = stats.n_docs
-    val avgDl = if (stats.avg_dl > 0) stats.avg_dl else 1.0
-    val dfs: Map[String, Long] = IndexBuilder
-      .readTerms(spark, indexDir)
-      .where($"term".isin(allTerms: _*))
-      .collect() // ≤ |distinct synonym members| rows
-      .map(t => t.term -> t.doc_freq)
-      .toMap
-    val isAnd = mode == "and"
-    // a group is PRESENT if any member is; AND needs every group present
-    val present = gs.map(_.exists(dfs.contains))
-    if ((isAnd && !present.forall(identity)) || present.count(identity) < minShouldMatch)
-      return spark.emptyDataset[QueryHit].toDF()
-    // SynonymQuery idf: max member df (members co-occur; union would
-    // overstate rarity of the group)
-    val gIdfs: Array[Double] =
-      gs.map(g => NaiveBm25.idf(n, g.map(dfs.getOrElse(_, 0L)).max)).toArray
-    val exTerms = mustNot.distinct
-    val bCtx = spark.sparkContext.broadcast(
-      (gs.map(_.toArray).toArray, gIdfs, exTerms.toArray))
-    val tomb = graft.index.Tombstones.handle(indexDir)
-    val msm = minShouldMatch
-    val idxDir = indexDir
-    val pred = attrFilter
-    val kk = k
-
-    val blocks = IndexBuilder
-      .readPostings(spark, indexDir)
-      .where($"term".isin(allTerms ++ exTerms: _*))
-      .select(
-        $"slice", $"term", $"block_id", $"doc_id_min", $"doc_id_max",
-        $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-      )
-      .as[(Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    blocks.groupByKey(_._1).flatMapGroups { (slice, rows) =>
-      val (qGroups, idfs, exT) = bCtx.value
-      val byTerm = rows.toArray.groupBy(_._2)
-      def iterOf(t: String): Option[PostingIter] =
-        byTerm.get(t).map { rs =>
-          val refs = rs.sortBy(r => (r._4, r._3))
-            .map(r => BlockRef(r._4, r._5, r._6, r._7, r._8, r._9, r._10, r._11))
-          new PostingIter(0, 0.0, refs, avgDl)
-        }
-      val members: Array[Array[PostingIter]] = qGroups.map(_.flatMap(iterOf))
-      if (members.forall(_.isEmpty) || (isAnd && members.exists(_.isEmpty)))
-        Iterator.empty
-      else {
-        var filter: DocFilter =
-          if (pred == null) null else AttrSidecar.openCursor(idxDir, slice, pred)
-        val predCursor = filter
-        val exIters = exT.iterator.flatMap(iterOf).toArray
-        if (exIters.nonEmpty)
-          filter = Filters.and(filter, new NotFilter(new PostingSet(exIters)))
-        if (tomb != null) filter = tomb.compose(slice, filter)
-        val top = new BlockMaxWand.TopK(kk)
-        val all = members.flatten
-        try {
-          var continue = all.exists(!_.exhausted)
-          while (continue) {
-            var d = Long.MaxValue
-            var i = 0
-            while (i < all.length) {
-              val it = all(i)
-              if (!it.exhausted && it.doc < d) d = it.doc
-              i += 1
-            }
-            if (d == Long.MaxValue) continue = false
-            else {
-              val allowed = filter == null || filter.contains(d)
-              var score = 0.0
-              var matched = 0
-              var g = 0
-              while (g < members.length) {
-                var tfSum = 0
-                var dl = 0
-                val gm = members(g)
-                var m = 0
-                while (m < gm.length) {
-                  val it = gm(m)
-                  if (!it.exhausted && it.doc == d) { tfSum += it.tf; dl = it.docLen }
-                  m += 1
-                }
-                if (tfSum > 0) {
-                  matched += 1
-                  if (allowed) score += idfs(g) * graft.index.IndexBuilder.impact(tfSum, dl, avgDl)
-                }
-                g += 1
-              }
-              if (allowed && (if (isAnd) matched == members.length else matched >= msm))
-                top.offer(BlockMaxWand.Hit(d, score))
-              i = 0
-              while (i < all.length) {
-                val it = all(i)
-                if (!it.exhausted && it.doc == d) it.next()
-                i += 1
-              }
-            }
-          }
-          top.result.iterator.map(h => QueryHit(h.docId, h.score))
-        } finally {
-          predCursor match {
-            case c: AutoCloseable => c.close()
-            case _ =>
-          }
-        }
-      }
-    }
-      .toDF()
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
-  }
+  ): DataFrame =
+    view(spark, indexDir).synonymTopK(groups, mode, k, attrFilter, mustNot, minShouldMatch)
 }

@@ -1303,6 +1303,29 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getLong(3) == toks.length, "doc_len")
   }
 
+  test("explain: a tombstoned doc explains to no rows; live docs' rows are unchanged") {
+    val root = Files.createTempDirectory("graft-explain-del")
+    try {
+      val idx = root.toString
+      IndexBuilder.build(spark, PagesGen.pages(spark, 400, 4), idx,
+        cfg.copy(nPartitions = 4, nGroups = 1, nSlices = 2))
+      val ts = Seq("w1", "w2", "w3")
+      val top = got(Search.topK(spark, idx, ts, "or", 5)).map(_._1)
+      def rows(ids: Seq[Long]) = Search.explain(spark, idx, ts, ids).collect().map(_.toSeq).toSet
+      val before = rows(top)
+      assert(before.exists(_.head == top.head), "the top hit explains before the delete")
+      Tombstones.delete(spark, idx, $"doc_id" === top.head)
+      // ES _explain does not find a deleted doc: no query can return it
+      assert(rows(Seq(top.head)).isEmpty, "a tombstoned doc explains to nothing")
+      val after = rows(top)
+      assert(after.nonEmpty && after == before.filter(_.head != top.head),
+        "the live docs' rows are unchanged")
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(root.toFile).deleteRecursively()
+    }
+  }
+
   test("family upsert: last write wins by url (ES index-API semantics)") {
     import graft.index.SegmentFamily
     val root = Files.createTempDirectory("graft-upsert").toString

@@ -262,6 +262,28 @@ class MergeStreamSpec extends AnyFunSuite {
     val preOne = Search.prefixTopK(spark, merged, "w1", 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(preFam == preOne, "family prefix ≠ merged index")
+    // dis_max, synonyms, phrase-prefix and phrase counts on the live
+    // family: the merged index's ids, scores within 1e-9
+    def sameHits(what: String, fam: org.apache.spark.sql.DataFrame,
+                 one: org.apache.spark.sql.DataFrame): Unit = {
+      def hits(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val (f, o) = (hits(fam), hits(one))
+      assert(o.nonEmpty && f.map(_._1) == o.map(_._1), s"family $what ids ≠ merged index: $f vs $o")
+      f.zip(o).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9, s"family $what score") }
+    }
+    sameHits("dis_max", live.disMaxTopK(q, 10, tieBreaker = 0.3),
+      Search.disMaxTopK(spark, merged, q, 10, tieBreaker = 0.3))
+    val groups = Seq(Seq("w0", "w5"), Seq("w3"))
+    sameHits("synonyms", live.synonymTopK(groups, "or", 10, mustNot = Seq("w2")),
+      Search.synonymTopK(spark, merged, groups, "or", 10, mustNot = Seq("w2")))
+    sameHits("phrase-prefix", live.phrasePrefixTopK(Seq("w0", "w1"), 10),
+      Search.phrasePrefixTopK(spark, merged, Seq("w0", "w1"), 10))
+    val pairs = Seq(("w0", "w1"), ("w1", "w0"), ("w0", "w0"))
+    val countsFam = live.phraseCounts(pairs.map { case (a, b) => Seq(a, b) })
+    assert(countsFam == pairs.map(Search.phraseCountBatch(spark, merged, pairs)),
+      "family phrase counts ≠ merged index")
+    assert(countsFam.head > 0 && countsFam.head == Search.phraseCount(spark, merged, Seq("w0", "w1")))
   }
 
   test("time-bucketed index family: date-ranged search prunes whole month segments") {

@@ -19,7 +19,10 @@ import graft.sources.PagesGen
   * adds no second dictionary job; a query_string tree resolves all its
   * leaves' terms in one dictionary job; `Searcher` resolves a query's
   * dictionary once, and the unscored match walks (aggregations, `_count`,
-  * sort-by-field) read no dictionary at all.
+  * sort-by-field) read no dictionary at all. more_like_this selects its
+  * terms and retrieves on one view, so it reads the dictionary once; the
+  * view's dis_max, synonym, phrase-prefix, phrase-count and explain
+  * paths keep their job counts and block decodes.
   */
 class QueryJobsSpec extends AnyFunSuite {
 
@@ -121,6 +124,41 @@ class QueryJobsSpec extends AnyFunSuite {
     }
     // 36 posting blocks per walk: every block of w0 and w1 decodes once
     assert(decodes == 108, s"the three walks decoded $decodes blocks")
+  }
+
+  test("more_like_this reads the dictionary once") {
+    val dir = this.dir
+    val jobs = jobsOf(Search.moreLikeThis(spark, dir, 7L, k = 5).collect())
+    def collectsAt(file: String) = jobs.filter(_.exists(_.startsWith(s"collect at $file")))
+    // Search's one collect is the source doc's point read; the candidate
+    // terms' dfs are the view's one dictionary job, and the retrieval's
+    // lookup is answered by its memo
+    assert(collectsAt("Search.scala").size == 1, s"more_like_this collects: $jobs")
+    assert(collectsAt("MultiSearcher.scala").size == 1, s"more_like_this dictionary jobs: $jobs")
+    assert(jobs.size <= 5, s"Search.moreLikeThis ran ${jobs.size} jobs: $jobs")
+  }
+
+  test("dis_max, synonyms, phrase-prefix, phrase counts, phrase suggester and explain: jobs and block decodes pinned") {
+    val dir = this.dir
+    BlockMaxWand.blockDecodes.reset()
+    BlockMaxWand.posBlockDecodes.reset()
+    val calls = Seq(
+      ("Search.disMaxTopK",
+        jobsOf(Search.disMaxTopK(spark, dir, Seq("w0", "w1", "w2"), 10, tieBreaker = 0.3).collect()), 3),
+      ("Search.synonymTopK", jobsOf(Search.synonymTopK(spark, dir, Seq(Seq("w0", "w5"), Seq("w1")), "or", 10,
+        mustNot = Seq("w2")).collect()), 3),
+      ("Search.phrasePrefixTopK", jobsOf(Search.phrasePrefixTopK(spark, dir, Seq("w0", "w1"), 10,
+        attrFilter = graft.index.AttrPred.lang("en")).collect()), 5),
+      ("Search.phraseCount", jobsOf(Search.phraseCount(spark, dir, Seq("w0", "w1"))), 3),
+      ("Search.phraseSuggest", jobsOf(Search.phraseSuggest(spark, dir, Seq("w0", "w1")).collect()), 3),
+      ("Search.explain", jobsOf(Search.explain(spark, dir, Seq("w0", "w1"), Seq(0L, 5L, 17L)).collect()), 2))
+    val decodes = BlockMaxWand.blockDecodes.sum() + BlockMaxWand.posBlockDecodes.sum()
+    calls.foreach { case (what, jobs, max) =>
+      assertNoInference(what, jobs)
+      assert(jobs.size <= max, s"$what ran ${jobs.size} jobs: $jobs")
+    }
+    // 474 posting-block and 349 position-block decodes over the six calls
+    assert(decodes == 823, s"the six calls decoded $decodes blocks")
   }
 
   test("MultiSearcher.dfOf from two threads equals the serial answers") {
