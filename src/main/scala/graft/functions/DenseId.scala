@@ -109,7 +109,9 @@ object DenseId {
     // pass 1 (url-only, column-pruned like the bounds pass): rows per
     // range id, counted at the SOURCE — the heavy shuffled rows are never
     // fetched just to be counted, so the exchange's map and reduce sides
-    // each run exactly once (in the consumer's job)
+    // each run exactly once (in the consumer's job). Driver collect: one
+    // (range id, count) pair per range id an input partition holds, so at
+    // most numPartitions pairs per input partition.
     val pidCounts = urlsForBounds.rdd
       .mapPartitions { it =>
         val b = bBounds.value
@@ -168,7 +170,7 @@ object DenseId {
     * (what Spark's UTF8String sort uses) without materializing byte
     * arrays; differs from String.compareTo only beyond the BMP.
     */
-  @inline private def compareUtf8Strings(a: String, b: String): Int = {
+  @inline private[graft] def compareUtf8Strings(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0
     while (i < n) {
@@ -215,7 +217,8 @@ object DenseId {
     * adaptive-stride downsampling (order-based, no RNG — identical at any
     * core count for a fixed input layout), weighted quantiles on the
     * driver. Bounds only steer partition BALANCE; ids never depend on
-    * them.
+    * them. Driver collect: fewer than 256 sampled urls per input
+    * partition (a partition's sample halves whenever it reaches 256).
     */
   private[graft] def rangeBounds(
       urls: org.apache.spark.sql.Dataset[String], numPartitions: Int

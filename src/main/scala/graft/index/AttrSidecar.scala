@@ -1,7 +1,6 @@
 package graft.index
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, InputStream, OutputStream}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
@@ -48,7 +47,7 @@ object AttrSidecar {
   /** Does this index carry the sidecar? (pre-v3 indexes don't). */
   def hasAttrs(indexDir: String): Boolean = {
     val p = new Path(attrsDir(indexDir))
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.sources.Fsx.conf)
     fs.exists(p)
   }
 
@@ -88,9 +87,9 @@ object AttrSidecar {
   /** Write the sidecar for a built index: one job, records shuffled once
     * by slice and sorted by doc_id within (the docs scan is column-pruned
     * to doc_id + the schema expressions' inputs). Each task streams its
-    * slice runs straight to the filesystem — nothing slice-sized is ever
-    * held in memory except the kw dictionaries (bounded cardinality by
-    * contract). Null keywords code as ""; null numerics as 0.
+    * slice runs straight to the filesystem ([[writeSlices]]) — nothing
+    * slice-sized is ever held in memory except the kw dictionaries
+    * (bounded cardinality by contract).
     */
   def writeAttrs(
       spark: SparkSession,
@@ -99,89 +98,99 @@ object AttrSidecar {
       schema: Seq[AttrSpec] = AttrSchema.Default
   ): Unit = {
     val dir = attrsDir(indexDir)
-    val kwFields = schema.filter(_.kind == AttrSchema.Kw)
-    val numFields = schema.filter(_.kind == AttrSchema.Num)
-    val nKw = kwFields.size
-    val nNum = numFields.size
-    val kwNames = kwFields.map(_.name).toArray
-    val numNames = numFields.map(_.name).toArray
-
-    val cols =
-      Seq(col("slice").cast("int"), col("doc_id")) ++
-        kwFields.map(f => expr(s"coalesce(CAST((${f.sql}) AS STRING), '')").as(s"kw_${f.name}")) ++
-        numFields.map(f => expr(s"coalesce(CAST((${f.sql}) AS BIGINT), 0L)").as(s"num_${f.name}"))
-
-    IndexBuilder.withDocsTable(spark, indexDir)(_.select(cols: _*))
+    IndexBuilder.withDocsTable(spark, indexDir)(_.select(recordColumns(schema): _*))
       .repartition(nSlices, col("slice"))
       .sortWithinPartitions(col("slice"), col("doc_id"))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        // executor-side: default Configuration resolves the cluster's
-        // defaultFS from the node's classpath config (file:// locally)
-        val fs = new Path(dir).getFileSystem(new Configuration())
-        var cur = -1
-        var out: DataOutputStream = null
-        var dicts: Array[scala.collection.mutable.LinkedHashMap[String, Int]] = null
-        var n = 0L
-        var prevId = 0L
-        var prevNum: Array[Long] = null
-        var bodyBytes = 0L
-        def closeSlice(): Unit = if (out != null) {
-          // footer: schema (kw names + dicts, num names), record count,
-          // then a fixed 8-byte pointer to the footer start
-          val footerAt = 8L + bodyBytes // after magic+version header
-          writeVar(out, nKw.toLong)
-          var f = 0
-          while (f < nKw) {
-            writeStr(out, kwNames(f))
-            writeVar(out, dicts(f).size.toLong)
-            dicts(f).keysIterator.foreach(writeStr(out, _))
-            f += 1
-          }
-          writeVar(out, nNum.toLong)
-          numNames.foreach(writeStr(out, _))
-          writeVar(out, n)
-          out.writeLong(footerAt)
-          out.close(); out = null
-        }
-        it.foreach { row =>
-          val slice = row.getInt(0)
-          val id = row.getLong(1)
-          if (slice != cur) {
-            closeSlice()
-            cur = slice
-            val raw = fs.create(new Path(s"$dir/slice-$slice.bin"), true)
-            out = new DataOutputStream(new BufferedOutputStream(raw, 1 << 16))
-            out.writeInt(Magic); out.writeInt(Version)
-            dicts = Array.fill(nKw)(scala.collection.mutable.LinkedHashMap.empty[String, Int])
-            n = 0L; prevId = 0L; bodyBytes = 0L
-            prevNum = new Array[Long](nNum)
-          }
-          // byte count tracked Long-side (DataOutputStream.size() is an
-          // Int and wraps past 2 GiB — real at 10^8-doc slices)
-          val gap = if (n == 0) id else id - prevId
-          writeVar(out, gap)
-          bodyBytes += varLen(gap)
-          var f = 0
-          while (f < nKw) {
-            val v = row.getString(2 + f)
-            val code = dicts(f).getOrElseUpdate(v, dicts(f).size)
-            writeVar(out, code.toLong)
-            bodyBytes += varLen(code.toLong)
-            f += 1
-          }
-          f = 0
-          while (f < nNum) {
-            val v = row.getLong(2 + nKw + f)
-            val d = zigzag(if (n == 0) v else v - prevNum(f))
-            writeVar(out, d)
-            bodyBytes += varLen(d)
-            prevNum(f) = v
-            f += 1
-          }
-          prevId = id; n += 1
-        }
-        closeSlice()
+      .foreachPartition((it: Iterator[org.apache.spark.sql.Row]) => writeSlices(dir, schema, it))
+  }
+
+  /** The sidecar record columns over a docs table: (slice, doc_id, one
+    * STRING per keyword field, one BIGINT per numeric field), in schema
+    * order. Null keywords code as ""; null numerics as 0.
+    */
+  private[index] def recordColumns(schema: Seq[AttrSpec]): Seq[org.apache.spark.sql.Column] =
+    Seq(col("slice").cast("int"), col("doc_id")) ++
+      schema.filter(_.kind == AttrSchema.Kw)
+        .map(f => expr(s"coalesce(CAST((${f.sql}) AS STRING), '')").as(s"kw_${f.name}")) ++
+      schema.filter(_.kind == AttrSchema.Num)
+        .map(f => expr(s"coalesce(CAST((${f.sql}) AS BIGINT), 0L)").as(s"num_${f.name}"))
+
+  /** Write the slice files of `dir` from [[recordColumns]] rows sorted by
+    * (slice, doc_id), one file per slice, streamed: the body each
+    * [[writeAttrs]] task runs, and the driver-side flush's writer.
+    */
+  private[index] def writeSlices(dir: String, schema: Seq[AttrSpec],
+                                 it: Iterator[org.apache.spark.sql.Row]): Unit = {
+    val kwNames = schema.filter(_.kind == AttrSchema.Kw).map(_.name).toArray
+    val numNames = schema.filter(_.kind == AttrSchema.Num).map(_.name).toArray
+    val nKw = kwNames.length
+    val nNum = numNames.length
+    // executor-side: Fsx.conf resolves the cluster's defaultFS from the
+    // node's classpath config (file:// locally)
+    val fs = new Path(dir).getFileSystem(graft.sources.Fsx.conf)
+    var cur = -1
+    var out: DataOutputStream = null
+    var dicts: Array[scala.collection.mutable.LinkedHashMap[String, Int]] = null
+    var n = 0L
+    var prevId = 0L
+    var prevNum: Array[Long] = null
+    var bodyBytes = 0L
+    def closeSlice(): Unit = if (out != null) {
+      // footer: schema (kw names + dicts, num names), record count,
+      // then a fixed 8-byte pointer to the footer start
+      val footerAt = 8L + bodyBytes // after magic+version header
+      writeVar(out, nKw.toLong)
+      var f = 0
+      while (f < nKw) {
+        writeStr(out, kwNames(f))
+        writeVar(out, dicts(f).size.toLong)
+        dicts(f).keysIterator.foreach(writeStr(out, _))
+        f += 1
       }
+      writeVar(out, nNum.toLong)
+      numNames.foreach(writeStr(out, _))
+      writeVar(out, n)
+      out.writeLong(footerAt)
+      out.close(); out = null
+    }
+    it.foreach { row =>
+      val slice = row.getInt(0)
+      val id = row.getLong(1)
+      if (slice != cur) {
+        closeSlice()
+        cur = slice
+        val raw = fs.create(new Path(s"$dir/slice-$slice.bin"), true)
+        out = new DataOutputStream(new BufferedOutputStream(raw, 1 << 16))
+        out.writeInt(Magic); out.writeInt(Version)
+        dicts = Array.fill(nKw)(scala.collection.mutable.LinkedHashMap.empty[String, Int])
+        n = 0L; prevId = 0L; bodyBytes = 0L
+        prevNum = new Array[Long](nNum)
+      }
+      // byte count tracked Long-side (DataOutputStream.size() is an
+      // Int and wraps past 2 GiB — real at 10^8-doc slices)
+      val gap = if (n == 0) id else id - prevId
+      writeVar(out, gap)
+      bodyBytes += varLen(gap)
+      var f = 0
+      while (f < nKw) {
+        val v = row.getString(2 + f)
+        val code = dicts(f).getOrElseUpdate(v, dicts(f).size)
+        writeVar(out, code.toLong)
+        bodyBytes += varLen(code.toLong)
+        f += 1
+      }
+      f = 0
+      while (f < nNum) {
+        val v = row.getLong(2 + nKw + f)
+        val d = zigzag(if (n == 0) v else v - prevNum(f))
+        writeVar(out, d)
+        bodyBytes += varLen(d)
+        prevNum(f) = v
+        f += 1
+      }
+      prevId = id; n += 1
+    }
+    closeSlice()
   }
 
   /** One slice's footer: declared schema + kw dictionaries + count. */
@@ -261,7 +270,7 @@ object AttrSidecar {
 
   private def openRaw(indexDir: String, slice: Int): (FileSystem, Path, Footer, DataInputStream) = {
     val p = new Path(slicePath(indexDir, slice))
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.sources.Fsx.conf)
     require(fs.exists(p),
       s"attr sidecar missing for slice $slice of $indexDir — index built pre-v${IndexBuilder.FormatVersion}?")
     val footer = readFooter(fs, p)

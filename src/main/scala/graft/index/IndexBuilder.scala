@@ -29,7 +29,9 @@ import graft.sources.HtmlText
   * (≙ T6 "effectively exactly-once").
   *
   * Scale notes (100 TB / 10^12 docs):
-  *   - no driver-side data paths except tiny per-partition count arrays;
+  *   - no driver-side data paths except tiny per-partition count arrays,
+  *     and [[flushOrBuild]]'s driver-side flush of inputs within its
+  *     fixed budget ([[FlushMaxRows]], [[FlushMaxTextBytes]]);
   *   - the analyzed staging table is the only extra I/O, and it is what
   *     buys group-level resumability (bounded failure domain — the same
   *     trade the reference makes with sink-stored checkpoints);
@@ -211,17 +213,6 @@ object IndexBuilder {
     // Raw text is stored exactly once — an exploded term-row staging
     // table would repeat the term string per posting and cost ~2-3x.
     if (!done.contains("staged")) {
-      // extract text from html (per-row invariant: byte-identical to the
-      // stored text column — enforced here, not assumed); html dropped
-      // BEFORE the dense-id shuffle so the exchange never carries it.
-      val prepared = pages.mapPartitions { it =>
-        it.map { p =>
-          val extracted = HtmlText.extract(p.html)
-          require(extracted == p.text, s"extract invariant violated for ${p.url}")
-          (p.url, p.warc_ts, p.lang, extracted)
-        }
-      }
-
       // typed two-pass dense-id: rows stay JVM tuples through the zip
       // pass (no Row rebuild / converter pass — the r3 bench's second-
       // largest stage was this read). Range bounds come from a url-only
@@ -229,7 +220,7 @@ object IndexBuilder {
       // html/text bytes are read once, in the exchange's map pass, not
       // three times as with repartitionByRange's sampling).
       val (withIds, total) =
-        timed("dense-id")(DenseId.assignPages(prepared, cfg.nPartitions,
+        timed("dense-id")(DenseId.assignPages(extractText(pages), cfg.nPartitions,
           pages.select(col("url")).as[String]))
       val nDocs = math.max(1L, total)
 
@@ -240,33 +231,17 @@ object IndexBuilder {
       // they must be exact). doc_len uses the count-only tokenizer: same
       // state machine as tokenize() but no token-string allocations.
       val tokenAcc = spark.sparkContext.longAccumulator("graft.total_tokens")
-      timed("docs-write")(withIds
+      timed("docs-write")(writeDocs(withIds
         .map { case (id, url, ts, lang, text) =>
           val dl = Analyzer.tokenCount(text)
           tokenAcc.add(dl.toLong)
           (id, url, ts, lang, dl, text)
         }
-        .toDF("doc_id", "url", "warc_ts", "lang", "doc_len", "text")
-        // slice is materialized on the docs row so filtered search can ship
-        // doc-filter sets to the right WAND task by equi-key, decoupled
-        // from the id→slice formula (fast-merged indexes renumber slices).
-        // MUST use the same integer arithmetic as groupInput's Scala-side
-        // (id * nSlices / nDocs).toInt — one routing invariant, one formula
-        // (DIV is integral division; the old double `/` could diverge near
-        // 2^53 and silently route a doc's attrs to the wrong slice).
-        .withColumn("slice", least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nDocs AS INT)")))
-        .withColumn("grp", least(lit(cfg.nGroups - 1), expr(s"CAST(doc_id * ${cfg.nGroups} DIV $nDocs AS INT)")))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("grp")
-        .parquet(s"$indexDir/docs"))
+        .toDF("doc_id", "url", "warc_ts", "lang", "doc_len", "text"), nDocs, cfg, indexDir))
 
       val totalTokens = tokenAcc.value.longValue()
       val avgDl = if (total > 0) totalTokens.toDouble / total else 0.0
-      timed("stats") {
-        Seq(CorpusStats(total, avgDl, totalTokens)).toDS()
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stats")
-        writeStatsJson(indexDir, CorpusStats(total, avgDl, totalTokens))
-      }
+      timed("stats")(writeStats(spark, indexDir, CorpusStats(total, avgDl, totalTokens)))
       commitUnit(indexDir, "staged")
     }
 
@@ -283,7 +258,7 @@ object IndexBuilder {
     val groupInput: Int => DataFrame = { g =>
       groupDocs(g)
         .flatMap { case (id, text) =>
-          val slice = math.min(nSlices - 1, (id * nSlices / nDocs).toInt)
+          val slice = rangeOf(id, nSlices, nDocs)
           if (withPos) {
             // positions encoded map-side into self-delimiting varbyte
             // chunks — the shuffle carries compact bytes, and block
@@ -312,6 +287,301 @@ object IndexBuilder {
       tokenizeChunks(groupDocs(g), nSlices, nDocs, withPos)
     }
     buildGroups(spark, indexDir, cfg, groupInput, failAfterGroups, chunkInput)
+  }
+
+  /** Extracted `(url, warc_ts, lang, text)` rows of `pages`, checking
+    * the per-row invariant (extracted text byte-identical to the stored
+    * text column — enforced here, not assumed). html is dropped here, on
+    * the executors, so no exchange or collect downstream carries it.
+    */
+  private def extractText(pages: Dataset[Page]): Dataset[(String, java.sql.Timestamp, String, String)] = {
+    import pages.sparkSession.implicits._
+    pages.mapPartitions { it =>
+      it.map { p =>
+        val extracted = HtmlText.extract(p.html)
+        require(extracted == p.text, s"extract invariant violated for ${p.url}")
+        (p.url, p.warc_ts, p.lang, extracted)
+      }
+    }
+  }
+
+  /** Adds the doc-range routing columns to docs rows keyed by `doc_id`.
+    * `slice` is materialized on the docs row so filtered search can ship
+    * doc-filter sets to the right WAND task by equi-key, decoupled from
+    * the id→slice formula (fast-merged indexes renumber slices). It MUST
+    * use the same integer arithmetic as [[rangeOf]], the posting paths'
+    * routing — one routing invariant, one formula (DIV is integral
+    * division; the old double `/` could diverge near 2^53 and silently
+    * route a doc's attrs to the wrong slice).
+    */
+  private def withRouting(docs: DataFrame, nDocs: Long, cfg: BuildConfig): DataFrame =
+    docs
+      .withColumn("slice", least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nDocs AS INT)")))
+      .withColumn("grp", least(lit(cfg.nGroups - 1), expr(s"CAST(doc_id * ${cfg.nGroups} DIV $nDocs AS INT)")))
+
+  /** Doc `id`'s range among `n` equal doc-id ranges of `nDocs` ids: its
+    * slice (n = nSlices) or group (n = nGroups).
+    */
+  @inline private def rangeOf(id: Long, n: Int, nDocs: Long): Int =
+    math.min(n - 1, (id * n / nDocs).toInt)
+
+  /** The `docs` table: (doc_id, url, warc_ts, lang, doc_len, text) rows
+    * plus routing columns, partitioned by `grp`.
+    */
+  private def writeDocs(docs: DataFrame, nDocs: Long, cfg: BuildConfig, indexDir: String): Unit =
+    withRouting(docs, nDocs, cfg)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("grp")
+      .parquet(s"$indexDir/docs")
+
+  /** The `stats` table (one row) and its `stats.json` sidecar. */
+  private def writeStats(spark: SparkSession, indexDir: String, st: CorpusStats): Unit = {
+    import spark.implicits._
+    Seq(st).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stats")
+    writeStatsJson(indexDir, st)
+  }
+
+  /** Posting group g. `grp` comes back as the directory partition column
+    * on read. The block payloads (deltas/tfs/dls) are already
+    * entropy-coded by our codec — parquet's snappy layer on top buys
+    * ~nothing for them and costs CPU; term/metadata columns still get
+    * parquet dictionary + RLE encoding, which compression=uncompressed
+    * does not disable.
+    */
+  private def writePostings(blocks: Dataset[PostingRow], indexDir: String, g: Int): Unit =
+    blocks.drop("grp")
+      .write.mode(SaveMode.Overwrite)
+      .option("compression", sys.env.getOrElse("GRAFT_POSTINGS_CODEC", "uncompressed"))
+      .parquet(s"$indexDir/postings/grp=$g")
+
+  /** Build metrics of one partition's posting blocks, in (term, slice)
+    * order: distinct terms (counted as run transitions), postings, blocks
+    * and payload bytes.
+    */
+  private final class BlockMeter {
+    var terms = 0L
+    var postings = 0L
+    var blocks = 0L
+    var bytes = 0L
+    private var lastTerm: String = null
+    def add(r: PostingRow): Unit = {
+      if (r.term != lastTerm) { terms += 1; lastTerm = r.term }
+      postings += r.count
+      blocks += 1
+      bytes += r.deltas.length + r.tfs.length + r.dls.length + r.poss.length
+    }
+    def row(partition: Int): (Int, Long, Long, Long, Long) = (partition, terms, postings, blocks, bytes)
+  }
+
+  /** Group g's build metrics: one committed row per posting-writing
+    * partition, from its [[BlockMeter]].
+    */
+  private def writeMetrics(spark: SparkSession, indexDir: String, g: Int,
+                           rows: Seq[(Int, Long, Long, Long, Long)]): Unit = {
+    import spark.implicits._
+    rows.map { case (pid, terms, postings, blocks, bytes) => (pid, terms, postings, blocks, bytes, "committed") }
+      .toDF("partition_id", "terms", "postings", "blocks", "bytes", "status")
+      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(s"$indexDir/build_metrics/grp=$g")
+  }
+
+  // ---- driver-side flush: small inputs -------------------------------
+  // A small batch (an upsert, a streaming micro-batch) spends nearly all of
+  // a distributed build's time on job overhead: ~15 jobs, each stage that
+  // writes a table 0.15-0.6 s. Like Lucene's in-memory segment flush, such
+  // a batch is gathered to the driver once and indexed there by the
+  // build's own tokenize→combine and chunk-merge code, into the same rows.
+
+  /** Flush budget: text bytes as the driver heap holds them (2 bytes a
+    * char), about 1,000 pages of 530 chars. Sized by `FlushProbe` on a
+    * 4-core host (local[4], nSlices 4, 3 GiB heap): the flush beat the
+    * build up to 1 MiB of text (1.56 vs 1.85 s median at 1,000 pages) and
+    * lost at 2 MiB (1.89 vs 1.75 s) and at 16 MiB (6.2 vs 4.6 s, nSlices
+    * 16). At 1 MiB its peak live heap was 36 MiB and its largest write
+    * task 3.4 MiB. Its one-thread postings step grows with nSlices, so
+    * with more slices it breaks even sooner (nSlices 16: wins at 0.3 MiB,
+    * loses at 1 MiB).
+    */
+  val FlushMaxTextBytes: Long = 1L << 20
+
+  /** Flush budget in rows, for short texts: the flush beat the build on
+    * 1,024 16-word pages (1.27 vs 1.64 s median, same probe) and only
+    * broke even on 4,096 (3.46 vs 3.54 s; it lost on 4,096 at nSlices 16,
+    * 2.5 vs 1.9 s).
+    */
+  val FlushMaxRows: Int = 1024
+
+  /** Index `pages` into `indexDir` on the driver when they fit the flush
+    * budget ([[FlushMaxRows]], [[FlushMaxTextBytes]]), and with [[build]]
+    * otherwise. The gate ([[gather]]) brings the extracted rows to the
+    * driver; the flush then writes every table [[build]] writes,
+    * row-identical to it, each as a single-partition write, and commits
+    * the same checkpoint units — so a flush that dies part-way resumes
+    * through [[build]]. An index that already has a committed unit goes
+    * to [[build]] directly.
+    */
+  def flushOrBuild(
+      spark: SparkSession,
+      pages: Dataset[Page],
+      indexDir: String,
+      cfg: BuildConfig = BuildConfig()
+  ): Unit =
+    flushOrBuild(spark, pages, indexDir, cfg, FlushMaxRows, FlushMaxTextBytes, Int.MaxValue)
+
+  /** [[flushOrBuild]] with the budget and [[build]]'s `failAfterGroups`
+    * hook as parameters (tests). True when the index was flushed.
+    */
+  private[graft] def flushOrBuild(
+      spark: SparkSession,
+      pages: Dataset[Page],
+      indexDir: String,
+      cfg: BuildConfig,
+      maxRows: Int,
+      maxTextBytes: Long,
+      failAfterGroups: Int
+  ): Boolean = {
+    require(cfg.nSlices % cfg.nGroups == 0, "nSlices must be a multiple of nGroups")
+    val rows =
+      if (completedUnits(indexDir).nonEmpty) None
+      else timed("dense-id")(gather(pages, maxRows, maxTextBytes))
+    rows match {
+      case Some(r) => flush(spark, r, indexDir, cfg, failAfterGroups); true
+      case None => build(spark, pages, indexDir, cfg, failAfterGroups); false
+    }
+  }
+
+  private def textBytes(text: String): Long = 2L * text.length
+
+  private type Extracted = (String, java.sql.Timestamp, String, String)
+
+  /** The gate: the extracted rows of `pages` on the driver, or None when
+    * they exceed `maxRows` rows or `maxTextBytes` of text. The driver
+    * never takes in more than the budget, however many partitions the
+    * input has: in the first job each of the n partitions ships its rows
+    * only while they fit a 1/n share of the budget, and otherwise just
+    * its row and text counts (counted until the partition alone passes a
+    * cap). When the totals fit but some partitions passed their share (a
+    * skewed input), a second job gathers those partitions, each limited
+    * to the size the first job counted for it.
+    */
+  private def gather(pages: Dataset[Page], maxRows: Int, maxTextBytes: Long): Option[Array[Extracted]] = {
+    val rdd = extractText(pages).rdd
+    val n = rdd.getNumPartitions
+    // per partition: (rows, text bytes, its rows, or null past its limit)
+    def ship(parts: Seq[Int], limit: Int => (Long, Long)): Array[(Long, Long, Array[Extracted])] = {
+      val limits = parts.map(p => p -> limit(p)).toMap
+      rdd.sparkContext.runJob(rdd, (ctx: org.apache.spark.TaskContext, it: Iterator[Extracted]) => {
+        val (keepRows, keepBytes) = limits(ctx.partitionId)
+        var kept = ArrayBuffer.empty[Extracted]
+        var rows = 0L
+        var bytes = 0L
+        while (it.hasNext && rows <= maxRows && bytes <= maxTextBytes) {
+          val r = it.next()
+          rows += 1
+          bytes += textBytes(r._4)
+          if (kept != null) {
+            if (rows <= keepRows && bytes <= keepBytes) kept += r else kept = null
+          }
+        }
+        (rows, bytes, if (kept == null) null else kept.toArray)
+      }, parts)
+    }
+    val first = ship(0 until n, _ => (maxRows.toLong / n, maxTextBytes / n))
+    if (first.map(_._1).sum > maxRows || first.map(_._2).sum > maxTextBytes) None
+    else {
+      val skewed = (0 until n).filter(p => first(p)._3 == null)
+      val second = if (skewed.isEmpty) Array.empty[(Long, Long, Array[Extracted])]
+        else ship(skewed, p => (first(p)._1, first(p)._2))
+      // a partition that reads differently the second time: build instead
+      if (second.exists(_._3 == null)) None
+      else Some((first ++ second).flatMap(r => Option(r._3)).flatten)
+    }
+  }
+
+  /** Index gathered rows into `indexDir` on the driver: dense ids in
+    * DenseId's UTF-8 url order, then the tables and checkpoint units of
+    * [[build]] in its order, timed under its stage labels. Each table is
+    * written from a local relation as one single-partition job; the attr
+    * SQL evaluates over a local relation on the driver (no job).
+    */
+  private def flush(
+      spark: SparkSession,
+      rows: Array[Extracted],
+      indexDir: String,
+      cfg: BuildConfig,
+      failAfterGroups: Int
+  ): Unit = {
+    import spark.implicits._
+    writeMeta(indexDir, cfg)
+    val docs = timed("dense-id")(rows.sortWith((a, b) => DenseId.compareUtf8Strings(a._1, b._1) < 0))
+    val total = docs.length.toLong
+    val nDocs = math.max(1L, total)
+    val docRows = docs.indices.map { i =>
+      val (url, ts, lang, text) = docs(i)
+      (i.toLong, url, ts, lang, Analyzer.tokenCount(text), text)
+    }
+    val docsDf = spark.createDataset(docRows).toDF("doc_id", "url", "warc_ts", "lang", "doc_len", "text")
+    timed("docs-write")(writeDocs(docsDf.coalesce(1), nDocs, cfg, indexDir))
+    val totalTokens = docRows.iterator.map(_._5.toLong).sum
+    val avgDl0 = if (total > 0) totalTokens.toDouble / total else 0.0
+    timed("stats")(writeStats(spark, indexDir, CorpusStats(total, avgDl0, totalTokens)))
+    commitUnit(indexDir, "staged")
+
+    // the avgdl buildGroups encodes with: the one stats.json holds
+    val avgDl = { val a = readStats(spark, indexDir).avg_dl; if (a > 0) a else 1.0 }
+    val dfs = new java.util.HashMap[String, Array[Long]]() // term → (doc_freq, total_tf)
+    // chunk rows in the order the build's exchange sorts them: (term in
+    // UTF-8 order, slice, min_doc)
+    type Chunk = (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])
+    val chunkOrder = new java.util.Comparator[Chunk] {
+      def compare(a: Chunk, b: Chunk): Int = {
+        val t = DenseId.compareUtf8Strings(a._1, b._1)
+        if (t != 0) t
+        else if (a._2 != b._2) Integer.compare(a._2, b._2)
+        else java.lang.Long.compare(a._3, b._3)
+      }
+    }
+    (0 until cfg.nGroups).foreach { g =>
+      if (g >= failAfterGroups) throw new RuntimeException(s"injected failure before grp-$g")
+      // the build's own map side (fused tokenize→combine) and reducer
+      // (chunk merge into blocks), run as one task on the driver
+      val blocks = timed(s"postings-grp-$g") {
+        val docsOfGroup = docs.indices.iterator.filter(i => rangeOf(i, cfg.nGroups, nDocs) == g)
+          .map(i => (i.toLong, docs(i)._4))
+        val chunks = chunkRows(docsOfGroup, cfg.nSlices, nDocs, cfg.positions, chunkFlushEvery).toArray
+        java.util.Arrays.sort(chunks, chunkOrder)
+        val blocks = mergeChunksToBlocks(chunks.iterator.map(c => (c._1, c._2, c._4, c._5, c._6, c._7, c._8)),
+          g, cfg.blockSize, avgDl).toArray
+        writePostings(spark.createDataset(blocks.toSeq).coalesce(1), indexDir, g)
+        blocks
+      }
+      timed(s"metrics-grp-$g") {
+        val meter = new BlockMeter
+        blocks.foreach(meter.add)
+        writeMetrics(spark, indexDir, g, if (meter.blocks > 0) Seq(meter.row(0)) else Nil)
+      }
+      blocks.foreach { r =>
+        val acc = dfs.computeIfAbsent(r.term, _ => new Array[Long](2))
+        acc(0) += r.count; acc(1) += r.tf_sum
+      }
+      commitUnit(indexDir, s"grp-$g")
+    }
+
+    timed("attrs") {
+      val records = withRouting(docsDf, nDocs, cfg).select(AttrSidecar.recordColumns(cfg.attrs): _*).collect()
+      AttrSidecar.writeSlices(AttrSidecar.attrsDir(indexDir), cfg.attrs, records.iterator)
+    }
+    commitUnit(indexDir, "attrs")
+
+    timed("terms") {
+      val terms = scala.jdk.CollectionConverters.MapHasAsScala(dfs).asScala.toArray
+        .sortWith((a, b) => DenseId.compareUtf8Strings(a._1, b._1) < 0)
+        .map { case (t, acc) => TermStat(t, acc(0), acc(1)) }
+      spark.createDataset(terms.toSeq).coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/terms")
+    }
+    commitUnit(indexDir, "terms")
+    commitUnit(indexDir, "done")
   }
 
   /** Stages 2-3: posting groups + term dictionary. `groupInput(g)` must
@@ -351,30 +621,23 @@ object IndexBuilder {
         // Metrics-wrapped block stream shared by both exchange shapes.
         def metered(base: Iterator[PostingRow]): Iterator[PostingRow] = {
           val pid = org.apache.spark.TaskContext.getPartitionId()
+          val meter = new BlockMeter
           new Iterator[PostingRow] {
-            private var terms = 0L
-            private var postings = 0L
-            private var nBlocks = 0L
-            private var bytes = 0L
-            private var lastTerm: String = null
             private var reported = false
             def hasNext: Boolean = {
               // volatile read only on the production path (CAS just for tests)
-              if (nBlocks > 0 && chaosOnce.get && chaosOnce.compareAndSet(true, false))
+              if (meter.blocks > 0 && chaosOnce.get && chaosOnce.compareAndSet(true, false))
                 throw new RuntimeException("injected mid-task chaos")
               val h = base.hasNext
               if (!h && !reported) {
                 reported = true
-                if (nBlocks > 0) metricsAcc.add((pid, terms, postings, nBlocks, bytes))
+                if (meter.blocks > 0) metricsAcc.add(meter.row(pid))
               }
               h
             }
             def next(): PostingRow = {
               val r = base.next()
-              if (r.term != lastTerm) { terms += 1; lastTerm = r.term }
-              postings += r.count
-              nBlocks += 1
-              bytes += r.deltas.length + r.tfs.length + r.dls.length + r.poss.length
+              meter.add(r)
               r
             }
           }
@@ -406,25 +669,11 @@ object IndexBuilder {
               .select($"term", $"slice", $"doc_id", $"tf", $"doc_len", $"pos")
               .as[(String, Int, Long, Int, Int, Array[Byte])]
               .mapPartitions(it => metered(blockify(it, g, blockSize, avgDl)))
-        // `grp` comes back as the directory partition column on read.
-        // The block payloads (deltas/tfs/dls) are already entropy-coded by
-        // our codec — parquet's snappy layer on top buys ~nothing for them
-        // and costs CPU; term/metadata columns still get parquet dictionary
-        // + RLE encoding, which compression=uncompressed does not disable.
-        timed(s"postings-grp-$g")(blocks.drop("grp")
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", sys.env.getOrElse("GRAFT_POSTINGS_CODEC", "uncompressed"))
-          .parquet(s"$indexDir/postings/grp=$g"))
+        timed(s"postings-grp-$g")(writePostings(blocks, indexDir, g))
 
         val metricRows = scala.jdk.CollectionConverters
           .ListHasAsScala(metricsAcc.value).asScala.toSeq.sortBy(_._1)
-          .map { case (pid, terms, postings, nBlocks, bytes) =>
-            (pid, terms, postings, nBlocks, bytes, "committed")
-          }
-        timed(s"metrics-grp-$g")(metricRows
-          .toDF("partition_id", "terms", "postings", "blocks", "bytes", "status")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$indexDir/build_metrics/grp=$g"))
+        timed(s"metrics-grp-$g")(writeMetrics(spark, indexDir, g, metricRows))
         commitUnit(indexDir, unit)
         groupsBuilt += 1
       }
@@ -730,69 +979,84 @@ object IndexBuilder {
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val flushEvery = sys.env.getOrElse("GRAFT_CHUNK_FLUSH", "2000000").toLong
+    val flushEvery = chunkFlushEvery
     docs
-      .mapPartitions { (it: Iterator[(Long, String)]) =>
-        new Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] {
-          private val table = new TermChunkTable(1 << 13)
-          private var pending: Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = Iterator.empty
-          // bufs whose LAST posting belongs to the doc being scanned —
-          // their dl field is patched once the doc's token count is known
-          // (the streaming scan can't know dl up front)
-          private var touched = new Array[ChunkBuf](256)
-          private var nTouched = 0
-          private final class DocSink extends Analyzer.TokenSink {
-            var docId = 0L
-            var slice = 0
-            def token(text: String, start: Int, end: Int, index: Int, ascii: Boolean, hash: Int): Unit = {
-              val b =
-                if (ascii) table.probeAscii(text, start, end, slice, hash)
-                else table.probeKey(
-                  text.substring(start, end).toLowerCase(java.util.Locale.ROOT), slice)
-              if (b.appendOcc(docId, index, withPos)) {
-                if (nTouched == touched.length)
-                  touched = java.util.Arrays.copyOf(touched, nTouched * 2)
-                touched(nTouched) = b
-                nTouched += 1
-              }
-            }
-          }
-          private val sink = new DocSink
+      .mapPartitions((it: Iterator[(Long, String)]) => chunkRows(it, nSlices, nDocs, withPos, flushEvery))
+      .toDF("term", "slice", "min_doc", "n", "ids", "tfs", "dls", "pos")
+  }
 
-          private def refill(): Unit = {
-            var consumed = 0L
-            while (it.hasNext && consumed < flushEvery) {
-              val (id, text) = it.next()
-              // flush only at doc boundaries so a (term, doc) posting can
-              // never split across chunks
-              sink.docId = id
-              sink.slice = math.min(nSlices - 1, (id * nSlices / nDocs).toInt)
-              val dl = Analyzer.scanTokens(text, sink)
-              var t = 0
-              while (t < nTouched) { touched(t).patchLastDl(dl); t += 1 }
-              nTouched = 0
-              consumed += dl
-            }
-            pending = table.drain()
-          }
+  /** Postings a combine buffers before it drains into chunk rows. */
+  private def chunkFlushEvery: Long = sys.env.getOrElse("GRAFT_CHUNK_FLUSH", "2000000").toLong
 
-          def hasNext: Boolean = {
-            while (!pending.hasNext && it.hasNext) refill()
-            pending.hasNext
-          }
-          def next(): (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte]) = {
-            if (!hasNext) throw new NoSuchElementException
-            pending.next()
+  /** The fused tokenize→combine body of one task (or of the driver-side
+    * flush): (doc_id, text) rows in, packed chunk rows `(term, slice,
+    * min_doc, n, ids, tfs, dls, pos)` out, drained every `flushEvery`
+    * postings.
+    */
+  private def chunkRows(
+      it: Iterator[(Long, String)],
+      nSlices: Int,
+      nDocs: Long,
+      withPos: Boolean,
+      flushEvery: Long
+  ): Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] =
+    new Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] {
+      private val table = new TermChunkTable(1 << 13)
+      private var pending: Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = Iterator.empty
+      // bufs whose LAST posting belongs to the doc being scanned —
+      // their dl field is patched once the doc's token count is known
+      // (the streaming scan can't know dl up front)
+      private var touched = new Array[ChunkBuf](256)
+      private var nTouched = 0
+      private final class DocSink extends Analyzer.TokenSink {
+        var docId = 0L
+        var slice = 0
+        def token(text: String, start: Int, end: Int, index: Int, ascii: Boolean, hash: Int): Unit = {
+          val b =
+            if (ascii) table.probeAscii(text, start, end, slice, hash)
+            else table.probeKey(
+              text.substring(start, end).toLowerCase(java.util.Locale.ROOT), slice)
+          if (b.appendOcc(docId, index, withPos)) {
+            if (nTouched == touched.length)
+              touched = java.util.Arrays.copyOf(touched, nTouched * 2)
+            touched(nTouched) = b
+            nTouched += 1
           }
         }
       }
-      .toDF("term", "slice", "min_doc", "n", "ids", "tfs", "dls", "pos")
-  }
+      private val sink = new DocSink
+
+      private def refill(): Unit = {
+        var consumed = 0L
+        while (it.hasNext && consumed < flushEvery) {
+          val (id, text) = it.next()
+          // flush only at doc boundaries so a (term, doc) posting can
+          // never split across chunks
+          sink.docId = id
+          sink.slice = rangeOf(id, nSlices, nDocs)
+          val dl = Analyzer.scanTokens(text, sink)
+          var t = 0
+          while (t < nTouched) { touched(t).patchLastDl(dl); t += 1 }
+          nTouched = 0
+          consumed += dl
+        }
+        pending = table.drain()
+      }
+
+      def hasNext: Boolean = {
+        while (!pending.hasNext && it.hasNext) refill()
+        pending.hasNext
+      }
+      def next(): (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte]) = {
+        if (!hasNext) throw new NoSuchElementException
+        pending.next()
+      }
+    }
 
   private[index] def chunkMapSide(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val flushEvery = sys.env.getOrElse("GRAFT_CHUNK_FLUSH", "2000000").toLong
+    val flushEvery = chunkFlushEvery
     df.select(col("term"), col("slice"), col("doc_id"), col("tf"), col("doc_len"), col("pos"))
       .as[(String, Int, Long, Int, Int, Array[Byte])]
       .mapPartitions { (it: Iterator[(String, Int, Long, Int, Int, Array[Byte])]) =>

@@ -116,13 +116,23 @@ object SegmentFamily {
   /** ES index-API semantics over the family: docs whose url is already
     * indexed are REPLACED (last write wins — ≙ the reference's
     * `_id`-keyed bulk upserts into ES, `ElasticSearchStorage.cs:95-149`).
-    * One call: build `pages` into a new segment, tombstone every OLDER
-    * version of the incoming urls in the EXISTING segments (per-segment
-    * delete jobs — node-local exclusion from then on, no rewrite), then
-    * append the new segment to the manifest. Re-running the same
-    * `segName` is idempotent end-to-end (resumable build, sorted-union
-    * tombstones, idempotent append) — the new segment itself is never
-    * tombstoned.
+    * One call:
+    *   1. index `pages` into a new segment with
+    *      [[IndexBuilder.flushOrBuild]] — a batch within the flush budget
+    *      is indexed on the driver (one gathering job plus one
+    *      single-partition write per table), a larger one by the
+    *      distributed build;
+    *   2. tombstone every OLDER version of the incoming urls in all
+    *      EXISTING segments with ONE delete ([[Tombstones.deleteByUrls]]
+    *      over the family: node-local exclusion from then on, no
+    *      rewrite) — the urls are read from the new segment's docs table,
+    *      which reads the same on every retry even if `pages` is a
+    *      non-deterministic stream source;
+    *   3. append the new segment to the manifest.
+    * So an upsert runs the same number of jobs whatever the family's
+    * size. Re-running the same `segName` is idempotent end-to-end
+    * (resumable build, sorted-union tombstones, idempotent append) — the
+    * new segment itself is never tombstoned.
     *
     * Caller contract: urls are unique WITHIN `pages` (pre-collapse a
     * batch with the J3 last-write-wins operator if not). Stats include
@@ -139,12 +149,11 @@ object SegmentFamily {
     import spark.implicits._
     require(segName.matches("[A-Za-z0-9_-]+"), "segName must be filesystem-safe")
     val segDir = s"$root/$segName"
-    IndexBuilder.build(spark, pages, segDir, cfg)
-    // urls read back from the BUILT segment (resume-safe: identical on
+    IndexBuilder.flushOrBuild(spark, pages, segDir, cfg)
+    val older = read(root).map(_.dir).filterNot(_ == segDir) // never tombstone the new segment
+    // urls read back from the NEW segment (resume-safe: identical on
     // every retry even if `pages` is a non-deterministic stream source)
-    val urls = IndexBuilder.readDocsTable(spark, segDir).select($"url").as[String]
-    read(root).filterNot(_.dir == segDir) // never tombstone the new segment
-      .foreach(seg => Tombstones.deleteByUrls(spark, seg.dir, urls))
+    Tombstones.deleteByUrls(spark, older, IndexBuilder.readDocsTable(spark, segDir).select($"url").as[String])
     append(spark, root, segDir)
   }
 

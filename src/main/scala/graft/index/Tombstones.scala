@@ -1,7 +1,6 @@
 package graft.index
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,7 +46,7 @@ object Tombstones {
   private def genDir(indexDir: String, gen: Int) = s"${tombDir(indexDir)}/gen-$gen"
   private def currentPath(indexDir: String) = new Path(s"${tombDir(indexDir)}/CURRENT")
 
-  private def fsOf(p: Path): FileSystem = p.getFileSystem(new Configuration())
+  private def fsOf(p: Path): FileSystem = p.getFileSystem(graft.sources.Fsx.conf)
 
   /** (generation, totalDeleted) of the live tombstone set, if any. */
   def current(indexDir: String): Option[(Int, Long)] = {
@@ -146,42 +145,53 @@ object Tombstones {
 
   /** Mark every doc matching `pred` (a Column over the docs table:
     * url/lang/warc_ts/doc_len/doc_id) as deleted. Returns the TOTAL
-    * deleted count after the call (idempotent: re-deleting is a no-op in
-    * the merged set). One job: matching (slice, doc_id) pairs shuffle by
+    * deleted count after the call (idempotent: a call that adds no id
+    * writes nothing). One job: matching (slice, doc_id) pairs shuffle by
     * slice (column-pruned scan), each slice task merges with the current
     * generation's file and writes the next generation; the driver carries
     * untouched slices' files forward and cuts CURRENT over atomically.
     */
-  def delete(spark: SparkSession, indexDir: String, pred: Column): Long = {
-    import spark.implicits._
-    val ids = IndexBuilder.withDocsTable(spark, indexDir)(_.where(pred))
-      .select($"slice".cast("int"), $"doc_id")
-    applyDeletes(spark, indexDir, ids)
-  }
+  def delete(spark: SparkSession, indexDir: String, pred: Column): Long =
+    deleteWhere(spark, Seq(indexDir), _.where(pred)).head
 
   /** Mark an explicit id set (bulk deletes keyed externally — e.g. ids
     * resolved from urls via a join the caller owns).
     */
-  def deleteByIds(spark: SparkSession, indexDir: String, ids: org.apache.spark.sql.Dataset[Long]): Long = {
-    import spark.implicits._
-    val withSlice = IndexBuilder.readDocsTable(spark, indexDir)
-      .join(ids.toDF("doc_id"), Seq("doc_id"), "left_semi")
-      .select($"slice".cast("int"), $"doc_id")
-    applyDeletes(spark, indexDir, withSlice)
-  }
+  def deleteByIds(spark: SparkSession, indexDir: String, ids: org.apache.spark.sql.Dataset[Long]): Long =
+    deleteWhere(spark, Seq(indexDir), _.join(ids.toDF("doc_id"), Seq("doc_id"), "left_semi")).head
 
   /** Mark by natural key (url — the reference's event identity): a semi
-    * join against the column-pruned docs scan resolves urls → ids. The
-    * upsert path ([[SegmentFamily.upsert]]) uses this to retire older
-    * versions of re-indexed docs.
+    * join against the column-pruned docs scan resolves urls → ids.
     */
-  def deleteByUrls(spark: SparkSession, indexDir: String, urls: org.apache.spark.sql.Dataset[String]): Long = {
-    import spark.implicits._
-    val withSlice = IndexBuilder.readDocsTable(spark, indexDir)
-      .join(urls.toDF("url"), Seq("url"), "left_semi")
-      .select($"slice".cast("int"), $"doc_id")
-    applyDeletes(spark, indexDir, withSlice)
-  }
+  def deleteByUrls(spark: SparkSession, indexDir: String, urls: org.apache.spark.sql.Dataset[String]): Long =
+    deleteByUrls(spark, Seq(indexDir), urls).head
+
+  /** [[deleteByUrls]] in every index of `indexDirs` with one delete: the
+    * same jobs as for a single index, however many indexes there are. The
+    * upsert path ([[SegmentFamily.upsert]]) retires older versions of
+    * re-indexed docs in all older segments this way. Returns each index's
+    * total deleted count.
+    */
+  def deleteByUrls(
+      spark: SparkSession,
+      indexDirs: Seq[String],
+      urls: org.apache.spark.sql.Dataset[String]
+  ): Seq[Long] =
+    deleteWhere(spark, indexDirs, _.join(urls.toDF("url"), Seq("url"), "left_semi"))
+
+  /** Mark the docs `pick` selects from each index's docs table, in every
+    * index of `indexDirs` with one job: the picked (slice, doc_id) rows of
+    * all indexes, each tagged with its index's position, go through one
+    * [[applyDeletes]]. Returns each index's total deleted count.
+    */
+  private def deleteWhere(spark: SparkSession, indexDirs: Seq[String],
+                          pick: DataFrame => DataFrame): Seq[Long] =
+    if (indexDirs.isEmpty) Nil
+    else applyDeletes(spark, indexDirs, indexDirs.zipWithIndex
+      .map { case (d, i) =>
+        IndexBuilder.withDocsTable(spark, d)(pick).select(lit(i).as("seg"), col("slice"), col("doc_id"))
+      }
+      .reduce(_ union _))
 
   /** Collect another index's live tombstones into `indexDir` (merge
     * lineage: the caller has already remapped (slice, doc_id) into THIS
@@ -189,32 +199,42 @@ object Tombstones {
     * so re-importing after a resumed merge is idempotent.
     */
   private[index] def importInto(spark: SparkSession, indexDir: String, idsDf: DataFrame): Long =
-    applyDeletes(spark, indexDir, idsDf)
+    applyDeletes(spark, Seq(indexDir),
+      idsDf.toDF("slice", "doc_id").select(lit(0).as("seg"), col("slice"), col("doc_id"))).head
 
-  private def applyDeletes(spark: SparkSession, indexDir: String, idsDf: DataFrame): Long = {
+  /** Marks each (seg, slice, doc_id) row of `idsDf` deleted in
+    * `indexDirs(seg)`; returns each index's total deleted count. One job:
+    * rows shuffle by (seg, slice), and each task merges its ids with that
+    * index's current generation. A task writes its slice's next file only
+    * when it adds an id, into the index's STAGING dir, renamed into place
+    * only after the whole job succeeds: a failed attempt's partial slice
+    * files must never become live in a later generation under a different
+    * predicate (they'd exclude docs without being counted in CURRENT).
+    * The driver then publishes every index that gained ids; an index that
+    * gained none keeps its generation and writes nothing.
+    */
+  private def applyDeletes(spark: SparkSession, indexDirs: Seq[String], idsDf: DataFrame): Seq[Long] = {
     import spark.implicits._
-    val prev = current(indexDir)
-    val prevGen = prev.map(_._1).getOrElse(-1)
-    val nextGen = prevGen + 1
-    val finalDir = genDir(indexDir, nextGen)
-    // tasks write into a STAGING dir, renamed into place only after the
-    // whole job succeeds: a failed attempt's partial slice files must
-    // never become live in a later generation under a different predicate
-    // (they'd exclude docs without being counted in CURRENT)
-    val outDir = s"$finalDir.tmp"
-    graft.sources.Fsx.delete(outDir)
-    graft.sources.Fsx.mkdirs(outDir) // rename target must exist even if no slice is touched
-    val idxDir = indexDir
-    val pg = prevGen
+    // one staging dir per index: two entries of one index would race on it
+    require(indexDirs.distinct.size == indexDirs.size, s"indexDirs must be distinct: $indexDirs")
+    val dirs = indexDirs.toArray
+    val prev = dirs.map(current)
+    val prevGens = prev.map(_.map(_._1).getOrElse(-1))
+    val staging = dirs.indices.map(i => s"${genDir(dirs(i), prevGens(i) + 1)}.tmp").toArray
+    staging.foreach(graft.sources.Fsx.delete)
 
-    // per-slice merge task: old ids ∪ new ids → next generation's file
-    val touched = idsDf
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (slice, it) =>
-        val fresh = it.map(_._2).toArray
+    // per-(index, slice) merge task: old ids ∪ new ids → next generation's
+    // file. Driver collect: one row per touched slice, so at most nSlices
+    // rows per index.
+    val written = idsDf
+      .select($"seg", $"slice".cast("int"), $"doc_id")
+      .as[(Int, Int, Long)]
+      .groupByKey(r => (r._1, r._2))
+      .mapGroups { (key, it) =>
+        val (seg, slice) = key
+        val fresh = it.map(_._3).toArray
         java.util.Arrays.sort(fresh)
-        val old = if (pg < 0) Array.emptyLongArray else readSlice(idxDir, pg, slice)
+        val old = if (prevGens(seg) < 0) Array.emptyLongArray else readSlice(dirs(seg), prevGens(seg), slice)
         // sorted union, dedup
         val merged = new scala.collection.mutable.ArrayBuffer[Long](old.length + fresh.length)
         var i = 0; var j = 0
@@ -224,12 +244,29 @@ object Tombstones {
             else { val x = fresh(j); j += 1; x }
           if (merged.isEmpty || merged.last != v) merged += v
         }
-        writeSlice(outDir, slice, merged.toArray)
-        (slice, merged.length.toLong)
+        // merged ⊇ old, so it adds an id iff it is longer
+        if (merged.length > old.length) {
+          writeSlice(staging(seg), slice, merged.toArray)
+          (seg, slice, merged.length.toLong)
+        } else (seg, slice, -1L)
       }
       .collect()
-      .toMap
 
+    dirs.indices.map { i =>
+      val touched = written.collect { case (seg, slice, n) if seg == i && n >= 0 => slice -> n }.toMap
+      if (touched.isEmpty) prev(i).map(_._2).getOrElse(0L)
+      else publish(dirs(i), prevGens(i), staging(i), touched)
+    }
+  }
+
+  /** Publish a staged generation of `indexDir`: carry the previous
+    * generation's untouched slice files into it, rename it into place,
+    * cut CURRENT over atomically and reclaim the previous generation.
+    * Returns the new total deleted count.
+    */
+  private def publish(indexDir: String, pg: Int, outDir: String, touched: Map[Int, Long]): Long = {
+    val nextGen = pg + 1
+    val finalDir = genDir(indexDir, nextGen)
     // carry untouched slices' files into the new generation (driver-side
     // copy of small id files)
     var total = touched.values.sum
@@ -241,7 +278,7 @@ object Tombstones {
         val s = name.stripPrefix("slice-").stripSuffix(".bin").toInt
         if (!touched.contains(s)) {
           org.apache.hadoop.fs.FileUtil.copy(
-            fs, st.getPath, fs, new Path(s"$outDir/$name"), false, new Configuration())
+            fs, st.getPath, fs, new Path(s"$outDir/$name"), false, graft.sources.Fsx.conf)
           total += readSliceCount(indexDir, pg, s)
         }
       }

@@ -22,16 +22,22 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   *   - atomic-ish replace = write tmp + delete dst + rename (HDFS rename
   *     won't overwrite); readers therefore treat a briefly-missing
   *     control file as "empty", never as corruption;
-  *   - a fresh `Configuration()` resolves the process classpath's
-  *     defaultFS exactly like the executor-side data plane already does
-  *     (`AttrSidecar.writeAttrs`), so `file://` paths behave identically
-  *     to bare local paths in tests.
+  *   - [[conf]] resolves the process classpath's defaultFS, on the
+  *     driver and on executors alike, so `file://` paths behave
+  *     identically to bare local paths in tests.
   */
 object Fsx {
 
+  /** The process classpath's Hadoop configuration, one per JVM: each new
+    * `Configuration` re-parses the Hadoop XML defaults on first use
+    * (~10 ms), which made every control-file call and every sidecar or
+    * tombstone open pay that parse again.
+    */
+  lazy val conf: Configuration = new Configuration()
+
   def fs(path: String): (FileSystem, Path) = {
     val p = new Path(path)
-    (p.getFileSystem(new Configuration()), p)
+    (p.getFileSystem(conf), p)
   }
 
   def exists(path: String): Boolean = {
@@ -96,7 +102,7 @@ object Fsx {
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     try {
-      val fc = FileContext.getFileContext(p.toUri, new Configuration())
+      val fc = FileContext.getFileContext(p.toUri, conf)
       fc.rename(tmp, p, Options.Rename.OVERWRITE)
     } catch {
       case _: UnsupportedOperationException | _: java.io.FileNotFoundException =>

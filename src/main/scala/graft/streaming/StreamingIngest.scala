@@ -71,10 +71,11 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Page], batchId: Long) =>
         val segDir = s"$indexDir/segment-$batchId"
-        // idempotent: a replayed batch rebuilds the same segment bytes
-        // (and manifest append dedupes by dir name)
+        // idempotent: a replayed batch rebuilds the same segment rows
+        // (and manifest append dedupes by dir name); a micro-batch within
+        // the flush budget is indexed on the driver
         graft.sources.Fsx.delete(segDir)
-        IndexBuilder.build(batch.sparkSession, batch, segDir, cfg)
+        IndexBuilder.flushOrBuild(batch.sparkSession, batch, segDir, cfg)
         graft.index.SegmentFamily.append(batch.sparkSession, indexDir, segDir)
         if (mergeFactor > 0)
           graft.index.SegmentFamily.maybeCompact(batch.sparkSession, indexDir, mergeFactor)

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import graft.index.IndexBuilder
+import graft.index.{IndexBuilder, SegmentFamily, Tombstones}
 import graft.index.IndexBuilder.BuildConfig
 import graft.query.{BlockMaxWand, Facets, MultiSearcher, QueryString, Search, Searcher, SortBy}
 import graft.sources.PagesGen
@@ -22,11 +22,14 @@ import graft.sources.PagesGen
   * sort-by-field) read no dictionary at all. more_like_this selects its
   * terms and retrieves on one view, so it reads the dictionary once; the
   * view's dis_max, synonym, phrase-prefix, phrase-count and explain
-  * paths keep their job counts and block decodes.
+  * paths keep their job counts and block decodes. An upsert of a batch
+  * within the flush budget runs the same few jobs whatever the family's
+  * size: the gathering job, one write per table and one tombstone job.
   */
 class QueryJobsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
+  import spark.implicits._
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft-jobs").toString
@@ -159,6 +162,32 @@ class QueryJobsSpec extends AnyFunSuite {
     }
     // 474 posting-block and 349 position-block decodes over the six calls
     assert(decodes == 823, s"the six calls decoded $decodes blocks")
+  }
+
+  test("an upsert runs at most 10 jobs, as many into a family of 1 older segment as of 3") {
+    val cfg = BuildConfig(nPartitions = 4, nGroups = 1, nSlices = 4, blockSize = 16)
+    // rows 0..99 and one older segment per further 100 rows; the batch
+    // re-indexes 20 rows of each older segment and adds 40 fresh ones
+    val urls = (0L until 400L).map(i => i -> PagesGen.pageFor(i).url).sortBy(_._2).map(_._1)
+    def pagesOf(rows: Seq[Long]) =
+      spark.createDataset(rows).repartition(4).map(i => PagesGen.pageFor(i))
+    def upsertInto(olderSegs: Int): (Seq[Seq[String]], String) = {
+      val root = Files.createTempDirectory("graft-jobs-upsert").toString
+      (0 until olderSegs).foreach { s =>
+        IndexBuilder.build(spark, pagesOf(urls.slice(s * 100, s * 100 + 100)), s"$root/s$s", cfg)
+        SegmentFamily.append(spark, root, s"$root/s$s")
+      }
+      val batch = (0 until olderSegs).flatMap(s => urls.slice(s * 100, s * 100 + 20)) ++ urls.slice(360, 400)
+      val jobs = jobsOf(SegmentFamily.upsert(spark, root, pagesOf(batch), "up", cfg))
+      (0 until olderSegs).foreach(s => assert(Tombstones.count(s"$root/s$s") == 20L, s"segment s$s"))
+      (jobs, root)
+    }
+    val (one, root1) = upsertInto(1)
+    val (three, root3) = upsertInto(3)
+    info(s"an upsert ran ${one.size} jobs: $one")
+    assert(one.size <= 10, s"an upsert into one older segment ran ${one.size} jobs: $one")
+    assert(three.size == one.size, s"an upsert into three older segments ran ${three.size} jobs: $three")
+    Seq(root1, root3).foreach(r => new scala.reflect.io.Directory(new java.io.File(r)).deleteRecursively())
   }
 
   test("MultiSearcher.dfOf from two threads equals the serial answers") {
