@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, PostingIter}
 
 /** Aggregations over a query's FULL match set — the Elasticsearch
   * aggregation phase (the reference's users read event logs through
@@ -64,12 +63,7 @@ object Facets {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
   ): DataFrame = {
-    val pattern = interval match {
-      case "hour"  => "yyyyMMddHH"
-      case "day"   => "yyyyMMdd"
-      case "month" => "yyyyMM"
-      case other   => throw new IllegalArgumentException(s"unknown interval $other")
-    }
+    val pattern = bucketPattern(interval)
     aggregate(spark, segmentDirs, queryTerms, mode, attrFilter, mustNot, minShouldMatch,
       keyPattern = pattern, kwField = null, numField = null, numWidth = 0L)
       .select(col("k1").as("bucket"), col("n").as("n_docs"))
@@ -172,12 +166,7 @@ object Facets {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
   ): DataFrame = {
-    val pattern = interval match {
-      case "hour"  => "yyyyMMddHH"
-      case "day"   => "yyyyMMdd"
-      case "month" => "yyyyMM"
-      case other   => throw new IllegalArgumentException(s"unknown interval $other")
-    }
+    val pattern = bucketPattern(interval)
     aggregate(spark, Seq(indexDir), queryTerms, mode, attrFilter, mustNot, minShouldMatch,
       keyPattern = pattern, kwField = kwField, numField = null, numWidth = 0L)
       .select(col("k1").as(kwField), col("k2").as("bucket"), col("n").as("n_docs"))
@@ -268,12 +257,7 @@ object Facets {
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
   ): DataFrame = {
-    val pattern = interval match {
-      case "hour"  => "yyyyMMddHH"
-      case "day"   => "yyyyMMdd"
-      case "month" => "yyyyMM"
-      case other   => throw new IllegalArgumentException(s"unknown interval $other")
-    }
+    val pattern = bucketPattern(interval)
     aggregate(spark, Seq(indexDir), queryTerms, mode, attrFilter, mustNot,
       minShouldMatch, keyPattern = pattern, kwField = null, numField = null,
       numWidth = 0L, metricField = numField)
@@ -1517,9 +1501,10 @@ object Facets {
   /** [[dateHistogram]] over a FIELDED query (ES: aggs next to a
     * multi_match): the match set is the union over fields of each field's
     * own match set (per-field AND for mode=and — multi_match operator=and
-    * means all terms within one field). Doc values come from the FIRST
-    * field's sidecar (all field indexes share the doc space). Counts each
-    * doc once however many fields matched it.
+    * means all terms within one field), one fielded
+    * [[MultiSearcher.matchWalk]] over the fields' views. Doc values come
+    * from the FIRST field's sidecar (all field indexes share the doc
+    * space). Counts each doc once however many fields matched it.
     */
   def dateHistogramFielded(
       spark: SparkSession,
@@ -1529,18 +1514,12 @@ object Facets {
       interval: String = "day",
       attrFilter: AttrPred = null,
       minShouldMatch: Int = 1
-  ): DataFrame = {
-    val pattern = interval match {
-      case "hour"  => "yyyyMMddHH"
-      case "day"   => "yyyyMMdd"
-      case "month" => "yyyyMM"
-      case other   => throw new IllegalArgumentException(s"unknown interval $other")
-    }
-    aggregateFielded(spark, fields, queryTerms, mode, attrFilter, minShouldMatch,
-      keyPattern = pattern, kwField = null)
-      .toDF("bucket", "n_docs")
+  ): DataFrame =
+    aggregate(spark, Nil, queryTerms, mode, attrFilter, Nil, minShouldMatch,
+      keyPattern = bucketPattern(interval), kwField = null, numField = null, numWidth = 0L,
+      fields = FieldedSearch.fieldViews(spark, fields))
+      .select(col("k1").as("bucket"), col("n").as("n_docs"))
       .orderBy("bucket")
-  }
 
   /** [[termsAgg]] over a FIELDED query — see [[dateHistogramFielded]]. */
   def termsAggFielded(
@@ -1552,111 +1531,18 @@ object Facets {
       minShouldMatch: Int = 1,
       kwField: String = "lang"
   ): DataFrame =
-    aggregateFielded(spark, fields, queryTerms, mode, attrFilter, minShouldMatch,
-      keyPattern = null, kwField = kwField)
-      .toDF(kwField, "n_docs")
+    aggregate(spark, Nil, queryTerms, mode, attrFilter, Nil, minShouldMatch,
+      keyPattern = null, kwField = kwField, numField = null, numWidth = 0L,
+      fields = FieldedSearch.fieldViews(spark, fields))
+      .select(col("k1").as(kwField), col("n").as("n_docs"))
       .orderBy(desc("n_docs"), asc(kwField))
 
-  /** Per-slice fielded walk: every field's matched blocks of one doc
-    * range land in ONE task (shared slice layout); each field's ascending
-    * match stream materializes, streams merge-dedup, and the union walks
-    * the first field's sidecar values. Memory ∝ matches per (field,
-    * slice) — the fielded-phrase trade, bounded by slice size.
-    */
-  private def aggregateFielded(
-      spark: SparkSession,
-      fields: Seq[FieldedSearch.Field],
-      queryTerms: Seq[String],
-      mode: String,
-      attrFilter: AttrPred,
-      minShouldMatch: Int,
-      keyPattern: String,
-      kwField: String
-  ): DataFrame = {
-    import spark.implicits._
-    require(fields.nonEmpty, "no fields")
-    val terms = queryTerms.distinct
-    val isAnd = mode == "and"
-    if (terms.isEmpty || terms.size < minShouldMatch)
-      return spark.emptyDataset[(String, Long)].toDF("key", "n")
-    require(fields.map(f => IndexBuilder.readMeta(f.indexDir).nSlices).distinct.size == 1,
-      "field indexes must share the slice layout")
-
-    val bTerms = spark.sparkContext.broadcast(terms.toArray)
-    val attrDir = fields.head.indexDir
-    val tomb = graft.index.Tombstones.handle(attrDir)
-    val pred = attrFilter
-    val msm = minShouldMatch
-    val pat = keyPattern
-    val kwF = kwField
-
-    val blocks = fields.zipWithIndex
-      .map { case (f, fi) =>
-        IndexBuilder.readPostings(spark, f.indexDir)
-          .where($"term".isin(terms: _*))
-          .select(
-            lit(fi).as("fld"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-
-    blocks
-      .groupByKey(_._2)
-      .flatMapGroups { (slice, rows) =>
-        val qTerms = bTerms.value
-        val byField = rows.toArray.groupBy(_._1)
-        val perField: Seq[Array[Long]] = byField.valuesIterator.map { rs =>
-          val byTerm = rs.groupBy(_._3)
-          def iterOf(t: String): Option[PostingIter] =
-            byTerm.get(t).map { trs =>
-              val refs = trs.sortBy(r => (r._5, r._4))
-                .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, 0.0))
-              new PostingIter(0, 0.0, refs, 1.0)
-            }
-          val iters = qTerms.iterator.flatMap(iterOf).toArray
-          if (iters.isEmpty || (isAnd && iters.length < qTerms.length)) Array.emptyLongArray
-          else {
-            // fresh monotone cursors per field pass (each walks its own
-            // ascending stream)
-            var filter: DocFilter =
-              if (pred == null) null else AttrSidecar.openCursor(attrDir, slice, pred)
-            val cursor = filter
-            if (tomb != null) filter = tomb.compose(slice, filter)
-            try BlockMaxWand.matchingDocIds(iters, isAnd, msm, filter).toArray
-            finally cursor match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-        }.toSeq
-        val union = perField.flatten.distinct.sorted.toArray // each doc once
-        if (union.isEmpty) Iterator.empty
-        else {
-          val fmt =
-            if (pat == null) null
-            else java.time.format.DateTimeFormatter.ofPattern(pat)
-              .withZone(java.time.ZoneOffset.UTC)
-          val reader = AttrSidecar.openReader(attrDir, slice)
-          val kwIdx = if (fmt == null) reader.kwIndex(kwF) else -1
-          try {
-            val counts = scala.collection.mutable.HashMap.empty[String, Long]
-            union.foreach { id =>
-              if (reader.seek(id)) {
-                val k =
-                  if (fmt == null) reader.kwValue(kwIdx)
-                  else fmt.format(java.time.Instant.ofEpochMilli(reader.tsMillis))
-                counts.update(k, counts.getOrElse(k, 0L) + 1L)
-              }
-            }
-            counts.iterator.toArray.iterator
-          } finally reader.close()
-        }
-      }
-      .toDF("key", "n")
-      .groupBy($"key")
-      .agg(sum($"n").as("n"))
+  /** The UTC bucket-key pattern of a date-histogram `interval`. */
+  private def bucketPattern(interval: String): String = interval match {
+    case "hour"  => "yyyyMMddHH"
+    case "day"   => "yyyyMMdd"
+    case "month" => "yyyyMM"
+    case other   => throw new IllegalArgumentException(s"unknown interval $other")
   }
 
   /** The keyed bucket fold over the view's match walk. `keyPattern` null
@@ -1681,11 +1567,14 @@ object Facets {
       numWidth: Long,
       kwField2: String = null, // composite keyword × keyword (ES multi_terms)
       metricField: String = null, // per-bucket (n,sum,min,max) over this numeric attr
-      idAllow: Array[Long] = null // sampler: SORTED segment-absolute id allow-list (single-segment callers only)
+      idAllow: Array[Long] = null, // sampler: SORTED segment-absolute id allow-list (single-segment callers only)
+      fields: Seq[MultiSearcher] = Nil // a fielded query's views, first field first (segmentDirs unused)
   ): DataFrame = {
     import spark.implicits._
-    new MultiSearcher(spark, segmentDirs)
-      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch, allow = idAllow) { s =>
+    val views = if (fields.nonEmpty) fields else Seq(new MultiSearcher(spark, segmentDirs))
+    views.head
+      .matchWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch, allow = idAllow,
+        otherFields = views.tail) { s =>
         val fmt =
           if (keyPattern == null) null
           else java.time.format.DateTimeFormatter.ofPattern(keyPattern)

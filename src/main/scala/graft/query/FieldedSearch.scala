@@ -1,19 +1,29 @@
 package graft.query
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.index.{AttrPred, AttrSidecar, IndexBuilder}
-import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
+import graft.index.{AttrPred, IndexBuilder}
+import graft.query.MultiSearcher.{SegCtx, TermBlocks}
+import graft.query.Search.QueryHit
 
 /** Multi-field text search — the reference provisions THREE analyzed text
   * fields side by side (comment/data/dataPresentation,
   * `ElasticSearchStorage.cs:217,227,231`); ES queries them via
   * `multi_match` with per-field boosts. Engine rendition: a field is an
   * index over a column (Lucene likewise keeps per-field postings fully
-  * separate — field is part of the term key). All field indexes share the
-  * docID space (docIDs derive from the url sort rank, independent of
-  * which column was analyzed) and the same slice layout, so one WAND task
-  * can merge iterators from every field of its doc range.
+  * separate — field is part of the term key), queried as a
+  * [[MultiSearcher]] view: a [[Field]] is a one-segment view, a
+  * [[FieldFamily]] a view over its segments. All fields share the docID
+  * space (docIDs derive from the url sort rank, independent of which
+  * column was analyzed) and the slice layout — checked per segment in
+  * [[views]], which every entry point here and every fielded
+  * [[Facets]] aggregation passes through — so one (segment, slice) task
+  * of [[MultiSearcher.walkSlices]] sees every field of its doc range.
+  *
+  * Per-field N, avgdl, df and the prefix/fuzzy/wildcard/regexp expansions
+  * come from each field's view (its memo answers the expansion's dfs);
+  * the one-segment rules keep single-index scores and block bounds.
   *
   * Scoring = ES `most_fields`: score(d) = Σ_f boost_f · Σ_t
   * idf_f(t)·impact(tf_{f,t,d}, dl_f(d), avgdl_f) — each field has its own
@@ -22,15 +32,49 @@ import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
   * Sum order is fields-outer × terms-inner, mirrored by
   * NaiveBm25.fieldedTopK and the DuckDB oracle.
   *
-  * Scale shape: per-field posting scans are pushdown-filtered to the
-  * query terms; ONE shuffle co-locates all fields' matched blocks by
-  * slice; per-slice WAND over |fields|·|terms| iterators; nSlices·k merge.
+  * Scale shape: one pushdown scan of every field's query-term blocks,
+  * each tagged with its field; ONE exchange groups them by (segment,
+  * slice); per-slice WAND over |fields|·|terms| iterators; (Σ nSlices)·k
+  * merge. Filter context and tombstones come from the FIRST field's view
+  * (one logical delete per doc, the shared-doc-space convention).
   * Building per-field indexes costs one column-pruned pass per field over
   * the columnar source — the parquet scan reads only that field's column.
   */
 object FieldedSearch {
 
   final case class Field(name: String, indexDir: String, boost: Double)
+
+  /** One field = a SEGMENT FAMILY (multi-segment fielded search — ES
+    * `multi_match` across its `{prefix}-*` indices in one query). All
+    * families must share the segmentation of the doc space (segment i
+    * holds the same docs in every field), so one (seg, slice) task
+    * merges every field's iterators for its doc range and global ids use
+    * the first family's base sequence.
+    */
+  final case class FieldFamily(name: String, segmentDirs: Seq[String], boost: Double)
+
+  /** One view per field, over the field's segments. Slices are doc-id
+    * ranges, so a (segment, slice) task holds all of a doc's fields only
+    * when every field has as many segments and, per segment, the same
+    * n_docs and nSlices — else a doc's score would be split across
+    * tasks, so a mismatch fails here.
+    */
+  private[query] def views(spark: SparkSession, fieldDirs: Seq[Seq[String]]): Seq[MultiSearcher] = {
+    require(fieldDirs.nonEmpty, "no fields")
+    val vs = fieldDirs.map(new MultiSearcher(spark, _))
+    val layout = vs.head.layout
+    vs.tail.map(_.layout).foreach { l =>
+      require(l.size == layout.size, "every field family must have the same number of segments")
+      l.zip(layout).zipWithIndex.foreach { case (((n, s), (n0, s0)), si) =>
+        require(n == n0, s"segment $si docs differ across fields — fields must share the docID space")
+        require(s == s0, s"segment $si slices differ across fields — fields must share the slice layout")
+      }
+    }
+    vs
+  }
+
+  private[query] def fieldViews(spark: SparkSession, fields: Seq[Field]): Seq[MultiSearcher] =
+    views(spark, fields.map(f => Seq(f.indexDir)))
 
   /** Filter context = ES bool-query filter clause next to the multi_match,
     * evaluated against the FIRST field's doc attributes (all field indexes
@@ -52,126 +96,93 @@ object FieldedSearch {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       perFieldTerms: Seq[Set[String]] = null
+  ): DataFrame =
+    mostFields(fieldViews(spark, fields), fields.map(_.boost), queryTerms, k, docFilter, attrFilter,
+      perFieldTerms)
+
+  /** Fielded most_fields top-k over segment families: per-field global
+    * stats (N, avgdl_f, df_f summed over segments) and WAND bounds from
+    * each family's view — the [[topK]] contract. `attrFilter` streams the
+    * FIRST field's per-segment sidecar (shared doc space).
+    */
+  def topKMulti(
+      spark: SparkSession,
+      fields: Seq[FieldFamily],
+      queryTerms: Seq[String],
+      k: Int,
+      attrFilter: AttrPred = null
+  ): DataFrame =
+    mostFields(views(spark, fields.map(_.segmentDirs)), fields.map(_.boost), queryTerms, k, null,
+      attrFilter, null)
+
+  /** A compiled most_fields query: weight = boost_f · idf_f(t) per (field,
+    * term).
+    */
+  private final case class FieldsQ(terms: Array[String], weights: Array[Array[Double]], k: Int)
+
+  private def mostFields(
+      vs: Seq[MultiSearcher],
+      boosts: Seq[Double],
+      queryTerms: Seq[String],
+      k: Int,
+      docFilter: Column,
+      attrFilter: AttrPred,
+      perFieldTerms: Seq[Set[String]]
   ): DataFrame = {
-    import spark.implicits._
-    require(fields.nonEmpty)
     require(docFilter == null || attrFilter == null,
       "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    require(perFieldTerms == null || perFieldTerms.size == fields.size,
+    require(perFieldTerms == null || perFieldTerms.size == vs.size,
       "perFieldTerms must align with fields")
-    val terms = queryTerms.distinct
-
-    val stats = fields.map(f => IndexBuilder.readStats(spark, f.indexDir))
-    val n = stats.head.n_docs
-    require(stats.forall(_.n_docs == n),
-      "field indexes must share the docID space (same corpus, same urls)")
-    val metas = fields.map(f => IndexBuilder.readMeta(f.indexDir))
-    require(metas.map(_.nSlices).distinct.size == 1,
-      "field indexes must share the slice layout")
-    val avgDls = stats.map(s => if (s.avg_dl > 0) s.avg_dl else 1.0).toArray
-
-    // per-field df for the query terms (tiny pushdown reads)
-    val dfs: Array[Map[String, Long]] = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".isin(terms: _*))
-        .collect().map(t => t.term -> t.doc_freq).toMap
-    }.toArray
-    if (!dfs.exists(_.nonEmpty))
-      return spark.emptyDataset[Search.QueryHit].toDF()
-
-    // weight per (field, term) = boost · idf_field(term); 0-df pairs absent
-    val qTerms = terms.toArray
-    val boosts = fields.map(_.boost).toArray
-    val weights: Array[Array[Double]] = Array.tabulate(fields.size) { fi =>
-      qTerms.map(t => boosts(fi) * NaiveBm25.idf(n, dfs(fi).getOrElse(t, 0L)))
-    }
-    // per-(field, term) participation mask (all-true without a rewrite)
-    val mask: Array[Array[Boolean]] = Array.tabulate(fields.size) { fi =>
-      qTerms.map(t => perFieldTerms == null || perFieldTerms(fi).contains(t))
-    }
-    val bCtx = spark.sparkContext.broadcast((qTerms, weights, avgDls, mask))
-
-    val blocks = fields.zipWithIndex
-      .map { case (f, fi) =>
-        // per-field pushdown follows the field's own rewrite set: blocks
-        // of masked-out (field, term) pairs never leave the scan
-        val fTerms = if (perFieldTerms == null) terms else terms.filter(perFieldTerms(fi))
-        IndexBuilder.readPostings(spark, f.indexDir)
-          .where($"term".isin(fTerms: _*))
-          .select(
-            lit(fi).as("fld"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    // tombstones live on the FIRST field's index (one logical delete per
-    // doc — the shared-doc-space convention, same as the attr sidecar)
-    val tomb = graft.index.Tombstones.handle(fields.head.indexDir)
-    def wand(slice: Int,
-             rows: Iterator[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-             base: DocFilter): Iterator[Search.QueryHit] = {
-      val (ts, ws, avgs, msk) = bCtx.value
-      val byFieldTerm = rows.toArray.groupBy(r => (r._1, r._3))
-      // iterator order: fields outer × terms inner (the scoring contract)
-      val iters = (for {
-        fi <- avgs.indices.iterator
-        ti <- ts.indices.iterator
-        if msk(fi)(ti)
-        rs <- byFieldTerm.get((fi, ts(ti))).iterator
-      } yield {
-        val refs = rs
-          .sortBy(r => (r._5, r._4))
-          .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, r._12))
-        new PostingIter(fi * ts.length + ti, ws(fi)(ti), refs, avgs(fi))
-      }).toArray
-      val filter = if (tomb == null) base else tomb.compose(slice, base)
-      BlockMaxWand.or(iters, k, filter)
-        .iterator.map(h => Search.QueryHit(h.docId, h.score))
-    }
-
-    val attrDir = fields.head.indexDir
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks
-          .groupByKey(_._2) // slice — ONE task sees every field of its doc range
-          .flatMapGroups { (slice, rows) => wand(slice, rows, null) }
-      else if (attrFilter != null) {
-        val pred = attrFilter
-        blocks
-          .groupByKey(_._2)
-          .flatMapGroups { (slice, rows) =>
-            val cur = AttrSidecar.openCursor(attrDir, slice, pred)
-            try wand(slice, rows, cur)
-            finally cur.close()
-          }
-      } else {
-        val filterIds = IndexBuilder.withDocsTable(spark, fields.head.indexDir)(_.where(docFilter))
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._2)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              wand(slice, rows, new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
+    val terms = queryTerms.distinct.toArray
+    // per-field df of the terms that participate in the field (all of
+    // them without a rewrite); a rewrite's dfs are memoized
+    val dfs = vs.indices.map(fi =>
+      vs(fi).dfOf(if (perFieldTerms == null) terms.toSeq else terms.filter(perFieldTerms(fi)).toSeq))
+    if (dfs.forall(_.isEmpty)) return vs.head.none
+    val weights = Array.tabulate(vs.size)(fi =>
+      terms.map(t => boosts(fi) * NaiveBm25.idf(vs(fi).nDocs, dfs(fi).getOrElse(t, 0L))))
+    val spark = vs.head.spark
+    import spark.implicits._
+    // the participation mask: blocks of masked-out or absent (field, term)
+    // pairs never leave the scan
+    val scan = vs.indices.map(fi => vs(fi) -> terms.filter(dfs(fi).contains).toSeq)
+    vs.head.topOf(vs.head.walkSlices(scan, docFilter, attrFilter, FieldsQ(terms, weights, k))(
+      mostFieldsWalk), k)
   }
 
-  /** Fielded ES prefix query (`multi_match` carries term-level rewrites):
-    * the prefix expands against EACH field's own dictionary (range read,
-    * df-desc cap per field — a term hot in the title need not be in the
-    * body's cap and vice versa), then one most_fields WAND over the union
-    * with per-(field, term) masks: a rewrite participates only in the
-    * field whose dictionary produced it. Scoring stays scoring_boolean
-    * (per-expansion per-field idf), composing with filter context.
+  /** Block-max WAND top-k of one (segment, slice) over every (field,
+    * term) cursor, fields outer × terms inner (the scoring contract).
+    */
+  private def mostFieldsWalk(c: SegCtx[FieldsQ], seg: Int, slice: Int, fields: Array[TermBlocks],
+                             base: () => DocFilter): Iterator[QueryHit] = {
+    val q = c.q
+    val iters = for {
+      fi <- fields.indices
+      ti <- q.terms.indices
+      rows <- fields(fi).get(q.terms(ti))
+    } yield c.iter(rows, fi * q.terms.length + ti, q.weights(fi)(ti), fi)
+    c.global(seg, BlockMaxWand.or(iters.toArray, q.k, c.filter(seg, slice, base(), Array.empty)))
+  }
+
+  /** Fielded term-level rewrite (`multi_match` carries them): `expand`
+    * runs against EACH field's own dictionary (df-desc cap per field — a
+    * term hot in the title need not make the body's cap and vice versa),
+    * then one most_fields WAND over the union with per-(field, term)
+    * masks: a rewrite participates only in the field whose dictionary
+    * produced it. Scoring stays scoring_boolean (per-expansion per-field
+    * idf), composing with filter context.
+    */
+  private def rewriteTopK(spark: SparkSession, fields: Seq[Field], k: Int, docFilter: Column,
+                          attrFilter: AttrPred)(expand: MultiSearcher => Seq[String]): DataFrame = {
+    val vs = fieldViews(spark, fields)
+    val perField = vs.map(expand(_).toSet)
+    val union = perField.reduce(_ ++ _).toSeq.sorted
+    if (union.isEmpty) vs.head.none
+    else mostFields(vs, fields.map(_.boost), union, k, docFilter, attrFilter, perField)
+  }
+
+  /** Fielded ES prefix query: a per-field dictionary range read, see
+    * [[rewriteTopK]].
     */
   def prefixTopK(
       spark: SparkSession,
@@ -182,25 +193,15 @@ object FieldedSearch {
       docFilter: Column = null,
       attrFilter: AttrPred = null
   ): DataFrame = {
-    import spark.implicits._
     require(prefix.nonEmpty, "empty prefix")
-    val perField = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".startsWith(prefix))
-        .orderBy(desc("doc_freq"), asc("term"))
-        .limit(maxExpansions)
-        .collect().map(_.term).toSet
-    }
-    val union = perField.reduce(_ ++ _).toSeq.sorted
-    if (union.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-    topK(spark, fields, union, k, docFilter, attrFilter, perFieldTerms = perField)
+    rewriteTopK(spark, fields, k, docFilter, attrFilter)(
+      _.expand(col("term").startsWith(prefix), maxExpansions))
   }
 
   /** Fielded ES fuzzy query — `multi_match` accepts `fuzziness`
     * (`ElasticSearchStorage.cs` fields are queried together in practice):
     * per-field dictionary edit-distance expansion (codegen levenshtein +
-    * length pre-cut, df-desc cap per field), then the same masked
-    * most_fields WAND as [[prefixTopK]].
+    * length pre-cut), see [[rewriteTopK]].
     */
   def fuzzyTopK(
       spark: SparkSession,
@@ -211,28 +212,13 @@ object FieldedSearch {
       maxExpansions: Int = 64,
       docFilter: Column = null,
       attrFilter: AttrPred = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(term.nonEmpty, "empty term")
-    require(maxEdits >= 0 && maxEdits <= 2, "ES caps fuzziness at 2 edits")
-    val perField = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where(abs(length($"term") - lit(term.length)) <= maxEdits)
-        .where(levenshtein($"term", lit(term)) <= maxEdits)
-        .orderBy(desc("doc_freq"), asc("term"))
-        .limit(maxExpansions)
-        .collect().map(_.term).toSet
-    }
-    val union = perField.reduce(_ ++ _).toSeq.sorted
-    if (union.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-    topK(spark, fields, union, k, docFilter, attrFilter, perFieldTerms = perField)
-  }
+  ): DataFrame =
+    rewriteTopK(spark, fields, k, docFilter, attrFilter)(_.expandFuzzyTerms(term, maxEdits, maxExpansions))
 
   /** Fielded ES wildcard query — `query_string` over multiple fields
     * carries `*`/`?` patterns (`server:web-*` is a Kibana day-one query):
-    * the pattern compiles once ([[Search.wildcardToRegex]]) and expands
-    * against EACH field's dictionary via [[regexpTopK]]'s per-field
-    * anchored-regex scan with the literal-prefix pushdown pre-cut.
+    * the pattern compiles to an anchored regex with its literal prefix
+    * ([[Search.wildcardToRegex]]) and expands like [[regexpTopK]].
     */
   def wildcardTopK(
       spark: SparkSession,
@@ -242,19 +228,12 @@ object FieldedSearch {
       maxExpansions: Int = 128,
       docFilter: Column = null,
       attrFilter: AttrPred = null
-  ): DataFrame = {
-    val (regex, prefix) = Search.wildcardToRegex(pattern)
-    regexpTopK(spark, fields, regex, k, maxExpansions, docFilter, attrFilter,
-      prefixHint = prefix)
-  }
+  ): DataFrame =
+    rewriteTopK(spark, fields, k, docFilter, attrFilter)(_.expandPatternTerms(pattern, maxExpansions))
 
   /** Fielded ES regexp query: the anchored regex expands against EACH
     * field's own dictionary (codegen `rlike` scan, `prefixHint` pushdown
-    * range pre-cut, df-desc cap PER FIELD — a term hot in the title need
-    * not make the body's cap and vice versa), then one most_fields WAND
-    * over the union with per-(field, term) participation masks — the
-    * same expansion + mask machinery as [[prefixTopK]]/[[fuzzyTopK]].
-    * Scoring stays scoring_boolean (per-expansion per-field idf).
+    * range pre-cut), see [[rewriteTopK]].
     */
   def regexpTopK(
       spark: SparkSession,
@@ -265,22 +244,14 @@ object FieldedSearch {
       docFilter: Column = null,
       attrFilter: AttrPred = null,
       prefixHint: String = ""
-  ): DataFrame = {
-    import spark.implicits._
-    require(regex.nonEmpty, "empty regex")
-    val perField = fields.map { f =>
-      val base = IndexBuilder.readTerms(spark, f.indexDir)
-      val cut = if (prefixHint.isEmpty) base else base.where($"term".startsWith(prefixHint))
-      cut
-        .where($"term".rlike(s"^(?:$regex)$$"))
-        .orderBy(desc("doc_freq"), asc("term"))
-        .limit(maxExpansions)
-        .collect().map(_.term).toSet
-    }
-    val union = perField.reduce(_ ++ _).toSeq.sorted
-    if (union.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
-    topK(spark, fields, union, k, docFilter, attrFilter, perFieldTerms = perField)
-  }
+  ): DataFrame =
+    rewriteTopK(spark, fields, k, docFilter, attrFilter)(_.expandRegex(regex, prefixHint, maxExpansions))
+
+  /** A compiled fielded phrase: per field its positional idf sum (0 when
+    * the field lacks a phrase term) and boost.
+    */
+  private final case class FieldsPhraseQ(
+      shape: MultiSearcher.PhraseShape, idfSums: Array[Double], boosts: Array[Double], k: Int)
 
   /** Fielded EXACT-PHRASE top-k (ES `most_fields` over `match_phrase`
     * clauses — the composition ES offers freely in one bool query):
@@ -290,11 +261,10 @@ object FieldedSearch {
     * nothing (Lucene PhraseQuery semantics). Mirrored exactly by
     * NaiveBm25.fieldedPhraseTopK and the DuckDB oracle.
     *
-    * Scale shape: same as topK — one shuffle keys all fields' matched
-    * blocks by slice; each slice task enumerates phrase matches per field
-    * (leapfrog + positional verify) and merges per-doc contributions
-    * before its local top-k cut (per-field matches materialize per slice;
-    * phrase selectivity keeps that small).
+    * Scale shape: same as topK — each slice task enumerates phrase
+    * matches per field (leapfrog + positional verify) and merges per-doc
+    * contributions before its local top-k cut (per-field matches
+    * materialize per slice; phrase selectivity keeps that small).
     */
   def phraseTopK(
       spark: SparkSession,
@@ -302,227 +272,47 @@ object FieldedSearch {
       phraseTerms: Seq[String],
       k: Int,
       docFilter: Column = null,
-      attrFilter: graft.index.AttrPred = null
+      attrFilter: AttrPred = null
   ): DataFrame = {
-    import spark.implicits._
     require(fields.nonEmpty && phraseTerms.nonEmpty)
     require(docFilter == null || attrFilter == null,
       "pass docFilter (ad-hoc Column) or attrFilter (typed sidecar predicate), not both")
-    val distinctTerms = phraseTerms.distinct
-    val offsets: Array[Array[Int]] = distinctTerms.map { t =>
-      phraseTerms.zipWithIndex.collect { case (pt, i) if pt == t => i }.toArray
-    }.toArray
-
-    val stats = fields.map(f => IndexBuilder.readStats(spark, f.indexDir))
-    val n = stats.head.n_docs
-    require(stats.forall(_.n_docs == n), "field indexes must share the docID space")
-    require(fields.map(f => IndexBuilder.readMeta(f.indexDir).nSlices).distinct.size == 1,
-      "field indexes must share the slice layout")
-    val avgDls = stats.map(s => if (s.avg_dl > 0) s.avg_dl else 1.0).toArray
+    import spark.implicits._
+    val vs = fieldViews(spark, fields)
+    val shape = MultiSearcher.phraseShape(phraseTerms)
     // per-field idfSum over phrase POSITIONS; 0 when any term is missing
     // from the field (that field then matches nothing)
-    val idfSums: Array[Double] = fields.zipWithIndex.map { case (f, fi) =>
-      val dfs = IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".isin(distinctTerms: _*))
-        .collect().map(t => t.term -> t.doc_freq).toMap
-      if (distinctTerms.exists(t => !dfs.contains(t))) 0.0
-      else phraseTerms.map(t => NaiveBm25.idf(n, dfs(t))).sum
+    val idfSums = vs.map { v =>
+      val dfs = v.dfOf(shape.terms.toSeq)
+      if (shape.terms.exists(t => !dfs.contains(t))) 0.0
+      else phraseTerms.map(t => NaiveBm25.idf(v.nDocs, dfs(t))).sum
     }.toArray
-    if (idfSums.forall(_ == 0.0)) return spark.emptyDataset[Search.QueryHit].toDF()
-    val boosts = fields.map(_.boost).toArray
-    val bCtx = spark.sparkContext.broadcast((distinctTerms.toArray, offsets, idfSums, boosts, avgDls))
-
-    val blocks = fields.zipWithIndex
-      .filter { case (_, fi) => idfSums(fi) > 0.0 }
-      .map { case (f, fi) =>
-        IndexBuilder.readPostings(spark, f.indexDir)
-          .where($"term".isin(distinctTerms: _*))
-          .select(
-            lit(fi).as("fld"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss", $"max_impact"
-          )
-      }
-      .reduce(_ unionByName _)
-      .as[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)]
-
-    val tomb = graft.index.Tombstones.handle(fields.head.indexDir)
-    def run(slice: Int,
-            rows: Iterator[(Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Double)],
-            filterOf: () => DocFilter): Iterator[Search.QueryHit] = {
-      val (qTerms, offs, sums, bst, avgs) = bCtx.value
-      val byField = rows.toArray.groupBy(_._1)
-      // per-doc sums accumulate in FIELD ORDER (the scoring contract)
-      val acc = new scala.collection.mutable.LongMap[Double]
-      avgs.indices.foreach { fi =>
-        if (sums(fi) > 0.0) byField.get(fi).foreach { rs =>
-          val byTerm = rs.groupBy(_._3)
-          if (qTerms.forall(byTerm.contains)) {
-            val iters = qTerms.map { t =>
-              val refs = byTerm(t)
-                .sortBy(r => (r._5, r._4))
-                .map(r => BlockRef(r._5, r._6, r._7, r._8, r._9, r._10, r._11, r._12))
-              new PostingIter(0, 0.0, refs, avgs(fi))
-            }
-            val f0 = filterOf() // fresh monotone cursor per field pass
-            val f = if (tomb == null) f0 else tomb.compose(slice, f0)
-            try {
-              BlockMaxWand.phraseMatches(iters, offs, f).foreach { case (doc, freq, dl) =>
-                val sc = bst(fi) * sums(fi) *
-                  IndexBuilder.impact(freq, dl, avgs(fi))
-                acc.update(doc, acc.getOrElse(doc, 0.0) + sc)
-              }
-            } finally f0 match {
-              case c: AutoCloseable => c.close()
-              case _ =>
-            }
-          }
-        }
-      }
-      acc.toArray.sortBy { case (doc, s) => (-s, doc) }.take(k)
-        .iterator.map { case (doc, s) => Search.QueryHit(doc, s) }
-    }
-
-    val attrDir = fields.head.indexDir
-    val localTopK =
-      if (docFilter == null && attrFilter == null)
-        blocks.groupByKey(_._2).flatMapGroups { (slice, rows) => run(slice, rows, () => null) }
-      else if (attrFilter != null) {
-        val pred = attrFilter
-        blocks.groupByKey(_._2).flatMapGroups { (slice, rows) =>
-          run(slice, rows, () => AttrSidecar.openCursor(attrDir, slice, pred))
-        }
-      } else {
-        val filterIds = IndexBuilder.withDocsTable(spark, attrDir)(_.where(docFilter))
-          .select($"slice".cast("int"), $"doc_id")
-          .as[(Int, Long)]
-        blocks
-          .groupByKey(_._2)
-          .cogroup(filterIds.groupByKey(_._1)) { (slice, rows, fids) =>
-            val allow = fids.map(_._2).toArray
-            if (allow.isEmpty) Iterator.empty
-            else {
-              java.util.Arrays.sort(allow)
-              run(slice, rows, () => new FilterIter(allow))
-            }
-          }
-      }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
+    if (idfSums.forall(_ == 0.0)) return vs.head.none
+    val scan = vs.indices.map(fi => vs(fi) -> (if (idfSums(fi) > 0.0) shape.terms.toSeq else Nil))
+    vs.head.topOf(vs.head.walkSlices(scan, docFilter, attrFilter,
+      FieldsPhraseQ(shape, idfSums, fields.map(_.boost).toArray, k))(phraseWalk), k)
   }
 
-  /** One field = a SEGMENT FAMILY (multi-segment fielded search — ES
-    * `multi_match` across its `{prefix}-*` indices in one query). All
-    * families must share the segmentation of the doc space (segment i
-    * holds the same docs in every field — per-segment n_docs asserted),
-    * so one (seg, slice) task merges every field's iterators for its doc
-    * range and global ids use one base sequence.
-    */
-  final case class FieldFamily(name: String, segmentDirs: Seq[String], boost: Double)
-
-  /** Fielded most_fields top-k over segment families; per-field global
-    * stats (N, avgdl_f, df_f summed over segments), WAND bounds re-derived
-    * from the avgdl-independent max_tf/min_dl at each field's global
-    * avgdl (exact-at-own-avgdl stored bounds don't transfer — same rule
-    * as MultiSearcher). `attrFilter` streams the FIRST field's per-segment
-    * sidecar (shared doc space).
-    */
-  def topKMulti(
-      spark: SparkSession,
-      fields: Seq[FieldFamily],
-      queryTerms: Seq[String],
-      k: Int,
-      attrFilter: graft.index.AttrPred = null
-  ): DataFrame = {
-    import spark.implicits._
-    require(fields.nonEmpty)
-    val nSegs = fields.head.segmentDirs.size
-    require(fields.forall(_.segmentDirs.size == nSegs),
-      "every field family must have the same number of segments")
-    val terms = queryTerms.distinct
-
-    // per (field, seg) stats; segmentation shared → one base sequence
-    val segStats = fields.map(_.segmentDirs.map(IndexBuilder.readStats(spark, _)))
-    (0 until nSegs).foreach { si =>
-      require(segStats.map(_(si).n_docs).distinct.size == 1,
-        s"segment $si docs differ across fields — families must share the segmentation")
-    }
-    val bases = segStats.head.map(_.n_docs).scanLeft(0L)(_ + _).init
-    val n = segStats.head.map(_.n_docs).sum
-    val avgDls = segStats.map { ss =>
-      val tok = ss.map(_.total_tokens).sum
-      if (n > 0 && tok > 0) tok.toDouble / n else 1.0
-    }.toArray
-
-    // per-field global df per term (tiny pushdown reads over every segment)
-    val dfs: Array[Map[String, Long]] = fields.map { f =>
-      f.segmentDirs
-        .map(d => IndexBuilder.readTerms(spark, d).where($"term".isin(terms: _*)).toDF())
-        .reduce(_ unionByName _)
-        .groupBy($"term").agg(sum($"doc_freq").as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }.toArray
-    if (!dfs.exists(_.nonEmpty)) return spark.emptyDataset[Search.QueryHit].toDF()
-
-    val qTerms = terms.toArray
-    val boosts = fields.map(_.boost).toArray
-    val weights: Array[Array[Double]] = Array.tabulate(fields.size) { fi =>
-      qTerms.map(t => boosts(fi) * NaiveBm25.idf(n, dfs(fi).getOrElse(t, 0L)))
-    }
-    val bCtx = spark.sparkContext.broadcast((qTerms, weights, avgDls))
-    val bBases = spark.sparkContext.broadcast(bases.toArray)
-
-    val blocks = (for {
-      (f, fi) <- fields.zipWithIndex
-      (d, si) <- f.segmentDirs.zipWithIndex
-    } yield IndexBuilder.readPostings(spark, d)
-      .where($"term".isin(terms: _*))
-      .select(
-        lit(fi).as("fld"), lit(si).as("seg"), $"slice", $"term", $"block_id",
-        $"doc_id_min", $"doc_id_max", $"count", $"deltas", $"tfs", $"dls",
-        $"poss", $"max_tf", $"min_dl"
-      ))
-      .reduce(_ unionByName _)
-      .as[(Int, Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Int, Int)]
-
-    type Row = (Int, Int, Int, String, Int, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Int, Int)
-    val bTombs = spark.sparkContext.broadcast(
-      fields.head.segmentDirs.map(graft.index.Tombstones.handle).toArray)
-    def wand(seg: Int, slice: Int, rows: Iterator[Row], base: DocFilter): Iterator[Search.QueryHit] = {
-      val (ts, ws, avgs) = bCtx.value
-      val byFieldTerm = rows.toArray.groupBy(r => (r._1, r._4))
-      val iters = (for {
-        fi <- avgs.indices.iterator
-        ti <- ts.indices.iterator
-        rs <- byFieldTerm.get((fi, ts(ti))).iterator
-      } yield {
-        val refs = rs
-          .sortBy(r => (r._6, r._5))
-          .map(r => BlockRef(r._6, r._7, r._8, r._9, r._10, r._11, r._12,
-            IndexBuilder.impact(r._13, r._14, avgs(fi))))
-        new PostingIter(fi * ts.length + ti, ws(fi)(ti), refs, avgs(fi))
-      }).toArray
-      val tomb = bTombs.value(seg)
-      val filter = if (tomb == null) base else tomb.compose(slice, base)
-      val docBase = bBases.value(seg)
-      BlockMaxWand.or(iters, k, filter)
-        .iterator.map(h => Search.QueryHit(docBase + h.docId, h.score))
-    }
-
-    val attrDirs = fields.head.segmentDirs.toArray
-    val bAttrDirs = spark.sparkContext.broadcast(attrDirs)
-    val localTopK =
-      if (attrFilter == null)
-        blocks.groupByKey(r => (r._2, r._3)).flatMapGroups { (key, rows) => wand(key._1, key._2, rows, null) }
-      else {
-        val pred = attrFilter
-        blocks.groupByKey(r => (r._2, r._3)).flatMapGroups { (key, rows) =>
-          val cur = AttrSidecar.openCursor(bAttrDirs.value(key._1), key._2, pred)
-          try wand(key._1, key._2, rows, cur)
-          finally cur.close()
-        }
+  /** Fielded phrase top-k of one (segment, slice). */
+  private def phraseWalk(c: SegCtx[FieldsPhraseQ], seg: Int, slice: Int, fields: Array[TermBlocks],
+                         base: () => DocFilter): Iterator[QueryHit] = {
+    val q = c.q
+    // per-doc sums accumulate in FIELD ORDER (the scoring contract)
+    val acc = new mutable.LongMap[Double]
+    fields.indices.foreach { fi =>
+      val byTerm = fields(fi)
+      if (q.idfSums(fi) > 0.0 && q.shape.terms.forall(byTerm.contains)) {
+        val iters = q.shape.terms.map(t => c.iter(byTerm(t), 0, 0.0, fi))
+        // a fresh monotone filter per field pass
+        BlockMaxWand.phraseMatches(iters, q.shape.offsets, c.filter(seg, slice, base(), Array.empty))
+          .foreach { case (doc, freq, dl) =>
+            val sc = q.boosts(fi) * q.idfSums(fi) * IndexBuilder.impact(freq, dl, c.avgDls(fi))
+            acc.update(doc, acc.getOrElse(doc, 0.0) + sc)
+          }
       }
-
-    localTopK.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
+    }
+    c.global(seg, acc.toArray.sortBy { case (doc, s) => (-s, doc) }.take(q.k)
+      .map { case (doc, s) => BlockMaxWand.Hit(doc, s) })
   }
 
   /** ES `combined_fields` (Lucene CombinedFieldQuery / BM25F): the fields
@@ -536,10 +326,11 @@ object FieldedSearch {
     *
     * Plan shape (deliberately DECLARATIVE, not WAND): the per-field
     * block-max bounds do not soundly bound a cross-field combined
-    * impact, so instead of hand-pruning we decode ONLY the query terms'
-    * posting blocks (scan pushdown), shuffle (doc, term, w·tf) rows —
-    * the same magnitude as any scoring walk's candidate set — and let
-    * Catalyst aggregate. The per-doc score folds in ASCENDING TERM
+    * impact, so instead of hand-pruning the fields' walk decodes ONLY
+    * the query terms' posting blocks and emits (doc, term, tf′) rows —
+    * the same magnitude as any scoring walk's candidate set; its filter
+    * drops tombstoned docs (deletes live on the first field's index) —
+    * and Catalyst aggregates. The per-doc score folds in ASCENDING TERM
     * ORDER via aggregate(sort_array(collect_list(...))) so float sums
     * are deterministic and SQL-mirrorable (a bare sum() order is
     * partition-layout-dependent).
@@ -551,64 +342,21 @@ object FieldedSearch {
       k: Int
   ): DataFrame = {
     import spark.implicits._
-    require(fields.nonEmpty)
+    val vs = fieldViews(spark, fields)
     val terms = queryTerms.distinct
-    val stats = fields.map(f => IndexBuilder.readStats(spark, f.indexDir))
-    val n = stats.head.n_docs
-    require(stats.forall(_.n_docs == n),
-      "field indexes must share the docID space (same corpus, same urls)")
-    val avgdlC = fields.zip(stats).map { case (f, st) =>
-      f.boost * (if (st.avg_dl > 0) st.avg_dl else 1.0)
-    }.sum
-    // merged term stats: one tiny pushdown dictionary read per field
-    val perFieldDf: Seq[Map[String, Long]] = fields.map { f =>
-      IndexBuilder.readTerms(spark, f.indexDir)
-        .where($"term".isin(terms: _*))
-        .collect().map(t => t.term -> t.doc_freq).toMap
-    }
+    val n = vs.head.nDocs
+    val avgdlC = fields.zip(vs).map { case (f, v) => f.boost * v.avgDl }.sum
+    // merged term stats: one dictionary read per field
+    val perFieldDf = vs.map(_.dfOf(terms))
     val dfc: Map[String, Long] = terms
       .map(t => t -> perFieldDf.map(_.getOrElse(t, 0L)).max)
       .toMap.filter(_._2 > 0L)
-    if (dfc.isEmpty) return spark.emptyDataset[Search.QueryHit].toDF()
+    if (dfc.isEmpty) return vs.head.none
     val present = terms.filter(dfc.contains)
     val idfs = present.map(t => t -> NaiveBm25.idf(n, math.min(dfc(t), n))).toDF("term", "idf")
 
-    // decoded candidate postings: (doc_id, term, w_f·tf) — scan pushdown
-    // reads only the query terms' blocks of each field
-    val post = fields.map { f =>
-      val w = f.boost
-      IndexBuilder.readPostings(spark, f.indexDir)
-        .where($"term".isin(present: _*))
-        .select($"term", $"doc_id_min", $"count", $"deltas", $"tfs")
-        .as[(String, Long, Int, Array[Byte], Array[Byte])]
-        .flatMap { case (t, base, c, deltas, tfs) =>
-          val ids = graft.functions.Codec.decodeGapsFromBase(base, deltas, c)
-          val fr = graft.functions.Codec.decodeIntsAuto(tfs, c)
-          ids.indices.iterator.map(i => (ids(i), t, w * fr(i)))
-        }
-        .toDF("doc_id", "term", "wtf")
-    }.reduce(_ unionByName _)
-
-    // tombstone composition (deletes live on the first field's index, the
-    // convention every other FieldedSearch/Search path follows): deleted
-    // docs are anti-joined out of the candidate set BEFORE scoring — the
-    // declarative analog of the WAND paths' tomb.compose(slice, filter)
-    val tombH = graft.index.Tombstones.handle(fields.head.indexDir)
-    val candidates = {
-      val agg = post.groupBy($"doc_id", $"term").agg(sum($"wtf").as("tfc"))
-      if (tombH == null) agg
-      else {
-        val idxDir = fields.head.indexDir
-        val gen = tombH.gen
-        val nSlices = IndexBuilder.readMeta(idxDir).nSlices
-        val deleted = spark.range(0, nSlices.toLong)
-          .as[Long]
-          .mapPartitions(_.flatMap(s =>
-            graft.index.Tombstones.readSlice(idxDir, gen, s.toInt).iterator))
-          .toDF("doc_id")
-        agg.join(deleted, Seq("doc_id"), "left_anti")
-      }
-    }
+    val candidates = vs.head.walkSlices(vs.map(_ -> present), null, null, fields.map(_.boost).toArray)(
+      weightedTfWalk).toDF("doc_id", "term", "tfc")
 
     // combined per-field-weighted doc length from each field's stored
     // docs table (column-pruned: only doc_id + doc_len are read) —
@@ -639,4 +387,23 @@ object FieldedSearch {
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
   }
+
+  /** (doc, term, Σ_f w_f·tf_f) of one (segment, slice), fields summed in
+    * order; live docs only.
+    */
+  private def weightedTfWalk(c: SegCtx[Array[Double]], seg: Int, slice: Int, fields: Array[TermBlocks],
+                             base: () => DocFilter): Iterator[(Long, String, Double)] =
+    fields.iterator.flatMap(_.keys).distinct.flatMap { t =>
+      val acc = new mutable.LongMap[Double]
+      fields.indices.foreach(fi => fields(fi).get(t).foreach { rows =>
+        val it = c.iter(rows, 0, 0.0, fi)
+        val f = c.filter(seg, slice, base(), Array.empty)
+        while (!it.exhausted) {
+          val doc = it.doc
+          if (f == null || f.contains(doc)) acc.update(doc, acc.getOrElse(doc, 0.0) + c.q(fi) * it.tf)
+          it.next()
+        }
+      })
+      acc.iterator.map { case (doc, tfc) => (c.bases(seg) + doc, t, tfc) }
+    }
 }

@@ -44,15 +44,26 @@ import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, T
   * context (terms, idfs, dirs, bases, tombstone generations) rides one
   * broadcast; task closures never capture the searcher.
   *
-  * Every operator that enumerates a FULL match set — aggregations,
+  * Every operator that enumerates a FULL match set — aggregations (the
+  * fielded ones too: a fielded walk unions the fields' match streams),
   * `_count`, match-id and match export, collapse, sort-by-field — runs
   * one match walk ([[matchWalk]] unscored, [[scoredWalk]] scored): the
   * same scan, (segment, slice) exchange, AND early exit and filter
   * composition, with only the per-doc fold left to the caller. Every
-  * top-k operator — term WAND, phrase, phrase-prefix (one phrase walk
-  * per expansion in one task) and the synonym/dis_max group walk
-  * ([[BlockMaxWand.groupTopK]]) — runs through [[walkSlices]], and
-  * [[phraseCounts]] counts a set of phrases in one walk.
+  * top-k operator runs through [[walkSlices]], the one filter-context
+  * dispatch: term WAND, phrase, phrase-prefix (one phrase walk per
+  * expansion in one task), the synonym/dis_max group walk
+  * ([[BlockMaxWand.groupTopK]]), phrase export and, in
+  * [[FieldedSearch]], most_fields WAND (topK, the rewrites and
+  * topKMulti), the fielded phrase and combined_fields' (doc, term,
+  * Σ w·tf) rows. [[phraseCounts]] counts a set of phrases in one walk.
+  *
+  * Fields are views: a fielded walk scans every field's view (one
+  * pushdown scan, each block tagged with its field), groups all of them
+  * by (segment, slice) of the walking view in one exchange, and hands
+  * each task the blocks per field; N, avgdl and the WAND bound rule are
+  * per field, while filters, tombstones, sidecars and doc-id bases are
+  * the walking (first) field's.
   *
   * `explicitBases`: global docID base per segment. Defaults to cumulative
   * n_docs in `segmentDirs` order; pass absolute bases when querying a
@@ -74,7 +85,7 @@ import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, T
   */
 final class MultiSearcher(
     val spark: SparkSession,
-    segmentDirs: Seq[String],
+    private[query] val segmentDirs: Seq[String],
     explicitBases: Option[Seq[Long]] = None,
     statsFamily: Option[Seq[String]] = None
 ) {
@@ -141,7 +152,7 @@ final class MultiSearcher(
     * expanded terms' dfs seed the memo, so the walk that follows runs no
     * second dictionary job.
     */
-  private def expand(where: Column, maxExpansions: Int, termOrder: Boolean = false): Seq[String] = {
+  private[query] def expand(where: Column, maxExpansions: Int, termOrder: Boolean = false): Seq[String] = {
     val reads = familyDirs.map(d =>
       IndexBuilder.readTerms(spark, d).where(where).select($"term", $"doc_freq"))
     val dfs =
@@ -171,78 +182,93 @@ final class MultiSearcher(
       maxExpansions)
   }
 
-  private def expandRegex(regex: String, prefixHint: String, maxExpansions: Int): Seq[String] = {
+  private[query] def expandRegex(regex: String, prefixHint: String, maxExpansions: Int): Seq[String] = {
     require(regex.nonEmpty, "empty regex")
     val base = $"term".rlike(s"^(?:$regex)$$")
     expand(if (prefixHint.isEmpty) base else $"term".startsWith(prefixHint) && base, maxExpansions)
   }
 
-  private def none: DataFrame = spark.emptyDataset[QueryHit].toDF()
+  private[query] def none: DataFrame = spark.emptyDataset[QueryHit].toDF()
 
-  private def topOf(hits: Dataset[QueryHit], k: Int): DataFrame =
+  private[query] def topOf(hits: Dataset[QueryHit], k: Int): DataFrame =
     hits.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
 
-  /** This query's task context, in one broadcast. */
-  private def context[Q](q: Q): Broadcast[SegCtx[Q]] =
-    spark.sparkContext.broadcast(SegCtx(segmentDirs.toArray, bases.toArray,
-      segmentDirs.map(Tombstones.handle).toArray, avgDl, oneSegment, q))
+  /** (n_docs, nSlices) per segment: fields of one doc space agree on it. */
+  private[query] def layout: Seq[(Long, Int)] =
+    segStats.map(_.n_docs).zip(segmentDirs.map(IndexBuilder.readMeta(_).nSlices))
 
-  /** Posting blocks of `terms` in every segment (pushdown `term IN` on
-    * each segment's term-sorted postings).
+  /** This query's task context over `views` (this view's doc space, each
+    * view's avgdl and bound rule), in one broadcast.
     */
-  private def blocks(terms: Seq[String]): Dataset[Block] =
-    segmentDirs.zipWithIndex
-      .map { case (d, i) =>
-        IndexBuilder.readPostings(spark, d)
-          .where($"term".isin(terms: _*))
-          .select(
-            lit(i).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
-            $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
-            $"max_impact", $"max_tf", $"min_dl"
-          )
-      }
+  private def context[Q](q: Q, views: Seq[MultiSearcher] = Seq(this)): Broadcast[SegCtx[Q]] =
+    spark.sparkContext.broadcast(SegCtx(segmentDirs.toArray, bases.toArray,
+      segmentDirs.map(Tombstones.handle).toArray, views.map(_.avgDl).toArray,
+      views.map(_.oneSegment).toArray, q))
+
+  /** Posting blocks of each field's terms in every segment of its view
+    * (pushdown `term IN` on each segment's term-sorted postings), tagged
+    * with the field's index; fields without terms are not scanned. Field
+    * 0 is this view, whose doc space (segments, slices, doc-id bases,
+    * tombstones, sidecars) every field shares.
+    */
+  private def blocks(fields: Seq[(MultiSearcher, Seq[String])]): Dataset[Block] = {
+    require(fields.head._1 eq this, "field 0 is the view that walks")
+    (for {
+      ((v, terms), fi) <- fields.zipWithIndex if terms.nonEmpty
+      (d, si) <- v.segmentDirs.zipWithIndex
+    } yield IndexBuilder.readPostings(spark, d)
+      .where($"term".isin(terms: _*))
+      .select(
+        lit(fi).as("fld"), lit(si).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
+        $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
+        $"max_impact", $"max_tf", $"min_dl"
+      ))
       .reduce(_ unionByName _)
       .as[Block]
-
-  /** Blocks of `terms` grouped by (segment, slice), each group handed to
-    * `walk` by term, with this query's broadcast context.
-    */
-  private def walkGroups[Q, R: Encoder](terms: Seq[String], q: Q)(
-      walk: (SegCtx[Q], Int, Int, TermBlocks) => Iterator[R]
-  ): Dataset[R] = {
-    val b = context(q)
-    blocks(terms).groupByKey(r => (r.seg, r.slice))
-      .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, rows.toArray.groupBy(_.term)))
   }
 
-  /** The filter-context dispatch of the top-k walks: no filter;
-    * `attrFilter` streamed from the slice's own sidecar (no doc-id
-    * exchange — see [[graft.index.AttrSidecar]]); or the ad-hoc
-    * `docFilter` Column, whose matching (segment, slice, doc_id) rows
-    * co-group with the blocks. Filters are forward-only cursors, so
-    * `walk` gets a factory that makes a fresh base filter per use (one
-    * per independent sub-walk, e.g. per phrase-prefix expansion). The
-    * walk's top-k is materialized here, then every sidecar cursor it
-    * opened closes.
+  /** Blocks of `fields` grouped by (segment, slice), each group handed to
+    * `walk` by field and term, with this query's broadcast context.
     */
-  private def walkSlices[Q](terms: Seq[String], docFilter: Column, attrFilter: AttrPred, q: Q)(
-      walk: (SegCtx[Q], Int, Int, TermBlocks, () => DocFilter) => Iterator[QueryHit]
-  ): Dataset[QueryHit] =
+  private def walkGroups[Q, R: Encoder](fields: Seq[(MultiSearcher, Seq[String])], q: Q)(
+      walk: (SegCtx[Q], Int, Int, Array[TermBlocks]) => Iterator[R]
+  ): Dataset[R] = {
+    val b = context(q, fields.map(_._1))
+    val n = fields.size
+    blocks(fields).groupByKey(r => (r.seg, r.slice))
+      .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, MultiSearcher.byField(rows, n)))
+  }
+
+  /** The filter-context dispatch of every top-k walk, single-field or
+    * fielded: no filter; `attrFilter` streamed from the slice's own
+    * sidecar (no doc-id exchange — see [[graft.index.AttrSidecar]]); or
+    * the ad-hoc `docFilter` Column, whose matching (segment, slice,
+    * doc_id) rows of this view co-group with the blocks. Filters are
+    * forward-only cursors, so `walk` gets a factory that makes a fresh
+    * base filter per use (one per independent sub-walk, e.g. per
+    * phrase-prefix expansion or per field). The walk's output is
+    * materialized here, then every sidecar cursor it opened closes.
+    */
+  private[query] def walkSlices[Q, R: Encoder](
+      fields: Seq[(MultiSearcher, Seq[String])], docFilter: Column, attrFilter: AttrPred, q: Q)(
+      walk: (SegCtx[Q], Int, Int, Array[TermBlocks], () => DocFilter) => Iterator[R]
+  ): Dataset[R] =
     if (docFilter == null) {
       val pred = attrFilter
-      walkGroups(terms, q) { (c, seg, slice, byTerm) =>
-        if (pred == null) walk(c, seg, slice, byTerm, () => null)
+      walkGroups(fields, q) { (c, seg, slice, byField) =>
+        if (pred == null) walk(c, seg, slice, byField, () => null)
         else {
           val opened = scala.collection.mutable.ArrayBuffer.empty[AttrSidecar.AttrCursor]
-          try walk(c, seg, slice, byTerm, () => {
+          try walk(c, seg, slice, byField, () => {
             opened += AttrSidecar.openCursor(c.dirs(seg), slice, pred)
             opened.last
-          }).toArray.iterator
+          }).toVector.iterator
           finally opened.foreach(_.close())
         }
       }
     } else {
-      val b = context(q)
+      val b = context(q, fields.map(_._1))
+      val n = fields.size
       val filterIds = segmentDirs.zipWithIndex
         .map { case (d, i) =>
           IndexBuilder.withDocsTable(spark, d)(_.where(docFilter))
@@ -250,16 +276,23 @@ final class MultiSearcher(
         }
         .reduce(_ unionByName _)
         .as[(Int, Int, Long)]
-      blocks(terms).groupByKey(r => (r.seg, r.slice))
+      blocks(fields).groupByKey(r => (r.seg, r.slice))
         .cogroup(filterIds.groupByKey(r => (r._1, r._2))) { (key, rows, fids) =>
           val allow = fids.map(_._3).toArray
           if (allow.isEmpty) Iterator.empty
           else {
             java.util.Arrays.sort(allow)
-            walk(b.value, key._1, key._2, rows.toArray.groupBy(_.term), () => new FilterIter(allow))
+            walk(b.value, key._1, key._2, MultiSearcher.byField(rows, n), () => new FilterIter(allow))
           }
         }
     }
+
+  /** [[walkSlices]] over this view alone. */
+  private def walkTerms[Q](terms: Seq[String], docFilter: Column, attrFilter: AttrPred, q: Q)(
+      walk: (SegCtx[Q], Int, Int, TermBlocks, () => DocFilter) => Iterator[QueryHit]
+  ): Dataset[QueryHit] =
+    walkSlices(Seq(this -> terms), docFilter, attrFilter, q)((c, seg, slice, byField, base) =>
+      walk(c, seg, slice, byField(0), base))
 
   /** A term query compiled against the view's stats, with the terms that
     * are present; None when nothing can match (AND with an absent term,
@@ -300,10 +333,15 @@ final class MultiSearcher(
     * skipped in the task (each segment is its own vocabulary for
     * matching). `allow` — a sorted allow-list of local ids, one-segment
     * views only — joins the filter, so blocks outside it still skip.
+    * `otherFields` makes the walk fielded: a doc matches when the query
+    * matches it in any field (AND within one field), and the match
+    * stream is the union of the fields' streams, each doc once; must_not,
+    * `extraTerms`, the sidecar and tombstones stay this view's.
     */
   private[query] def matchWalk[R: Encoder](
       queryTerms: Seq[String], mode: String, attrFilter: AttrPred, mustNot: Seq[String],
-      minShouldMatch: Int, extraTerms: Seq[String] = Nil, allow: Array[Long] = null
+      minShouldMatch: Int, extraTerms: Seq[String] = Nil, allow: Array[Long] = null,
+      otherFields: Seq[MultiSearcher] = Nil
   )(consume: MatchSlice => Iterator[R]): Dataset[R] = {
     require(allow == null || segmentDirs.size == 1, "an id allow-list needs a one-segment view")
     val terms = queryTerms.distinct
@@ -311,7 +349,7 @@ final class MultiSearcher(
     else {
       val q = TermQ(terms.toArray, new Array[Double](terms.size), mustNot.distinct.toArray,
         mode == "and", minShouldMatch, 0, null, null)
-      walkGroups((terms ++ q.exclude ++ extraTerms).distinct, q)(
+      walkGroups((this -> (terms ++ q.exclude ++ extraTerms).distinct) +: otherFields.map(_ -> terms), q)(
         MultiSearcher.sliceWalk(_, _, _, _, attrFilter, allow, consume))
     }
   }
@@ -327,7 +365,8 @@ final class MultiSearcher(
     termQuery(queryTerms, mode, mustNot, minShouldMatch) match {
       case None => spark.emptyDataset[R]
       case Some((present, q)) =>
-        walkGroups(present ++ q.exclude, q)(MultiSearcher.sliceWalk(_, _, _, _, attrFilter, null, consume))
+        walkGroups(Seq(this -> (present ++ q.exclude)), q)(
+          MultiSearcher.sliceWalk(_, _, _, _, attrFilter, null, consume))
     }
 
   /** BM25 top-k over the view — the contract of [[Search.topK]] (filter
@@ -356,7 +395,7 @@ final class MultiSearcher(
     termQuery(queryTerms, mode, mustNot, minShouldMatch, k, boosts, after, msmField) match {
       case None => none
       case Some((present, q)) =>
-        topOf(walkSlices(present ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.termWalk), k)
+        topOf(walkTerms(present ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.termWalk), k)
     }
   }
 
@@ -434,7 +473,7 @@ final class MultiSearcher(
       val q = GroupQ(groups.map(_.toArray).toArray,
         groups.map(g => NaiveBm25.idf(nDocs, g.map(dfs.getOrElse(_, 0L)).max)).toArray,
         mustNot.distinct.toArray, isAnd, minShouldMatch, k, tieBreaker)
-      topOf(walkSlices((groups.flatten ++ q.exclude).distinct, null, attrFilter, q)(
+      topOf(walkTerms((groups.flatten ++ q.exclude).distinct, null, attrFilter, q)(
         MultiSearcher.groupWalk), k)
     }
   }
@@ -476,7 +515,7 @@ final class MultiSearcher(
     phraseQuery(phraseTerms, mustNot, k, slop) match {
       case None => none
       case Some(q) =>
-        topOf(walkSlices(q.terms.toSeq ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.phraseWalk), k)
+        topOf(walkTerms(q.terms.toSeq ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.phraseWalk), k)
     }
   }
 
@@ -498,7 +537,7 @@ final class MultiSearcher(
       .flatMap(e => phraseQuery(phraseTerms.init :+ e, mustNot, k)).toArray
     if (qs.isEmpty) none
     else topOf(
-      walkSlices(qs.flatMap(_.terms).distinct.toSeq ++ mustNot.distinct, docFilter, attrFilter, qs) {
+      walkTerms(qs.flatMap(_.terms).distinct.toSeq ++ mustNot.distinct, docFilter, attrFilter, qs) {
         (c, seg, slice, byTerm, base) =>
           c.q.iterator.flatMap(q => MultiSearcher.phraseWalk(c.copy(q = q), seg, slice, byTerm, base))
       }.groupBy($"doc_id").agg(max($"score").as("score")).as[QueryHit], k)
@@ -513,7 +552,8 @@ final class MultiSearcher(
     val shapes = phrases.map(MultiSearcher.phraseShape).toArray
     val perSlice =
       if (shapes.isEmpty) Array.empty[(Int, Long)]
-      else walkGroups(shapes.flatMap(_.terms).distinct.toSeq, shapes)(MultiSearcher.countWalk)
+      else walkGroups(Seq(this -> shapes.flatMap(_.terms).distinct.toSeq), shapes)((c, seg, slice, byField) =>
+        MultiSearcher.countWalk(c, seg, slice, byField(0)))
         .collect() // ≤ nSlices × |phrases| rows per segment
     val sums = new Array[Long](shapes.length)
     perSlice.foreach { case (pi, n) => sums(pi) += n }
@@ -549,7 +589,7 @@ final class MultiSearcher(
   def exportPhrase(phraseTerms: Seq[String], attrFilter: AttrPred = null): DataFrame =
     phraseQuery(phraseTerms, Nil) match {
       case None => none
-      case Some(q) => walkSlices(q.terms.toSeq, null, attrFilter, q)(MultiSearcher.phraseExportWalk).toDF()
+      case Some(q) => walkTerms(q.terms.toSeq, null, attrFilter, q)(MultiSearcher.phraseExportWalk).toDF()
     }
 
   /** [[Search.collapseTopK]] over the view: one best hit per keyword
@@ -605,14 +645,22 @@ final class MultiSearcher(
 
 object MultiSearcher {
 
-  /** A matched posting block of segment `seg`. */
+  /** A matched posting block of field `fld` (0 unless the walk is
+    * fielded), segment `seg`.
+    */
   private[query] final case class Block(
-      seg: Int, slice: Int, term: String, block_id: Int, doc_id_min: Long, doc_id_max: Long,
+      fld: Int, seg: Int, slice: Int, term: String, block_id: Int, doc_id_min: Long, doc_id_max: Long,
       count: Int, deltas: Array[Byte], tfs: Array[Byte], dls: Array[Byte], poss: Array[Byte],
       max_impact: Double, max_tf: Int, min_dl: Int)
 
-  /** One (segment, slice)'s posting blocks by term. */
+  /** One field's posting blocks of one (segment, slice), by term. */
   private[query] type TermBlocks = Map[String, Array[Block]]
+
+  /** A (segment, slice) group's blocks, per field of `n`. */
+  private def byField(rows: Iterator[Block], n: Int): Array[TermBlocks] = {
+    val g = rows.toArray.groupBy(_.fld)
+    Array.tabulate(n)(fi => g.get(fi).fold(Map.empty: TermBlocks)(_.groupBy(_.term)))
+  }
 
   /** A compiled term query: distinct terms with their (boosted) idfs. */
   private[query] final case class TermQ(
@@ -645,23 +693,26 @@ object MultiSearcher {
       terms: Array[String], offsets: Array[Array[Int]], chain: Array[Int], slop: Int,
       idfSum: Double, exclude: Array[String], k: Int)
 
-  /** One query's task context: the view's segments (dirs, doc-id bases,
-    * tombstone generations), avgdl, its bound rule and the query `q`.
+  /** One query's task context: the walking view's segments (dirs,
+    * doc-id bases, tombstone generations), per field its avgdl and bound
+    * rule, and the query `q`.
     */
   private[query] final case class SegCtx[Q](
       dirs: Array[String], bases: Array[Long], tombs: Array[Tombstones.Handle],
-      avgDl: Double, storedBounds: Boolean, q: Q) {
+      avgDls: Array[Double], storedBounds: Array[Boolean], q: Q) {
 
-    /** One term's blocks as a doc-ordered cursor. The WAND bound is the
-      * stored `max_impact` on a one-segment view, else impact(max_tf,
-      * min_dl) at the view's avgdl.
+    def avgDl: Double = avgDls(0)
+
+    /** One term's blocks of field `fi` as a doc-ordered cursor. The WAND
+      * bound is the stored `max_impact` when the field is a one-segment
+      * view, else impact(max_tf, min_dl) at the field's avgdl.
       */
-    def iter(rows: Array[Block], termIdx: Int, idf: Double): PostingIter =
+    def iter(rows: Array[Block], termIdx: Int, idf: Double, fi: Int = 0): PostingIter =
       new PostingIter(termIdx, idf,
         rows.sortBy(r => (r.doc_id_min, r.block_id)).map(r =>
           BlockRef(r.doc_id_min, r.doc_id_max, r.count, r.deltas, r.tfs, r.dls, r.poss,
-            if (storedBounds) r.max_impact else IndexBuilder.impact(r.max_tf, r.min_dl, avgDl))),
-        avgDl)
+            if (storedBounds(fi)) r.max_impact else IndexBuilder.impact(r.max_tf, r.min_dl, avgDls(fi)))),
+        avgDls(fi))
 
     /** `base` ∧ none of `exclude` ∧ not tombstoned, in one (segment, slice). */
     def filter(seg: Int, slice: Int, base: DocFilter, exclude: Array[PostingIter]): DocFilter = {
@@ -676,9 +727,11 @@ object MultiSearcher {
     }
   }
 
-  /** Query-term cursors (termIdx = query position) of the present terms. */
-  private def termIters(c: SegCtx[TermQ], terms: TermBlocks): Array[PostingIter] =
-    c.q.terms.indices.flatMap(ti => terms.get(c.q.terms(ti)).map(c.iter(_, ti, c.q.idfs(ti)))).toArray
+  /** Query-term cursors (termIdx = query position) of the terms present
+    * in field `fi`.
+    */
+  private def termIters(c: SegCtx[TermQ], terms: TermBlocks, fi: Int = 0): Array[PostingIter] =
+    c.q.terms.indices.flatMap(ti => terms.get(c.q.terms(ti)).map(c.iter(_, ti, c.q.idfs(ti), fi))).toArray
 
   private def excludeIters(c: SegCtx[_], exclude: Array[String],
                            terms: TermBlocks): Array[PostingIter] =
@@ -784,15 +837,21 @@ object MultiSearcher {
     * one of them, once — a fresh cursor per pushed-down term
     * ([[cursor]], for bucket membership) and the slice's attribute
     * sidecar ([[reader]], opened on first use). The walk owns the reader
-    * and the filter's sidecar cursor.
+    * and the filters' sidecar cursors. A fielded walk has one (cursors,
+    * filter) stream per field that can match here.
     */
   private[query] final class MatchSlice private[MultiSearcher] (
       c: SegCtx[TermQ], seg: Int, val slice: Int, terms: TermBlocks,
-      iters: Array[PostingIter], filter: DocFilter, attrCursor: AutoCloseable) {
+      iters: Array[Array[PostingIter]], filters: Array[DocFilter],
+      attrCursors: Array[AttrSidecar.AttrCursor]) {
     val dir: String = c.dirs(seg)
     val docBase: Long = c.bases(seg)
-    def ids: Iterator[Long] = BlockMaxWand.matchingDocIds(iters, c.q.isAnd, c.q.msm, filter)
-    def hits: Iterator[(Long, Double)] = BlockMaxWand.scoredMatches(iters, c.q.isAnd, c.q.msm, filter)
+    def ids: Iterator[Long] =
+      union(iters.indices.map(fi => BlockMaxWand.matchingDocIds(iters(fi), c.q.isAnd, c.q.msm, filters(fi))))
+    def hits: Iterator[(Long, Double)] = {
+      require(iters.length == 1, "a scored match walk has one field")
+      BlockMaxWand.scoredMatches(iters(0), c.q.isAnd, c.q.msm, filters(0))
+    }
     def cursor(term: String): Option[PostingIter] = terms.get(term).map(c.iter(_, 0, 0.0))
     private var rd: AttrSidecar.AttrReader = null
     def reader: AttrSidecar.AttrReader = {
@@ -803,26 +862,44 @@ object MultiSearcher {
     private[MultiSearcher] def close(): Unit = if (!closed) {
       closed = true
       if (rd != null) rd.close()
-      if (attrCursor != null) attrCursor.close()
+      attrCursors.foreach(a => if (a != null) a.close())
     }
   }
 
+  /** Ascending union of ascending id streams, each id once. */
+  private def union(streams: Seq[Iterator[Long]]): Iterator[Long] =
+    if (streams.size == 1) streams.head
+    else {
+      val bs = streams.map(_.buffered)
+      new scala.collection.AbstractIterator[Long] {
+        def hasNext: Boolean = bs.exists(_.hasNext)
+        def next(): Long = {
+          val d = bs.filter(_.hasNext).map(_.head).min
+          bs.foreach(b => if (b.hasNext && b.head == d) b.next())
+          d
+        }
+      }
+    }
+
   /** One (segment, slice) of [[MultiSearcher.matchWalk]] and
-    * [[MultiSearcher.scoredWalk]]: the AND early exit, the filter
-    * composition (sidecar cursor ∧ ¬must_not ∧ ¬tombstoned ∧ `allow`),
-    * then `consume`. The slice closes when the consumer's output is
-    * exhausted or at task completion, whichever comes first, so lazy and
-    * eager consumers follow one rule.
+    * [[MultiSearcher.scoredWalk]]: the AND early exit per field, the
+    * filter composition per field stream (sidecar cursor ∧ ¬must_not ∧
+    * ¬tombstoned ∧ `allow`), then `consume`. The slice closes when the
+    * consumer's output is exhausted or at task completion, whichever
+    * comes first, so lazy and eager consumers follow one rule.
     */
-  private def sliceWalk[R](c: SegCtx[TermQ], seg: Int, slice: Int, terms: TermBlocks,
+  private def sliceWalk[R](c: SegCtx[TermQ], seg: Int, slice: Int, fields: Array[TermBlocks],
                            pred: AttrPred, allow: Array[Long],
                            consume: MatchSlice => Iterator[R]): Iterator[R] = {
-    val iters = termIters(c, terms)
-    if (iters.isEmpty || (c.q.isAnd && iters.length < c.q.terms.length)) return Iterator.empty
-    val cursor = if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred)
-    val f = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, terms))
-    val s = new MatchSlice(c, seg, slice, terms, iters,
-      if (allow == null) f else Filters.and(f, new SortedIdsFilter(allow)), cursor)
+    val iters = fields.indices.map(fi => termIters(c, fields(fi), fi))
+      .filter(it => it.nonEmpty && !(c.q.isAnd && it.length < c.q.terms.length)).toArray
+    if (iters.isEmpty) return Iterator.empty
+    val cursors = iters.map(_ => if (pred == null) null else AttrSidecar.openCursor(c.dirs(seg), slice, pred))
+    val filters = cursors.map { cursor =>
+      val f = c.filter(seg, slice, cursor, excludeIters(c, c.q.exclude, fields(0)))
+      if (allow == null) f else Filters.and(f, new SortedIdsFilter(allow))
+    }
+    val s = new MatchSlice(c, seg, slice, fields(0), iters, filters, cursors)
     val tc = org.apache.spark.TaskContext.get()
     if (tc != null) tc.addTaskCompletionListener[Unit](_ => s.close())
     val out = consume(s)

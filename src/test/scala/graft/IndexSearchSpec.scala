@@ -313,6 +313,16 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(gotF.map(_._1).toSeq == expF.map(_.docId), "fielded+filtered ids")
     expF.zip(gotF).foreach { case (e, (_, gs)) => assert(math.abs(gs - e.score) < 1e-9) }
+    // the same filter as a sidecar predicate
+    val gotA = FieldedSearch.topK(
+      spark,
+      Seq(FieldedSearch.Field("title", titleDir.toString, 2.0),
+        FieldedSearch.Field("body", dir.toString, 1.0)),
+      Seq("w0", "w1"), 10,
+      attrFilter = graft.index.AttrPred.lang("ru")
+    ).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(gotA.map(_._1).toSeq == expF.map(_.docId), "fielded+sidecar ids")
+    expF.zip(gotA).foreach { case (e, (_, gs)) => assert(math.abs(gs - e.score) < 1e-9) }
   }
 
   test("combined_fields composes tombstones: deleted docs never surface (r6 fix)") {
@@ -329,6 +339,18 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
         FieldedSearch.Field("title", titleDel.toString, 2.0),
         FieldedSearch.Field("body", bodyDel.toString, 1.0))
       val terms = Seq("w0", "w1")
+      val families = fields.map(f => FieldedSearch.FieldFamily(f.name, Seq(f.indexDir), f.boost))
+      def hits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
+      // the fielded WAND paths over the same fields, run before and after
+      val wandCalls: Seq[(String, () => Array[(Long, Double)])] = Seq(
+        "topK" -> (() => hits(FieldedSearch.topK(spark, fields, terms, 10))),
+        "phraseTopK" -> (() => hits(FieldedSearch.phraseTopK(spark, fields, terms, 10))),
+        "topKMulti" -> (() => hits(FieldedSearch.topKMulti(spark, families, terms, 10))))
+      def langCounts() = graft.query.Facets.termsAggFielded(spark, fields, terms, "or")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val wandBefore = wandCalls.map { case (what, call) => what -> call() }
+      val countsBefore = langCounts()
+      wandBefore.foreach { case (what, b) => assert(b.nonEmpty, s"$what found nothing") }
       val before = FieldedSearch.combinedFieldsTopK(spark, fields, terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(before.nonEmpty)
@@ -344,6 +366,22 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
       after.foreach { case (id, s) =>
         beforeMap.get(id).foreach(bs => assert(math.abs(bs - s) < 1e-12, s"doc $id rescored"))
       }
+      // each WAND path's top hit goes too (on the first field's index, which
+      // is also the first family's only segment)
+      val victims = (victim +: wandBefore.map(_._2.head._1)).distinct
+      graft.index.Tombstones.deleteByIds(spark, titleDel.toString, victims.filter(_ != victim).toDS())
+      wandCalls.zip(wandBefore).foreach { case ((what, call), (_, b)) =>
+        val a = call()
+        assert(a.nonEmpty && !a.exists(h => victims.contains(h._1)), s"$what returned a deleted doc")
+        val bm = b.toMap
+        a.foreach { case (id, s) =>
+          bm.get(id).foreach(bs => assert(math.abs(bs - s) < 1e-12, s"$what rescored doc $id"))
+        }
+      }
+      val langOf = (0L until nd).map(i => PagesGen.pageFor(i)).sortBy(_.url).map(_.lang)
+      val lost = victims.groupBy(id => langOf(id.toInt)).view.mapValues(_.size.toLong)
+      val expectedCounts = countsBefore.map { case (l, n) => l -> (n - lost.getOrElse(l, 0L)) }.filter(_._2 > 0)
+      assert(langCounts() == expectedCounts, "termsAggFielded counted a deleted doc")
     } finally {
       import scala.reflect.io.Directory
       new Directory(bodyDel.toFile).deleteRecursively()
@@ -439,6 +477,9 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gotF = FieldedSearch.fuzzyTopK(spark, fields, q, 10, maxEdits = 1)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(gotF.map(_._1).toSeq == expectedF.map(_.docId), s"fielded fuzzy ids (union=$unionF)")
+    expectedF.zip(gotF).foreach { case (e, (_, gs)) =>
+      assert(math.abs(gs - e.score) < 1e-9, "fielded fuzzy score")
+    }
   }
 
   test("fielded facets: union-of-fields match set, counted once per doc") {
@@ -449,19 +490,28 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val byUrl = (0L until NDocs).map(i => PagesGen.pageFor(i)).sortBy(_.url)
     val langOf = byUrl.map(_.lang).toArray
     val terms = Seq("w1", "w2")
+    val titles = titleCorpus
     // exhaustive: a doc matches iff ANY field contains ANY query term
     def docMatches(id: Long, and: Boolean): Boolean = {
-      val t = Analyzer.tokenize(titleCorpus(id.toInt)._2).toSet
+      val t = Analyzer.tokenize(titles(id.toInt)._2).toSet
       val b = Analyzer.tokenize(corpus(id.toInt)._2).toSet
       if (and) terms.forall(t.contains) || terms.forall(b.contains)
       else terms.exists(x => t.contains(x) || b.contains(x))
     }
     Seq(false, true).foreach { and =>
-      val expected = (0L until NDocs).filter(docMatches(_, and))
+      val matched = (0L until NDocs).filter(docMatches(_, and))
+      val expected = matched
         .groupBy(id => langOf(id.toInt)).view.mapValues(_.size.toLong).toMap
       val got = Facets.termsAggFielded(spark, fields, terms, if (and) "and" else "or")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == expected, s"fielded terms agg (and=$and): $got vs $expected")
+      val day = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd").withZone(java.time.ZoneOffset.UTC)
+      val expectedD = matched
+        .groupBy(id => day.format(java.time.Instant.ofEpochMilli(byUrl(id.toInt).warc_ts.getTime)))
+        .view.mapValues(_.size.toLong).toMap
+      val gotD = Facets.dateHistogramFielded(spark, fields, terms, if (and) "and" else "or")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(gotD == expectedD, s"fielded date histogram (and=$and): $gotD vs $expectedD")
     }
   }
 
@@ -503,6 +553,37 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     dirs.foreach(d => new Directory(new java.io.File(d)).deleteRecursively())
   }
 
+  test("fielded calls refuse fields whose slice layouts differ") {
+    import graft.query.{Facets, FieldedSearch}
+    val body = Files.createTempDirectory("graft-layout-body")
+    val title = Files.createTempDirectory("graft-layout-title")
+    try {
+      // slices are doc-id ranges: at 6 vs 2 slices a doc's fields land in
+      // different tasks, and a summed score would silently lose a field
+      IndexBuilder.build(spark, PagesGen.pages(spark, 300, 4), body.toString,
+        BuildConfig(nPartitions = 4, nGroups = 1, nSlices = 6, blockSize = 32))
+      IndexBuilder.build(spark, IndexSearchSpec.titlePages(300, _ => true), title.toString,
+        BuildConfig(nPartitions = 4, nGroups = 1, nSlices = 2, blockSize = 32))
+      val fields = Seq(FieldedSearch.Field("body", body.toString, 1.0),
+        FieldedSearch.Field("title", title.toString, 2.0))
+      val families = fields.map(f => FieldedSearch.FieldFamily(f.name, Seq(f.indexDir), f.boost))
+      val q = Seq("w0", "w1", "w2")
+      val calls: Seq[(String, () => Any)] = Seq(
+        "topK" -> (() => FieldedSearch.topK(spark, fields, q, 10).collect()),
+        "topKMulti" -> (() => FieldedSearch.topKMulti(spark, families, q, 10).collect()),
+        "phraseTopK" -> (() => FieldedSearch.phraseTopK(spark, fields, Seq("w0", "w1"), 10).collect()),
+        "termsAggFielded" -> (() => Facets.termsAggFielded(spark, fields, q, "or").collect()))
+      calls.foreach { case (what, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("slice layout"), s"$what: ${e.getMessage}")
+      }
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(body.toFile).deleteRecursively()
+      new Directory(title.toFile).deleteRecursively()
+    }
+  }
+
   test("fielded phrase (most_fields over match_phrase) matches naive oracle") {
     import graft.query.FieldedSearch
     import graft.index.AttrPred
@@ -533,6 +614,13 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
       attrFilter = AttrPred.lang("en"))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(gotF.map(_._1).toSeq == expF.map(_.docId), "fielded-phrase+sidecar ids")
+    val gotD = FieldedSearch.phraseTopK(spark, fields, Seq("w0", "w1"), 10,
+      docFilter = org.apache.spark.sql.functions.col("lang") === "en")
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(gotD.map(_._1).toSeq == expF.map(_.docId), "fielded-phrase+docFilter ids")
+    expF.zip(gotD).foreach { case (e, (_, gs)) =>
+      assert(math.abs(gs - e.score) < 1e-9, "fielded-phrase+docFilter score")
+    }
   }
 
   test("hydrate (fetch phase): stored fields join to hits; text only on request") {

@@ -22,9 +22,14 @@ import graft.sources.PagesGen
   * sort-by-field) read no dictionary at all. more_like_this selects its
   * terms and retrieves on one view, so it reads the dictionary once; the
   * view's dis_max, synonym, phrase-prefix, phrase-count and explain
-  * paths keep their job counts and block decodes. An upsert of a batch
-  * within the flush budget runs the same few jobs whatever the family's
-  * size: the gathering job, one write per table and one tombstone job.
+  * paths keep their job counts and block decodes. The fielded calls run
+  * one walk over every field's view: a fielded expansion or `topKMulti`
+  * reads each field's dictionary once (the expansion's memo answers the
+  * walk's dfs, and a family's dfs are summed on the driver), the fielded
+  * aggregations read no dictionary, and no call decodes more blocks than
+  * a walk over the query terms' blocks. An upsert of a batch within the
+  * flush budget runs the same few jobs whatever the family's size: the
+  * gathering job, one write per table and one tombstone job.
   */
 class QueryJobsSpec extends AnyFunSuite {
 
@@ -162,6 +167,53 @@ class QueryJobsSpec extends AnyFunSuite {
     }
     // 474 posting-block and 349 position-block decodes over the six calls
     assert(decodes == 823, s"the six calls decoded $decodes blocks")
+  }
+
+  test("fielded calls: jobs and block decodes pinned; an expansion reads each field's dictionary once") {
+    import org.apache.spark.sql.functions.col
+    import graft.index.AttrPred
+    import graft.query.FieldedSearch
+    val dir = this.dir
+    val title = Files.createTempDirectory("graft-jobs-title").toString
+    IndexBuilder.build(spark, IndexSearchSpec.titlePages(300, _ => true), title,
+      BuildConfig(nPartitions = 4, nGroups = 2, nSlices = 4, blockSize = 16))
+    val fields = Seq(FieldedSearch.Field("title", title, 2.0), FieldedSearch.Field("body", dir, 1.0))
+    val families = fields.map(f => FieldedSearch.FieldFamily(f.name, Seq(f.indexDir), f.boost))
+    val q = Seq("w0", "w1")
+    def measured(body: => Unit): (Seq[Seq[String]], Long, Long) = {
+      BlockMaxWand.blockDecodes.reset()
+      BlockMaxWand.posBlockDecodes.reset()
+      val jobs = jobsOf(body)
+      (jobs, BlockMaxWand.blockDecodes.sum(), BlockMaxWand.posBlockDecodes.sum())
+    }
+    // (call, measured, max jobs, block decodes, position-block decodes).
+    // combined_fields' walk output feeds both the candidate-id semi-join
+    // and the scoring join, so its blocks decode twice
+    val calls = Seq(
+      ("topK", measured(FieldedSearch.topK(spark, fields, q, 10).collect()), 4, 45L, 0L),
+      ("topK attrFilter", measured(FieldedSearch.topK(spark, fields, q, 10,
+        attrFilter = AttrPred.lang("en")).collect()), 4, 45L, 0L),
+      ("topK docFilter", measured(FieldedSearch.topK(spark, fields, q, 10,
+        docFilter = col("lang") === "en").collect()), 5, 45L, 0L),
+      ("prefixTopK", measured(FieldedSearch.prefixTopK(spark, fields, "w1", 10).collect()), 4, 730L, 0L),
+      ("fuzzyTopK", measured(FieldedSearch.fuzzyTopK(spark, fields, "w1x", 10).collect()), 4, 116L, 0L),
+      ("wildcardTopK", measured(FieldedSearch.wildcardTopK(spark, fields, "w?1*", 10).collect()), 4, 595L, 0L),
+      ("phraseTopK", measured(FieldedSearch.phraseTopK(spark, fields, q, 10).collect()), 4, 44L, 40L),
+      ("topKMulti", measured(FieldedSearch.topKMulti(spark, families, q, 10).collect()), 4, 45L, 0L),
+      ("combinedFieldsTopK", measured(FieldedSearch.combinedFieldsTopK(spark, fields, q, 10).collect()), 9, 90L, 0L),
+      ("termsAggFielded", measured(Facets.termsAggFielded(spark, fields, q, "or").collect()), 5, 45L, 0L),
+      ("dateHistogramFielded", measured(Facets.dateHistogramFielded(spark, fields, q, "or").collect()), 3, 45L, 0L))
+    calls.foreach { case (what, (jobs, blocks, posBlocks), maxJobs, wantBlocks, wantPos) =>
+      info(s"$what: ${jobs.size} jobs, $blocks blocks, $posBlocks position blocks")
+      assertNoInference(what, jobs)
+      assert(jobs.size <= maxJobs, s"$what ran ${jobs.size} jobs: $jobs")
+      assert(blocks == wantBlocks, s"$what decoded $blocks blocks")
+      assert(posBlocks == wantPos, s"$what decoded $posBlocks position blocks")
+      if (what.endsWith("Fielded"))
+        assert(!jobs.flatten.exists(_.startsWith("collect at MultiSearcher.scala")),
+          s"$what read the dictionary: $jobs")
+    }
+    new scala.reflect.io.Directory(new java.io.File(title)).deleteRecursively()
   }
 
   test("an upsert runs at most 10 jobs, as many into a family of 1 older segment as of 3") {
