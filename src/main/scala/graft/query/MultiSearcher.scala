@@ -58,6 +58,15 @@ import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, T
   * topKMulti), the fielded phrase and combined_fields' (doc, term,
   * Σ w·tf) rows. [[phraseCounts]] counts a set of phrases in one walk.
   *
+  * Two more executions of the term walk serve [[Searcher]]: the batch
+  * walk ([[batchTopK]]) answers a whole query set with one dictionary
+  * job, one scan and one exchange, each task running every query's walk
+  * over shared sidecar allow-lists; the driver-local execution
+  * ([[topKLocal]]) collects a query's blocks behind a block-count gate
+  * and runs the walk per (segment, slice) on the driver. They and
+  * [[topK]] share one filter composition ([[SegCtx.filter]]) and one
+  * sidecar cursor lifecycle ([[MultiSearcher.withCursors]]).
+  *
   * Fields are views: a fielded walk scans every field's view (one
   * pushdown scan, each block tagged with its field), groups all of them
   * by (segment, slice) of the walking view in one exchange, and hands
@@ -197,13 +206,16 @@ final class MultiSearcher(
   private[query] def layout: Seq[(Long, Int)] =
     segStats.map(_.n_docs).zip(segmentDirs.map(IndexBuilder.readMeta(_).nSlices))
 
-  /** This query's task context over `views` (this view's doc space, each
-    * view's avgdl and bound rule), in one broadcast.
+  /** This query's context over `views` (this view's doc space, each
+    * view's avgdl and bound rule); the driver-local walk uses it as is.
     */
+  private def segCtx[Q](q: Q, views: Seq[MultiSearcher] = Seq(this)): SegCtx[Q] =
+    SegCtx(segmentDirs.toArray, bases.toArray, segmentDirs.map(Tombstones.handle).toArray,
+      views.map(_.avgDl).toArray, views.map(_.oneSegment).toArray, q)
+
+  /** [[segCtx]] for the tasks, in one broadcast. */
   private def context[Q](q: Q, views: Seq[MultiSearcher] = Seq(this)): Broadcast[SegCtx[Q]] =
-    spark.sparkContext.broadcast(SegCtx(segmentDirs.toArray, bases.toArray,
-      segmentDirs.map(Tombstones.handle).toArray, views.map(_.avgDl).toArray,
-      views.map(_.oneSegment).toArray, q))
+    spark.sparkContext.broadcast(segCtx(q, views))
 
   /** Posting blocks of each field's terms in every segment of its view
     * (pushdown `term IN` on each segment's term-sorted postings), tagged
@@ -246,8 +258,8 @@ final class MultiSearcher(
     * doc_id) rows of this view co-group with the blocks. Filters are
     * forward-only cursors, so `walk` gets a factory that makes a fresh
     * base filter per use (one per independent sub-walk, e.g. per
-    * phrase-prefix expansion or per field). The walk's output is
-    * materialized here, then every sidecar cursor it opened closes.
+    * phrase-prefix expansion or per field); sidecar cursors open and
+    * close through [[MultiSearcher.withCursors]].
     */
   private[query] def walkSlices[Q, R: Encoder](
       fields: Seq[(MultiSearcher, Seq[String])], docFilter: Column, attrFilter: AttrPred, q: Q)(
@@ -257,14 +269,7 @@ final class MultiSearcher(
       val pred = attrFilter
       walkGroups(fields, q) { (c, seg, slice, byField) =>
         if (pred == null) walk(c, seg, slice, byField, () => null)
-        else {
-          val opened = scala.collection.mutable.ArrayBuffer.empty[AttrSidecar.AttrCursor]
-          try walk(c, seg, slice, byField, () => {
-            opened += AttrSidecar.openCursor(c.dirs(seg), slice, pred)
-            opened.last
-          }).toVector.iterator
-          finally opened.foreach(_.close())
-        }
+        else MultiSearcher.withCursors(c.dirs(seg), slice)(open => walk(c, seg, slice, byField, () => open(pred)))
       }
     } else {
       val b = context(q, fields.map(_._1))
@@ -398,6 +403,64 @@ final class MultiSearcher(
         topOf(walkTerms(present ++ q.exclude, docFilter, attrFilter, q)(MultiSearcher.termWalk), k)
     }
   }
+
+  /** The batch walk: a whole query set in one job, as (qid, doc_id,
+    * score, rank). One dictionary read of every query's terms and
+    * must_not terms, one pushdown scan of the union of their blocks, one
+    * (segment, slice) exchange; each task runs every query's term walk
+    * ([[MultiSearcher.batchSlice]]), and a per-qid window cuts each
+    * query's top-k — exact, since slices are disjoint doc ranges.
+    * `allowListCap` bounds each task's materialized sidecar allow-lists
+    * (ids per distinct predicate).
+    */
+  private[query] def batchTopK(queries: Seq[Searcher.BatchQuery], k: Int,
+                               allowListCap: Int = MultiSearcher.AllowListCap): DataFrame = {
+    dfOf(queries.flatMap(q => q.terms ++ q.mustNot)) // the compiles below read the memo
+    // (qid, filter, compiled query) and the terms whose blocks it walks
+    val compiled = queries.flatMap(b => termQuery(b.terms, b.mode, b.mustNot, b.minShouldMatch, k)
+      .map { case (present, q) => ((b.qid, b.attr, q), present ++ q.exclude) })
+    val hits =
+      if (compiled.isEmpty) spark.emptyDataset[(Long, Long, Double)]
+      else walkGroups(Seq(this -> compiled.flatMap(_._2).distinct), compiled.map(_._1).toArray) {
+        (c, seg, slice, byField) => MultiSearcher.batchSlice(c, seg, slice, byField(0), allowListCap)
+      }
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"qid").orderBy(desc("score"), asc("doc_id"))
+    hits.toDF("qid", "doc_id", "score")
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where($"rank" <= k)
+  }
+
+  /** [[topK]] executed on the driver, for interactive queries whose
+    * matched blocks are few: the blocks are collected once and each
+    * (segment, slice) runs the same term walk locally, from an
+    * unbroadcast context — no exchange, no task round trip. Above
+    * `maxBlocks` blocks the query runs distributed through [[topK]] on
+    * the dfs already memoized, so hot terms are never collected. Answers
+    * are identical: same blocks, same walk, same tie-break.
+    */
+  private[query] def topKLocal(queryTerms: Seq[String], mode: String, k: Int, maxBlocks: Int,
+                               mustNot: Seq[String], minShouldMatch: Int,
+                               attrFilter: AttrPred): Seq[(Long, Double)] =
+    termQuery(queryTerms, mode, mustNot, minShouldMatch, k) match {
+      case None => Nil
+      case Some((present, q)) =>
+        // cardinality GATE, not a selection: if more than maxBlocks blocks
+        // exist, which maxBlocks + 1 arrive is nondeterministic — and
+        // irrelevant, because they are then all discarded. The local walk
+        // only ever scores a COMPLETE block set.
+        val rows = blocks(Seq(this -> (present ++ q.exclude))).limit(maxBlocks + 1)
+          .collect() // ≤ maxBlocks + 1 rows
+        if (rows.length > maxBlocks)
+          topK(queryTerms, mode, k, attrFilter = attrFilter, mustNot = mustNot, minShouldMatch = minShouldMatch)
+            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq // ≤ k rows
+        else {
+          val c = segCtx(q)
+          rows.groupBy(r => (r.seg, r.slice)).iterator.flatMap { case ((seg, slice), rs) =>
+            MultiSearcher.withCursors(c.dirs(seg), slice)(open => MultiSearcher.termWalk(
+              c, seg, slice, rs.groupBy(_.term), () => if (attrFilter == null) null else open(attrFilter)))
+          }.toSeq.sortBy(h => (-h.score, h.doc_id)).take(k).map(h => (h.doc_id, h.score))
+        }
+    }
 
   /** [[Search.prefixTopK]] over the view: family-df expansion cap. */
   def prefixTopK(
@@ -645,6 +708,20 @@ final class MultiSearcher(
 
 object MultiSearcher {
 
+  /** Default cap on a batch task's materialized allow-list, in ids per
+    * distinct predicate.
+    */
+  private[query] val AllowListCap: Int = 1 << 20
+
+  /** Registers the postings and terms tables of `indexDir` in Spark's
+    * cache; Spark substitutes them into every later read of the same
+    * paths, every view's included.
+    */
+  private[query] def cacheTables(spark: SparkSession, indexDir: String): Unit = {
+    IndexBuilder.readPostings(spark, indexDir).cache()
+    IndexBuilder.readTerms(spark, indexDir).cache()
+  }
+
   /** A matched posting block of field `fld` (0 unless the walk is
     * fielded), segment `seg`.
     */
@@ -774,6 +851,51 @@ object MultiSearcher {
         } else BlockMaxWand.or(iters, q.k, filter, q.msm, after, msmOf)
       } finally if (msmReader != null) msmReader.close()
     c.global(seg, hits)
+  }
+
+  /** One (segment, slice) of the batch walk: every query's [[termWalk]].
+    * A distinct predicate's allow-list is materialized once per task and
+    * shared by the queries that carry it while it holds ≤ `cap` ids; a
+    * broader one streams a fresh sidecar cursor per query, so task memory
+    * never scales with selectivity × distinct predicates. The slice's
+    * tombstones are read once for the batch too: the queries walk a
+    * context without them, each with its own cursor over the shared ids.
+    */
+  private def batchSlice(c: SegCtx[Array[(Long, AttrPred, TermQ)]], seg: Int, slice: Int,
+                         terms: TermBlocks, cap: Int): Iterator[(Long, Long, Double)] = {
+    val dir = c.dirs(seg)
+    val tomb = c.tombs(seg)
+    val deleted = if (tomb == null) Array.emptyLongArray else Tombstones.readSlice(dir, tomb.gen, slice)
+    val live = c.copy(tombs = c.tombs.updated(seg, null))
+    val allowLists = scala.collection.mutable.HashMap.empty[AttrPred, Array[Long]]
+    def base(attr: AttrPred, open: AttrPred => DocFilter): DocFilter = {
+      val allowed =
+        if (attr == null) null
+        else allowLists.getOrElseUpdate(attr, AttrSidecar.matchingDocIdsCapped(dir, slice, attr, cap)) match {
+          case null => open(attr) // too broad to materialize
+          case ids => new FilterIter(ids)
+        }
+      if (deleted.isEmpty) allowed else Filters.and(allowed, new NotFilter(new SortedIdsSet(deleted)))
+    }
+    c.q.iterator.flatMap { case (qid, attr, q) =>
+      withCursors(dir, slice)(open => termWalk(live.copy(q = q), seg, slice, terms, () => base(attr, open)))
+        .map(h => (qid, h.doc_id, h.score))
+    }
+  }
+
+  /** Runs `walk` with `open`, which opens a predicate's sidecar cursor on
+    * `dir`'s `slice`: the walk's output is materialized, then every
+    * cursor it opened closes — the one cursor lifecycle of the task
+    * walks, the batch walk and the driver-local walk.
+    */
+  private def withCursors[R](dir: String, slice: Int)(walk: (AttrPred => DocFilter) => Iterator[R]): Iterator[R] = {
+    val opened = scala.collection.mutable.ArrayBuffer.empty[AttrSidecar.AttrCursor]
+    try walk { pred =>
+      val cursor = AttrSidecar.openCursor(dir, slice, pred)
+      opened += cursor
+      cursor
+    }.toVector.iterator
+    finally opened.foreach(_.close())
   }
 
   /** Positional phrase top-k of one (segment, slice); the filter is
@@ -926,7 +1048,7 @@ object MultiSearcher {
     // downstream window already picks one global winner per value; the
     // map only shrinks the exchange from match-count to
     // nSlices×|values| when the keyword honors its bounded-cardinality
-    // contract (the batch-filter cap treatment, `Searcher.attrAllowListCap`).
+    // contract (the batch walk's allow-list cap treatment, `batchSlice`).
     val best = scala.collection.mutable.HashMap.empty[String, (Long, Double)]
     val streamed = s.hits.flatMap { case (id, sc) =>
       if (!reader.seek(id)) Nil

@@ -41,7 +41,7 @@ import graft.index.{AttrPred, IndexBuilder, Tombstones}
   * since merged and purged indexes store no text and must fail such a
   * read loudly instead of returning nulls.
   *
-  * [[batchTopK]] runs [[Searcher.topKBatch]]. [[moreLikeThis]] selects
+  * [[batchTopK]] is the view's batch walk. [[moreLikeThis]] selects
   * its terms and retrieves on one view, and [[explain]] takes N, avgdl
   * and df from a view; explain's range-pruned, unshuffled decode, the
   * suggesters' dictionary reads and [[hydrate]] stay here.
@@ -128,8 +128,9 @@ object Search {
     * evaluation / RAG-training-retrieval shape (millions of queries a
     * day against the same index), where per-query jobs would drown in
     * scheduling overhead and re-scan hot postings once per query. The
-    * walk is [[Searcher.topKBatch]]'s: one postings scan of the UNION of
-    * all queries' terms, one shuffle by slice, every query's WAND per
+    * walk is a one-segment view's batch walk ([[MultiSearcher.batchTopK]],
+    * also behind [[Searcher.topKBatch]]): one postings scan of the UNION
+    * of all queries' terms, one shuffle by slice, every query's WAND per
     * slice task, then a per-qid window cut — exact per-query top-k.
     *
     * `queries`: (qid, terms, mode) — driver-scale (broadcast), thousands
@@ -148,8 +149,8 @@ object Search {
       require(mode == "and" || mode == "or", s"bad mode '$mode' for qid $qid")
     }
     require(queries.map(_._1).distinct.size == queries.size, "duplicate qids")
-    new Searcher(spark, indexDir)
-      .topKBatch(queries.map { case (qid, ts, mode) => Searcher.BatchQuery(qid, ts, mode) }, k)
+    view(spark, indexDir)
+      .batchTopK(queries.map { case (qid, ts, mode) => Searcher.BatchQuery(qid, ts, mode) }, k)
       .select("qid", "doc_id", "score")
   }
 

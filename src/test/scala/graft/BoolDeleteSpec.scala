@@ -186,6 +186,9 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
         assert(searcher.topKLocal(ts, "or", 10, minShouldMatch = m) == gotD, "local msm")
         assert(got(searcher.topK(ts, "or", 10, minShouldMatch = m)) == gotD, "batch msm")
+        val batch = searcher.topKBatch(Seq(Searcher.BatchQuery(3L, ts, "or", minShouldMatch = m)), 10)
+          .orderBy($"rank").select($"doc_id", $"score")
+        assert(got(batch) == gotD, "batch-walk msm")
     }
     // msm = |terms| ≡ AND (same candidates, same scores)
     val viaMsm = got(Search.topK(spark, dir.toString, Seq("w1", "w2"), "or", 10, minShouldMatch = 2))
@@ -217,6 +220,9 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
         val searcher = new Searcher(spark, delDir.toString)
         assert(searcher.topKLocal(ts, mode, 10) == gotD, "local path sees tombstones")
         assert(got(searcher.topK(ts, mode, 10)) == gotD, "batch path sees tombstones")
+        val batch = searcher.topKBatch(Seq(Searcher.BatchQuery(5L, ts, mode)), 10)
+          .orderBy($"rank").select($"doc_id", $"score")
+        assert(got(batch) == gotD, "batch walk sees tombstones")
     }
 
     // batched retrieval composes tombstones too (same walks, one job)
@@ -229,6 +235,17 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       "batchTopK sees tombstones")
     assert(batchGot(2L) ==
       NaiveBm25.topKFiltered(corpus, Seq("w0"), "or", 10, id => !deleted(id)).map(_.docId))
+
+    // on the tombstoned index every term path agrees to the score bit,
+    // with must_not, msm and sidecar filters (materialized and streamed)
+    val paths = Seq(
+      Searcher.BatchQuery(1L, Seq("w1", "w2"), "or", mustNot = Seq("w3")),
+      Searcher.BatchQuery(2L, Seq("w1", "w2", "w3"), "or", minShouldMatch = 2),
+      Searcher.BatchQuery(3L, Seq("w0"), "or", graft.index.AttrPred.lang("en")),
+      Searcher.BatchQuery(4L, Seq("w1", "w2"), "and",
+        graft.index.AttrPred.Not(graft.index.AttrPred.lang("ru")), mustNot = Seq("w5")))
+    Seq(1 << 20, 16).foreach(cap =>
+      assert(IndexSearchSpec.assertSamePaths(delDir.toString, paths, allowListCap = cap) == paths.size))
   }
 
   test("delete is incremental and idempotent (sorted-union generations)") {

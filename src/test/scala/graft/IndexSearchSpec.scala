@@ -215,6 +215,15 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(gid == e.docId && math.abs(gs - e.score) < 1e-9, s"batch q$qi")
       }
     }
+    // every term path agrees to the score bit, must_not and msm composed
+    // with the materialized allow-lists
+    val paths = batch ++ Seq(
+      graft.query.Searcher.BatchQuery(3L, Seq("w1", "w2", "w3"), "or", AttrPred.lang("ru"),
+        mustNot = Seq("w4"), minShouldMatch = 2),
+      graft.query.Searcher.BatchQuery(4L, Seq("w0"), "or", AttrPred.lang("de"), mustNot = Seq("w1", "w2")),
+      graft.query.Searcher.BatchQuery(5L, Seq("w1", "w2"), "and", AttrPred.Not(AttrPred.lang("en")),
+        mustNot = Seq("nosuchterm")))
+    assert(IndexSearchSpec.assertSamePaths(dir.toString, paths) == paths.size)
   }
 
   test("batched Searcher: many distinct BROAD predicates stream under a tiny allow-list cap") {
@@ -249,6 +258,11 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(gid == e.docId && math.abs(gs - e.score) < 1e-9, s"broad-batch q${q.qid}")
       }
     }
+    // streamed and materialized filters, with must_not and msm, agree to
+    // the score bit with the driver-local walk and a view's top-k
+    val paths = batch.take(3) ++ batch.takeRight(1) ++ batch.take(3).map(q =>
+      q.copy(qid = q.qid + 100, terms = Seq("w1", "w2", "w3"), mustNot = Seq("w4"), minShouldMatch = 2))
+    assert(IndexSearchSpec.assertSamePaths(dir.toString, paths, allowListCap = 16) == paths.size)
   }
 
   test("phrase top-k: rank-identical to naive phrase oracle (incl. dup terms, filters)") {
@@ -690,6 +704,32 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(gid == e.docId && math.abs(gs - e.score) < 1e-9, s"$terms/$mode")
       }
     }
+    // the same set, plus must_not and msm variants, agrees to the score
+    // bit across the batch walk, the driver-local walk and a view's top-k
+    val variants = Seq(
+      graft.query.Searcher.BatchQuery(100L, Seq("w1", "w2"), "or", mustNot = Seq("w3")),
+      graft.query.Searcher.BatchQuery(101L, Seq("w0"), "or", mustNot = Seq("w1", "w2")),
+      graft.query.Searcher.BatchQuery(102L, Seq("w4", "w7"), "or", mustNot = Seq("nosuchterm")),
+      graft.query.Searcher.BatchQuery(103L, Seq("w10", "w20", "w30", "w40"), "or", minShouldMatch = 2),
+      graft.query.Searcher.BatchQuery(104L, Seq("w1", "w2", "w3"), "or", mustNot = Seq("w5"), minShouldMatch = 3))
+    assert(IndexSearchSpec.assertSamePaths(dir.toString, batch ++ variants) ==
+      queries.count { case (ts, m) => NaiveBm25.topK(corpus, ts, m, 10).nonEmpty } + variants.size)
+    // cachePostings: the walk reads the index tables from Spark's cache
+    // and answers the same, to the score bit
+    def bits(rows: Iterable[(Long, Long, Long, Double)]) =
+      rows.map(r => (r._1, r._2, r._3, java.lang.Double.doubleToRawLongBits(r._4))).toSeq.sorted
+    val cached = new graft.query.Searcher(spark, dir.toString, cachePostings = true)
+    try {
+      val df = cached.topKBatch(batch, 10)
+      assert(df.queryExecution.optimizedPlan.toString.contains("InMemoryRelation"),
+        s"cached batch plan reads no cache:\n${df.queryExecution.optimizedPlan}")
+      val gotCached = df.collect()
+        .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank"), r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
+      assert(bits(gotCached) == bits(got.values.flatten))
+    } finally {
+      IndexBuilder.readPostings(spark, dir.toString).unpersist()
+      IndexBuilder.readTerms(spark, dir.toString).unpersist()
+    }
   }
 
   test("driver-local serving path: rank-identical to oracle, falls back on hot queries") {
@@ -719,6 +759,16 @@ class IndexSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gotFb = searcher.topKLocal(Seq("w1", "w2"), "or", 10, maxBlocks = 1,
       attr = graft.index.AttrPred.lang("ru"))
     assert(gotFb.map(_._1) == expF.map(_.docId), "filtered local fallback ids")
+    // gated, fallback, batch and view answers are bit-identical with
+    // filters, must_not and msm composed
+    val paths = Seq(
+      graft.query.Searcher.BatchQuery(0L, Seq("w1", "w2"), "or", graft.index.AttrPred.lang("ru")),
+      graft.query.Searcher.BatchQuery(1L, Seq("w0", "w4999"), "or", graft.index.AttrPred.lang("en"),
+        mustNot = Seq("w3")),
+      graft.query.Searcher.BatchQuery(2L, Seq("w1", "w2"), "and", mustNot = Seq("w5")),
+      graft.query.Searcher.BatchQuery(3L, Seq("w10", "w20", "w30"), "or", graft.index.AttrPred.lang("de"),
+        minShouldMatch = 2))
+    assert(IndexSearchSpec.assertSamePaths(dir.toString, paths) == paths.size)
   }
 
   test("task retry does not double-count accumulator-carried metrics") {
@@ -848,5 +898,34 @@ object IndexSearchSpec {
       val tt = titleOf(p.text)
       Page(p.url, p.warc_ts, graft.sources.HtmlText.wrap(p.url, tt), tt, p.lang)
     }.filter(pred)
+  }
+
+  /** Every query of `batch` answers the same ids and raw score bits
+    * through the batch walk, the driver-local walk (gated, and forced to
+    * its distributed fallback with `maxBlocks = 1`) and a one-segment
+    * view's top-k. Returns the number of queries with hits.
+    */
+  def assertSamePaths(dir: String, batch: Seq[graft.query.Searcher.BatchQuery], k: Int = 10,
+                      allowListCap: Int = 1 << 20): Int = {
+    import org.scalatest.Assertions._
+    val spark = TestSpark.spark
+    def bits(hits: Seq[(Long, Double)]) =
+      hits.map { case (id, s) => (id, java.lang.Double.doubleToRawLongBits(s)) }
+    val searcher = new graft.query.Searcher(spark, dir, attrAllowListCap = allowListCap)
+    val batched = searcher.topKBatch(batch, k).select("qid", "rank", "doc_id", "score").collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq
+      }
+    val view = new graft.query.MultiSearcher(spark, Seq(dir))
+    batch.count { q =>
+      val want = bits(view.topK(q.terms, q.mode, k, attrFilter = q.attr, mustNot = q.mustNot,
+        minShouldMatch = q.minShouldMatch).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      assert(bits(batched.getOrElse(q.qid, Nil)) == want, s"topKBatch $q")
+      Seq(4096, 1).foreach { maxBlocks =>
+        val local = searcher.topKLocal(q.terms, q.mode, k, maxBlocks, q.mustNot, q.minShouldMatch, q.attr)
+        assert(bits(local) == want, s"topKLocal maxBlocks=$maxBlocks $q")
+      }
+      want.nonEmpty
+    }
   }
 }

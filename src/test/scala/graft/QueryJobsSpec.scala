@@ -17,12 +17,14 @@ import graft.sources.PagesGen
   * shuffle map stage + result, at most 3 jobs, on one index or a segment
   * family; an expansion query reuses its expansion's doc_freq rows, so it
   * adds no second dictionary job; a query_string tree resolves all its
-  * leaves' terms in one dictionary job; `Searcher` resolves a query's
-  * dictionary once, and the unscored match walks (aggregations, `_count`,
-  * sort-by-field) read no dictionary at all. more_like_this selects its
-  * terms and retrieves on one view, so it reads the dictionary once; the
-  * view's dis_max, synonym, phrase-prefix, phrase-count and explain
-  * paths keep their job counts and block decodes. The fielded calls run
+  * leaves' terms in one dictionary job; `Searcher` runs on a one-segment
+  * view, so its top-k, batch walk and driver-local walk (gated, or its
+  * distributed fallback) each resolve a query's dictionary once, and the
+  * unscored match walks (aggregations, `_count`, sort-by-field) read no
+  * dictionary at all. more_like_this selects its terms and retrieves on
+  * one view, so it reads the dictionary once; the view's dis_max,
+  * synonym, phrase-prefix, phrase-count and explain paths keep their job
+  * counts and block decodes. The fielded calls run
   * one walk over every field's view: a fielded expansion or `topKMulti`
   * reads each field's dictionary once (the expansion's memo answers the
   * walk's dfs, and a family's dfs are summed on the driver), the fielded
@@ -102,17 +104,40 @@ class QueryJobsSpec extends AnyFunSuite {
   test("Searcher.topK and topKLocal's distributed fallback run one dictionary job") {
     val dir = this.dir
     val searcher = new Searcher(spark, dir)
-    def dictionary(jobs: Seq[Seq[String]]) = jobs.filter(_.exists(_.startsWith("collect at Searcher.scala")))
+    // Searcher runs on a one-segment view, which reads the dictionary
+    def dictionary(jobs: Seq[Seq[String]]) = jobs.filter(_.exists(_.startsWith("collect at MultiSearcher.scala")))
     val topK = jobsOf(searcher.topK(Seq("w0", "w1"), "or", 10, mustNot = Seq("w2")).collect())
     assertNoInference("Searcher.topK", topK)
     assert(dictionary(topK).size == 1, s"Searcher.topK dictionary jobs: $topK")
-    assert(topK.size <= 6, s"Searcher.topK ran ${topK.size} jobs: $topK")
+    assert(topK.size <= 3, s"Searcher.topK ran ${topK.size} jobs: $topK")
     // maxBlocks = 1 forces the hot-query fallback: the block-count gate's
-    // collect, then the batch walk on the dfs already resolved
+    // collect, then the view's top-k on the dfs already resolved
     val local = jobsOf(searcher.topKLocal(Seq("w0", "w1"), "or", 10, maxBlocks = 1))
     assertNoInference("Searcher.topKLocal", local)
     assert(dictionary(local).size == 2, s"Searcher.topKLocal dictionary + gate jobs: $local")
-    assert(local.size <= 7, s"Searcher.topKLocal ran ${local.size} jobs: $local")
+    assert(local.size <= 4, s"Searcher.topKLocal ran ${local.size} jobs: $local")
+  }
+
+  test("gated topKLocal, a filtered topKBatch and Search.batchTopK: jobs pinned") {
+    import graft.index.AttrPred
+    val dir = this.dir
+    val searcher = new Searcher(spark, dir)
+    // (call, jobs, max jobs): the dictionary job, then the gate's collect
+    // (the limit may take a second pass) or the walk's exchange and result
+    val calls = Seq(
+      ("Searcher.topKLocal", jobsOf(searcher.topKLocal(Seq("w0", "w1"), "or", 10,
+        mustNot = Seq("w2"), attr = AttrPred.lang("en"))), 3),
+      ("Searcher.topKBatch", jobsOf(searcher.topKBatch(Seq(
+        Searcher.BatchQuery(1L, Seq("w0", "w1"), "or", AttrPred.lang("en")),
+        Searcher.BatchQuery(2L, Seq("w2"), "or", AttrPred.lang("en"), mustNot = Seq("w0")),
+        Searcher.BatchQuery(3L, Seq("w1", "w3"), "and")), 10).collect()), 4),
+      ("Search.batchTopK", jobsOf(Search.batchTopK(spark, dir,
+        Seq((1L, Seq("w0", "w1"), "or"), (2L, Seq("w2", "w3"), "and")), 10).collect()), 4))
+    calls.foreach { case (what, jobs, max) =>
+      info(s"$what: ${jobs.size} jobs")
+      assertNoInference(what, jobs)
+      assert(jobs.size <= max, s"$what ran ${jobs.size} jobs: $jobs")
+    }
   }
 
   test("aggregations, _count and sort-by-field read no dictionary; jobs and block decodes pinned") {
