@@ -148,10 +148,8 @@ object SparkEntry {
       import graft.index.SegmentFamily
       val name = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
       val root = s"/tmp/graft-index/$name-family"
-      val liveOk = SegmentFamily.read(root).nonEmpty &&
-        SegmentFamily.read(root).forall(s =>
-          IndexBuilder.readFormatVersion(s.dir) == IndexBuilder.FormatVersion)
-      if (!liveOk) {
+      val live = scala.util.Try(SegmentFamily.read(root)).getOrElse(Nil) // a pre-log cache throws
+      if (live.isEmpty || live.exists(s => IndexBuilder.readFormatVersion(s.dir) != IndexBuilder.FormatVersion)) {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
         val n = spark.read.parquet(s"$sfDir/documents.parquet").count()
         val cuts = Seq(0L, n / 3, 2 * n / 3, n)
@@ -184,7 +182,7 @@ object SparkEntry {
       import graft.index.{SegmentFamily, Tombstones}
       val name = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
       val root = s"/tmp/graft-index/$name-upfam"
-      val live = SegmentFamily.read(root)
+      val live = scala.util.Try(SegmentFamily.read(root)).getOrElse(Nil) // as in compactedFamilyFor
       val ok = live.size == 3 &&
         live.forall(s => IndexBuilder.readFormatVersion(s.dir) == IndexBuilder.FormatVersion) &&
         live.take(2).forall(s => Tombstones.count(s.dir) > 0)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft._
 import graft.functions.{Analyzer, Codec, DenseId}
-import graft.sources.HtmlText
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.sources.{Fsx, HtmlText}
 
 /** Spark-native inverted-index build (north rule): the replacement for the
   * reference's "export to Elasticsearch and let ES index" role
@@ -22,7 +23,7 @@ import graft.sources.HtmlText
   *   shuffle by (term, slice) [slice = doc-range salt: hot-term skew
   *   split] → sortWithinPartitions(term, slice, doc_id) → mapPartitions
   *   block-encode (delta+varbyte, per-block max-impact) → partitioned
-  *   write + metrics + checkpoint append.
+  *   write + metrics + checkpoint commit.
   *
   * Every stage is deterministic given (corpus, nGroups, nSlices,
   * blockSize) — resume after a kill reproduces a byte-identical index
@@ -49,9 +50,11 @@ object IndexBuilder {
     * (columns, codec, sidecars); readers reject stale caches instead of
     * crashing on missing columns. v3 = v2 + slice-aligned attribute
     * sidecar (`attrs/`); v4 = schema-driven sidecar (declared keyword +
-    * numeric fields; attrs schema persisted in meta.json).
+    * numeric fields; attrs schema persisted in meta.json); v5 = control
+    * state (checkpoint units, live tombstone generation) in the index
+    * directory's commit log `_log/` ([[graft.sources.Fsx]]).
     */
-  val FormatVersion = 4
+  val FormatVersion = 5
 
   /** `positions`: index token positions (phrase queries) — on by default,
     * matching ES text-field defaults the reference provisions.
@@ -139,23 +142,20 @@ object IndexBuilder {
         )
     }
 
-  // ---- checkpoint manifest (JSONL, append-only; ≙ EventLogPosition) ----
-  def ckptPath(indexDir: String): String = s"$indexDir/checkpoints.jsonl"
+  // ---- checkpoint units (≙ EventLogPosition): the index dir's log ----
+  def completedUnits(indexDir: String): Set[String] = unitsOf(Fsx.latest(indexDir))
 
-  def completedUnits(indexDir: String): Set[String] =
-    graft.sources.Fsx.readUtf8Opt(ckptPath(indexDir)) match {
-      case None => Set.empty
-      case Some(content) =>
-        content.linesIterator
-          .flatMap(line => """"unit"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(line).map(_.group(1)))
-          .toSet
-    }
+  private[index] def unitsOf(c: Fsx.Commit): Set[String] = {
+    val a = c.state.path("units")
+    (0 until a.size).map(i => a.get(i).asText()).toSet
+  }
 
-  private[index] def commitUnitPublic(indexDir: String, unit: String): Unit =
-    commitUnit(indexDir, unit)
+  /** Adds checkpoint `unit` to a commit's state. */
+  private[index] def addUnit(state: ObjectNode, unit: String): Unit = state.withArrayProperty("units").add(unit)
 
-  private def commitUnit(indexDir: String, unit: String): Unit =
-    graft.sources.Fsx.appendLine(ckptPath(indexDir), s"""{"unit":"$unit"}""")
+  /** Commits `unit` done (callers commit only units not done yet). */
+  private[index] def commitUnit(indexDir: String, unit: String): Unit =
+    Fsx.commit(Fsx.latest(indexDir))(addUnit(_, unit))
 
   /** BM25 impact of one posting (multiply by idf for the score term). */
   @inline def impact(tf: Int, dl: Int, avgDl: Double): Double =

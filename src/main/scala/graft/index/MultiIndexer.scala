@@ -45,7 +45,7 @@ object MultiIndexer {
     val wanted = corpora.map(c => indexName(template, c))
 
     // Retire only directories this indexer plausibly owns: name produced by
-    // the template AND carrying our checkpoint manifest. Anything else under
+    // the template AND carrying build checkpoints in its log. Anything else under
     // indexRoot (other templates' indexes, unrelated data) is left alone —
     // a mispointed indexRoot must not destroy it. Delete failures are
     // surfaced, not swallowed.
@@ -53,7 +53,7 @@ object MultiIndexer {
       java.util.regex.Pattern.quote(template).replace("[IBNAME]", "\\E.+\\Q")
     val removed = (existing -- wanted).toSeq.sorted.filter { name =>
       name.matches(templateShape) &&
-        graft.sources.Fsx.exists(s"$indexRoot/$name/checkpoints.jsonl")
+        IndexBuilder.completedUnits(s"$indexRoot/$name").nonEmpty
     }
     removed.foreach { name =>
       if (!graft.sources.Fsx.delete(s"$indexRoot/$name"))

@@ -13,11 +13,18 @@ import graft.sources.Fsx
   * query fan-out and term-dict duplication — grows unboundedly with
   * uptime.
   *
-  * The manifest (`segments.json`, atomically replaced) is the source of
-  * truth for which segments are live and their ORDER — order defines the
-  * family's global docID bases, so only ADJACENT runs ever merge
-  * (fastMerge concatenates doc ranges; an adjacent merge preserves every
-  * global id).
+  * The family's state is the `segments` list of the latest commit of
+  * the root's log (`_log/`, [[graft.sources.Fsx]]): which segments are
+  * live and their ORDER — order defines the family's global docID bases,
+  * so only ADJACENT runs ever merge (fastMerge concatenates doc ranges;
+  * an adjacent merge preserves every global id).
+  *
+  * Single writer, enforced: at most one process mutates a family. A
+  * mutation ([[append]], [[upsert]], [[maybeCompact]]) commits against
+  * the log version it read at its start, so a second writer that started
+  * from the same version fails with an error naming the root instead of
+  * silently dropping the first one's segments. Readers are unrestricted:
+  * they see the old or the new family, never a torn one.
   *
   * Policy (Lucene TieredMergePolicy, simplified): merge the
   * smallest-total adjacent run of `mergeFactor` segments whose sizes lie
@@ -31,82 +38,44 @@ object SegmentFamily {
 
   final case class Seg(dir: String, n_docs: Long)
 
-  private def manifestPath(root: String) = s"$root/segments.json"
-
-  /** SINGLE-WRITER CONTRACT (the one place it's documented — every other
-    * control file inherits it): at most one process mutates a family —
-    * builds, upserts, compactions, expirations are externally serialized,
-    * exactly as one Lucene IndexWriter owns an index. READERS are
-    * unrestricted: every manifest replace is write-tmp + rename, so a
-    * concurrent reader sees the old or the new family, never a torn one.
-    */
   private def segName(dir: String): String = {
     val d = if (dir.endsWith("/")) dir.dropRight(1) else dir
     d.substring(d.lastIndexOf('/') + 1)
   }
 
-  private def checksumOf(body: String): String =
-    java.lang.Long.toHexString {
-      val c = new java.util.zip.CRC32()
-      c.update(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      c.getValue
-    }
-
-  /** Parse with a real JSON reader (Jackson, shipped with Spark) and
-    * verify the checksum line — a truncated or hand-mangled manifest
-    * fails loudly instead of silently dropping segments (the r3 regex
-    * parser's failure mode). The legacy bare-array format (no checksum)
-    * still reads for in-place upgrades.
-    */
-  def read(root: String): Seq[Seg] = {
-    val s = Fsx.readUtf8Opt(manifestPath(root)).getOrElse(return Nil)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(s)
-    val arr =
-      if (node.isArray) node // legacy bare array, pre-checksum
-      else {
-        val body = node.get("segments")
-        require(body != null && body.isArray, s"malformed segment manifest: ${manifestPath(root)}")
-        val expect = node.get("checksum")
-        if (expect != null) {
-          val got = checksumOf(mapper.writeValueAsString(body))
-          require(got == expect.asText(),
-            s"segment manifest checksum mismatch (${expect.asText()} vs $got): ${manifestPath(root)}")
-        }
-        body
-      }
+  private def segsOf(c: Fsx.Commit): Seq[Seg] = {
+    val arr = c.state.path("segments")
     (0 until arr.size).map { i =>
       val e = arr.get(i)
-      Seg(s"$root/${e.get("dir").asText()}", e.get("n_docs").asLong())
+      Seg(s"${c.dir}/${e.get("dir").asText()}", e.get("n_docs").asLong())
     }
   }
 
-  /** Atomic manifest replace (tmp + rename): readers see old or new,
-    * never a torn list. Segment dirs are stored relative to the root;
-    * the checksum covers the serialized segments array.
+  /** Commits `segs` as the family on top of `base`; segment dirs are
+    * stored relative to the root.
     */
-  def write(root: String, segs: Seq[Seg]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.createArrayNode()
-    segs.foreach { s =>
-      val e = mapper.createObjectNode()
-      e.put("dir", segName(s.dir))
-      e.put("n_docs", s.n_docs)
-      arr.add(e)
+  private def commit(base: Fsx.Commit, segs: Seq[Seg]): Fsx.Commit =
+    Fsx.commit(base) { s =>
+      val arr = s.putArray("segments")
+      segs.foreach(g => arr.addObject().put("dir", segName(g.dir)).put("n_docs", g.n_docs))
     }
-    val doc = mapper.createObjectNode()
-    doc.set[com.fasterxml.jackson.databind.JsonNode]("segments", arr)
-    doc.put("checksum", checksumOf(mapper.writeValueAsString(arr)))
-    Fsx.writeUtf8Atomic(manifestPath(root), mapper.writeValueAsString(doc))
-  }
+
+  /** The live segments, in family order. */
+  def read(root: String): Seq[Seg] = segsOf(Fsx.latest(root))
+
+  /** Replaces the family with `segs`. */
+  def write(root: String, segs: Seq[Seg]): Unit = commit(Fsx.latest(root), segs)
 
   /** Register a freshly built segment (idempotent by dir name — a
     * replayed micro-batch re-registers the same segment).
     */
-  def append(spark: SparkSession, root: String, segDir: String): Unit = {
-    val cur = read(root)
+  def append(spark: SparkSession, root: String, segDir: String): Unit =
+    append(spark, Fsx.latest(root), segDir)
+
+  private def append(spark: SparkSession, base: Fsx.Commit, segDir: String): Unit = {
+    val cur = segsOf(base)
     if (!cur.exists(_.dir == segDir))
-      write(root, cur :+ Seg(segDir, IndexBuilder.readStats(spark, segDir).n_docs))
+      commit(base, cur :+ Seg(segDir, IndexBuilder.readStats(spark, segDir).n_docs))
   }
 
   /** Query the whole family as one logical index. */
@@ -128,7 +97,8 @@ object SegmentFamily {
     *      rewrite) — the urls are read from the new segment's docs table,
     *      which reads the same on every retry even if `pages` is a
     *      non-deterministic stream source;
-    *   3. append the new segment to the manifest.
+    *   3. append the new segment to the family, committed against the
+    *      log version read before step 1.
     * So an upsert runs the same number of jobs whatever the family's
     * size. Re-running the same `segName` is idempotent end-to-end
     * (resumable build, sorted-union tombstones, idempotent append) — the
@@ -149,12 +119,13 @@ object SegmentFamily {
     import spark.implicits._
     require(segName.matches("[A-Za-z0-9_-]+"), "segName must be filesystem-safe")
     val segDir = s"$root/$segName"
+    val base = Fsx.latest(root)
     IndexBuilder.flushOrBuild(spark, pages, segDir, cfg)
-    val older = read(root).map(_.dir).filterNot(_ == segDir) // never tombstone the new segment
+    val older = segsOf(base).map(_.dir).filterNot(_ == segDir) // never tombstone the new segment
     // urls read back from the NEW segment (resume-safe: identical on
     // every retry even if `pages` is a non-deterministic stream source)
     Tombstones.deleteByUrls(spark, older, IndexBuilder.readDocsTable(spark, segDir).select($"url").as[String])
-    append(spark, root, segDir)
+    append(spark, base, segDir)
   }
 
   /** Smallest-total adjacent run of `mergeFactor` same-tier segments, or
@@ -177,10 +148,11 @@ object SegmentFamily {
   }
 
   /** Run the merge policy to quiescence: while a qualifying adjacent run
-    * exists, fastMerge it into a new generation segment, atomically
-    * replace the run in the manifest, and delete the inputs. Each merge
-    * is decode-free (column remap); queries before/after are
-    * rank-identical (MultiSearcher over the new manifest ≡ old — tested).
+    * exists, fastMerge it into a new generation segment, commit the run's
+    * replacement (each commit chained on the one before, the first on the
+    * version read at the start), and delete the inputs. Each merge is
+    * decode-free (column remap); queries before/after are rank-identical
+    * (MultiSearcher over the new family ≡ old — tested).
     */
   def maybeCompact(
       spark: SparkSession,
@@ -192,7 +164,8 @@ object SegmentFamily {
       tierFactor: Double = 3.0
   ): Unit = {
     require(mergeFactor >= 2)
-    var segs = read(root)
+    var base = Fsx.latest(root)
+    var segs = segsOf(base)
     var gen = {
       // next generation id = 1 + max over existing gen-segment names
       val re = """gen-(\d+)""".r
@@ -203,33 +176,34 @@ object SegmentFamily {
       val (from, until) = p.get
       val run = segs.slice(from, until)
       val outDir = s"$root/gen-$gen"
+      // not in the family, so a crashed compaction's output: its copy of
+      // the inputs' tombstones may miss deletes made since
+      Fsx.delete(outDir)
       SegmentMerge.fastMerge(spark, run.map(_.dir), outDir)
       val merged = Seg(outDir, IndexBuilder.readStats(spark, outDir).n_docs)
       segs = segs.take(from) ++ Seq(merged) ++ segs.drop(until)
-      write(root, segs) // atomic cutover, then reclaim the inputs
-      run.foreach(s => graft.sources.Fsx.delete(s.dir))
+      base = commit(base, segs) // the cutover, then reclaim the inputs
+      run.foreach(s => Fsx.delete(s.dir))
       gen += 1
       p = planRun(segs.map(_.n_docs), mergeFactor, tierFactor)
     }
   }
 
   /** Point-in-time SNAPSHOT of the family (ES `_snapshot` role): read
-    * the manifest ONCE (atomic — a consistent segment list), copy each
-    * listed segment directory (immutable once manifested; their CURRENT
-    * tombstone generations ride along) to `dst`, then write the same
-    * manifest there. The snapshot is itself a fully functional family —
-    * "restore" is just pointing a searcher (or a new serving root) at
-    * it, optionally [[Fsx.copyTree]]-ing it back. Works across Hadoop
-    * filesystems (local → HDFS → s3a). Single-writer contract applies:
-    * snapshot while a concurrent writer is mutating tombstones of
-    * LISTED segments may capture a newer tombstone generation than the
-    * manifest read saw — still a consistent, serveable family (deletes
-    * are monotone), just not a strict point in time.
+    * the family ONCE (one commit — a consistent segment list), copy each
+    * listed segment directory (immutable once committed; its log, and so
+    * its live tombstone generation, rides along) to `dst`, then commit
+    * the same list there. The snapshot is itself a fully functional
+    * family — "restore" is just pointing a searcher (or a new serving
+    * root) at it, optionally [[Fsx.copyTree]]-ing it back. Works across
+    * Hadoop filesystems (local → HDFS → s3a). A delete that lands on a
+    * LISTED segment during the copy may or may not be captured — still a
+    * consistent, serveable family (deletes are monotone), just not a
+    * strict point in time.
     */
   def snapshot(root: String, dst: String): Seq[Seg] = {
     val segs = read(root)
     require(segs.nonEmpty, s"nothing to snapshot at $root")
-    Fsx.mkdirs(dst)
     segs.foreach { s => Fsx.copyTree(s.dir, s"$dst/${segName(s.dir)}") }
     write(dst, segs.map(s => Seg(s"$dst/${segName(s.dir)}", s.n_docs)))
     read(dst)

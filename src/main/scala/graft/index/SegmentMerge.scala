@@ -109,7 +109,7 @@ object SegmentMerge {
         .write.mode(SaveMode.Overwrite)
         .partitionBy("grp")
         .parquet(s"$outDir/staged")
-      IndexBuilder.commitUnitPublic(outDir, "staged")
+      IndexBuilder.commitUnit(outDir, "staged")
     }
 
     // input tombstones SURVIVE the merge (ADVICE r3: dropping them here
@@ -118,8 +118,8 @@ object SegmentMerge {
     // formula the merged docs table used above, and the union lands as
     // the output's gen-0 via the standard sorted-union import. Stats stay
     // Lucene-style (deleted docs still counted until purge) — exactly the
-    // inputs' own contract. Idempotent on resume (sorted-union semantics),
-    // checkpointed to skip the job entirely on replay.
+    // inputs' own contract. The import and the "tombstones" unit land in
+    // one commit, so a replay after it skips the job entirely.
     if (!IndexBuilder.completedUnits(outDir).contains("tombstones")) {
       val offsetB = IndexBuilder.readStats(spark, idxA).n_docs
       val nd = math.max(1L, IndexBuilder.readStats(spark, outDir).n_docs)
@@ -127,14 +127,14 @@ object SegmentMerge {
         Tombstones.deletedWithSliceDf(spark, d).map(df =>
           df.select((col("doc_id") + off).as("doc_id")))
       }
-      if (tombIns.nonEmpty) {
+      if (tombIns.isEmpty) IndexBuilder.commitUnit(outDir, "tombstones")
+      else {
         val remapped = tombIns.reduce(_ unionByName _)
           .withColumn("slice",
             least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nd AS INT)")))
           .select(col("slice"), col("doc_id"))
-        Tombstones.importInto(spark, outDir, remapped)
+        Tombstones.importInto(spark, outDir, remapped, "tombstones")
       }
-      IndexBuilder.commitUnitPublic(outDir, "tombstones")
     }
 
     val groupInput: Int => DataFrame = { g =>
@@ -251,16 +251,15 @@ object SegmentMerge {
     // bases(i), so each input's per-slice deleted-id file remaps by pure
     // column arithmetic — the same shape as the posting remap above. The
     // union lands as the output's gen-0; deleted docs stay excluded (and
-    // upserted urls stay single-valued) across compaction.
+    // upserted urls stay single-valued) across compaction. They land in
+    // the same commit as the "done" unit.
     val tombIns = segDirs.zipWithIndex.flatMap { case (d, i) =>
       Tombstones.deletedWithSliceDf(spark, d).map(df =>
         df.select(
           (col("slice") + sliceOffs(i)).as("slice"),
           (col("doc_id") + bases(i)).as("doc_id")))
     }
-    if (tombIns.nonEmpty)
-      Tombstones.importInto(spark, outDir, tombIns.reduce(_ unionByName _))
-
-    IndexBuilder.commitUnitPublic(outDir, "done")
+    if (tombIns.isEmpty) IndexBuilder.commitUnit(outDir, "done")
+    else Tombstones.importInto(spark, outDir, tombIns.reduce(_ unionByName _), "done")
   }
 }

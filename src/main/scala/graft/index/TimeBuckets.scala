@@ -5,12 +5,15 @@ import org.apache.spark.sql.functions._
 import graft.Page
 import graft.index.IndexBuilder.BuildConfig
 import graft.query.MultiSearcher
+import graft.sources.Fsx
 
 /** Time-bucketed index family — the engine's rendition of the reference's
   * ES time routing: rows land in `{prefix}-yyyyMM(dd/hh)` indices
   * (`ElasticSearchStorage.cs:293-320`) precisely so date-ranged queries
   * PRUNE whole indices. Here: one immutable index segment per
-  * `month(warc_ts)`, a JSON manifest of (bucket, n_docs), and a searcher
+  * `month(warc_ts)`, the list of (bucket, dir, n_docs) in the root's
+  * commit log (`_log/`, [[graft.sources.Fsx]], beside the root's own
+  * `staged_pages`/`ingest-*` checkpoint units), and a searcher
   * that selects only the buckets overlapping a date range (segment-level
   * partition pruning), applying the exact predicate in-WAND as the
   * residual filter.
@@ -19,7 +22,7 @@ import graft.query.MultiSearcher
   * (shuffle-free `partitionBy` write), then each bucket's build reads its
   * own partition with pruning — the same bounded-failure-domain trade the
   * per-group build makes, now along the time axis. docID spaces are
-  * per-segment; global ids = manifest-order base offsets (stable under
+  * per-segment; global ids = bucket-order base offsets (stable under
   * any pruning selection).
   */
 object TimeBuckets {
@@ -37,38 +40,27 @@ object TimeBuckets {
       .withZone(java.time.ZoneOffset.UTC)
       .format(ts.toInstant)
 
-  private def manifestPath(root: String) = s"$root/buckets.json"
-
-  /** FS-API + real JSON parse (same shape/contract as
-    * [[SegmentFamily.read]] — see there for the single-writer contract).
-    * `dir` is explicit since incremental ingest (a merged bucket lives in
-    * a new generation dir); legacy entries without it default to
-    * `seg-<bucket>`.
-    */
-  def readManifest(root: String): Seq[Bucket] = {
-    val s = graft.sources.Fsx.readUtf8Opt(manifestPath(root)).getOrElse(return Nil)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-    require(node.isArray, s"malformed bucket manifest: ${manifestPath(root)}")
-    (0 until node.size).map { i =>
-      val e = node.get(i)
-      val bucket = e.get("bucket").asText()
-      val dir = Option(e.get("dir")).map(_.asText()).getOrElse(s"seg-$bucket")
-      Bucket(bucket, s"$root/$dir", e.get("n_docs").asLong())
+  private def bucketsOf(c: Fsx.Commit): Seq[Bucket] = {
+    val arr = c.state.path("buckets")
+    (0 until arr.size).map { i =>
+      val e = arr.get(i)
+      Bucket(e.get("bucket").asText(), s"${c.dir}/${e.get("dir").asText()}", e.get("n_docs").asLong())
     }
   }
 
-  private def writeManifest(root: String, buckets: Seq[Bucket]): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.createArrayNode()
-    buckets.sortBy(_.bucket).foreach { b =>
-      val e = mapper.createObjectNode()
-      e.put("bucket", b.bucket)
-      e.put("dir", b.dir.substring(b.dir.lastIndexOf('/') + 1))
-      e.put("n_docs", b.n_docs)
-      arr.add(e)
+  /** The family's buckets, in bucket order. */
+  def readManifest(root: String): Seq[Bucket] = bucketsOf(Fsx.latest(root))
+
+  /** Commits `buckets` (and checkpoint `unit`, if given) on `base`. */
+  private def commit(base: Fsx.Commit, buckets: Seq[Bucket], unit: String = null): Unit =
+    Fsx.commit(base) { s =>
+      val arr = s.putArray("buckets")
+      buckets.sortBy(_.bucket).foreach { b =>
+        arr.addObject().put("bucket", b.bucket)
+          .put("dir", b.dir.substring(b.dir.lastIndexOf('/') + 1)).put("n_docs", b.n_docs)
+      }
+      if (unit != null) IndexBuilder.addUnit(s, unit)
     }
-    graft.sources.Fsx.writeUtf8Atomic(manifestPath(root), mapper.writeValueAsString(arr))
-  }
 
   /** Build (or resume) one index segment per month(warc_ts). */
   def build(
@@ -78,20 +70,21 @@ object TimeBuckets {
       cfg: BuildConfig = BuildConfig()
   ): Seq[Bucket] = {
     import spark.implicits._
-    if (readManifest(root).nonEmpty) return readManifest(root)
+    var base = Fsx.latest(root)
+    if (bucketsOf(base).nonEmpty) return bucketsOf(base)
 
     // one staging pass: pages partitioned by bucket (ES routing analog).
     // Label derived JVM-side via bucketOf — fixed UTC, immune to the
     // session timezone (selectBuckets formats query endpoints identically)
     val staged = s"$root/staged_pages"
-    if (!IndexBuilder.completedUnits(root).contains("staged_pages")) {
+    if (!IndexBuilder.unitsOf(base).contains("staged_pages")) {
       pages
         .map(p => (p.url, p.warc_ts, p.html, p.text, p.lang, bucketOf(p.warc_ts)))
         .toDF("url", "warc_ts", "html", "text", "lang", "bucket")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("bucket")
         .parquet(staged)
-      IndexBuilder.commitUnitPublic(root, "staged_pages")
+      base = Fsx.commit(base)(IndexBuilder.addUnit(_, "staged_pages"))
     }
     val buckets = spark.read.parquet(staged)
       .select($"bucket").distinct().as[String].collect().sorted
@@ -106,16 +99,17 @@ object TimeBuckets {
       IndexBuilder.build(spark, segPages, dir, cfg)
       Bucket(b, dir, IndexBuilder.readStats(spark, dir).n_docs)
     }
-    writeManifest(root, built.toSeq)
+    commit(base, built.toSeq)
     built.toSeq
   }
 
   /** Incrementally absorb a NEW batch of pages into an existing family:
     * per touched bucket, build a delta segment from the new pages and
     * decode-free fastMerge it with the bucket's current segment (fresh
-    * buckets just build); untouched buckets are never opened. The
-    * manifest is atomically replaced at the end — readers see the old or
-    * the new family, never a mix. This is the reference's steady-state
+    * buckets just build); untouched buckets are never opened. The new
+    * family lands in one commit at the end, with this ingest's "done"
+    * unit — readers see the old or the new family, never a mix. This is
+    * the reference's steady-state
     * ES shape: new events keep landing in their `{prefix}-yyyyMM` index
     * (`ElasticSearchStorage.cs:293-320`) without rebuilding history.
     *
@@ -137,19 +131,20 @@ object TimeBuckets {
   ): Seq[Bucket] = {
     import spark.implicits._
     require(ingestId.matches("[A-Za-z0-9_-]+"), "ingestId must be filesystem-safe")
-    if (IndexBuilder.completedUnits(root).contains(s"ingest-$ingestId-done"))
-      return readManifest(root) // this generation already fully applied
-    val existing = readManifest(root).map(b => b.bucket -> b).toMap
+    var base = Fsx.latest(root)
+    if (IndexBuilder.unitsOf(base).contains(s"ingest-$ingestId-done"))
+      return bucketsOf(base) // this generation already fully applied
+    val existing = bucketsOf(base).map(b => b.bucket -> b).toMap
 
     val staged = s"$root/ingest-$ingestId"
-    if (!IndexBuilder.completedUnits(root).contains(s"ingest-$ingestId-staged")) {
+    if (!IndexBuilder.unitsOf(base).contains(s"ingest-$ingestId-staged")) {
       pages
         .map(p => (p.url, p.warc_ts, p.html, p.text, p.lang, bucketOf(p.warc_ts)))
         .toDF("url", "warc_ts", "html", "text", "lang", "bucket")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("bucket")
         .parquet(staged)
-      IndexBuilder.commitUnitPublic(root, s"ingest-$ingestId-staged")
+      base = Fsx.commit(base)(IndexBuilder.addUnit(_, s"ingest-$ingestId-staged"))
     }
     val touched = spark.read.parquet(staged)
       .select($"bucket").distinct().as[String].collect().sorted
@@ -172,18 +167,17 @@ object TimeBuckets {
           Bucket(b, mergedDir, IndexBuilder.readStats(spark, mergedDir).n_docs)
       }
     }
-    val untouched = readManifest(root).filterNot(b => touched.contains(b.bucket))
+    val untouched = existing.values.filterNot(b => touched.contains(b.bucket)).toSeq
     val all = (untouched ++ updated).sortBy(_.bucket)
-    writeManifest(root, all)
-    // reclaim replaced segments + staging after the atomic cutover
-    // (FS-API deletes — java.io.File silently no-ops on HDFS/S3 and would
-    // leak every replaced segment forever)
+    commit(base, all, s"ingest-$ingestId-done")
+    // reclaim replaced segments + staging after the cutover (FS-API
+    // deletes — java.io.File silently no-ops on HDFS/S3 and would leak
+    // every replaced segment forever)
     touched.foreach { b =>
-      existing.get(b).foreach(old => graft.sources.Fsx.delete(old.dir))
-      graft.sources.Fsx.delete(s"$root/seg-$b-$ingestId-delta")
+      existing.get(b).foreach(old => Fsx.delete(old.dir))
+      Fsx.delete(s"$root/seg-$b-$ingestId-delta")
     }
-    graft.sources.Fsx.delete(staged)
-    IndexBuilder.commitUnitPublic(root, s"ingest-$ingestId-done")
+    Fsx.delete(staged)
     all
   }
 
@@ -191,22 +185,23 @@ object TimeBuckets {
     * reference routes events into `{prefix}-yyyyMM` indices
     * (`ElasticSearchStorage.cs:293-320`): expiring old data is a cheap
     * whole-index drop, never a doc-level delete. Drops every bucket
-    * strictly older than `cutoff`'s month: atomic manifest cutover
-    * first (readers see old or new family, never a torn one), then the
+    * strictly older than `cutoff`'s month: the family commit first
+    * (readers see old or new family, never a torn one), then the
     * dropped segment dirs are reclaimed. Returns the dropped buckets.
     *
     * Note the granularity contract: a bucket CONTAINING the cutoff is
     * kept whole (month precision) — residual intra-month cuts stay
     * query-side (sidecar ts filter), exactly like ES retention. Global
-    * docIDs (manifest-order bases) COMPACT after an expire; the stable
+    * docIDs (bucket-order bases) COMPACT after an expire; the stable
     * external identity is the url (≙ ES `_id`), never the family id.
     */
   def expire(root: String, cutoff: java.sql.Timestamp): Seq[Bucket] = {
     val cut = bucketOf(cutoff)
-    val (drop, keep) = readManifest(root).partition(_.bucket < cut)
+    val base = Fsx.latest(root)
+    val (drop, keep) = bucketsOf(base).partition(_.bucket < cut)
     if (drop.nonEmpty) {
-      writeManifest(root, keep)
-      drop.foreach(b => graft.sources.Fsx.delete(b.dir))
+      commit(base, keep)
+      drop.foreach(b => Fsx.delete(b.dir))
     }
     drop
   }
@@ -225,7 +220,7 @@ object TimeBuckets {
   /** Searcher over the buckets overlapping [from, to): whole non-matching
     * segments are never opened (the pruning win), and callers pass the
     * exact `warc_ts` predicate as the searcher's docFilter for the
-    * residual intra-month cut. Global docIDs use manifest-order bases, so
+    * residual intra-month cut. Global docIDs use bucket-order bases, so
     * answers are stable regardless of how many buckets were pruned.
     */
   def searcher(

@@ -8,6 +8,7 @@ import graft.CorpusStats
 import graft.functions.{Codec, DenseId}
 import graft.index.IndexBuilder.BuildConfig
 import graft.query.{DocFilter, Filters, NotFilter, SortedIdsSet}
+import graft.sources.Fsx
 
 /** Deleted-document tombstones over an immutable index — the Lucene/ES
   * delete model (the reference's ES sink inherits it: a delete-by-query
@@ -31,11 +32,13 @@ import graft.query.{DocFilter, Filters, NotFilter, SortedIdsSet}
   *     slice) or the stats drift worth reclaiming.
   *
   * Layout: `tombstones/gen-<G>/slice-<s>.bin` (magic+version, varint
-  * count, varint doc-id gaps, ascending) + `tombstones/CURRENT`
-  * (`<G> <totalDeleted>`), replaced atomically — readers resolve CURRENT
-  * once per query (driver-side, via [[handle]]) and only ever open one
-  * complete generation. Single-writer: concurrent [[delete]] calls on one
-  * index must be externally serialized (same contract as the builder).
+  * count, varint doc-id gaps, ascending). The live generation and its
+  * deleted total are the `tombstones` entry of the index's commit log
+  * (`_log/`, [[graft.sources.Fsx]], beside the build checkpoints).
+  * Readers resolve it once per query (driver-side, via [[handle]]) and
+  * only ever open one complete generation. A publish renames its
+  * generation into place, then commits on the log version it read before
+  * its job, so a concurrent second [[delete]] fails, naming the index.
   */
 object Tombstones {
 
@@ -44,23 +47,16 @@ object Tombstones {
 
   private def tombDir(indexDir: String) = s"$indexDir/tombstones"
   private def genDir(indexDir: String, gen: Int) = s"${tombDir(indexDir)}/gen-$gen"
-  private def currentPath(indexDir: String) = new Path(s"${tombDir(indexDir)}/CURRENT")
+  private val GenName = """gen-(\d+)""".r
 
-  private def fsOf(p: Path): FileSystem = p.getFileSystem(graft.sources.Fsx.conf)
+  private def fsOf(p: Path): FileSystem = p.getFileSystem(Fsx.conf)
+
+  /** (generation, totalDeleted) of a log commit's live tombstone set. */
+  private def stateOf(c: Fsx.Commit): Option[(Int, Long)] =
+    Option(c.state.get("tombstones")).map(t => (t.get("gen").asInt, t.get("deleted").asLong))
 
   /** (generation, totalDeleted) of the live tombstone set, if any. */
-  def current(indexDir: String): Option[(Int, Long)] = {
-    val p = currentPath(indexDir)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val s = new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      val parts = s.split("\\s+")
-      Some((parts(0).toInt, parts(1).toLong))
-    } finally in.close()
-  }
+  def current(indexDir: String): Option[(Int, Long)] = stateOf(Fsx.latest(indexDir))
 
   /** Total deleted docs (0 when no tombstones). */
   def count(indexDir: String): Long = current(indexDir).map(_._2).getOrElse(0L)
@@ -149,7 +145,8 @@ object Tombstones {
     * writes nothing). One job: matching (slice, doc_id) pairs shuffle by
     * slice (column-pruned scan), each slice task merges with the current
     * generation's file and writes the next generation; the driver carries
-    * untouched slices' files forward and cuts CURRENT over atomically.
+    * untouched slices' files forward and commits the new generation to
+    * the index's log.
     */
   def delete(spark: SparkSession, indexDir: String, pred: Column): Long =
     deleteWhere(spark, Seq(indexDir), _.where(pred)).head
@@ -195,126 +192,110 @@ object Tombstones {
 
   /** Collect another index's live tombstones into `indexDir` (merge
     * lineage: the caller has already remapped (slice, doc_id) into THIS
-    * index's coordinate space). Same sorted-union semantics as a delete,
-    * so re-importing after a resumed merge is idempotent.
+    * index's coordinate space) and mark checkpoint `unit` done in the same
+    * commit. Same sorted-union semantics as a delete, so re-importing
+    * after a resumed merge is idempotent.
     */
-  private[index] def importInto(spark: SparkSession, indexDir: String, idsDf: DataFrame): Long =
+  private[index] def importInto(spark: SparkSession, indexDir: String, idsDf: DataFrame, unit: String): Long =
     applyDeletes(spark, Seq(indexDir),
-      idsDf.toDF("slice", "doc_id").select(lit(0).as("seg"), col("slice"), col("doc_id"))).head
+      idsDf.toDF("slice", "doc_id").select(lit(0).as("seg"), col("slice"), col("doc_id")), unit).head
 
   /** Marks each (seg, slice, doc_id) row of `idsDf` deleted in
     * `indexDirs(seg)`; returns each index's total deleted count. One job:
     * rows shuffle by (seg, slice), and each task merges its ids with that
     * index's current generation. A task writes its slice's next file only
-    * when it adds an id, into the index's STAGING dir, renamed into place
-    * only after the whole job succeeds: a failed attempt's partial slice
-    * files must never become live in a later generation under a different
-    * predicate (they'd exclude docs without being counted in CURRENT).
-    * The driver then publishes every index that gained ids; an index that
-    * gained none keeps its generation and writes nothing.
+    * when it adds an id, into this call's own STAGING dir of the index,
+    * published only after the whole job succeeds: a failed or concurrent
+    * attempt's partial slice files never become part of a generation
+    * (they'd exclude docs without being counted in its total). The driver
+    * then publishes every index that gained ids; an index that gained none
+    * keeps its generation and commits only `unit`, if one is given.
     */
-  private def applyDeletes(spark: SparkSession, indexDirs: Seq[String], idsDf: DataFrame): Seq[Long] = {
+  private def applyDeletes(spark: SparkSession, indexDirs: Seq[String], idsDf: DataFrame,
+                           unit: String = null): Seq[Long] = {
     import spark.implicits._
-    // one staging dir per index: two entries of one index would race on it
+    // one publish per index: two entries of one index would commit on the same log version
     require(indexDirs.distinct.size == indexDirs.size, s"indexDirs must be distinct: $indexDirs")
     val dirs = indexDirs.toArray
-    val prev = dirs.map(current)
+    val logs = dirs.map(Fsx.latest) // each publish commits on the version read here
+    val prev = logs.map(stateOf)
     val prevGens = prev.map(_.map(_._1).getOrElse(-1))
-    val staging = dirs.indices.map(i => s"${genDir(dirs(i), prevGens(i) + 1)}.tmp").toArray
-    staging.foreach(graft.sources.Fsx.delete)
+    val staging = dirs.map(d => s"${tombDir(d)}/.staging-${java.util.UUID.randomUUID}")
 
     // per-(index, slice) merge task: old ids ∪ new ids → next generation's
     // file. Driver collect: one row per touched slice, so at most nSlices
     // rows per index.
-    val written = idsDf
-      .select($"seg", $"slice".cast("int"), $"doc_id")
-      .as[(Int, Int, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .mapGroups { (key, it) =>
-        val (seg, slice) = key
-        val fresh = it.map(_._3).toArray
-        java.util.Arrays.sort(fresh)
-        val old = if (prevGens(seg) < 0) Array.emptyLongArray else readSlice(dirs(seg), prevGens(seg), slice)
-        // sorted union, dedup
-        val merged = new scala.collection.mutable.ArrayBuffer[Long](old.length + fresh.length)
-        var i = 0; var j = 0
-        while (i < old.length || j < fresh.length) {
-          val v =
-            if (j >= fresh.length || (i < old.length && old(i) <= fresh(j))) { val x = old(i); i += 1; x }
-            else { val x = fresh(j); j += 1; x }
-          if (merged.isEmpty || merged.last != v) merged += v
+    try {
+      val written = idsDf
+        .select($"seg", $"slice".cast("int"), $"doc_id")
+        .as[(Int, Int, Long)]
+        .groupByKey(r => (r._1, r._2))
+        .mapGroups { (key, it) =>
+          val (seg, slice) = key
+          val fresh = it.map(_._3).toArray
+          java.util.Arrays.sort(fresh)
+          val old = if (prevGens(seg) < 0) Array.emptyLongArray else readSlice(dirs(seg), prevGens(seg), slice)
+          // sorted union, dedup
+          val merged = new scala.collection.mutable.ArrayBuffer[Long](old.length + fresh.length)
+          var i = 0; var j = 0
+          while (i < old.length || j < fresh.length) {
+            val v =
+              if (j >= fresh.length || (i < old.length && old(i) <= fresh(j))) { val x = old(i); i += 1; x }
+              else { val x = fresh(j); j += 1; x }
+            if (merged.isEmpty || merged.last != v) merged += v
+          }
+          // merged ⊇ old, so it adds ids iff it is longer
+          if (merged.length > old.length) writeSlice(staging(seg), slice, merged.toArray)
+          (seg, slice, (merged.length - old.length).toLong)
         }
-        // merged ⊇ old, so it adds an id iff it is longer
-        if (merged.length > old.length) {
-          writeSlice(staging(seg), slice, merged.toArray)
-          (seg, slice, merged.length.toLong)
-        } else (seg, slice, -1L)
-      }
-      .collect()
+        .collect()
 
-    dirs.indices.map { i =>
-      val touched = written.collect { case (seg, slice, n) if seg == i && n >= 0 => slice -> n }.toMap
-      if (touched.isEmpty) prev(i).map(_._2).getOrElse(0L)
-      else publish(dirs(i), prevGens(i), staging(i), touched)
-    }
+      dirs.indices.map { i =>
+        val added = written.collect { case (seg, slice, n) if seg == i && n > 0 => slice -> n }.toMap
+        if (added.nonEmpty) publish(logs(i), prev(i), staging(i), added, unit)
+        else {
+          if (unit != null) Fsx.commit(logs(i))(IndexBuilder.addUnit(_, unit))
+          prev(i).map(_._2).getOrElse(0L)
+        }
+      }
+    } finally staging.foreach(Fsx.delete) // a published one is already renamed away
   }
 
-  /** Publish a staged generation of `indexDir`: carry the previous
-    * generation's untouched slice files into it, rename it into place,
-    * cut CURRENT over atomically and reclaim the previous generation.
-    * Returns the new total deleted count.
+  /** Publish a staged generation of the index whose log read `base`
+    * (live generation and total `prev`; `added` ids per touched slice):
+    * carry the previous generation's untouched slice files into it,
+    * rename it into place under a number no generation dir has yet (one
+    * a crashed writer renamed but never committed is never reused),
+    * commit it — with `unit`, if given — on `base`, and delete the older
+    * generation dirs. Returns the new total deleted count.
     */
-  private def publish(indexDir: String, pg: Int, outDir: String, touched: Map[Int, Long]): Long = {
-    val nextGen = pg + 1
-    val finalDir = genDir(indexDir, nextGen)
+  private def publish(base: Fsx.Commit, prev: Option[(Int, Long)], outDir: String,
+                      added: Map[Int, Long], unit: String): Long = {
+    val indexDir = base.dir
     // carry untouched slices' files into the new generation (driver-side
     // copy of small id files)
-    var total = touched.values.sum
-    if (pg >= 0) {
+    prev.foreach { case (pg, _) =>
       val oldDir = new Path(genDir(indexDir, pg))
       val fs = fsOf(oldDir)
       fs.listStatus(oldDir).foreach { st =>
         val name = st.getPath.getName // slice-<s>.bin
-        val s = name.stripPrefix("slice-").stripSuffix(".bin").toInt
-        if (!touched.contains(s)) {
-          org.apache.hadoop.fs.FileUtil.copy(
-            fs, st.getPath, fs, new Path(s"$outDir/$name"), false, graft.sources.Fsx.conf)
-          total += readSliceCount(indexDir, pg, s)
-        }
+        if (!added.contains(name.stripPrefix("slice-").stripSuffix(".bin").toInt))
+          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, new Path(s"$outDir/$name"), false, Fsx.conf)
       }
     }
-
-    // publish the staged generation (delete-then-rename; readers never see
-    // it until CURRENT cuts over below, so the gap is harmless)
-    graft.sources.Fsx.delete(finalDir)
-    locally {
-      val (f, p) = graft.sources.Fsx.fs(outDir)
-      require(f.rename(p, new Path(finalDir)), s"tombstone gen publish failed: $finalDir")
+    val total = prev.map(_._2).getOrElse(0L) + added.values.sum
+    val gens = Fsx.listNames(tombDir(indexDir)).collect { case GenName(g) => g.toInt }
+    val nextGen = (gens ++ prev.map(_._1)).maxOption.getOrElse(-1) + 1
+    Fsx.renameNew(outDir, genDir(indexDir, nextGen))
+    Fsx.commit(base) { s =>
+      s.putObject("tombstones").put("gen", nextGen).put("deleted", total)
+      if (unit != null) IndexBuilder.addUnit(s, unit)
     }
-
-    // atomic CURRENT cutover (tmp + rename)
-    val cur = currentPath(indexDir)
-    val fs = fsOf(cur)
-    val tmp = new Path(cur.getParent, s"CURRENT.tmp-$nextGen")
-    val out = fs.create(tmp, true)
-    try out.write(s"$nextGen $total".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(cur, false)
-    require(fs.rename(tmp, cur), s"tombstone CURRENT cutover failed: $cur")
-    // old generation reclaimed AFTER cutover (readers that resolved the
-    // old gen before the cutover have already opened their files)
-    if (pg >= 0) fs.delete(new Path(genDir(indexDir, pg)), true)
+    // the previous generation and any a crashed or losing writer left (a
+    // query that resolved the previous one but has not opened its slice
+    // files yet reads them as empty)
+    gens.foreach(g => Fsx.delete(genDir(indexDir, g)))
     total
-  }
-
-  private def readSliceCount(indexDir: String, gen: Int, slice: Int): Long = {
-    val p = new Path(s"${genDir(indexDir, gen)}/slice-$slice.bin")
-    val fs = fsOf(p)
-    val in = new DataInputStream(new BufferedInputStream(fs.open(p), 1 << 10))
-    try {
-      require(in.readInt() == Magic && in.readInt() == Version, s"bad tombstone header: $p")
-      readVar(in)
-    } finally in.close()
   }
 
   /** Deleted ids as a DataFrame (doc_id) — purge's anti-join side. Files
@@ -429,7 +410,7 @@ object Tombstones {
         .write.mode(SaveMode.Overwrite)
         .partitionBy("grp")
         .parquet(s"$outDir/staged")
-      IndexBuilder.commitUnitPublic(outDir, "staged")
+      IndexBuilder.commitUnit(outDir, "staged")
     }
 
     val groupInput: Int => DataFrame = { g =>
@@ -439,6 +420,6 @@ object Tombstones {
     IndexBuilder.buildGroups(spark, outDir, useCfg, groupInput)
     // remap scaffold only feeds the staged join — reclaim once built
     // (FS-API delete: a java.io.File delete silently no-ops on HDFS/S3)
-    graft.sources.Fsx.delete(s"$outDir/docs_remap")
+    Fsx.delete(s"$outDir/docs_remap")
   }
 }

@@ -447,15 +447,18 @@ final class MultiSearcher(
         // cardinality GATE, not a selection: if more than maxBlocks blocks
         // exist, which maxBlocks + 1 arrive is nondeterministic — and
         // irrelevant, because they are then all discarded. The local walk
-        // only ever scores a COMPLETE block set.
-        val rows = blocks(Seq(this -> (present ++ q.exclude))).limit(maxBlocks + 1)
-          .collect() // ≤ maxBlocks + 1 rows
+        // only ever scores a COMPLETE block set. One job (a limit may run
+        // two): each partition ships, and the driver keeps, ≤ maxBlocks + 1.
+        val rows = scala.collection.mutable.ArrayBuffer.empty[Block]
+        spark.sparkContext.runJob(blocks(Seq(this -> (present ++ q.exclude))).rdd,
+          (it: Iterator[Block]) => it.take(maxBlocks + 1).toArray,
+          (_: Int, part: Array[Block]) => rows ++= part.take(maxBlocks + 1 - rows.length))
         if (rows.length > maxBlocks)
           topK(queryTerms, mode, k, attrFilter = attrFilter, mustNot = mustNot, minShouldMatch = minShouldMatch)
             .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq // ≤ k rows
         else {
           val c = segCtx(q)
-          rows.groupBy(r => (r.seg, r.slice)).iterator.flatMap { case ((seg, slice), rs) =>
+          rows.toArray.groupBy(r => (r.seg, r.slice)).iterator.flatMap { case ((seg, slice), rs) =>
             MultiSearcher.withCursors(c.dirs(seg), slice)(open => MultiSearcher.termWalk(
               c, seg, slice, rs.groupBy(_.term), () => if (attrFilter == null) null else open(attrFilter)))
           }.toSeq.sortBy(h => (-h.score, h.doc_id)).take(k).map(h => (h.doc_id, h.score))

@@ -1,30 +1,29 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 /** Control-plane filesystem shim: every manifest, checkpoint, and
   * reclamation in the engine goes through the Hadoop `FileSystem` API so
   * index DATA and index STATE live on the same filesystem — the
-  * reference's key restartability invariant is "all state lives in the
-  * sink, restartable from anywhere" (`ElasticSearchStorage.cs:56-93`,
-  * the ES-stored `EventLogPosition`), and a `java.nio.file` control plane
-  * silently breaks it the moment `indexDir` is `hdfs://…` or `s3a://…`
-  * (data lands remotely, the first manifest write fails — or worse,
-  * `java.io.File.delete` no-ops and leaks replaced segments forever).
+  * reference's restartability invariant, "all state lives in the sink"
+  * (`ElasticSearchStorage.cs:56-93`), holds at `hdfs://…` or `s3a://…`.
   *
-  * Portability notes baked in:
-  *   - no `fs.append`: object stores and the local checksum FS reject it,
-  *     so [[appendLine]] is read + rewrite-via-rename (fine under the
-  *     engine-wide single-writer contract on control files, and these
-  *     files are tiny);
-  *   - atomic-ish replace = write tmp + delete dst + rename (HDFS rename
-  *     won't overwrite); readers therefore treat a briefly-missing
-  *     control file as "empty", never as corruption;
-  *   - [[conf]] resolves the process classpath's defaultFS, on the
-  *     driver and on executors alike, so `file://` paths behave
-  *     identically to bare local paths in tests.
+  * Every mutable control state (a family's segments or buckets, an
+  * index's build checkpoints and live tombstone generation) is the latest
+  * commit of its directory's log, `_log/<n>.json`: the whole state, its
+  * number and a CRC. Commit n+1 is computed from commit n and renamed to
+  * its number WITHOUT overwrite ([[createOnce]]), so readers see commit n
+  * or n+1, never a torn or missing state, and the single-writer contract
+  * is enforced: a second writer from the same commit finds its number
+  * taken and fails, naming the directory. Commits older than the one
+  * before the newest are pruned. Commits hold no timestamps or hostnames.
+  * The no-overwrite rename checks, then renames: HDFS refuses a rename
+  * onto an existing file itself, but on the local FS two writers racing
+  * inside that window are not caught.
   */
 object Fsx {
 
@@ -61,20 +60,19 @@ object Fsx {
 
   def readUtf8Opt(path: String): Option[String] = {
     val (f, p) = fs(path)
-    if (!f.exists(p)) None
-    else {
+    try {
       val in = f.open(p)
       try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8))
       finally in.close()
-    }
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   def readUtf8(path: String): String =
     readUtf8Opt(path).getOrElse(throw new java.io.FileNotFoundException(path))
 
-  /** Plain (non-atomic) create-or-overwrite — for files whose readers
-    * tolerate torn writes or that are written once before any reader
-    * exists (e.g. meta.json inside a not-yet-committed index dir).
+  /** Plain (non-atomic) create-or-overwrite — for files written once
+    * before any reader exists (e.g. meta.json inside a not-yet-committed
+    * index dir).
     */
   def writeUtf8(path: String, content: String): Unit = {
     val (f, p) = fs(path)
@@ -84,68 +82,116 @@ object Fsx {
     finally out.close()
   }
 
-  /** Replace-via-rename: readers see the old content or the new, never a
-    * torn file and never a missing one. The primary path is
-    * `FileContext.rename(OVERWRITE)`, which is atomic on HDFS and the
-    * local FS — a concurrent reader (the documented single-writer /
-    * many-reader contract) can never observe the manifest absent, and a
-    * crash cannot lose it. Only stores without atomic rename (some object
-    * stores expose no `AbstractFileSystem`) fall back to delete+rename,
-    * where readers must treat a briefly-missing control file as "retry
-    * once, then empty".
+  /** Rename `src` (a file or a directory) to `dst` unless `dst` exists:
+    * then it throws `FileAlreadyExistsException` naming `dst`. Not
+    * `FileContext.rename(NONE)`: on the local FS that forks a `stat`
+    * process per call (~30 ms against ~0.1 ms on a 4-core VM).
     */
-  def writeUtf8Atomic(path: String, content: String): Unit = {
+  def renameNew(src: String, dst: String): Unit = {
+    val (f, d) = fs(dst)
+    if (f.exists(d) || !f.rename(new Path(src), d))
+      throw (if (f.exists(d)) new FileAlreadyExistsException(s"rename destination $dst already exists")
+             else new java.io.IOException(s"rename $src -> $dst failed"))
+  }
+
+  /** Publish `content` at `path` unless something is there (then throws
+    * as [[renameNew]]): a temp file beside it, [[renameNew]]d, so a
+    * reader sees no file or the whole file.
+    */
+  def createOnce(path: String, content: String): Unit = {
     val (f, p) = fs(path)
-    if (p.getParent != null) f.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = f.create(tmp, true)
+    val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = f.create(tmp, false)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    try {
-      val fc = FileContext.getFileContext(p.toUri, conf)
-      fc.rename(tmp, p, Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException | _: java.io.FileNotFoundException =>
-        // No AbstractFileSystem for this scheme — non-atomic fallback.
-        f.delete(p, false)
-        require(f.rename(tmp, p), s"atomic replace failed: $path")
-    }
+    onCommitStep("written", path)
+    try renameNew(tmp.toString, path)
+    catch { case e: java.io.IOException => f.delete(tmp, false); throw e }
   }
 
-  /** Schemes where `fs.append` threw UnsupportedOperationException — skip
-    * the attempt on subsequent calls instead of paying an exception each
-    * time (object stores, checksum FS variants without append).
-    */
-  private val noAppendSchemes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // ---- commit log -------------------------------------------------------
 
-  /** Append one line (adds the trailing '\n') to a journal file. True
-    * `fs.append` where the store supports it — O(line) per commit and a
-    * crash can lose at most the line being written, never prior history.
-    * Stores without append (object stores) fall back to read + atomic
-    * rewrite; the rewrite itself is crash-safe via [[writeUtf8Atomic]].
-    * Single-writer per file, as everywhere in the control plane.
+  /** Commit `version` of `dir`'s log and the whole state it holds
+    * (version 0, empty state: no log).
     */
-  def appendLine(path: String, line: String): Unit = {
-    val (f, p) = fs(path)
-    val scheme = Option(p.toUri.getScheme).getOrElse(f.getScheme)
-    val bytes = (line + "\n").getBytes(StandardCharsets.UTF_8)
-    if (!noAppendSchemes.contains(scheme) && f.exists(p)) {
-      try {
-        val out = f.append(p)
-        try out.write(bytes)
-        finally out.close()
-        return
-      } catch {
-        case _: UnsupportedOperationException | _: java.io.IOException =>
-          noAppendSchemes.add(scheme)
+  final case class Commit(dir: String, version: Long, state: ObjectNode)
+
+  private val mapper = new ObjectMapper()
+  private val CommitName = """(\d+)\.json""".r
+  private val TmpName = """\.(\d+)\.json\..*\.tmp""".r
+  private val LegacyFiles = Seq("segments.json", "buckets.json", "tombstones/CURRENT", "checkpoints.jsonl")
+
+  /** Test hook, called with a step and the path published or read:
+    * "before" (nothing written) and "renamed" (older commits not pruned)
+    * in [[commit]], "written" (temp file not renamed) in [[createOnce]],
+    * "listed" (newest commit chosen, not read) in [[latest]].
+    */
+  @volatile private[graft] var onCommitStep: (String, String) => Unit = (_, _) => ()
+
+  private def logDir(dir: String) = s"$dir/_log"
+  private def commitPath(dir: String, v: Long) = s"${logDir(dir)}/$v.json"
+
+  private def crcOf(state: String): String = {
+    val c = new java.util.zip.CRC32()
+    c.update(state.getBytes(StandardCharsets.UTF_8))
+    java.lang.Long.toHexString(c.getValue)
+  }
+
+  /** The latest commit of `dir`'s log. Throws when a commit's JSON,
+    * number or CRC does not check out, and when the directory has no log
+    * but a control file of the layout before it (reading that as "no
+    * state" would lose the state silently).
+    */
+  def latest(dir: String): Commit = {
+    val versions = listNames(logDir(dir)).collect { case CommitName(v) => v.toLong }
+    if (versions.isEmpty) {
+      LegacyFiles.find(f => exists(s"$dir/$f")).foreach(f => throw new java.io.IOException(
+        s"$dir/$f: control file of the layout before the commit log (_log/); rebuild this directory"))
+      Commit(dir, 0L, mapper.createObjectNode())
+    } else {
+      val path = commitPath(dir, versions.max)
+      onCommitStep("listed", path)
+      readUtf8Opt(path) match {
+        case None => latest(dir) // pruned after the listing: a newer commit exists
+        case Some(s) =>
+          val node = scala.util.Try(mapper.readTree(s)).getOrElse(mapper.missingNode())
+          val state = node.path("state")
+          if (!state.isObject || node.path("version").asLong(-1L) != versions.max ||
+              node.path("crc").asText() != crcOf(mapper.writeValueAsString(state)))
+            throw new java.io.IOException(s"corrupt commit $path: JSON, version or CRC mismatch")
+          Commit(dir, versions.max, state.asInstanceOf[ObjectNode])
       }
     }
-    val prev = readUtf8Opt(path).getOrElse("")
-    writeUtf8Atomic(path, prev + line + "\n")
   }
 
-  /** Non-recursive child names (empty for a missing dir). */
+  /** Commit `base.version + 1`: a copy of `base.state` changed by `edit`.
+    * Throws `FileAlreadyExistsException` naming the directory when that
+    * number is taken — another writer committed since `base` was read.
+    */
+  def commit(base: Commit)(edit: ObjectNode => Unit): Commit = {
+    val state = base.state.deepCopy()
+    edit(state)
+    val v = base.version + 1
+    val doc = mapper.createObjectNode().put("version", v)
+      .set[ObjectNode]("state", state).put("crc", crcOf(mapper.writeValueAsString(state)))
+    val path = commitPath(base.dir, v)
+    onCommitStep("before", path)
+    try createOnce(path, mapper.writeValueAsString(doc))
+    catch {
+      case e: FileAlreadyExistsException => throw new FileAlreadyExistsException(
+        s"${base.dir}: commit $v exists; another writer committed after version ${base.version} was read")
+    }
+    onCommitStep("renamed", path)
+    // keep this commit and the one before it; temp files of numbers up to
+    // this one can never be renamed into place any more
+    listNames(logDir(base.dir)).foreach {
+      case n @ CommitName(o) if o.toLong < v - 1 => delete(s"${logDir(base.dir)}/$n")
+      case n @ TmpName(o) if o.toLong <= v => delete(s"${logDir(base.dir)}/$n")
+      case _ =>
+    }
+    Commit(base.dir, v, state)
+  }
+
   /** Recursive tree copy via Hadoop FileUtil — works across schemes
     * (local → HDFS, HDFS → s3a…). Fails loudly on partial copies.
     */
@@ -158,6 +204,7 @@ object Fsx {
     require(ok, s"copyTree failed: $src -> $dst")
   }
 
+  /** Non-recursive child names (empty for a missing dir). */
   def listNames(path: String): Seq[String] = {
     val (f, p) = fs(path)
     if (!f.exists(p)) Nil

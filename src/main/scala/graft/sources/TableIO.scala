@@ -4,15 +4,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Iceberg-semantics emulation over partitioned Parquet (SURVEY.md §1.5:
   * no Iceberg runtime jar offline, so snapshots are immutable directories
-  * `snap-<id>/` plus a JSON manifest, behind this narrow facade that a
-  * real Iceberg catalog could replace).
+  * plus a JSON manifest `manifest-<id>.json`, behind this narrow facade
+  * that a real Iceberg catalog could replace).
   *
   * Guarantees we keep from Iceberg: immutable snapshots, atomic commit
-  * (manifest written last, via temp-file rename), snapshot listing, and
-  * partition-level metadata. Readers only ever see a snapshot whose
-  * manifest exists. All control I/O goes through the Hadoop FileSystem
-  * API ([[Fsx]]) so a table at `hdfs://…`/`s3a://…` behaves exactly like
-  * a local one — data and manifests on the same filesystem.
+  * (manifest published last, create-if-absent via [[Fsx.createOnce]]:
+  * of two committers that pick one id, the second fails and no snapshot
+  * is lost), snapshot listing, and partition-level metadata. All control
+  * I/O goes through the Hadoop FileSystem API ([[Fsx]]) so a table at
+  * `hdfs://…`/`s3a://…` behaves exactly like a local one.
   */
 object TableIO extends Serializable {
 
@@ -22,18 +22,17 @@ object TableIO extends Serializable {
     s"$tableDir/manifest-$id.json"
 
   /** Write df as a new immutable snapshot of tableDir; returns snapshot id.
-    * Atomicity: data lands under snap-<id>/ first; the manifest JSON is
-    * renamed into place last (on a real object store this is an Iceberg
-    * metadata swap).
+    * Data lands in a directory of this attempt, then the manifest naming
+    * it is published unless the id was taken meanwhile.
     */
   def commitSnapshot(
       df: DataFrame,
       tableDir: String,
       partitionBy: Seq[String] = Nil
   ): Long = {
-    Fsx.mkdirs(tableDir)
     val id = nextSnapshotId(tableDir)
-    val dataDir = s"$tableDir/snap-$id"
+    val data = s"snap-$id-${java.util.UUID.randomUUID}"
+    val dataDir = s"$tableDir/$data"
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(dataDir)
@@ -41,10 +40,11 @@ object TableIO extends Serializable {
       if (partitionBy.isEmpty) Nil
       else Fsx.listNames(dataDir).filter(_.contains("=")).sorted
     val json =
-      s"""{"snapshot_id":$id,"data":"snap-$id","partition_by":[${partitionBy
+      s"""{"snapshot_id":$id,"data":"$data","partition_by":[${partitionBy
           .map("\"" + _ + "\"").mkString(",")}],"partitions":[${parts
           .map("\"" + _ + "\"").mkString(",")}]}"""
-    Fsx.writeUtf8Atomic(manifestPath(tableDir, id), json)
+    try Fsx.createOnce(manifestPath(tableDir, id), json)
+    catch { case e: java.io.IOException => Fsx.delete(dataDir); throw e }
     id
   }
 
@@ -71,6 +71,8 @@ object TableIO extends Serializable {
       require(ids.nonEmpty, s"no snapshots in $tableDir")
       ids.max
     }
-    spark.read.parquet(s"$tableDir/snap-$sid")
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Fsx.readUtf8(manifestPath(tableDir, sid)))
+    spark.read.parquet(s"$tableDir/${manifest.get("data").asText()}")
   }
 }

@@ -34,7 +34,7 @@ object StreamingIngest {
 
   /** Start a streaming index build over a directory of Page parquet files.
     * One segment per micro-batch under `indexDir/segment-<batchId>`,
-    * registered in the family manifest (`segments.json`).
+    * registered in the family's commit log (`_log/`).
     *
     * `mergeFactor` > 0 turns on tiered compaction after each micro-batch
     * ([[graft.index.SegmentFamily.maybeCompact]]): segment count stays

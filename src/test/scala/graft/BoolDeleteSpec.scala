@@ -261,30 +261,35 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!gotD.exists(_._1 == 0L), "doc 0 gone after incremental delete")
   }
 
-  test("a delete that adds no id writes nothing: no new generation, no CURRENT cutover") {
+  test("a delete that adds no id writes nothing: no new generation, no commit") {
     val d = Files.createTempDirectory("graft-del-nomatch").toString
     val e = Files.createTempDirectory("graft-del-nomatch-clean").toString
     try {
       IndexBuilder.build(spark, PagesGen.pages(spark, 60, 2), d,
         cfg.copy(nPartitions = 2, nGroups = 1, nSlices = 2))
       // a delete-free index stays delete-free: its queries carry no handle
+      val built = graft.sources.Fsx.latest(d).version
       assert(Tombstones.delete(spark, d, $"url" === "no-such-url") == 0L)
       assert(Tombstones.current(d).isEmpty && Tombstones.handle(d) == null)
+      assert(graft.sources.Fsx.latest(d).version == built, "a no-match delete committed")
       assert(!graft.sources.Fsx.exists(s"$d/tombstones"), "a no-match delete wrote tombstone files")
       val n = Tombstones.delete(spark, d, $"lang" === "de")
       assert(n > 0 && Tombstones.current(d).contains((0, n)))
       // no match, or only already-deleted matches: generation 0 stays live
+      val deleted = graft.sources.Fsx.latest(d).version
       assert(Tombstones.delete(spark, d, $"url" === "no-such-url") == n)
       assert(Tombstones.delete(spark, d, $"lang" === "de") == n)
+      assert(graft.sources.Fsx.latest(d).version == deleted)
       // across indexes in one job: neither the deleted nor the clean one moves
       IndexBuilder.build(spark, PagesGen.pages(spark, 60, 2), e,
         cfg.copy(nPartitions = 2, nGroups = 1, nSlices = 2))
       assert(Tombstones.deleteByUrls(spark, Seq(d, e), Seq("no-such-url").toDS()) == Seq(n, 0L))
       assert(Tombstones.current(d).contains((0, n)) && Tombstones.current(e).isEmpty)
-      assert(graft.sources.Fsx.listNames(s"$d/tombstones").filterNot(_.startsWith(".")).sorted == Seq("CURRENT", "gen-0"))
+      assert(graft.sources.Fsx.latest(d).version == deleted)
+      assert(graft.sources.Fsx.listNames(s"$d/tombstones").sorted == Seq("gen-0"))
       assert(!graft.sources.Fsx.exists(s"$e/tombstones"))
       assert(scala.util.Try(Tombstones.deleteByUrls(spark, Seq(d, d), Seq("no-such-url").toDS())).isFailure,
-        "one index listed twice would race on its staging dir")
+        "one index listed twice would commit twice on one log version")
     } finally {
       import scala.reflect.io.Directory
       Seq(d, e).foreach(x => new Directory(new java.io.File(x)).deleteRecursively())

@@ -136,6 +136,25 @@ class MiscOpsSpec extends AnyFunSuite {
     assert(s1.select("part").distinct().collect().map(_.getString(0)).sorted.toSeq == Seq("p1", "p2"))
   }
 
+  test("TableIO: a second manifest for an existing snapshot id fails; every snapshot stays readable") {
+    val dir = Files.createTempDirectory("tableio-race").toString + "/t"
+    // committer 1 picked id 1 and wrote its data; committer 2 picks id 1 too and publishes first
+    var raced = false
+    graft.sources.Fsx.onCommitStep = (step, path) =>
+      if (!raced && step == "written" && path.endsWith("manifest-1.json")) {
+        raced = true
+        assert(TableIO.commitSnapshot(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir) == 1L)
+      }
+    val e = try intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+      TableIO.commitSnapshot(Seq((3, "c")).toDF("id", "v"), dir))
+    finally graft.sources.Fsx.onCommitStep = (_, _) => ()
+    assert(raced && e.getMessage.contains("manifest-1.json"), e.getMessage)
+    assert(TableIO.snapshotIds(dir) == Seq(1L))
+    assert(TableIO.readSnapshot(spark, dir, Some(1L)).count() == 2, "snapshot 1 was overwritten")
+    assert(TableIO.commitSnapshot(Seq((3, "c")).toDF("id", "v"), dir) == 2L)
+    assert(TableIO.readSnapshot(spark, dir).count() == 1 && TableIO.readSnapshot(spark, dir, Some(1L)).count() == 2)
+  }
+
   test("IndexJob CLI: build from parquet pages, resume no-op, search matches oracle") {
     val base = Files.createTempDirectory("indexjob").toString
     val pagesPath = s"$base/pages"
@@ -145,10 +164,10 @@ class MiscOpsSpec extends AnyFunSuite {
 
     IndexJob.run(spark, Seq("build", pagesPath, idxDir, "--partitions=4", "--groups=2", "--slices=4", "--block=32"))
     assert(IndexBuilder.completedUnits(idxDir).contains("done"))
-    // re-submitting the same command resumes to an immediate no-op
-    val ckptLines = graft.sources.Fsx.readUtf8(IndexBuilder.ckptPath(idxDir)).linesIterator.size
+    // re-submitting the same command resumes to an immediate no-op: no commit
+    val version = graft.sources.Fsx.latest(idxDir).version
     IndexJob.run(spark, Seq("build", pagesPath, idxDir, "--partitions=4", "--groups=2", "--slices=4", "--block=32"))
-    assert(graft.sources.Fsx.readUtf8(IndexBuilder.ckptPath(idxDir)).linesIterator.size == ckptLines)
+    assert(graft.sources.Fsx.latest(idxDir).version == version)
 
     // oracle corpus keyed by the engine's docID convention: url sort rank
     val corpus = (0L until 300L).map { i => val p = PagesGen.pageFor(i); (p.url, p.text) }

@@ -104,8 +104,10 @@ class QueryJobsSpec extends AnyFunSuite {
   test("Searcher.topK and topKLocal's distributed fallback run one dictionary job") {
     val dir = this.dir
     val searcher = new Searcher(spark, dir)
-    // Searcher runs on a one-segment view, which reads the dictionary
-    def dictionary(jobs: Seq[Seq[String]]) = jobs.filter(_.exists(_.startsWith("collect at MultiSearcher.scala")))
+    // Searcher runs on a one-segment view, which reads the dictionary (a
+    // collect); topKLocal's block-count gate is a runJob of the view
+    def dictionary(jobs: Seq[Seq[String]]) = jobs.filter(_.exists(j =>
+      j.startsWith("collect at MultiSearcher.scala") || j.startsWith("runJob at MultiSearcher.scala")))
     val topK = jobsOf(searcher.topK(Seq("w0", "w1"), "or", 10, mustNot = Seq("w2")).collect())
     assertNoInference("Searcher.topK", topK)
     assert(dictionary(topK).size == 1, s"Searcher.topK dictionary jobs: $topK")
@@ -122,11 +124,11 @@ class QueryJobsSpec extends AnyFunSuite {
     import graft.index.AttrPred
     val dir = this.dir
     val searcher = new Searcher(spark, dir)
-    // (call, jobs, max jobs): the dictionary job, then the gate's collect
-    // (the limit may take a second pass) or the walk's exchange and result
+    // (call, jobs, max jobs): the dictionary job, then the gate's one
+    // bounded collect, or the walk's exchange and result
     val calls = Seq(
       ("Searcher.topKLocal", jobsOf(searcher.topKLocal(Seq("w0", "w1"), "or", 10,
-        mustNot = Seq("w2"), attr = AttrPred.lang("en"))), 3),
+        mustNot = Seq("w2"), attr = AttrPred.lang("en"))), 2),
       ("Searcher.topKBatch", jobsOf(searcher.topKBatch(Seq(
         Searcher.BatchQuery(1L, Seq("w0", "w1"), "or", AttrPred.lang("en")),
         Searcher.BatchQuery(2L, Seq("w2"), "or", AttrPred.lang("en"), mustNot = Seq("w0")),
