@@ -48,7 +48,7 @@ object BuildProbe {
       org.apache.spark.sql.Encoders.product[Page])
     val dir = s"$base/idx"
     val textBytes = pages.select(sum(octet_length(col("text")))).head().getLong(0)
-    // total shuffle write bytes — the combine-vs-row-shuffle evidence
+    // total shuffle write bytes of the build
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -60,16 +60,9 @@ object BuildProbe {
     // positions default ON (ES text fields index positions by default —
     // the honest comparison against the reference's ES ingest numbers)
     val positions = sys.env.getOrElse("GRAFT_PROBE_POSITIONS", "true").toBoolean
-    // combine default ON since r5: the packed-chunk exchange (~3.0 GB vs
-    // 8.5 GB, ~20x fewer shuffle rows) beat the row shuffle at BOTH
-    // pinned levels on the r5 box (8-core 28.3k vs 17.0k docs/s, 32-core
-    // 49.0k vs 23.4k, same window; tmpfs shuffle scratch changed neither
-    // — the row-shuffle cost is the 165M-row spillable sort, not disk),
-    // and it was already the documented network-cluster default
-    val combine = sys.env.getOrElse("GRAFT_PROBE_COMBINE", "true").toBoolean
     IndexBuilder.build(spark, pages, dir,
       BuildConfig(nPartitions = nParts, nGroups = nGroups, nSlices = 16, blockSize = 128,
-        positions = positions, mapSideCombine = combine))
+        positions = positions))
     val secs = (System.nanoTime() - t0) / 1e9
     System.err.println(f"[probe] cores=$cores docs=$nDocs total=$secs%.2fs tp=${nDocs / secs}%.0f docs/s")
     // machine-readable lines for the Bench parent process: totals + the

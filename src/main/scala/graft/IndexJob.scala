@@ -84,12 +84,22 @@ object IndexJob {
     nGroups = flag(args, "groups", 4),
     nSlices = flag(args, "slices", 16),
     blockSize = flag(args, "block", 128),
-    positions = flag(args, "positions", 1) != 0,
-    mapSideCombine = flag(args, "combine", 1) != 0 // r5 default flip: see BuildConfig scaladoc
+    positions = flag(args, "positions", 1) != 0
   )
+
+  /** Every flag some command reads. Any other `--` argument is rejected
+    * by name, so a typo or a retired flag fails instead of being ignored.
+    */
+  private val Flags = Set("asc", "block", "fail-after-groups", "field", "from", "groups", "hits", "lang",
+    "max-edits", "max-expansions", "max-terms", "merge-factor", "min-df", "min-match", "min-tf", "must-not",
+    "order", "out", "partitions", "positions", "retries", "size", "slices", "slop", "tie", "to", "url-prefix")
 
   def run(spark: SparkSession, args: Seq[String]): Unit = {
     import spark.implicits._
+    args.drop(1).filter(_.startsWith("--")).foreach { a =>
+      val name = a.drop(2).takeWhile(_ != '=')
+      require(Flags(name) && a.contains('='), s"unknown or malformed flag $a (flags take the form --name=value)")
+    }
     import org.apache.spark.sql.functions.{col, lit}
     val positional = args.drop(1).filterNot(_.startsWith("--"))
     def printHits(df: org.apache.spark.sql.DataFrame): Unit =
@@ -174,7 +184,7 @@ object IndexJob {
         printHits(Search.phraseTopK(spark, indexDir, positional.drop(2), k.toInt,
           slop = flag(args, "slop", 0)))
       case Some("mlt") =>
-        // ES more_like_this: docs similar to --doc=<id>
+        // ES more_like_this: docs similar to the doc with id <docId>
         val Seq(indexDir, k, docId) = positional.take(3)
         printHits(Search.moreLikeThis(spark, indexDir, docId.toLong, k.toInt,
           maxQueryTerms = flag(args, "max-terms", 25),

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
-import graft.index.{IndexBuilder, SegmentMerge}
+import graft.index.{IndexBuilder, SegmentMerge, Tombstones}
 import graft.index.IndexBuilder.BuildConfig
 import graft.sources.{HtmlText, PagesGen}
 
 /** Merge-cost probe: build two segments of n docs each, then time the
-  * byte-identical rebuild merge vs the decode-free fastMerge.
+  * byte-identical rebuild merge vs the decode-free fastMerge; then delete
+  * every tenth doc of the rebuild merge by url and time its purge. Prints
+  * the byte size of the rebuild and purge output dirs.
   * `sbt "runMain graft.MergeProbe <cores> <docsPerSegment>"`.
   */
 object MergeProbe {
@@ -48,7 +50,16 @@ object MergeProbe {
       .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
     require(a == b, s"fastMerge answers diverge: $a vs $b")
 
-    println(f"""MERGEPROBE{"docs":${2 * n},"rebuild_sec":$rebuildSec%.2f,"fast_sec":$fastSec%.2f,"speedup":${rebuildSec / fastSec}%.1f}""")
+    def bytes(dir: String) = org.apache.commons.io.FileUtils.sizeOfDirectory(new java.io.File(dir))
+    val rebuildBytes = bytes(s"$base/rebuild")
+    val urls = spark.range(0, 2 * n, 10).map(i => if (i < n) f"a/$i%010d" else f"b/$i%010d")
+    Tombstones.deleteByUrls(spark, s"$base/rebuild", urls)
+    val t2 = System.nanoTime()
+    Tombstones.purge(spark, s"$base/rebuild", s"$base/purged")
+    val purgeSec = (System.nanoTime() - t2) / 1e9
+
+    println(f"""MERGEPROBE{"docs":${2 * n},"rebuild_sec":$rebuildSec%.2f,"fast_sec":$fastSec%.2f,"speedup":${rebuildSec / fastSec}%.1f,""" +
+      f""""deleted":${Tombstones.count(s"$base/rebuild")},"purge_sec":$purgeSec%.2f,"rebuild_bytes":$rebuildBytes,"purge_bytes":${bytes(s"$base/purged")}}""")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     spark.stop()
   }

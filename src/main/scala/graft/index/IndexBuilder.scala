@@ -20,10 +20,11 @@ import graft.sources.{Fsx, HtmlText}
   *   (tokenize+tf, one map-side pass) → deterministic dense docID
   *   (two-pass, parallelism-independent) → stage analyzed docs to parquet
   *   partitioned by shuffle group [checkpoint ≙ T5] → per group:
-  *   shuffle by (term, slice) [slice = doc-range salt: hot-term skew
-  *   split] → sortWithinPartitions(term, slice, doc_id) → mapPartitions
-  *   block-encode (delta+varbyte, per-block max-impact) → partitioned
-  *   write + metrics + checkpoint commit.
+  *   tokenize→combine into packed (term, slice) chunks → shuffle by
+  *   (term, slice) [slice = doc-range salt: hot-term skew split] →
+  *   sortWithinPartitions(term, slice, min_doc) → merge chunks into
+  *   blocks (delta+varbyte, per-block max-impact) → partitioned write +
+  *   metrics + checkpoint commit.
   *
   * Every stage is deterministic given (corpus, nGroups, nSlices,
   * blockSize) — resume after a kill reproduces a byte-identical index
@@ -56,21 +57,14 @@ object IndexBuilder {
     */
   val FormatVersion = 5
 
-  /** `positions`: index token positions (phrase queries) — on by default,
+  /** Layout of an index. `nPartitions` sizes the docs write and the
+    * postings exchange (nPartitions / nGroups reducers per group); docs
+    * fall into `nGroups` doc-range groups (the resumable unit) of
+    * `nSlices` doc-range slices (nSlices % nGroups == 0); posting blocks
+    * hold up to `blockSize` postings.
+    * `positions`: index token positions (phrase queries) — on by default,
     * matching ES text-field defaults the reference provisions.
-    */
-  /** `mapSideCombine`: pre-aggregate postings into packed chunks before
-    * the exchange (5-8× fewer shuffle bytes, ~20× fewer shuffle ROWS, at
-    * extra map CPU) — DEFAULT ON since r5: it is the scale-correct shape
-    * for network-shuffled clusters, and the r5 paired A/B measured it
-    * ahead at BOTH pinned local levels too (8-core 28.3k vs 17.0k
-    * docs/s, 32-core 49.0k vs 23.4k; the row shuffle's cost is the
-    * 165M-row spillable sort, which tmpfs scratch does not fix). The
-    * row shuffle remains available for page-cache-local media where an
-    * earlier host measured it ahead at 32 cores (BASELINE.md r3/r4);
-    * output bytes are identical either way (tested).
-    */
-  /** `attrs`: the declared doc-value sidecar schema (keyword + numeric
+    * `attrs`: the declared doc-value sidecar schema (keyword + numeric
     * filter fields — ES provisions ~10 such next to the text fields);
     * persisted in meta.json so merges/purges regenerate the sidecar
     * without the caller re-declaring it.
@@ -81,7 +75,6 @@ object IndexBuilder {
       nSlices: Int = 16,
       blockSize: Int = 128,
       positions: Boolean = true,
-      mapSideCombine: Boolean = true,
       attrs: Seq[AttrSpec] = AttrSchema.Default
   )
 
@@ -255,38 +248,13 @@ object IndexBuilder {
         .where($"grp" === g) // partition pruning: 1/nGroups of the bytes
         .select($"doc_id", $"text")
         .as[(Long, String)]
-    val groupInput: Int => DataFrame = { g =>
-      groupDocs(g)
-        .flatMap { case (id, text) =>
-          val slice = rangeOf(id, nSlices, nDocs)
-          if (withPos) {
-            // positions encoded map-side into self-delimiting varbyte
-            // chunks — the shuffle carries compact bytes, and block
-            // assembly concatenates without re-encoding
-            val (dl, tps) = Analyzer.termPositions(text)
-            tps.iterator.map { case (t, ps) =>
-              (t, slice, id, ps.length, dl, Codec.encodePosChunk(ps))
-            }
-          } else {
-            val (dl, tfs) = Analyzer.termFreqs(text)
-            tfs.iterator.map { case (t, tf) => (t, slice, id, tf, dl, null: Array[Byte]) }
-          }
-        }
-        .toDF("term", "slice", "doc_id", "tf", "doc_len", "pos")
-    }
-    // Fused tokenize→combine for the (default) mapSideCombine exchange:
-    // one typed mapPartitions from (doc_id, text) straight to packed chunk
-    // rows. The unfused shape materialized a 6-field row PER POSTING
-    // through Catalyst (UnsafeRow encode + decode back to tuples, ~165M
-    // rows at bench scale) only for chunkMapSide to re-aggregate them in
-    // the SAME task — JFR measured that round trip plus the per-posting
-    // iterator/tuple overhead at ~25% of whole-build CPU. Chunk contents
-    // and all downstream bytes are identical (OperatorsSpec pins fused ≡
-    // unfused; MergeStreamSpec pins combine ≡ row-shuffle blocks).
+    // Fused tokenize→combine: one typed mapPartitions from (doc_id, text)
+    // straight to packed chunk rows, with no row per posting (JFR measured
+    // a per-posting Catalyst row round trip at ~25% of whole-build CPU).
     val chunkInput: Int => DataFrame = { g =>
       tokenizeChunks(groupDocs(g), nSlices, nDocs, withPos)
     }
-    buildGroups(spark, indexDir, cfg, groupInput, failAfterGroups, chunkInput)
+    buildGroups(spark, indexDir, cfg, chunkInput, failAfterGroups)
   }
 
   /** Extracted `(url, warc_ts, lang, text)` rows of `pages`, checking
@@ -314,7 +282,7 @@ object IndexBuilder {
     * division; the old double `/` could diverge near 2^53 and silently
     * route a doc's attrs to the wrong slice).
     */
-  private def withRouting(docs: DataFrame, nDocs: Long, cfg: BuildConfig): DataFrame =
+  private[index] def withRouting(docs: DataFrame, nDocs: Long, cfg: BuildConfig): DataFrame =
     docs
       .withColumn("slice", least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nDocs AS INT)")))
       .withColumn("grp", least(lit(cfg.nGroups - 1), expr(s"CAST(doc_id * ${cfg.nGroups} DIV $nDocs AS INT)")))
@@ -322,7 +290,7 @@ object IndexBuilder {
   /** Doc `id`'s range among `n` equal doc-id ranges of `nDocs` ids: its
     * slice (n = nSlices) or group (n = nGroups).
     */
-  @inline private def rangeOf(id: Long, n: Int, nDocs: Long): Int =
+  @inline private[index] def rangeOf(id: Long, n: Int, nDocs: Long): Int =
     math.min(n - 1, (id * n / nDocs).toInt)
 
   /** The `docs` table: (doc_id, url, warc_ts, lang, doc_len, text) rows
@@ -335,23 +303,27 @@ object IndexBuilder {
       .parquet(s"$indexDir/docs")
 
   /** The `stats` table (one row) and its `stats.json` sidecar. */
-  private def writeStats(spark: SparkSession, indexDir: String, st: CorpusStats): Unit = {
+  private[index] def writeStats(spark: SparkSession, indexDir: String, st: CorpusStats): Unit = {
     import spark.implicits._
     Seq(st).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stats")
     writeStatsJson(indexDir, st)
   }
 
+  /** Parquet compression of the `postings` table. The block payloads
+    * (deltas/tfs/dls) are already entropy-coded by our codec — parquet's
+    * snappy layer on top buys ~nothing for them and costs CPU; term/
+    * metadata columns still get parquet dictionary + RLE encoding, which
+    * compression=uncompressed does not disable.
+    */
+  private[index] val PostingsCompression = "uncompressed"
+
   /** Posting group g. `grp` comes back as the directory partition column
-    * on read. The block payloads (deltas/tfs/dls) are already
-    * entropy-coded by our codec — parquet's snappy layer on top buys
-    * ~nothing for them and costs CPU; term/metadata columns still get
-    * parquet dictionary + RLE encoding, which compression=uncompressed
-    * does not disable.
+    * on read.
     */
   private def writePostings(blocks: Dataset[PostingRow], indexDir: String, g: Int): Unit =
     blocks.drop("grp")
       .write.mode(SaveMode.Overwrite)
-      .option("compression", sys.env.getOrElse("GRAFT_POSTINGS_CODEC", "uncompressed"))
+      .option("compression", PostingsCompression)
       .parquet(s"$indexDir/postings/grp=$g")
 
   /** Build metrics of one partition's posting blocks, in (term, slice)
@@ -532,7 +504,6 @@ object IndexBuilder {
     val dfs = new java.util.HashMap[String, Array[Long]]() // term → (doc_freq, total_tf)
     // chunk rows in the order the build's exchange sorts them: (term in
     // UTF-8 order, slice, min_doc)
-    type Chunk = (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])
     val chunkOrder = new java.util.Comparator[Chunk] {
       def compare(a: Chunk, b: Chunk): Int = {
         val t = DenseId.compareUtf8Strings(a._1, b._1)
@@ -584,19 +555,21 @@ object IndexBuilder {
     commitUnit(indexDir, "done")
   }
 
-  /** Stages 2-3: posting groups + term dictionary. `groupInput(g)` must
-    * return the term-doc rows `(term, slice, doc_id, tf, doc_len)` of
-    * doc-range group g (slice nested in group: nSlices % nGroups == 0).
-    * Shared by [[build]] (tokenizes staged text) and [[SegmentMerge]]
-    * (decodes source-segment blocks) — both get group-level resumability.
+  /** Stages 2-3: posting groups + term dictionary. `chunkInput(g)` must
+    * return the packed chunk rows `(term, slice, min_doc, n, ids, tfs,
+    * dls, pos)` of doc-range group g (slice nested in group: nSlices %
+    * nGroups == 0), as [[emitChunk]] writes them; a posting may sit in
+    * one chunk only. [[build]] tokenizes its staged text into them and
+    * [[SegmentMerge]] (merge, purge) re-chunks its source segments'
+    * blocks; both get group-level resumability. The driver flush runs
+    * the same chunk merge in one task, without the exchange.
     */
   def buildGroups(
       spark: SparkSession,
       indexDir: String,
       cfg: BuildConfig,
-      groupInput: Int => DataFrame,
-      failAfterGroups: Int = Int.MaxValue,
-      chunkInput: Int => DataFrame = null
+      chunkInput: Int => DataFrame,
+      failAfterGroups: Int = Int.MaxValue
   ): Unit = {
     import spark.implicits._
     val st = readStats(spark, indexDir)
@@ -618,7 +591,6 @@ object IndexBuilder {
         // counted as run transitions.
         val metricsAcc =
           spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long, Long)](s"graft.metrics.grp-$g")
-        // Metrics-wrapped block stream shared by both exchange shapes.
         def metered(base: Iterator[PostingRow]): Iterator[PostingRow] = {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val meter = new BlockMeter
@@ -642,33 +614,17 @@ object IndexBuilder {
             }
           }
         }
-        // Two exchange shapes, identical output bytes (tested):
-        //  - mapSideCombine (default): each map task pre-aggregates
-        //    postings per (term, slice) into packed varbyte chunk rows
-        //    (~6-9 B/posting vs ~50 B row-wise; term string once per task
-        //    instead of per posting); the reducer merges sorted chunks
-        //    straight into blocks (primitive k-way merge — no per-posting
-        //    tuples, r6). Deterministic and independent of map boundaries.
-        //  - row shuffle: one row per posting through Spark's spillable
-        //    sort — selectable for page-cache-local media where an earlier
-        //    host measured it ahead at 32 cores (BASELINE.md r3/r4).
-        val blocks =
-          if (cfg.mapSideCombine) {
-            val chunks =
-              if (chunkInput != null) chunkInput(g) else chunkMapSide(groupInput(g))
-            chunks
-              .repartition(partsPerGroup, $"term", $"slice")
-              .sortWithinPartitions("term", "slice", "min_doc")
-              .select($"term", $"slice", $"n", $"ids", $"tfs", $"dls", $"pos")
-              .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-              .mapPartitions(chunkIt => metered(mergeChunksToBlocks(chunkIt, g, blockSize, avgDl)))
-          } else
-            groupInput(g)
-              .repartition(partsPerGroup, $"term", $"slice")
-              .sortWithinPartitions("term", "slice", "doc_id")
-              .select($"term", $"slice", $"doc_id", $"tf", $"doc_len", $"pos")
-              .as[(String, Int, Long, Int, Int, Array[Byte])]
-              .mapPartitions(it => metered(blockify(it, g, blockSize, avgDl)))
+        // One exchange: each map task has packed its postings per (term,
+        // slice) into varbyte chunk rows (~6-9 B/posting against ~50 B for
+        // a row per posting, the term string once per chunk); the reducer
+        // merges the sorted chunks straight into blocks. Deterministic and
+        // independent of how the postings were chunked.
+        val blocks = chunkInput(g)
+          .repartition(partsPerGroup, $"term", $"slice")
+          .sortWithinPartitions("term", "slice", "min_doc")
+          .select($"term", $"slice", $"n", $"ids", $"tfs", $"dls", $"pos")
+          .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
+          .mapPartitions(chunkIt => metered(mergeChunksToBlocks(chunkIt, g, blockSize, avgDl)))
         timed(s"postings-grp-$g")(writePostings(blocks, indexDir, g))
 
         val metricRows = scala.jdk.CollectionConverters
@@ -711,12 +667,15 @@ object IndexBuilder {
 
   private val EmptyBytes = Array.empty[Byte]
 
+  /** A packed chunk row: (term, slice, min_doc, n, ids, tfs, dls, pos). */
+  private[index] type Chunk = (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])
+
   /** Growable per-(term, slice) posting buffer for the map-side combine.
     * Primitive arrays throughout; position chunks are appended into ONE
     * shared byte buffer with an offsets array (no per-posting objects —
     * millions of tiny byte[]s would dominate the young gen).
     */
-  private final class ChunkBuf {
+  private[index] final class ChunkBuf {
     var ids = new Array[Long](8)
     var tfs = new Array[Int](8)
     var dls = new Array[Int](8)
@@ -791,27 +750,23 @@ object IndexBuilder {
     }
   }
 
-  /** Map-side combine: aggregate each task's postings per (term, slice)
-    * into one encoded chunk row `(term, slice, min_doc, n, ids, tfs, dls,
-    * pos)` — ids as sorted varbyte deltas, tf/dl as varbytes, positions
-    * as concatenated self-delimiting chunks. The exchange then moves the
-    * term string once per (term, slice, task) and ~6-9 packed bytes per
-    * posting instead of a ~50-byte row per posting.
+  /** Drain one (term, slice) buffer into a chunk row `(term, slice,
+    * min_doc, n, ids, tfs, dls, pos)` — ids as sorted varbyte deltas,
+    * tf/dl as varbytes, positions as concatenated self-delimiting chunks.
+    * The exchange then moves the term string once per chunk and ~6-9
+    * packed bytes per posting instead of a ~50-byte row per posting.
+    * Fast path: scan order is ascending docID for every tokenize-fed and
+    * block-fed buffer — detected in one pass and emitted with straight
+    * copies; the permuting sort only runs for unsorted inputs. Bytes
+    * identical either way.
     *
-    * Task memory is HARD-BOUNDED: every `GRAFT_CHUNK_FLUSH` postings
-    * (default 2M ≈ 50-80 MB packed) the whole buffer map drains into
-    * chunk rows and clears — a task may emit several chunks per
-    * (term, slice); the reducer merges them anyway. Vocabulary size and
+    * Map-side task memory is HARD-BOUNDED: every `GRAFT_CHUNK_FLUSH`
+    * postings (default 2M ≈ 50-80 MB packed) the buffers drain into
+    * chunk rows and clear — a task may emit several chunks per (term,
+    * slice); the reducer merges them anyway. Vocabulary size and
     * input-split size therefore cannot OOM the combine.
     */
-  /** Drain one (term, slice) buffer into a chunk row. Fast path: scan
-    * order is ascending docID for every tokenize-fed buffer — detected in
-    * one pass and emitted with straight copies; the permuting sort only
-    * runs for genuinely unsorted inputs (merge stages). Bytes identical
-    * either way.
-    */
-  private def emitChunk(term: String, slice: Int, b: ChunkBuf)
-      : (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte]) = {
+  private[index] def emitChunk(term: String, slice: Int, b: ChunkBuf): Chunk = {
     var asc = true
     var j = 1
     while (asc && j < b.n) { if (b.ids(j - 1) > b.ids(j)) asc = false; j += 1 }
@@ -949,7 +904,7 @@ object IndexBuilder {
     }
 
     /** Drain every (term, slice, buf) entry and reset to a fresh table. */
-    def drain(): Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = {
+    def drain(): Iterator[Chunk] = {
       val k = keys; val s = slices; val b = bufs
       keys = new Array[String](cap)
       hashes = new Array[Int](cap)
@@ -968,8 +923,7 @@ object IndexBuilder {
     * same loop, no per-posting row materialization (the unfused shape
     * paid an UnsafeRow encode+decode per posting; JFR: ~25% of build
     * CPU) and no per-occurrence token String (the scanTokens span probe,
-    * r6 opt round). Flush bound and chunk layout identical to
-    * [[chunkMapSide]].
+    * r6 opt round).
     */
   private[index] def tokenizeChunks(
       docs: org.apache.spark.sql.Dataset[(Long, String)],
@@ -999,10 +953,10 @@ object IndexBuilder {
       nDocs: Long,
       withPos: Boolean,
       flushEvery: Long
-  ): Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] =
-    new Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] {
+  ): Iterator[Chunk] =
+    new Iterator[Chunk] {
       private val table = new TermChunkTable(1 << 13)
-      private var pending: Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = Iterator.empty
+      private var pending: Iterator[Chunk] = Iterator.empty
       // bufs whose LAST posting belongs to the doc being scanned —
       // their dl field is patched once the doc's token count is known
       // (the streaming scan can't know dl up front)
@@ -1047,62 +1001,15 @@ object IndexBuilder {
         while (!pending.hasNext && it.hasNext) refill()
         pending.hasNext
       }
-      def next(): (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte]) = {
+      def next(): Chunk = {
         if (!hasNext) throw new NoSuchElementException
         pending.next()
       }
     }
 
-  private[index] def chunkMapSide(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val flushEvery = chunkFlushEvery
-    df.select(col("term"), col("slice"), col("doc_id"), col("tf"), col("doc_len"), col("pos"))
-      .as[(String, Int, Long, Int, Int, Array[Byte])]
-      .mapPartitions { (it: Iterator[(String, Int, Long, Int, Int, Array[Byte])]) =>
-        new Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] {
-          private val byTerm =
-            new scala.collection.mutable.AnyRefMap[String, scala.collection.mutable.LongMap[ChunkBuf]](1 << 12)
-          private var pending: Iterator[(String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = Iterator.empty
-
-          private def refill(): Unit = {
-            var consumed = 0L
-            while (it.hasNext && consumed < flushEvery) {
-              val (term, slice, id, tf, dl, pos) = it.next()
-              val bySlice = byTerm.getOrElseUpdate(term, new scala.collection.mutable.LongMap[ChunkBuf](2))
-              bySlice.getOrNull(slice.toLong) match {
-                case null =>
-                  val b = new ChunkBuf; b.add(id, tf, dl, pos); bySlice.update(slice.toLong, b)
-                case b => b.add(id, tf, dl, pos)
-              }
-              consumed += 1
-            }
-            val drained = byTerm.toArray // materialize before clearing
-            byTerm.clear()
-            pending = drained.iterator.flatMap { case (term, bySlice) =>
-              bySlice.iterator.map { case (slice, b) => emitChunk(term, slice.toInt, b) }
-            }
-          }
-
-          def hasNext: Boolean = {
-            while (!pending.hasNext && it.hasNext) refill()
-            pending.hasNext
-          }
-          def next(): (String, Int, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte]) = {
-            if (!hasNext) throw new NoSuchElementException
-            pending.next()
-          }
-        }
-      }
-      .toDF("term", "slice", "min_doc", "n", "ids", "tfs", "dls", "pos")
-  }
-
-  /** Reducer side of the combine: chunks arrive sorted by (term, slice);
-    * each run's chunks are decoded, merged, and re-sorted by docID so the
-    * downstream blockify output is deterministic and independent of
-    * map-task boundaries. Peak memory per run = one (term, slice)
-    * sub-list — bounded at O(nDocs/nSlices) by the hot-term salting
-    * contract.
+  /** Test reference for [[mergeChunksToBlocks]]: chunks sorted by
+    * (term, slice) decode, merge and re-sort by docID into term-doc rows
+    * for [[blockify]]. Peak memory per run = one (term, slice) sub-list.
     */
   private[graft] def mergeChunks(
       chunkIt: Iterator[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
@@ -1148,8 +1055,8 @@ object IndexBuilder {
     * decoded chunk arrays, no per-posting tuple objects. The old shape
     * (`blockify(mergeChunks(it))`) allocated two boxed tuples per posting
     * (~330M at bench scale) plus a boxed sort per run; output PostingRows
-    * are identical (pinned by an OperatorsSpec equivalence test and the
-    * MergeStreamSpec combine≡row-shuffle bytes test). Peak memory per run
+    * are identical (MergeStreamSpec pins it against blockify over
+    * mergeChunks and over sorted term-doc rows). Peak memory per run
     * is unchanged: one decoded (term, slice) sub-list, O(nDocs/nSlices)
     * by the hot-term salting contract.
     */
@@ -1328,7 +1235,8 @@ object IndexBuilder {
     }
   }
 
-  /** Encode one sorted partition iterator into posting blocks.
+  /** Test reference for the block layout: encode one sorted partition
+    * iterator into posting blocks, row by row.
     * Input rows sorted by (term, slice, doc_id); consecutive runs of the
     * same (term, slice) become one posting sub-list, chunked into blocks.
     * Per-posting position chunks (nullable) concatenate into the block's

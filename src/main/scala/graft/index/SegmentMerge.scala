@@ -1,5 +1,6 @@
 package graft.index
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft._
@@ -13,11 +14,13 @@ import graft.index.IndexBuilder.BuildConfig
   * Semantics: segment B's dense docIDs are remapped by +nDocs(A); corpus
   * stats (N, avgdl) are recomputed for the union, so per-block
   * `max_impact` metadata is re-derived (it depends on avgdl — stale
-  * bounds would break WAND's correctness guarantee). The merge therefore
-  * decodes blocks to postings (distributed flatMap over compressed
-  * blocks — the shuffle moves small encoded rows, never whole lists on
-  * one node), restages, and reruns the shared staged→postings pipeline —
-  * inheriting group-level resumable commits.
+  * bounds would break WAND's correctness guarantee). [[merge]] and
+  * [[Tombstones.purge]] are one rewrite ([[rewrite]]): it writes the
+  * output docs and stats, then each posting group's job decodes the
+  * source segments' blocks (distributed, never whole lists on one node),
+  * maps their ids into the output, and feeds the packed chunk rows
+  * straight into [[IndexBuilder.buildGroups]] — inheriting group-level
+  * resumable commits. Nothing per posting is written besides the output.
   *
   * Property (tested): if every url in A sorts before every url in B,
   * merge(build(A), build(B)) ≡ build(A ∪ B) byte-for-byte.
@@ -31,9 +34,7 @@ object SegmentMerge {
       outDir: String,
       cfg: BuildConfig = BuildConfig()
   ): Unit = {
-    import spark.implicits._
-    val done = IndexBuilder.completedUnits(outDir)
-    if (done.contains("done")) return
+    if (IndexBuilder.completedUnits(outDir).contains("done")) return
     // positions carry over only if BOTH inputs indexed them — the caller's
     // cfg cannot conjure positions the source blocks never stored (a meta
     // that falsely advertises phrase capability crashes phrase queries)
@@ -44,26 +45,54 @@ object SegmentMerge {
       // the caller's cfg only shapes layout constants
       attrs = IndexBuilder.readMeta(idxA).attrs
     )
-    IndexBuilder.writeMeta(outDir, mergedCfg)
+    val Seq(nA, nB) = Seq(idxA, idxB).map(IndexBuilder.readStats(spark, _).n_docs)
+    rewrite(spark, Seq(Source(idxA, 0L, nA), Source(idxB, nA, nB)), outDir, mergedCfg)
+  }
 
-    if (!done.contains("staged")) {
-      val statsA = IndexBuilder.readStats(spark, idxA)
-      val offset = statsA.n_docs
+  /** A source segment of a [[rewrite]] and the map of its doc ids into
+    * the output: `old + base`; with `dropped` (purge, base 0) its deleted
+    * docs drop out instead and the rest renumber densely. `n` is the
+    * number of its docs the output keeps.
+    */
+  private[index] final case class Source(dir: String, base: Long, n: Long,
+                                         dropped: Tombstones.Dropped = null) {
+    /** A per-task id map (see [[Tombstones.Dropped.open]]: a dropped doc
+      * maps to the complement, < 0, of the id the next survivor gets).
+      */
+    def ids(): (Int, Long) => Long =
+      if (dropped == null) (_, old) => old + base else dropped.open()
+  }
 
-      // merged docs table (B remapped), clustered by doc_id. Only the
-      // dimension columns carry over — the merged postings are rebuilt
-      // from the segments' blocks, so staged text isn't needed again.
-      val docCols = Seq($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len")
-      val docsA = IndexBuilder.readDocsTable(spark, idxA).select(docCols: _*)
-      val docsB = IndexBuilder.readDocsTable(spark, idxB).select(docCols: _*)
-        .withColumn("doc_id", $"doc_id" + offset)
-      val nDocsAll = Seq(idxA, idxB).map(IndexBuilder.readStats(spark, _).n_docs).sum.max(1L)
-      // same integral slice/grp formulas as IndexBuilder.build — one
-      // routing invariant; grp partitioning so fastMerge over a merge()
+  /** The one rewrite body of merge and purge: the `sources`' docs, ids
+    * mapped and concatenated in order, become the output's docs and stats
+    * (checkpoint unit `staged`); the tombstones of sources that keep their
+    * deleted docs carry over (unit `tombstones`); then group g's chunks
+    * come straight from the sources' blocks ([[rechunk]]). Resume works
+    * per unit because the sources are immutable.
+    */
+  private[index] def rewrite(spark: SparkSession, sources: Seq[Source], outDir: String,
+                             cfg: BuildConfig): Unit = {
+    import spark.implicits._
+    IndexBuilder.writeMeta(outDir, cfg)
+
+    if (!IndexBuilder.completedUnits(outDir).contains("staged")) {
+      // only the dimension columns carry over — the postings are rebuilt
+      // from the sources' blocks, so staged text isn't needed again
+      val docs = sources.map { s =>
+        IndexBuilder.readDocsTable(spark, s.dir)
+          .select($"slice", $"doc_id", $"url", $"warc_ts", $"lang", $"doc_len")
+          .as[(Int, Long, String, java.sql.Timestamp, String, Int)]
+          .mapPartitions { rows =>
+            val ids = s.ids()
+            rows.flatMap { case (slice, old, url, ts, lang, dl) =>
+              val id = ids(slice, old)
+              if (id < 0) None else Some(Doc(id, url, ts, lang, dl))
+            }
+          }
+      }.reduce(_ union _)
+      // the build's routing and layout, so fastMerge over a rewrite's
       // output (and group-pruned reads) work exactly as over a build()
-      docsA.unionByName(docsB)
-        .withColumn("slice", least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nDocsAll AS INT)")))
-        .withColumn("grp", least(lit(cfg.nGroups - 1), expr(s"CAST(doc_id * ${cfg.nGroups} DIV $nDocsAll AS INT)")))
+      IndexBuilder.withRouting(docs.toDF(), math.max(1L, sources.map(_.n).sum), cfg)
         .repartitionByRange(cfg.nPartitions, $"doc_id")
         .sortWithinPartitions("doc_id")
         .write.mode(SaveMode.Overwrite)
@@ -77,71 +106,85 @@ object SegmentMerge {
           coalesce(sum($"doc_len"), lit(0L)).as("total_tokens")
         )
         .as[CorpusStats].head()
-      Seq(st).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
-      IndexBuilder.writeStatsJson(outDir, st)
-      val nDocs = math.max(1L, st.n_docs)
-
-      // decode both segments' blocks back to term-docs, remap B, restage.
-      // Positions carry over as opaque byte chunks (varint skip to find the
-      // per-posting boundaries — never decoded to ints).
-      def decoded(idx: String, off: Long): DataFrame =
-        IndexBuilder.readPostings(spark, idx)
-          .select($"term", $"count", $"doc_id_min", $"deltas", $"tfs", $"dls", $"poss")
-          .as[(String, Int, Long, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-          .flatMap { case (term, n, idMin, deltas, tfs, dls, poss) =>
-            val ids = Codec.decodeGapsFromBase(idMin, deltas, n)
-            val tf = Codec.decodeIntsAuto(tfs, n)
-            val dl = Codec.decodeIntsAuto(dls, n)
-            val chunks =
-              if (poss == null || poss.isEmpty) null
-              else Codec.splitPosChunks(poss, tf)
-            Iterator.tabulate(n)(i =>
-              (ids(i) + off, term, tf(i), dl(i), if (chunks == null) null else chunks(i)))
-          }
-          .toDF("doc_id", "term", "tf", "doc_len", "pos")
-
-      decoded(idxA, 0L).unionByName(decoded(idxB, offset))
-        .withColumn("slice", least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nDocs AS INT)")))
-        // grp nests slices (nSlices % nGroups == 0): same doc-range-group
-        // layout the from-scratch build uses
-        .withColumn("grp", ($"slice" * cfg.nGroups / cfg.nSlices).cast("int"))
-        .select($"doc_id", $"doc_len", $"term", $"tf", $"pos", $"slice", $"grp")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("grp")
-        .parquet(s"$outDir/staged")
+      IndexBuilder.writeStats(spark, outDir, st)
       IndexBuilder.commitUnit(outDir, "staged")
     }
+    val nDocs = math.max(1L, IndexBuilder.readStats(spark, outDir).n_docs)
 
-    // input tombstones SURVIVE the merge (ADVICE r3: dropping them here
+    // input tombstones SURVIVE a merge (ADVICE r3: dropping them here
     // resurrected upserted/deleted docs after compaction): ids shift by
-    // B's offset, each id's slice is re-derived with the SAME integral
-    // formula the merged docs table used above, and the union lands as
-    // the output's gen-0 via the standard sorted-union import. Stats stay
-    // Lucene-style (deleted docs still counted until purge) — exactly the
-    // inputs' own contract. The import and the "tombstones" unit land in
-    // one commit, so a replay after it skips the job entirely.
-    if (!IndexBuilder.completedUnits(outDir).contains("tombstones")) {
-      val offsetB = IndexBuilder.readStats(spark, idxA).n_docs
-      val nd = math.max(1L, IndexBuilder.readStats(spark, outDir).n_docs)
-      val tombIns = Seq((idxA, 0L), (idxB, offsetB)).flatMap { case (d, off) =>
-        Tombstones.deletedWithSliceDf(spark, d).map(df =>
-          df.select((col("doc_id") + off).as("doc_id")))
+    // their source's base, each id's slice is re-derived with the docs
+    // table's routing, and the union lands as the output's gen-0 via the
+    // standard sorted-union import. Stats stay Lucene-style (deleted docs
+    // still counted until purge) — exactly the inputs' own contract. The
+    // import and the "tombstones" unit land in one commit, so a replay
+    // after it skips the job entirely.
+    val kept = sources.filter(_.dropped == null)
+    if (kept.nonEmpty && !IndexBuilder.completedUnits(outDir).contains("tombstones")) {
+      val tombIns = kept.flatMap { s =>
+        Tombstones.deletedWithSliceDf(spark, s.dir).map(_.select((col("doc_id") + s.base).as("doc_id")))
       }
       if (tombIns.isEmpty) IndexBuilder.commitUnit(outDir, "tombstones")
-      else {
-        val remapped = tombIns.reduce(_ unionByName _)
-          .withColumn("slice",
-            least(lit(cfg.nSlices - 1), expr(s"CAST(doc_id * ${cfg.nSlices} DIV $nd AS INT)")))
-          .select(col("slice"), col("doc_id"))
-        Tombstones.importInto(spark, outDir, remapped, "tombstones")
-      }
+      else Tombstones.importInto(spark, outDir,
+        IndexBuilder.withRouting(tombIns.reduce(_ unionByName _), nDocs, cfg).select(col("slice"), col("doc_id")),
+        "tombstones")
     }
 
-    val groupInput: Int => DataFrame = { g =>
-      spark.read.parquet(s"$outDir/staged").where(col("grp") === g)
-        .select(col("term"), col("slice"), col("doc_id"), col("tf"), col("doc_len"), col("pos"))
+    val chunkInput: Int => DataFrame = { g =>
+      sources.map { s =>
+        IndexBuilder.readPostings(spark, s.dir)
+          .select($"term", $"slice", $"count", $"doc_id_min", $"doc_id_max", $"deltas", $"tfs", $"dls", $"poss")
+          .as[Block]
+          .mapPartitions(blocks => rechunk(blocks, s.ids(), g, cfg, nDocs))
+      }.reduce(_ union _).toDF("term", "slice", "min_doc", "n", "ids", "tfs", "dls", "pos")
     }
-    IndexBuilder.buildGroups(spark, outDir, cfg, groupInput)
+    IndexBuilder.buildGroups(spark, outDir, cfg, chunkInput)
+  }
+
+  /** A source posting block: (term, slice, count, doc_id_min, doc_id_max,
+    * deltas, tfs, dls, poss).
+    */
+  private type Block = (String, Int, Int, Long, Long, Array[Byte], Array[Byte], Array[Byte], Array[Byte])
+
+  /** Output group g's chunk rows from one source's blocks. Per block: its
+    * ids map into the output (`ids`, monotone, so a block whose mapped
+    * bounds lie outside group g is skipped undecoded); otherwise it
+    * decodes once, and every kept posting of group g is routed to its
+    * output slice with the build's [[IndexBuilder.rangeOf]]. Each (term,
+    * output slice) run of the block becomes one chunk; positions carry
+    * over as opaque per-posting byte chunks, never decoded to ints.
+    */
+  private def rechunk(blocks: Iterator[Block], ids: (Int, Long) => Long, g: Int, cfg: BuildConfig,
+                      nDocs: Long): Iterator[IndexBuilder.Chunk] = {
+    def groupOf(id: Long) = IndexBuilder.rangeOf(if (id < 0) ~id else id, cfg.nGroups, nDocs)
+    blocks.flatMap { case (term, slice, n, idMin, idMax, deltas, tfs, dls, poss) =>
+      if (groupOf(ids(slice, idMin)) > g || groupOf(ids(slice, idMax)) < g) Iterator.empty
+      else {
+        val old = Codec.decodeGapsFromBase(idMin, deltas, n)
+        val tf = Codec.decodeIntsAuto(tfs, n)
+        val dl = Codec.decodeIntsAuto(dls, n)
+        val pos = if (poss == null || poss.isEmpty) null else Codec.splitPosChunks(poss, tf)
+        val out = ArrayBuffer.empty[IndexBuilder.Chunk]
+        var buf: IndexBuilder.ChunkBuf = null
+        var bufSlice = -1
+        var i = 0
+        while (i < n) {
+          val id = ids(slice, old(i))
+          if (id >= 0 && IndexBuilder.rangeOf(id, cfg.nGroups, nDocs) == g) {
+            val s = IndexBuilder.rangeOf(id, cfg.nSlices, nDocs)
+            if (s != bufSlice) {
+              if (buf != null) out += IndexBuilder.emitChunk(term, bufSlice, buf)
+              buf = new IndexBuilder.ChunkBuf
+              bufSlice = s
+            }
+            buf.add(id, tf(i), dl(i), if (pos == null) null else pos(i))
+          }
+          i += 1
+        }
+        if (buf != null) out += IndexBuilder.emitChunk(term, bufSlice, buf)
+        out.iterator
+      }
+    }
   }
 
   /** DECODE-FREE merge: concatenate segments into one physical index by
@@ -152,7 +195,7 @@ object SegmentMerge {
     * groups renumber by per-segment offsets, so slices remain disjoint doc
     * ranges and every WAND invariant holds.
     *
-    * vs [[merge]]: merge() restages and rebuilds — byte-identical to a
+    * vs [[merge]]: merge() decodes and rebuilds — byte-identical to a
     * from-scratch build of the union, at ~rebuild cost. fastMerge() is
     * I/O-bound (read blocks, update 4 small columns, write) and yields
     * RANK-IDENTICAL search results (tested), with `max_impact` re-derived
@@ -228,7 +271,7 @@ object SegmentMerge {
       .reduce(_ unionByName _)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("grp")
-      .option("compression", sys.env.getOrElse("GRAFT_POSTINGS_CODEC", "uncompressed"))
+      .option("compression", IndexBuilder.PostingsCompression)
       .parquet(s"$outDir/postings")
 
     // term dictionary: Σ per-segment (df, tf) per term

@@ -2,10 +2,8 @@ package graft.index
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.CorpusStats
-import graft.functions.{Codec, DenseId}
 import graft.index.IndexBuilder.BuildConfig
 import graft.query.{DocFilter, Filters, NotFilter, SortedIdsSet}
 import graft.sources.Fsx
@@ -27,7 +25,7 @@ import graft.sources.Fsx
   *   - [[purge]] rewrites the index without the deleted docs (ids
   *     renumbered dense, stats/df recomputed, blocks re-encoded) —
   *     ≙ Lucene's merge-time reclamation. Cost class = SegmentMerge
-  *     .merge (decode + restage + rebuild); run it when the deleted
+  *     .merge (decode + rebuild, one rewrite); run it when the deleted
   *     fraction makes the per-query exclusion (memory ∝ deletes per
   *     slice) or the stats drift worth reclaiming.
   *
@@ -36,7 +34,9 @@ import graft.sources.Fsx
   * deleted total are the `tombstones` entry of the index's commit log
   * (`_log/`, [[graft.sources.Fsx]], beside the build checkpoints).
   * Readers resolve it once per query (driver-side, via [[handle]]) and
-  * only ever open one complete generation. A publish renames its
+  * only ever open one complete generation; the generation before the
+  * live one stays until the next publish, and a reader whose generation
+  * is gone fails loudly. A publish renames its
   * generation into place, then commits on the log version it read before
   * its job, so a concurrent second [[delete]] fails, naming the index.
   */
@@ -84,18 +84,13 @@ object Tombstones {
     }
 
   /** Task/driver-side: sorted deleted ids of one slice (empty when the
-    * generation has no file for it). Memory ∝ deletes in the slice —
+    * generation has no file for it; throws when the generation itself is
+    * gone, see [[withSlice]]). Memory ∝ deletes in the slice —
     * bounded by [[purge]] policy, exactly as Lucene bounds live-deletes
     * by merging.
     */
-  def readSlice(indexDir: String, gen: Int, slice: Int): Array[Long] = {
-    val p = new Path(s"${genDir(indexDir, gen)}/slice-$slice.bin")
-    val fs = fsOf(p)
-    if (!fs.exists(p)) return Array.emptyLongArray
-    val in = new DataInputStream(new BufferedInputStream(fs.open(p), 1 << 16))
-    try {
-      require(in.readInt() == Magic && in.readInt() == Version, s"bad tombstone header: $p")
-      val n = readVar(in).toInt
+  def readSlice(indexDir: String, gen: Int, slice: Int): Array[Long] =
+    withSlice(indexDir, gen, slice, Array.emptyLongArray) { (in, n) =>
       val ids = new Array[Long](n)
       var prev = 0L
       var i = 0
@@ -105,6 +100,31 @@ object Tombstones {
         i += 1
       }
       ids
+    }
+
+  /** Number of deleted ids of one slice, from its file's header. */
+  private def sliceCount(indexDir: String, gen: Int, slice: Int): Long =
+    withSlice(indexDir, gen, slice, 0L)((_, n) => n.toLong)
+
+  /** `read` over one slice file's stream past its header and its id
+    * count, or `empty` when the generation has no file for the slice.
+    * Throws, naming the index and the generation, when the generation
+    * itself is gone: a publish keeps only the live generation and the
+    * one before it, so a reader that resolved its [[Handle]] two
+    * publishes ago must not read "no deletes".
+    */
+  private def withSlice[T](indexDir: String, gen: Int, slice: Int, empty: T)(read: (DataInputStream, Int) => T): T = {
+    val p = new Path(s"${genDir(indexDir, gen)}/slice-$slice.bin")
+    val fs = fsOf(p)
+    if (!fs.exists(p)) {
+      if (!fs.exists(p.getParent)) throw new java.io.FileNotFoundException(
+        s"$indexDir: tombstone generation $gen is gone; two newer generations were published since it was resolved")
+      return empty
+    }
+    val in = new DataInputStream(new BufferedInputStream(fs.open(p), 1 << 16))
+    try {
+      require(in.readInt() == Magic && in.readInt() == Version, s"bad tombstone header: $p")
+      read(in, readVar(in).toInt)
     } finally in.close()
   }
 
@@ -266,8 +286,11 @@ object Tombstones {
     * carry the previous generation's untouched slice files into it,
     * rename it into place under a number no generation dir has yet (one
     * a crashed writer renamed but never committed is never reused),
-    * commit it — with `unit`, if given — on `base`, and delete the older
-    * generation dirs. Returns the new total deleted count.
+    * commit it — with `unit`, if given — on `base`, and delete every
+    * generation dir but the new one and the previous live one. A query
+    * resolves its [[Handle]] once and opens the slice files later, so the
+    * previous generation stays until the next publish. Returns the new
+    * total deleted count.
     */
   private def publish(base: Fsx.Commit, prev: Option[(Int, Long)], outDir: String,
                       added: Map[Int, Long], unit: String): Long = {
@@ -291,23 +314,9 @@ object Tombstones {
       s.putObject("tombstones").put("gen", nextGen).put("deleted", total)
       if (unit != null) IndexBuilder.addUnit(s, unit)
     }
-    // the previous generation and any a crashed or losing writer left (a
-    // query that resolved the previous one but has not opened its slice
-    // files yet reads them as empty)
-    gens.foreach(g => Fsx.delete(genDir(indexDir, g)))
+    // older generations and any a crashed or losing writer left
+    gens.filterNot(g => prev.exists(_._1 == g)).foreach(g => Fsx.delete(genDir(indexDir, g)))
     total
-  }
-
-  /** Deleted ids as a DataFrame (doc_id) — purge's anti-join side. Files
-    * are read executor-side, one task per slice.
-    */
-  private def deletedDf(spark: SparkSession, indexDir: String, gen: Int, nSlices: Int): DataFrame = {
-    import spark.implicits._
-    val idxDir = indexDir
-    spark.range(0, nSlices.toLong)
-      .as[Long]
-      .mapPartitions(_.flatMap(s => readSlice(idxDir, gen, s.toInt).iterator))
-      .toDF("doc_id")
   }
 
   /** Live deleted ids WITH their slice, executor-read — the merge lineage
@@ -328,13 +337,38 @@ object Tombstones {
     }
   }
 
+  /** Purge's map of an index's doc ids: its deleted docs drop out and the
+    * rest renumber densely in order, `new = old − (deleted ids below
+    * old)`. The count below is `before(s)`, the deleted ids of the slices
+    * before old's slice s, plus those below old in s's own file — which
+    * holds because every index's slices are contiguous doc ranges in
+    * ascending order.
+    */
+  private[index] final case class Dropped(indexDir: String, gen: Int, before: Array[Long]) {
+    /** A per-task map of (slice, old id) to the new id. It reads each
+      * slice's deleted ids once, when first asked, so a task holds only
+      * those of the slices it maps. A deleted doc maps to the complement
+      * (< 0) of the id the next survivor gets, which keeps the map
+      * monotone for block-range checks.
+      */
+    def open(): (Int, Long) => Long = {
+      val deleted = new Array[Array[Long]](before.length)
+      (slice, old) => {
+        if (deleted(slice) == null) deleted(slice) = readSlice(indexDir, gen, slice)
+        val i = java.util.Arrays.binarySearch(deleted(slice), old)
+        if (i >= 0) ~(old - before(slice) - i) else old - before(slice) - (-i - 1)
+      }
+    }
+  }
+
   /** Rewrite the index at `outDir` WITHOUT the deleted docs: survivors
     * renumber to dense ids (order preserved), stats/df recompute, posting
     * blocks re-encode — the result is rank-identical to a from-scratch
     * build over the surviving pages (tested), with no tombstones.
-    * Cost class = SegmentMerge.merge (decode + restage + buildGroups, all
-    * resumable); the id remap joins decoded postings with a (old_id →
-    * new_id) table — survivors-sized, shuffled once.
+    * Cost class = SegmentMerge.merge: the same rewrite
+    * ([[SegmentMerge.rewrite]], resumable per unit) over one source whose
+    * ids map through [[Dropped]]. The driver reads only the nSlices
+    * per-slice counts; nothing id-sized is collected or joined.
     */
   def purge(
       spark: SparkSession,
@@ -342,84 +376,23 @@ object Tombstones {
       outDir: String,
       cfg: BuildConfig = null
   ): Unit = {
-    import spark.implicits._
-    val done = IndexBuilder.completedUnits(outDir)
-    if (done.contains("done")) return
+    if (IndexBuilder.completedUnits(outDir).contains("done")) return
     val gen = current(indexDir) match {
       case Some((g, _)) => g
       case None => throw new IllegalArgumentException(s"no tombstones to purge in $indexDir")
     }
     val srcMeta = IndexBuilder.readMeta(indexDir)
     val useCfg = if (cfg == null) srcMeta else cfg.copy(positions = srcMeta.positions)
-    IndexBuilder.writeMeta(outDir, useCfg)
-
-    if (!done.contains("staged")) {
-      val deleted = deletedDf(spark, indexDir, gen, srcMeta.nSlices)
-
-      // survivors keep relative order: new_id = dense rank of old doc_id
-      val survivors = IndexBuilder.readDocsTable(spark, indexDir)
-        .select($"doc_id", $"url", $"warc_ts", $"lang", $"doc_len")
-        .join(deleted, Seq("doc_id"), "left_anti")
-      val (remapped, nDocsL) =
-        DenseId.assignWithCount(survivors, "doc_id", "new_id", useCfg.nPartitions)
-      val nDocs = math.max(1L, nDocsL)
-
-      remapped
-        .select($"new_id".as("doc_id"), $"url", $"warc_ts", $"lang", $"doc_len",
-          $"doc_id".as("old_id"))
-        .withColumn("slice", least(lit(useCfg.nSlices - 1), expr(s"CAST(doc_id * ${useCfg.nSlices} DIV $nDocs AS INT)")))
-        .withColumn("grp", least(lit(useCfg.nGroups - 1), expr(s"CAST(doc_id * ${useCfg.nGroups} DIV $nDocs AS INT)")))
-        .repartitionByRange(useCfg.nPartitions, $"doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("grp")
-        .parquet(s"$outDir/docs_remap")
-
-      val docsRemap = spark.read.parquet(s"$outDir/docs_remap")
-      docsRemap.drop("old_id")
-        .write.mode(SaveMode.Overwrite).partitionBy("grp").parquet(s"$outDir/docs")
-
-      val st = docsRemap
-        .agg(
-          org.apache.spark.sql.functions.count(lit(1)).as("n_docs"),
-          coalesce(avg($"doc_len"), lit(0.0)).as("avg_dl"),
-          coalesce(sum($"doc_len"), lit(0L)).as("total_tokens"))
-        .as[CorpusStats].head()
-      Seq(st).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
-      IndexBuilder.writeStatsJson(outDir, st)
-
-      // decode source blocks, drop deleted postings, remap ids, restage
-      val decoded = IndexBuilder.readPostings(spark, indexDir)
-        .select($"term", $"count", $"doc_id_min", $"deltas", $"tfs", $"dls", $"poss")
-        .as[(String, Int, Long, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (term, n, idMin, deltas, tfs, dls, poss) =>
-          val ids = Codec.decodeGapsFromBase(idMin, deltas, n)
-          val tf = Codec.decodeIntsAuto(tfs, n)
-          val dl = Codec.decodeIntsAuto(dls, n)
-          val chunks =
-            if (poss == null || poss.isEmpty) null
-            else Codec.splitPosChunks(poss, tf)
-          Iterator.tabulate(n)(i =>
-            (ids(i), term, tf(i), dl(i), if (chunks == null) null else chunks(i)))
-        }
-        .toDF("old_id", "term", "tf", "doc_len", "pos")
-
-      decoded
-        .join(docsRemap.select($"old_id", $"doc_id", $"slice", $"grp"), Seq("old_id"))
-        .select($"doc_id", $"doc_len", $"term", $"tf", $"pos", $"slice", $"grp")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("grp")
-        .parquet(s"$outDir/staged")
-      IndexBuilder.commitUnit(outDir, "staged")
-    }
-
-    val groupInput: Int => DataFrame = { g =>
-      spark.read.parquet(s"$outDir/staged").where(col("grp") === g)
-        .select(col("term"), col("slice"), col("doc_id"), col("tf"), col("doc_len"), col("pos"))
-    }
-    IndexBuilder.buildGroups(spark, outDir, useCfg, groupInput)
-    // remap scaffold only feeds the staged join — reclaim once built
-    // (FS-API delete: a java.io.File delete silently no-ops on HDFS/S3)
-    Fsx.delete(s"$outDir/docs_remap")
+    val counts = (0 until srcMeta.nSlices).map(sliceCount(indexDir, gen, _))
+    val survivors = IndexBuilder.readStats(spark, indexDir).n_docs - counts.sum
+    // a resumed purge must map ids as its written docs did; deletes only
+    // add ids, so a changed survivor count means the source changed
+    if (IndexBuilder.completedUnits(outDir).contains("staged") &&
+        IndexBuilder.readStats(spark, outDir).n_docs != survivors)
+      throw new IllegalStateException(
+        s"$indexDir: deletes landed since the purge into $outDir started; purge into a new directory")
+    SegmentMerge.rewrite(spark,
+      Seq(SegmentMerge.Source(indexDir, 0L, survivors, Dropped(indexDir, gen, counts.scanLeft(0L)(_ + _).init.toArray))),
+      outDir, useCfg)
   }
 }

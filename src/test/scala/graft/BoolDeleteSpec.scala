@@ -369,7 +369,11 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
             assert(math.abs(a - b) < 1e-9, s"purged vs fresh $ts $mode score")
           }
       }
-      // phrase capability survives the purge (positions re-staged verbatim)
+      // and the postings themselves are the fresh build's, byte for byte
+      def postings(d: Path) = IndexBuilder.readPostings(spark, d.toString).collect()
+        .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }.toString).sorted.toSeq
+      assert(postings(purged) == postings(fresh), "purged vs fresh postings")
+      // phrase capability survives the purge (positions carried verbatim)
       val pp = got(Search.phraseTopK(spark, purged.toString, Seq("w1", "w2"), 10))
       val fp = got(Search.phraseTopK(spark, fresh.toString, Seq("w1", "w2"), 10))
       assert(pp.map(_._1) == fp.map(_._1), "purged phrase ids")

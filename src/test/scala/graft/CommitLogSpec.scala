@@ -4,14 +4,15 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.FileAlreadyExistsException
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.index.{IndexBuilder, SegmentFamily, Tombstones, TimeBuckets}
+import graft.index.{IndexBuilder, SegmentFamily, SegmentMerge, Tombstones, TimeBuckets}
 import graft.index.IndexBuilder.BuildConfig
 import graft.query.MultiSearcher
 import graft.sources.{Fsx, PagesGen}
 
 /** The control plane on the commit log: crash points of tombstone
-  * publishes and compactions (a reader sees the old state or the new one,
-  * the next writer succeeds, earlier deletes stay excluded), writers that
+  * publishes, compactions, merges and purges (a reader sees the old state
+  * or the new one, the next writer succeeds, earlier deletes stay
+  * excluded, a resumed rewrite equals an uninterrupted one), writers that
   * start from one version (the second fails and names the directory),
   * legacy control files, and byte-identical logs across parallelism.
   */
@@ -65,10 +66,87 @@ class CommitLogSpec extends AnyFunSuite {
       assert(Tombstones.delete(spark, d, col("doc_id") === victim) == i + 2, step)
       assert(hits(Seq(d)) == before - victim && !hits(Seq(d)).contains(ids(0)), step)
     }
+    val prevGen = Tombstones.current(d).get._1
     assert(Tombstones.delete(spark, d, col("doc_id") === ids(4)) == 5L)
     assert(hits(Seq(d)) == ids.toSet -- ids.take(5))
-    assert(Fsx.listNames(s"$d/tombstones").filter(_.startsWith("gen-")) ==
-      Seq(s"gen-${Tombstones.current(d).get._1}"), "crashed writers' generations are reclaimed")
+    assert(Fsx.listNames(s"$d/tombstones").filter(_.startsWith("gen-")).toSet ==
+      Set(prevGen, Tombstones.current(d).get._1).map(g => s"gen-$g"),
+      "crashed writers' generations are reclaimed; the previous live one stays")
+  }
+
+  test("a reader's tombstone generation outlives one more delete, then reading it fails loudly") {
+    val d = build(tmp("graft-log-handle") + "/idx", 0, 200)
+    val ids = hits(Seq(d)).toSeq.sorted
+    Tombstones.delete(spark, d, col("doc_id") === ids(0))
+    val h = Tombstones.handle(d) // resolved by a query that has not read its slices yet
+    val slice = IndexBuilder.readDocsTable(spark, d).where(col("doc_id") === ids(0))
+      .select("slice").head().getInt(0)
+    Tombstones.delete(spark, d, col("doc_id") === ids(1))
+    assert(Tombstones.readSlice(d, h.gen, slice).toSeq == Seq(ids(0)), "the handle still reads its ids")
+    Tombstones.delete(spark, d, col("doc_id") === ids(2))
+    val e = intercept[java.io.FileNotFoundException](Tombstones.readSlice(d, h.gen, slice))
+    assert(e.getMessage.contains(d) && e.getMessage.contains(s"generation ${h.gen}"), e.getMessage)
+  }
+
+  /** Everything a rewrite writes, comparable by value: postings, docs,
+    * stats, terms, the live tombstone ids and the log's latest state.
+    */
+  private def contents(dir: String): Seq[Any] = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }.toString).sorted.toSeq
+    val nSlices = IndexBuilder.readMeta(dir).nSlices
+    Seq(
+      rows(IndexBuilder.readPostings(spark, dir)),
+      rows(IndexBuilder.readDocsTable(spark, dir)),
+      Fsx.readUtf8(s"$dir/stats.json"),
+      rows(IndexBuilder.readTerms(spark, dir).toDF()),
+      Tombstones.current(dir).map { case (g, n) => (n, (0 until nSlices).map(Tombstones.readSlice(dir, g, _).toSeq)) },
+      Fsx.latest(dir).state.toString)
+  }
+
+  /** Runs `write` into `dir` with a crash right after the commit of its
+    * unit grp-0 lands.
+    */
+  private def crashAfterGrp0(dir: String)(write: => Unit): Unit = {
+    var fired = false
+    Fsx.onCommitStep = (s, path) =>
+      if (!fired && s == "renamed" && path.startsWith(s"$dir/_log/") &&
+          IndexBuilder.completedUnits(dir).contains("grp-0")) {
+        fired = true
+        throw new IllegalStateException("crash after grp-0")
+      }
+    try intercept[IllegalStateException](write)
+    finally Fsx.onCommitStep = (_, _) => ()
+    assert(fired && !IndexBuilder.completedUnits(dir).contains("grp-1"))
+  }
+
+  test("merge and purge crashed after grp-0 resume to the uninterrupted output, with no staged tables") {
+    val base = tmp("graft-log-rewrite")
+    val c = cfg.copy(nPartitions = 4, nGroups = 2, nSlices = 4)
+    val a = build(s"$base/a", 0, 150, c)
+    val b = build(s"$base/b", 150, 300, c)
+    Seq(a, b).foreach(d => Tombstones.delete(spark, d, col("lang") === "de"))
+    def merge(out: String) = SegmentMerge.merge(spark, a, b, out, c)
+    def purge(out: String) = Tombstones.purge(spark, a, out)
+    Seq("merge" -> (merge _), "purge" -> (purge _)).foreach { case (name, write) =>
+      write(s"$base/$name-whole")
+      crashAfterGrp0(s"$base/$name-resumed")(write(s"$base/$name-resumed"))
+      write(s"$base/$name-resumed")
+      assert(contents(s"$base/$name-resumed") == contents(s"$base/$name-whole"), name)
+      Seq("whole", "resumed").foreach { run =>
+        val names = Fsx.listNames(s"$base/$name-$run")
+        assert(!names.contains("staged") && !names.contains("docs_remap"), s"$name-$run: $names")
+      }
+    }
+    assert(Tombstones.count(s"$base/merge-whole") == Seq(a, b).map(Tombstones.count).sum)
+    assert(Tombstones.current(s"$base/purge-whole").isEmpty)
+    // a purge resumed after its source gained deletes fails instead of
+    // mixing two id maps
+    crashAfterGrp0(s"$base/purge-stale")(purge(s"$base/purge-stale"))
+    val deleted = Tombstones.count(a)
+    assert(Tombstones.delete(spark, a, col("lang") =!= "de" && col("doc_id") < 20) > deleted)
+    val e = intercept[IllegalStateException](purge(s"$base/purge-stale"))
+    assert(e.getMessage.contains(a), e.getMessage)
   }
 
   test("a merged segment written but not committed: the family reads as before, the next compaction keeps every delete") {

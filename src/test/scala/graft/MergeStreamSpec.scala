@@ -22,17 +22,14 @@ class MergeStreamSpec extends AnyFunSuite {
     }
   }
 
+  private def postingKey(r: PostingRow) =
+    (r.term, r.slice, r.block_id, r.doc_id_min, r.doc_id_max, r.count,
+      r.deltas.toSeq, r.tfs.toSeq, (r.dls.toSeq, r.poss.toSeq, r.max_tf, r.min_dl), r.max_impact)
+
   private def dumpPostings(p: String) =
-    IndexBuilder.readPostings(spark, p)
+    IndexBuilder.readPostings(spark, p).as[PostingRow]
       .collect()
-      .map { r =>
-        (r.getAs[String]("term"), r.getAs[Int]("slice"), r.getAs[Int]("block_id"),
-          r.getAs[Long]("doc_id_min"), r.getAs[Long]("doc_id_max"), r.getAs[Int]("count"),
-          r.getAs[Array[Byte]]("deltas").toSeq, r.getAs[Array[Byte]]("tfs").toSeq,
-          (r.getAs[Array[Byte]]("dls").toSeq, r.getAs[Array[Byte]]("poss").toSeq,
-            r.getAs[Int]("max_tf"), r.getAs[Int]("min_dl")),
-          r.getAs[Double]("max_impact"))
-      }
+      .map(postingKey)
       .sortBy(t => (t._1, t._2, t._3))
       .toSeq
 
@@ -108,18 +105,24 @@ class MergeStreamSpec extends AnyFunSuite {
     assert(phF.map(_._1).toSeq == phM.map(_._1).toSeq, "fastMerge phrase")
   }
 
-  test("mapSideCombine exchange produces byte-identical postings to the row shuffle") {
-    val dRow = Files.createTempDirectory("cmb-row").toString
-    val dCmb = Files.createTempDirectory("cmb-chk").toString
-    // explicit row shuffle vs explicit combine (the default flipped to
-    // combine in r5, which silently made this test compare like to like)
-    val cfgRow = BuildConfig(nPartitions = 8, nGroups = 2, nSlices = 4, blockSize = 32,
-      mapSideCombine = false)
-    IndexBuilder.build(spark, pagesWithPrefix("c", 0, 400), dRow, cfgRow)
-    IndexBuilder.build(spark, pagesWithPrefix("c", 0, 400), dCmb,
-      cfgRow.copy(mapSideCombine = true))
-    assert(dumpPostings(dCmb) == dumpPostings(dRow),
-      "combine path must normalize to the exact same blocks")
+  test("chunk exchange ≡ blockify over (term, slice, doc_id)-sorted rows") {
+    val d = Files.createTempDirectory("cmb-chk").toString
+    val cfg = BuildConfig(nPartitions = 8, nGroups = 2, nSlices = 4, blockSize = 32)
+    val n = 400L
+    IndexBuilder.build(spark, pagesWithPrefix("c", 0, n), d, cfg)
+    // reference: one row per posting, doc i's dense id is i (its url's
+    // rank), slices and groups are equal doc ranges
+    val rows = (0L until n).flatMap { id =>
+      val (dl, tps) = graft.functions.Analyzer.termPositions(PagesGen.textFor(id))
+      val slice = (id * cfg.nSlices / n).toInt
+      tps.map { case (t, ps) => (t, slice, id, ps.length, dl, graft.functions.Codec.encodePosChunk(ps)) }
+    }
+    val avgDl = IndexBuilder.readStats(spark, d).avg_dl
+    val expected = rows.groupBy(_._2 * cfg.nGroups / cfg.nSlices).toSeq.flatMap { case (g, rs) =>
+      IndexBuilder.blockify(rs.sortBy(r => (r._1, r._2, r._3)).iterator, g, cfg.blockSize, avgDl)
+    }
+    assert(dumpPostings(d) == expected.map(postingKey).sortBy(t => (t._1, t._2, t._3)),
+      "the chunk exchange must produce the row-by-row blocks")
   }
 
   test("fused reducer mergeChunksToBlocks ≡ blockify(mergeChunks(_)) on shuffled chunks") {

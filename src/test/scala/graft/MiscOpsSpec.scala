@@ -291,6 +291,16 @@ class MiscOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("IndexJob CLI rejects an unknown or retired flag by name before doing anything") {
+    val base = Files.createTempDirectory("indexjob-flags").toString
+    Seq("--slice=8", "--combine=0", "--positions").foreach { f =>
+      val e = intercept[IllegalArgumentException](
+        IndexJob.run(spark, Seq("build", s"$base/pages", s"$base/idx", "--partitions=4", f)))
+      assert(e.getMessage.contains(f.takeWhile(_ != '=')), e.getMessage)
+    }
+    assert(!graft.sources.Fsx.exists(s"$base/idx"), "a rejected command wrote nothing")
+  }
+
   test("IndexJob CLI: delete marks docs, purge rewrites without them") {
     val base = Files.createTempDirectory("indexjob-del").toString
     val pagesPath = s"$base/pages"
