@@ -161,6 +161,48 @@ class QueryJobsSpec extends AnyFunSuite {
     assert(decodes == 108, s"the three walks decoded $decodes blocks")
   }
 
+  test("term, phrase, export and collapse walks: block decodes and score bits pinned") {
+    import graft.index.AttrPred
+    val dir = this.dir
+    val q = Seq("w0", "w1")
+    // (hits, fingerprint of the doc-id-sorted (id, raw score bits) pairs,
+    // block decodes, position-block decodes)
+    def measured(df: => org.apache.spark.sql.DataFrame): (Int, Long, Long, Long) = {
+      BlockMaxWand.blockDecodes.reset()
+      BlockMaxWand.posBlockDecodes.reset()
+      val hits = df.collect().map(r =>
+        (r.getAs[Long]("doc_id"), java.lang.Double.doubleToRawLongBits(r.getAs[Double]("score")))).sorted
+      val fp = hits.foldLeft(17L) { case (h, (id, bits)) => (h * 31 + id) * 31 + bits }
+      (hits.length, fp, BlockMaxWand.blockDecodes.sum(), BlockMaxWand.posBlockDecodes.sum())
+    }
+    val en = AttrPred.lang("en")
+    // (call, measured, (hits, fingerprint, block decodes, position-block
+    // decodes)). w0 and w1 have 18 blocks each and w2 12; the AND gate
+    // leaves 4 blocks undecoded at k = 5, while on blocks of 16 postings no
+    // phrase block's bound falls below θ
+    val calls = Seq(
+      ("topK or", measured(Search.topK(spark, dir, q, "or", 5)), (5, -581650263918328595L, 36L, 0L)),
+      ("topK and", measured(Search.topK(spark, dir, q, "and", 5)), (5, -581650263918328595L, 32L, 0L)),
+      ("topK or filtered", measured(Search.topK(spark, dir, q, "or", 5, attrFilter = en,
+        mustNot = Seq("w2"))), (5, -7423593664586942627L, 48L, 0L)),
+      ("topK and filtered", measured(Search.topK(spark, dir, q, "and", 5, attrFilter = en,
+        mustNot = Seq("w2"))), (5, -7423593664586942627L, 48L, 0L)),
+      ("phraseTopK", measured(Search.phraseTopK(spark, dir, q, 5)),
+        (5, -5014187377777208813L, 36L, 36L)),
+      ("phraseTopK slop 1", measured(Search.phraseTopK(spark, dir, q, 5, slop = 1)),
+        (5, -5014187377777208813L, 36L, 36L)),
+      ("exportMatches and", measured(Search.exportMatches(spark, dir, q, "and", mustNot = Seq("w2"))),
+        (79, -3941211218717366134L, 48L, 0L)),
+      ("exportMatches or filtered", measured(Search.exportMatches(spark, dir, q, "or", attrFilter = en,
+        mustNot = Seq("w2"))), (93, -7966829534740074266L, 48L, 0L)),
+      ("collapseTopK", measured(Search.collapseTopK(spark, dir, q, "or", "lang", 10)),
+        (3, -4472684756394075220L, 36L, 0L)))
+    calls.foreach { case (what, got, _) => info(s"$what: $got") }
+    calls.foreach { case (what, got, want) =>
+      assert(got == want, s"$what: (hits, fingerprint, blocks, position blocks) = $got, want $want")
+    }
+  }
+
   test("more_like_this reads the dictionary once") {
     val dir = this.dir
     val jobs = jobsOf(Search.moreLikeThis(spark, dir, 7L, k = 5).collect())
