@@ -14,7 +14,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.BenchExtra [query...]"`
   * Optional env:
-  *   GRAFT_EXTRA_EXPLAIN=/path/dir — dump .explain("formatted") per query
+  *   GRAFT_EXTRA_EXPLAIN=/path/dir — write `<dir>/<query>.txt` per query:
+  *                                   its initial plan and, after one run
+  *                                   of that same QueryExecution, the final
+  *                                   adaptive plan (so the "cold" run that
+  *                                   follows is no longer cold)
   *   GRAFT_EXTRA_RUNS=n            — timed runs per query (default 2)
   */
 object BenchExtra {
@@ -69,9 +73,15 @@ object BenchExtra {
       val fn = all.getOrElse(name, throw new IllegalArgumentException(s"unknown query $name"))
       explainDir.foreach { d =>
         new java.io.File(d).mkdirs()
+        val qe = fn(spark, sfDir).queryExecution
+        val initial = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+        // run THIS QueryExecution so AQE finalizes (runtime joins,
+        // coalescing, stage reuse) — a df.count() would build a fresh
+        // QueryExecution and leave this one unexecuted
+        qe.toRdd.count()
         val pw = new java.io.PrintWriter(s"$d/$name.txt")
-        try pw.write(fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+        try pw.write(s"== Initial plan (before execution) ==\n$initial\n\n" +
+          s"== Final adaptive plan (after execution) ==\n${qe.explainString(org.apache.spark.sql.execution.FormattedMode)}")
         finally pw.close()
       }
       val secs = (1 to runs).map { i =>

@@ -8,7 +8,7 @@ import graft.index.IndexBuilder.impact
   * score; candidates outside it are skipped before scoring, and WAND
   * terminates early once it exhausts. Contract: targets are ASCENDING
   * (WAND's candidate stream is), so implementations may be monotone
-  * single-pass cursors — [[BlockMaxWand.FilterIter]] wraps a materialized
+  * single-pass cursors — [[SortedIdsFilter]] wraps a materialized
   * sorted allow-list (the ad-hoc Column path), while
   * [[graft.index.AttrSidecar.AttrCursor]] streams the slice's attribute
   * sidecar with O(1) memory (the ES doc-values path).
@@ -34,6 +34,19 @@ trait DocFilter {
   *   - upper bounds inflated by (1+1e-9) so float re-association can
   *     never under-estimate a bound and wrongly skip;
   *   - tie-break by ascending docID.
+  *
+  * Every walk but [[or]]'s WAND pivot loop is a composition of three
+  * cursor loops, each written once:
+  *   - [[Conjunction]], the leapfrog AND of the cursors and the filter:
+  *     [[and]], [[phrase]], [[phraseSlop]], [[phraseMatches]], and the
+  *     AND side of [[matchingDocIds]] and [[scoredMatches]];
+  *   - [[Disjunction]], the doc-at-a-time OR merge with the filter-gap
+  *     jump: the OR side of [[matchingDocIds]] and [[scoredMatches]],
+  *     and [[groupTopK]] (dis_max and synonyms);
+  *   - [[blockMaxSkip]], the metadata-only block-max gate, which
+  *     [[gatedTopK]] runs between the conjunction and the scorer for
+  *     [[and]], [[phrase]] and [[phraseSlop]]; they differ only in the
+  *     cursors that bound the gate, the bound formula and the scorer.
   */
 object BlockMaxWand {
 
@@ -194,41 +207,6 @@ object BlockMaxWand {
 
   final case class Hit(docId: Long, score: Double)
 
-  /** [[DocFilter]] over a sorted docID allow-list — the reference
-    * provisions ES keyword/date fields next to text fields
-    * (`ElasticSearchStorage.cs:208-233`); this is the materialized-list
-    * rendition used by the ad-hoc Column path and the batch path.
-    */
-  final class FilterIter(ids: Array[Long]) extends DocFilter {
-    private var i = 0
-    def exhausted: Boolean = i >= ids.length
-    /** Is `target` allowed? Advances the cursor (targets are ascending). */
-    def contains(target: Long): Boolean = {
-      // gallop then binary search — candidate stream and filter are both
-      // ascending, so the cursor is monotone and amortized O(log gap)
-      var lo = i
-      if (lo >= ids.length) return false
-      if (ids(lo) >= target) { i = lo; return ids(lo) == target }
-      var step = 1
-      var hi = lo + step
-      while (hi < ids.length && ids(hi) < target) { lo = hi; step <<= 1; hi = lo + step }
-      if (hi >= ids.length) hi = ids.length - 1
-      if (ids(hi) < target) { i = ids.length; return false }
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (ids(mid) < target) lo = mid + 1 else hi = mid
-      }
-      i = lo
-      ids(lo) == target
-    }
-    /** Smallest allowed doc ≥ target (Long.MaxValue when exhausted). */
-    def ceil(target: Long): Long = {
-      if (contains(target)) target
-      else if (i >= ids.length) Long.MaxValue
-      else ids(i)
-    }
-  }
-
   /** (score desc, docId asc)-best-k heap: min-heap ordered so the WORST
     * kept hit is at the head. A candidate beats the head iff its score is
     * higher, or equal score with smaller docId.
@@ -371,6 +349,193 @@ object BlockMaxWand {
     top.result
   }
 
+  /** A match stream over posting cursors: `nextDoc()` moves to the next
+    * match, or to Long.MaxValue at the end, and leaves the cursors that
+    * match it sitting on it until the next call.
+    */
+  private sealed trait Walk {
+    def nextDoc(): Long
+  }
+
+  /** The leapfrog: the docs on which every cursor and `filter` (a
+    * non-scoring conjunct, nullable) agree. Empty when a cursor is
+    * already exhausted.
+    */
+  private final class Conjunction(iters: Array[PostingIter], filter: DocFilter) extends Walk {
+    private var doc = -1L
+
+    /** First doc ≥ `from` on which every cursor and the filter agree, or
+      * Long.MaxValue: the filter's ceil, then every cursor advances to
+      * the target in order; any overshoot raises the target and repeats.
+      */
+    def align(from: Long): Long = {
+      var target = from
+      var aligned = false
+      while (!aligned && target != Long.MaxValue) {
+        aligned = true
+        if (filter != null) {
+          val c = filter.ceil(target)
+          if (c > target) { target = c; aligned = false }
+        }
+        var t = 0
+        while (t < iters.length && target != Long.MaxValue) {
+          iters(t).advance(target)
+          if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
+          t += 1
+        }
+      }
+      doc = target
+      target
+    }
+
+    def nextDoc(): Long =
+      if (doc == Long.MaxValue) doc
+      else if (doc >= 0) align(doc + 1)
+      else if (iters.isEmpty || iters.exists(_.exhausted)) align(Long.MaxValue)
+      else align(iters.map(_.doc).max)
+  }
+
+  /** The doc-at-a-time merge: the smallest doc any cursor sits on that
+    * `filter` (nullable) allows and at least `msm` cursors share. A
+    * disallowed doc jumps every cursor below the filter's next allowed
+    * doc straight past the gap (all of them, not only those on the doc,
+    * so the filter is never probed backward).
+    */
+  private final class Disjunction(iters: Array[PostingIter], filter: DocFilter, msm: Int) extends Walk {
+    private var doc = -1L
+
+    private def moveOn(d: Long): Unit = {
+      var t = 0
+      while (t < iters.length) { if (iters(t).doc == d) iters(t).next(); t += 1 }
+    }
+
+    def nextDoc(): Long = {
+      if (doc != Long.MaxValue) moveOn(doc)
+      while (doc != Long.MaxValue) {
+        var m = Long.MaxValue
+        var t = 0
+        while (t < iters.length) { val d = iters(t).doc; if (d < m) m = d; t += 1 }
+        if (m == Long.MaxValue) doc = m
+        else if (filter == null || filter.contains(m)) {
+          var matched = 0
+          t = 0
+          while (t < iters.length) { if (iters(t).doc == m) matched += 1; t += 1 }
+          if (matched >= msm) { doc = m; return m }
+          moveOn(m)
+        } else {
+          val nxt = filter.ceil(m + 1)
+          if (nxt == Long.MaxValue) doc = nxt
+          else {
+            t = 0
+            while (t < iters.length) { if (iters(t).doc < nxt) iters(t).advance(nxt); t += 1 }
+          }
+        }
+      }
+      doc
+    }
+  }
+
+  /** A [[Walk]] as a lazy iterator: the walk moves on at `hasNext`, so
+    * `emit` reads the cursors while they sit on the doc.
+    */
+  private abstract class WalkIterator[A](w: Walk) extends scala.collection.AbstractIterator[A] {
+    private var d = 0L
+    private var loaded = false
+    protected def emit(d: Long): A
+    def hasNext: Boolean = {
+      if (!loaded) { d = w.nextDoc(); loaded = true }
+      d != Long.MaxValue
+    }
+    def next(): A = {
+      if (!hasNext) throw new NoSuchElementException
+      loaded = false
+      emit(d)
+    }
+  }
+
+  /** Σ score of the cursors sitting on `d`, in query-term order — the
+    * float order [[NaiveBm25]] sums in.
+    */
+  private def scoreOn(iters: Array[PostingIter], d: Long): Double = {
+    var s = 0.0
+    var t = 0
+    while (t < iters.length) { if (iters(t).doc == d) s += iters(t).score; t += 1 }
+    s
+  }
+
+  /** The block-max gate at aligned doc `d` once the top-k holds θ. While
+    * the bound over the current blocks of `bounding` cannot beat θ, every
+    * doc those blocks cover is hopeless: every cursor moves past the
+    * tightest block end by metadata alone (shallowAdvance — no payload
+    * or position decode) and the next blocks are bounded. Returns `d`
+    * when the first bound beats θ, Long.MaxValue once a bounding cursor
+    * runs out, else the doc to leapfrog from. The bound is Σ
+    * blockMaxScore when `idfSum` is NaN (a term AND), else idfSum · min
+    * blockMaxImpact · Bound (a phrase: freq ≤ each bounding term's tf,
+    * and impact is monotone in freq).
+    */
+  private def blockMaxSkip(iters: Array[PostingIter], bounding: Array[PostingIter], idfSum: Double,
+                           theta: Double, d: Long): Long = {
+    var target = d
+    while (true) {
+      var sum = 0.0
+      var minImp = Double.MaxValue
+      var minLast = Long.MaxValue
+      var j = 0
+      while (j < bounding.length) {
+        val it = bounding(j)
+        if (it.exhausted) return Long.MaxValue
+        if (idfSum.isNaN) sum += it.blockMaxScore
+        else if (it.blockMaxImpact < minImp) minImp = it.blockMaxImpact
+        if (it.blockLastDoc < minLast) minLast = it.blockLastDoc
+        j += 1
+      }
+      if ((if (idfSum.isNaN) sum else idfSum * minImp * Bound) > theta) return target
+      target = minLast + 1
+      var a = 0
+      while (a < iters.length) { iters(a).shallowAdvance(target); a += 1 }
+    }
+    target
+  }
+
+  /** The gated top-k of [[and]], [[phrase]] and [[phraseSlop]]: the
+    * [[Conjunction]] over `iters` and `filter`, the [[blockMaxSkip]] gate
+    * once the heap is full, then `score` at each doc the gate lets
+    * through — NaN means no match, and nothing is offered.
+    */
+  private def gatedTopK(iters: Array[PostingIter], filter: DocFilter, k: Int, after: Hit,
+                        bounding: Array[PostingIter], idfSum: Double)(score: Long => Double): Array[Hit] = {
+    val top = new TopK(k, after)
+    val conj = new Conjunction(iters, filter)
+    var d = conj.nextDoc()
+    while (d != Long.MaxValue) {
+      val theta = top.threshold
+      val from = if (theta == Double.NegativeInfinity) d else blockMaxSkip(iters, bounding, idfSum, theta, d)
+      if (from == d) {
+        val s = score(d)
+        if (!s.isNaN) top.offer(Hit(d, s))
+        d = conj.nextDoc()
+      } else d = conj.align(from)
+    }
+    top.result
+  }
+
+  /** Top-k conjunctive (AND) retrieval: the [[Conjunction]] (`filter`,
+    * nullable, joins it as a non-scoring conjunct) with exact scores
+    * summed in query-term order.
+    *
+    * Block-max skip gate (the shape phrase mode carries): once top-k is
+    * full, any aligned doc d inside the current blocks scores at most
+    * Σ_t idf_t · maxImpact(t's current block); while that sum can't beat
+    * θ, EVERY doc covered by all current blocks is hopeless — jump past
+    * the tightest block end without scoring (for two common terms the
+    * intersection is corpus-sized, and the ungated loop decoded and
+    * scored all of it). Bounds only gate skips, so rank identity holds.
+    */
+  def and(iters: Array[PostingIter], k: Int, filter: DocFilter = null,
+      after: Hit = null): Array[Hit] =
+    gatedTopK(iters, filter, k, after, iters, Double.NaN)(scoreOn(iters, _))
+
   /** Exact-phrase top-k (ES `match_phrase` over analyzed text — positions
     * are provisioned capability: the reference's template declares the
     * comment/data fields `text`, `ElasticSearchStorage.cs:217,227,231`,
@@ -384,9 +549,14 @@ object BlockMaxWand {
     *
     * `iters` carry one PostingIter per DISTINCT phrase term in
     * first-occurrence order (so offsets(0) contains 0); `offsets(j)` =
-    * the phrase indexes where distinct term j occurs. Retrieval is a
-    * leapfrog AND over the distinct terms (with doc-filter as an extra
+    * the phrase indexes where distinct term j occurs. Retrieval is the
+    * [[Conjunction]] over the distinct terms (with doc-filter as an extra
     * non-scoring conjunct), then a positional verify on aligned docs.
+    *
+    * Block-max gate: freq(d) ≤ tf_t(d) for every phrase term t, and
+    * impact is monotone ↑tf, so score(d) ≤ idfSum · min_t maxImpact(t's
+    * current block); runs of hopeless blocks are crossed without
+    * decoding a single position stream.
     */
   def phrase(
       iters: Array[PostingIter],
@@ -395,76 +565,11 @@ object BlockMaxWand {
       k: Int,
       filter: DocFilter = null,
       after: Hit = null
-  ): Array[Hit] = {
-    val top = new TopK(k, after)
-    if (iters.isEmpty || iters.exists(_.exhausted)) return Array.empty
-    val avgDl = iters(0).avgDocLen
-    var target = iters.map(_.doc).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      if (filter != null) {
-        val c = filter.ceil(target)
-        if (c == Long.MaxValue) done = true
-        else if (c > target) { target = c; aligned = false }
-      }
-      var t = 0
-      while (t < iters.length && !done) {
-        iters(t).advance(target)
-        if (iters(t).exhausted) done = true
-        else if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
-        t += 1
-      }
-      if (!done && aligned) {
-        // block-max skip gate (once top-k is full): for any doc d,
-        // freq(d) ≤ tf_t(d) for every phrase term t, and impact is
-        // monotone ↑tf, so score(d) ≤ idfSum · min_t maxImpact(t's current
-        // block). While that bound can't beat θ, every doc covered by ALL
-        // current blocks is hopeless — jump past the tightest block end
-        // without decoding a single position stream.
-        val theta = top.threshold
-        var gated = false
-        if (theta != Double.NegativeInfinity) {
-          // metadata-only skip loop (same shape as and()): runs of
-          // hopeless blocks are crossed with zero payload/position decodes
-          var loop = true
-          while (loop && !done) {
-            var minImp = Double.MaxValue
-            var minLast = Long.MaxValue
-            var j = 0
-            while (j < iters.length && !done) {
-              if (iters(j).exhausted) done = true
-              else {
-                val imp = iters(j).blockMaxImpact
-                if (imp < minImp) minImp = imp
-                val bl = iters(j).blockLastDoc
-                if (bl < minLast) minLast = bl
-              }
-              j += 1
-            }
-            if (!done) {
-              if (idfSum * minImp * Bound <= theta) {
-                target = minLast + 1
-                var a = 0
-                while (a < iters.length) { iters(a).shallowAdvance(target); a += 1 }
-                gated = true
-              } else loop = false
-            }
-          }
-        }
-        if (!done && !gated) {
-          val poss = iters.map(_.positions)
-          val freq = phraseFreq(poss, offsets)
-          if (freq > 0) {
-            val s = idfSum * impact(freq, iters(0).docLen, avgDl)
-            top.offer(Hit(target, s))
-          }
-          target += 1
-        }
-      }
+  ): Array[Hit] =
+    gatedTopK(iters, filter, k, after, iters, idfSum) { _ =>
+      val freq = phraseFreq(iters.map(_.positions), offsets)
+      if (freq > 0) idfSum * impact(freq, iters(0).docLen, iters(0).avgDocLen) else Double.NaN
     }
-    top.result
-  }
 
   /** Enumerate ALL phrase-matching docs of a slice as (docId, freq,
     * docLen), ascending docId — no scoring, no top-k cut, no block-max
@@ -479,30 +584,13 @@ object BlockMaxWand {
       offsets: Array[Array[Int]],
       filter: DocFilter = null
   ): Iterator[(Long, Int, Int)] = {
-    if (iters.isEmpty || iters.exists(_.exhausted)) return Iterator.empty
     val out = new mutable.ArrayBuffer[(Long, Int, Int)]
-    var target = iters.map(_.doc).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      if (filter != null) {
-        val c = filter.ceil(target)
-        if (c == Long.MaxValue) done = true
-        else if (c > target) { target = c; aligned = false }
-      }
-      var t = 0
-      while (t < iters.length && !done) {
-        iters(t).advance(target)
-        if (iters(t).exhausted) done = true
-        else if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
-        t += 1
-      }
-      if (!done && aligned) {
-        val poss = iters.map(_.positions)
-        val freq = phraseFreq(poss, offsets)
-        if (freq > 0) out += ((target, freq, iters(0).docLen))
-        target += 1
-      }
+    val conj = new Conjunction(iters, filter)
+    var d = conj.nextDoc()
+    while (d != Long.MaxValue) {
+      val freq = phraseFreq(iters.map(_.positions), offsets)
+      if (freq > 0) out += ((d, freq, iters(0).docLen))
+      d = conj.nextDoc()
     }
     out.iterator
   }
@@ -578,7 +666,7 @@ object BlockMaxWand {
   }
 
   /** Sloppy-phrase top-k (ES `match_phrase` with `slop`): retrieval is
-    * the same leapfrog AND over distinct phrase terms as [[phrase]];
+    * the same [[Conjunction]] over distinct phrase terms as [[phrase]];
     * positional verify is [[sloppyFreqE6]]'s greedy ordered chain.
     * Score = idfSum · freq/(freq + k1·(1 − b + b·dl/avgdl)) with
     * freq = weightE6/10^6 — [[phrase]]'s shape with the weighted float
@@ -601,63 +689,31 @@ object BlockMaxWand {
       after: Hit = null
   ): Array[Hit] = {
     require(slop >= 0, "negative slop")
-    val top = new TopK(k, after)
-    if (iters.isEmpty || iters.exists(_.exhausted)) return Array.empty
-    val avgDl = iters(0).avgDocLen
-    var target = iters.map(_.doc).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      if (filter != null) {
-        val c = filter.ceil(target)
-        if (c == Long.MaxValue) done = true
-        else if (c > target) { target = c; aligned = false }
-      }
-      var t = 0
-      while (t < iters.length && !done) {
-        iters(t).advance(target)
-        if (iters(t).exhausted) done = true
-        else if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
-        t += 1
-      }
-      if (!done && aligned) {
-        val theta = top.threshold
-        var gated = false
-        if (theta != Double.NegativeInfinity) {
-          var loop = true
-          while (loop && !done) {
-            if (iters(0).exhausted) done = true
-            else if (idfSum * iters(0).blockMaxImpact * Bound <= theta) {
-              target = iters(0).blockLastDoc + 1
-              var a = 0
-              while (a < iters.length) { iters(a).shallowAdvance(target); a += 1 }
-              gated = true
-            } else loop = false
-          }
-        }
-        if (!done && !gated) {
-          val poss = iters.map(_.positions)
-          val wE6 = sloppyFreqE6(poss, chain, slop)
-          if (wE6 > 0) {
-            val freq = wE6 / 1000000.0
-            val dl = iters(0).docLen
-            val s = idfSum *
-              (freq / (freq + graft.index.IndexBuilder.K1 *
-                (1 - graft.index.IndexBuilder.B +
-                  graft.index.IndexBuilder.B * dl / avgDl)))
-            top.offer(Hit(target, s))
-          }
-          target += 1
-        }
+    gatedTopK(iters, filter, k, after, iters.take(1), idfSum) { _ =>
+      val wE6 = sloppyFreqE6(iters.map(_.positions), chain, slop)
+      if (wE6 <= 0) Double.NaN
+      else {
+        val freq = wE6 / 1000000.0
+        val dl = iters(0).docLen
+        idfSum *
+          (freq / (freq + graft.index.IndexBuilder.K1 *
+            (1 - graft.index.IndexBuilder.B +
+              graft.index.IndexBuilder.B * dl / iters(0).avgDocLen)))
       }
     }
-    top.result
   }
+
+  /** The match stream of a term AND (the [[Conjunction]]) or OR (the
+    * [[Disjunction]], ≥ `minShouldMatch` distinct terms on the doc).
+    */
+  private def termWalk(iters: Array[PostingIter], isAnd: Boolean, minShouldMatch: Int,
+                       filter: DocFilter): Walk =
+    if (isAnd) new Conjunction(iters, filter) else new Disjunction(iters, filter, minShouldMatch)
 
   /** Enumerate ALL matching docs of a slice, ascending, NO scoring — the
     * candidate stream of the aggregation phase (ES runs its aggs over
     * exactly this: every doc matching the query, not the top-k). AND =
-    * leapfrog intersection; OR = doc-at-a-time merge with a
+    * the [[Conjunction]]; OR = the [[Disjunction]] with a
     * distinct-matched-term count gate (`minShouldMatch`). `filter`
     * composes as a non-scoring conjunct (filter context, must_not,
     * tombstones — same as retrieval).
@@ -667,76 +723,10 @@ object BlockMaxWand {
       isAnd: Boolean,
       minShouldMatch: Int = 1,
       filter: DocFilter = null
-  ): Iterator[Long] = {
-    val gate = filter // `filter` shadows Iterator.filter inside the anon classes
-    if (iters.isEmpty) return Iterator.empty
-    if (isAnd) {
-      if (iters.exists(_.exhausted)) return Iterator.empty
-      new scala.collection.AbstractIterator[Long] {
-        private var nextDoc = advanceAligned(iters.map(_.doc).max)
-        private def advanceAligned(from: Long): Long = {
-          var target = from
-          while (true) {
-            var aligned = true
-            if (gate != null) {
-              val c = gate.ceil(target)
-              if (c == Long.MaxValue) return Long.MaxValue
-              if (c > target) { target = c; aligned = false }
-            }
-            var t = 0
-            while (t < iters.length) {
-              iters(t).advance(target)
-              if (iters(t).exhausted) return Long.MaxValue
-              if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
-              t += 1
-            }
-            if (aligned) return target
-          }
-          Long.MaxValue // unreachable
-        }
-        def hasNext: Boolean = nextDoc != Long.MaxValue
-        def next(): Long = { val d = nextDoc; nextDoc = advanceAligned(d + 1); d }
-      }
-    } else {
-      val live = iters.filter(!_.exhausted)
-      new scala.collection.AbstractIterator[Long] {
-        private var nextDoc = findNext()
-        private def findNext(): Long = {
-          while (true) {
-            var m = Long.MaxValue
-            var i = 0
-            while (i < live.length) {
-              val d = live(i).doc
-              if (d < m) m = d
-              i += 1
-            }
-            if (m == Long.MaxValue) return Long.MaxValue
-            if (gate != null && !gate.contains(m)) {
-              // skip the whole disallowed gap in one jump
-              val nxt = gate.ceil(m + 1)
-              if (nxt == Long.MaxValue) return Long.MaxValue
-              var a = 0
-              while (a < live.length) {
-                if (live(a).doc < nxt) live(a).advance(nxt)
-                a += 1
-              }
-            } else {
-              var matched = 0
-              var a = 0
-              while (a < live.length) {
-                if (live(a).doc == m) { matched += 1; live(a).next() }
-                a += 1
-              }
-              if (matched >= minShouldMatch) return m
-            }
-          }
-          Long.MaxValue // unreachable
-        }
-        def hasNext: Boolean = nextDoc != Long.MaxValue
-        def next(): Long = { val d = nextDoc; nextDoc = findNext(); d }
-      }
+  ): Iterator[Long] =
+    new WalkIterator[Long](termWalk(iters, isAnd, minShouldMatch, filter)) {
+      protected def emit(d: Long): Long = d
     }
-  }
 
   /** Enumerate ALL matching docs WITH exact scores, ascending docId —
     * the field-collapse walk (no top-k gate: collapse semantics need the
@@ -749,91 +739,16 @@ object BlockMaxWand {
       isAnd: Boolean,
       minShouldMatch: Int = 1,
       filter: DocFilter = null
-  ): Iterator[(Long, Double)] = {
-    val gate = filter
-    if (iters.isEmpty) return Iterator.empty
-    if (isAnd && iters.exists(_.exhausted)) return Iterator.empty
-    val msm = minShouldMatch
-    new scala.collection.AbstractIterator[(Long, Double)] {
-      private var nextHit: (Long, Double) = findNext(if (isAnd) iters.map(_.doc).max else 0L)
-      private def findNext(from: Long): (Long, Double) = {
-        var target = from
-        while (true) {
-          if (isAnd) {
-            var aligned = true
-            if (gate != null) {
-              val c = gate.ceil(target)
-              if (c == Long.MaxValue) return null
-              if (c > target) { target = c; aligned = false }
-            }
-            var t = 0
-            while (t < iters.length) {
-              iters(t).advance(target)
-              if (iters(t).exhausted) return null
-              if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
-              t += 1
-            }
-            if (aligned) {
-              var s = 0.0
-              var u = 0
-              while (u < iters.length) { s += iters(u).score; u += 1 }
-              val hit = (target, s)
-              var a = 0
-              while (a < iters.length) { iters(a).next(); a += 1 }
-              return hit
-            }
-          } else {
-            var m = Long.MaxValue
-            var i = 0
-            while (i < iters.length) {
-              val d = iters(i).doc
-              if (d < m) m = d
-              i += 1
-            }
-            if (m == Long.MaxValue) return null
-            if (gate != null && !gate.contains(m)) {
-              val nxt = gate.ceil(m + 1)
-              if (nxt == Long.MaxValue) return null
-              var a = 0
-              while (a < iters.length) {
-                if (!iters(a).exhausted && iters(a).doc < nxt) iters(a).advance(nxt)
-                a += 1
-              }
-            } else {
-              var s = 0.0
-              var matched = 0
-              var a = 0
-              while (a < iters.length) {
-                if (!iters(a).exhausted && iters(a).doc == m) {
-                  s += iters(a).score; matched += 1
-                }
-                a += 1
-              }
-              var b = 0
-              while (b < iters.length) {
-                if (!iters(b).exhausted && iters(b).doc == m) iters(b).next()
-                b += 1
-              }
-              if (matched >= msm) return (m, s)
-            }
-          }
-        }
-        null // unreachable
-      }
-      def hasNext: Boolean = nextHit != null
-      def next(): (Long, Double) = {
-        val h = nextHit
-        nextHit = findNext(if (isAnd) h._1 + 1 else 0L)
-        h
-      }
+  ): Iterator[(Long, Double)] =
+    new WalkIterator[(Long, Double)](termWalk(iters, isAnd, minShouldMatch, filter)) {
+      protected def emit(d: Long): (Long, Double) = (d, scoreOn(iters, d))
     }
-  }
 
   /** Document-at-a-time top-k over term groups — the walk of
     * [[Search.synonymTopK]] (`members(g)`: group g's cursors) and
     * [[Search.disMaxTopK]] (one-term groups, combined by `tieBreaker`;
-    * at tb = 1 that is not the sum's float). A one-term group scores
-    * exactly [[PostingIter.score]].
+    * at tb = 1 that is not the sum's float): the [[Disjunction]] over
+    * every member. A one-term group scores exactly [[PostingIter.score]].
     */
   def groupTopK(
       members: Array[Array[PostingIter]],
@@ -846,131 +761,35 @@ object BlockMaxWand {
       tieBreaker: Option[Double]
   ): Array[Hit] = {
     val top = new TopK(k)
-    val all = members.flatten
     val disMax = tieBreaker.isDefined
     val tb = tieBreaker.getOrElse(0.0)
-    var continue = all.exists(!_.exhausted)
-    while (continue) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < all.length) {
-        val it = all(i)
-        if (!it.exhausted && it.doc < d) d = it.doc
-        i += 1
-      }
-      if (d == Long.MaxValue) continue = false
-      else {
-        val allowed = filter == null || filter.contains(d)
-        var total = 0.0
-        var best = 0.0
-        var matched = 0
-        var g = 0
-        while (g < members.length) {
-          var tfSum = 0
-          var dl = 0
-          val gm = members(g)
-          var m = 0
-          while (m < gm.length) {
-            val it = gm(m)
-            if (!it.exhausted && it.doc == d) { tfSum += it.tf; dl = it.docLen }
-            m += 1
-          }
-          if (tfSum > 0) {
-            matched += 1
-            if (allowed) {
-              val s = idfs(g) * impact(tfSum, dl, avgDl)
-              total += s
-              if (s > best) best = s
-            }
-          }
-          g += 1
+    val walk = new Disjunction(members.flatten, filter, 1)
+    var d = walk.nextDoc()
+    while (d != Long.MaxValue) {
+      var total = 0.0
+      var best = 0.0
+      var matched = 0
+      var g = 0
+      while (g < members.length) {
+        var tfSum = 0
+        var dl = 0
+        val gm = members(g)
+        var m = 0
+        while (m < gm.length) {
+          if (gm(m).doc == d) { tfSum += gm(m).tf; dl = gm(m).docLen }
+          m += 1
         }
-        if (allowed && (if (isAnd) matched == members.length else matched >= minShouldMatch))
-          top.offer(Hit(d, if (disMax) best + tb * (total - best) else total))
-        i = 0
-        while (i < all.length) {
-          val it = all(i)
-          if (!it.exhausted && it.doc == d) it.next()
-          i += 1
+        if (tfSum > 0) {
+          matched += 1
+          val s = idfs(g) * impact(tfSum, dl, avgDl)
+          total += s
+          if (s > best) best = s
         }
+        g += 1
       }
-    }
-    top.result
-  }
-
-  /** Top-k conjunctive (AND) retrieval: leapfrog intersection with block
-    * skipping; exact scores summed in query-term order.
-    * `filter` (nullable) joins the leapfrog as a non-scoring conjunct.
-    *
-    * Block-max skip gate (same shape phrase mode carries): once top-k is
-    * full, any aligned doc d inside the current blocks scores at most
-    * Σ_t idf_t · maxImpact(t's current block); while that sum can't beat
-    * θ, EVERY doc covered by all current blocks is hopeless — jump past
-    * the tightest block end without scoring (for two common terms the
-    * intersection is corpus-sized, and the ungated loop decoded and
-    * scored all of it). Bounds only gate skips, so rank identity holds.
-    */
-  def and(iters: Array[PostingIter], k: Int, filter: DocFilter = null,
-      after: Hit = null): Array[Hit] = {
-    val top = new TopK(k, after)
-    if (iters.isEmpty || iters.exists(_.exhausted)) return Array.empty
-    var target = iters.map(_.doc).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      if (filter != null) {
-        val c = filter.ceil(target)
-        if (c == Long.MaxValue) done = true
-        else if (c > target) { target = c; aligned = false }
-      }
-      var t = 0
-      while (t < iters.length && !done) {
-        iters(t).advance(target)
-        if (iters(t).exhausted) done = true
-        else if (iters(t).doc > target) { target = iters(t).doc; aligned = false }
-        t += 1
-      }
-      if (!done && aligned) {
-        val theta = top.threshold
-        var gated = false
-        if (theta != Double.NegativeInfinity) {
-          // Σ per-iter current-block score bound vs θ (blockMaxScore
-          // already carries the float-safety inflation). The skip loop is
-          // METADATA-ONLY: while the bound can't beat θ, shallow-advance
-          // past the tightest block end and re-bound the next blocks —
-          // a long run of hopeless blocks costs zero payload decodes.
-          var loop = true
-          while (loop && !done) {
-            var bacc = 0.0
-            var minLast = Long.MaxValue
-            var j = 0
-            while (j < iters.length && !done) {
-              if (iters(j).exhausted) done = true
-              else {
-                bacc += iters(j).blockMaxScore
-                val bl = iters(j).blockLastDoc
-                if (bl < minLast) minLast = bl
-              }
-              j += 1
-            }
-            if (!done) {
-              if (bacc <= theta) {
-                target = minLast + 1
-                var a = 0
-                while (a < iters.length) { iters(a).shallowAdvance(target); a += 1 }
-                gated = true
-              } else loop = false
-            }
-          }
-        }
-        if (!done && !gated) {
-          var s = 0.0
-          var u = 0
-          while (u < iters.length) { s += iters(u).score; u += 1 }
-          top.offer(Hit(target, s))
-          target += 1
-        }
-      }
+      if (if (isAnd) matched == members.length else matched >= minShouldMatch)
+        top.offer(Hit(d, if (disMax) best + tb * (total - best) else total))
+      d = walk.nextDoc()
     }
     top.result
   }

@@ -1062,6 +1062,12 @@ object Facets {
     * derived FROM the value histogram (|v−m| collapses counts, never
     * re-walks matches). Returns one row (n_docs, median_v, mad_v);
     * median_v/mad_v null on an empty match set (ES null shape).
+    *
+    * The histogram is collected on the driver, so it holds at most
+    * [[MadMaxValues]] distinct values; a match set with more (a
+    * continuous field) fails, naming the field and pointing at
+    * [[percentilesApproxAgg]], instead of growing the driver without
+    * bound.
     */
   def medianAbsoluteDeviationAgg(
       spark: SparkSession,
@@ -1072,21 +1078,44 @@ object Facets {
       attrFilter: AttrPred = null,
       mustNot: Seq[String] = Nil,
       minShouldMatch: Int = 1
+  ): DataFrame =
+    medianAbsoluteDeviationAgg(spark, indexDir, queryTerms, mode, numField, attrFilter, mustNot,
+      minShouldMatch, MadMaxValues)
+
+  /** Distinct values [[medianAbsoluteDeviationAgg]] collects at most. */
+  val MadMaxValues: Int = 1 << 20
+
+  /** [[medianAbsoluteDeviationAgg]] with the distinct-value cap as a
+    * parameter (tests).
+    */
+  private[graft] def medianAbsoluteDeviationAgg(
+      spark: SparkSession,
+      indexDir: String,
+      queryTerms: Seq[String],
+      mode: String,
+      numField: String,
+      attrFilter: AttrPred,
+      mustNot: Seq[String],
+      minShouldMatch: Int,
+      maxValues: Int
   ): DataFrame = {
     import spark.implicits._
-    // ONE job: the distinct-value histogram was already driver-scale by
-    // construction (the old shape ran a single-partition window over it,
-    // three sequential driver actions and a cache); both nearest-rank
-    // medians now compute from one collected (v, n) frame with the exact
-    // same rank arithmetic (r6 opt round).
-    val rows = numericWalk(spark, Seq(indexDir), queryTerms, mode, numField,
-      attrFilter, mustNot, minShouldMatch, histogram = true)
-      .groupBy($"v").agg(sum($"n").as("n"))
-      .collect() // ≤ distinct numField values in the match set: uncapped, grows on a continuous field
+    // both nearest-rank medians compute from one collected (v, n) frame.
+    // One job (a limit may run two): each partition ships, and the driver
+    // keeps, ≤ maxValues + 1 rows
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    spark.sparkContext.runJob(numericWalk(spark, Seq(indexDir), queryTerms, mode, numField,
+        attrFilter, mustNot, minShouldMatch, histogram = true)
+        .groupBy($"v").agg(sum($"n").as("n")).as[(Long, Long)].rdd,
+      (it: Iterator[(Long, Long)]) => it.take(maxValues + 1).toArray,
+      (_: Int, part: Array[(Long, Long)]) => rows ++= part.take(maxValues + 1 - rows.length))
+    if (rows.length > maxValues)
+      throw new IllegalArgumentException(s"median_absolute_deviation on $numField: the match set " +
+        s"has more than $maxValues distinct values; use percentilesApproxAgg for a continuous field")
     if (rows.isEmpty)
       return Seq((0L, null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Long]))
         .toDF("n_docs", "median_v", "mad_v")
-    val hist = rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val hist = rows.toArray.sortBy(_._1)
     val total = hist.map(_._2).sum
     // nearest-rank p50, same rank arithmetic as percentilesAgg
     val rank = math.ceil(50.0 * total / 100.0).toLong

@@ -31,26 +31,15 @@ trait DocSet {
 }
 
 /** [[DocSet]] over a sorted doc-id array (tombstones; materialized
-  * exclusion lists). Gallop-then-binary-search from the cursor, so a
-  * full ascending probe sequence costs O(n + probes) total.
+  * exclusion lists). Gallop-then-binary-search from the cursor
+  * ([[Filters.seek]]), so a full ascending probe sequence costs
+  * O(n + probes) total.
   */
 final class SortedIdsSet(ids: Array[Long]) extends DocSet {
   private var i = 0
   def matches(target: Long): Boolean = {
-    var lo = i
-    if (lo >= ids.length) return false
-    if (ids(lo) >= target) { i = lo; return ids(lo) == target }
-    var step = 1
-    var hi = lo + step
-    while (hi < ids.length && ids(hi) < target) { lo = hi; step <<= 1; hi = lo + step }
-    if (hi >= ids.length) hi = ids.length - 1
-    if (ids(hi) < target) { i = ids.length; return false }
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (ids(mid) < target) lo = mid + 1 else hi = mid
-    }
-    i = lo
-    ids(lo) == target
+    i = Filters.seek(ids, i, target)
+    i < ids.length && ids(i) == target
   }
 
   /** Run-aware hop: `ids(m) − m` is non-decreasing, and is constant
@@ -76,33 +65,22 @@ final class SortedIdsSet(ids: Array[Long]) extends DocSet {
 
 /** ALLOW-list [[DocFilter]] over a SORTED id array — the dual of
   * `NotFilter(SortedIdsSet)`: only the listed docs pass (sampler aggs,
-  * export hydrations, any "top-k ids then re-walk" composition).
-  * Exhausts once the cursor passes the last id, so WAND terminates as
-  * soon as the sample is behind it. Serializable: built on the driver
-  * from a bounded id set (≤ shardSize by contract) and shipped in the
-  * task closure — each task deserializes its own cursor copy.
+  * export hydrations, the Column path's and the batch path's
+  * materialized allow-lists). Exhausts once the cursor passes the last
+  * id, so WAND terminates as soon as the list is behind it.
+  * Serializable: built on the driver from a bounded id set (≤ shardSize
+  * by contract) and shipped in the task closure — each task
+  * deserializes its own cursor copy.
   */
 final class SortedIdsFilter(ids: Array[Long]) extends DocFilter with Serializable {
   private var i = 0
-  private def advanceTo(target: Long): Unit = {
-    var lo = i
-    if (lo >= ids.length || ids(lo) >= target) return
-    var step = 1
-    var hi = lo + step
-    while (hi < ids.length && ids(hi) < target) { lo = hi; step <<= 1; hi = lo + step }
-    if (hi > ids.length) hi = ids.length
-    var l = lo + 1
-    var h = hi
-    while (l < h) { val m = (l + h) >>> 1; if (ids(m) < target) l = m + 1 else h = m }
-    i = l
-  }
   def exhausted: Boolean = i >= ids.length
   def contains(target: Long): Boolean = {
-    advanceTo(target)
+    i = Filters.seek(ids, i, target)
     i < ids.length && ids(i) == target
   }
   def ceil(target: Long): Long = {
-    advanceTo(target)
+    i = Filters.seek(ids, i, target)
     if (i >= ids.length) Long.MaxValue else ids(i)
   }
 }
@@ -184,6 +162,23 @@ final class AndFilter(a: DocFilter, b: DocFilter) extends DocFilter {
 }
 
 object Filters {
+  /** Index of the first id ≥ `target` at or after `from` in ascending
+    * `ids` (ids.length when none): gallop from `from`, then binary-search
+    * the last step, so an ascending probe sequence over the array costs
+    * amortized O(log gap) per probe.
+    */
+  private[query] def seek(ids: Array[Long], from: Int, target: Long): Int = {
+    if (from >= ids.length || ids(from) >= target) return from
+    var lo = from // ids(lo) < target
+    var step = 1
+    var hi = lo + step
+    while (hi < ids.length && ids(hi) < target) { lo = hi; step <<= 1; hi = lo + step }
+    if (hi > ids.length) hi = ids.length
+    var l = lo + 1
+    while (l < hi) { val m = (l + hi) >>> 1; if (ids(m) < target) l = m + 1 else hi = m }
+    l
+  }
+
   /** null-tolerant AND: either side absent → the other. */
   def and(a: DocFilter, b: DocFilter): DocFilter =
     if (a == null) b else if (b == null) a else new AndFilter(a, b)

@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder, Tombstones}
-import graft.query.BlockMaxWand.{BlockRef, FilterIter, PostingIter}
+import graft.query.BlockMaxWand.{BlockRef, PostingIter}
 import graft.query.Search.QueryHit
 import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, TermBlocks, TermQ}
 
@@ -287,7 +287,7 @@ final class MultiSearcher(
           if (allow.isEmpty) Iterator.empty
           else {
             java.util.Arrays.sort(allow)
-            walk(b.value, key._1, key._2, MultiSearcher.byField(rows, n), () => new FilterIter(allow))
+            walk(b.value, key._1, key._2, MultiSearcher.byField(rows, n), () => new SortedIdsFilter(allow))
           }
         }
     }
@@ -876,7 +876,7 @@ object MultiSearcher {
         if (attr == null) null
         else allowLists.getOrElseUpdate(attr, AttrSidecar.matchingDocIdsCapped(dir, slice, attr, cap)) match {
           case null => open(attr) // too broad to materialize
-          case ids => new FilterIter(ids)
+          case ids => new SortedIdsFilter(ids)
         }
       if (deleted.isEmpty) allowed else Filters.and(allowed, new NotFilter(new SortedIdsSet(deleted)))
     }

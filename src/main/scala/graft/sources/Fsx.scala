@@ -21,9 +21,12 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
   * is enforced: a second writer from the same commit finds its number
   * taken and fails, naming the directory. Commits older than the one
   * before the newest are pruned. Commits hold no timestamps or hostnames.
-  * The no-overwrite rename checks, then renames: HDFS refuses a rename
-  * onto an existing file itself, but on the local FS two writers racing
-  * inside that window are not caught.
+  * On the local FS a file is published with `link(2)`, which fails
+  * atomically when the name is taken, so two racing writers cannot both
+  * win. Elsewhere the no-overwrite rename checks, then renames: HDFS
+  * refuses a rename onto an existing file itself, while on stores whose
+  * rename overwrites, two writers racing inside that window are not
+  * caught.
   */
 object Fsx {
 
@@ -95,8 +98,11 @@ object Fsx {
   }
 
   /** Publish `content` at `path` unless something is there (then throws
-    * as [[renameNew]]): a temp file beside it, [[renameNew]]d, so a
-    * reader sees no file or the whole file.
+    * as [[renameNew]]): a temp file beside it, moved into place, so a
+    * reader sees no file or the whole file. On the local FS the move is a
+    * hard link, which fails atomically on a taken name (a rename there
+    * would replace a racing writer's file), and the temp file and its
+    * `.crc` are deleted after it; elsewhere it is [[renameNew]].
     */
   def createOnce(path: String, content: String): Unit = {
     val (f, p) = fs(path)
@@ -105,8 +111,17 @@ object Fsx {
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     onCommitStep("written", path)
-    try renameNew(tmp.toString, path)
-    catch { case e: java.io.IOException => f.delete(tmp, false); throw e }
+    try {
+      if (f.getUri.getScheme == "file") {
+        def local(q: Path) = java.nio.file.Paths.get(f.makeQualified(q).toUri)
+        try java.nio.file.Files.createLink(local(p), local(tmp))
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new FileAlreadyExistsException(s"destination $path already exists")
+        }
+        f.delete(tmp, false)
+      } else renameNew(tmp.toString, path)
+    } catch { case e: java.io.IOException => f.delete(tmp, false); throw e }
   }
 
   // ---- commit log -------------------------------------------------------

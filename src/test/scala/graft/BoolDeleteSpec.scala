@@ -91,7 +91,7 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(notBig.ceil(5000001L) == 5000001L)
 
     // AND of two allow-lists via complement arithmetic: allowed = evens ∧ not {4,6}
-    val evens = new BlockMaxWand.FilterIter(Array(0L, 2L, 4L, 6L, 8L, 10L))
+    val evens = new SortedIdsFilter(Array(0L, 2L, 4L, 6L, 8L, 10L))
     val excl = new NotFilter(new SortedIdsSet(Array(4L, 6L)))
     val and = new AndFilter(evens, excl)
     assert(and.contains(0L) && and.contains(2L) && !and.contains(3L) && !and.contains(4L))
@@ -1561,6 +1561,20 @@ class BoolDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val empty = Facets.medianAbsoluteDeviationAgg(spark, dir.toString, Seq("nosuchterm"), "or", "doc_len")
       .collect().head
     assert(empty.getLong(0) == 0L && empty.isNullAt(1) && empty.isNullAt(2))
+  }
+
+  test("median_absolute_deviation: the driver collect is capped, and above the cap it fails naming the field") {
+    import graft.query.Facets
+    val terms = Seq("w1", "w2")
+    val dlOf = corpus.map { case (id, t) => id -> Analyzer.tokenCount(t).toLong }.toMap
+    val distinct = matchedIds(terms, and = false).map(dlOf).distinct.size
+    def mad(cap: Int) =
+      Facets.medianAbsoluteDeviationAgg(spark, dir.toString, terms, "or", "doc_len", null, Nil, 1, cap)
+        .collect().head
+    assert(mad(distinct) == Facets.medianAbsoluteDeviationAgg(spark, dir.toString, terms, "or", "doc_len")
+      .collect().head)
+    val e = intercept[IllegalArgumentException](mad(distinct - 1))
+    assert(e.getMessage.contains("doc_len") && e.getMessage.contains("percentilesApproxAgg"), e.getMessage)
   }
 
   test("rare_terms: long-tail buckets ≤ max_doc_count, count-asc; cut is post-combine") {

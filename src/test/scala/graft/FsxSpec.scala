@@ -119,6 +119,37 @@ class FsxSpec extends AnyFunSuite {
     assert(Fsx.readUtf8(s"$d/c/x") == "a" && !Fsx.exists(s"$d/a"))
   }
 
+  test("createOnce racing writers: exactly one wins each path, and the file holds its bytes") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
+    val d = tmp()
+    val paths = (0 until 200).map(i => s"$d/$i.json")
+    val writers = 8
+    // every writer's temp file of a path is written before any of them
+    // publishes it, so the publishes race
+    val written = paths.map(_ -> new CyclicBarrier(writers)).toMap
+    Fsx.onCommitStep = (step, path) =>
+      if (step == "written") written.get(path).foreach(_.await(60, TimeUnit.SECONDS))
+    val pool = Executors.newFixedThreadPool(writers)
+    // won(w)(i): writer w published paths(i); every loss must be the
+    // no-overwrite refusal, anything else fails the call
+    val won = try {
+      (0 until writers).map { w =>
+        pool.submit(new Callable[Seq[Boolean]] {
+          def call(): Seq[Boolean] = paths.map { p =>
+            try { Fsx.createOnce(p, s"writer $w"); true }
+            catch { case _: FileAlreadyExistsException => false }
+          }
+        })
+      }.map(_.get(300, TimeUnit.SECONDS))
+    } finally { pool.shutdownNow(); Fsx.onCommitStep = (_, _) => () }
+    paths.indices.foreach { i =>
+      val winners = (0 until writers).filter(w => won(w)(i))
+      assert(winners.size == 1, s"${paths(i)} won by writers $winners")
+      assert(Fsx.readUtf8(paths(i)) == s"writer ${winners.head}", paths(i))
+    }
+    assert(Fsx.listNames(d).sorted == paths.map(_.split('/').last).sorted, "temp files left behind")
+  }
+
   test("delete / exists / listDirNames round trip") {
     val d = tmp()
     Fsx.mkdirs(s"$d/a/b")
