@@ -29,7 +29,9 @@ import graft.sources.PagesGen
   * reads each field's dictionary once (the expansion's memo answers the
   * walk's dfs, and a family's dfs are summed on the driver), the fielded
   * aggregations read no dictionary, and no call decodes more blocks than
-  * a walk over the query terms' blocks. An upsert of a batch within the
+  * a walk over the query terms' blocks. The term top-k (plain and
+  * filtered), phrase (exact and sloppy), export and collapse walks keep
+  * pinned block decodes and exact score bits. An upsert of a batch within the
   * flush budget runs the same few jobs whatever the family's size: the
   * gathering job, one write per table and one tombstone job.
   */
