@@ -87,7 +87,7 @@ object TimeBuckets {
       base = Fsx.commit(base)(IndexBuilder.addUnit(_, "staged_pages"))
     }
     val buckets = spark.read.parquet(staged)
-      .select($"bucket").distinct().as[String].collect().sorted
+      .select($"bucket").distinct().as[String].collect().sorted // ≤ one row per bucket the pages span
 
     val built = buckets.map { b =>
       val dir = s"$root/seg-$b"
@@ -147,7 +147,7 @@ object TimeBuckets {
       base = Fsx.commit(base)(IndexBuilder.addUnit(_, s"ingest-$ingestId-staged"))
     }
     val touched = spark.read.parquet(staged)
-      .select($"bucket").distinct().as[String].collect().sorted
+      .select($"bucket").distinct().as[String].collect().sorted // ≤ one row per bucket the batch spans
 
     val updated = touched.map { b =>
       val segPages = spark.read.option("basePath", staged).parquet(staged)

@@ -142,7 +142,7 @@ object Ann {
     val seedCentroids = vecs.toDF(idCol, "vec")
       .orderBy(xxhash64(col(idCol)), col(idCol))
       .limit(nLists)
-      .select(col("vec")).as[Array[Float]].collect()
+      .select(col("vec")).as[Array[Float]].collect() // ≤ nLists vectors (the limit)
     require(seedCentroids.nonEmpty, "empty corpus")
 
     var centroids = seedCentroids
@@ -177,7 +177,7 @@ object Ann {
           if (cnt > 0) { var i = 0; while (i < dim) { out(i) = (sum(i) / cnt).toFloat; i += 1 } }
           (c, out)
         }
-        .collect()
+        .collect() // ≤ nLists rows, one mean per centroid
         .sortBy(_._1)
         .map { case (c, v) => if (v.forall(_ == 0f)) centroids(c) else v }
       centroids = refined
@@ -250,7 +250,7 @@ object Ann {
   ): DataFrame = {
     import spark.implicits._
     val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
+      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2) // ≤ nLists rows
     val qs = queries
       .select(col(qidCol).cast("long"), col(qvecCol))
       .as[(Long, Array[Float])]
@@ -352,7 +352,7 @@ object Ann {
   ): DataFrame = {
     import spark.implicits._
     val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
+      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2) // ≤ nLists rows
     val (lo, hi) = spark.read.parquet(s"$indexDir/quant")
       .as[(Array[Float], Array[Float])].head()
     val params = Quantize.Params(lo, hi)

@@ -50,7 +50,7 @@ object LmScore {
       .select(split(col(textCol), " ").as("t"))
     val uni = toks.select(explode($"t").as("w"))
       .groupBy($"w").agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // ≤ the reference vocabulary's size
     val bi = toks
       .select(explode(
         filter(
@@ -59,7 +59,7 @@ object LmScore {
               struct(element_at($"t", i + 1).as("w1"), element_at($"t", i + 2).as("w2")))),
           g => g.isNotNull)).as("g"))
       .groupBy($"g.w1", $"g.w2").agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap // ≤ its distinct bigrams
     Model(bi, uni, uni.size.toLong)
   }
 

@@ -64,7 +64,7 @@ object Packing {
         }
         Iterator((pid, s))
       }
-      .collect()
+      .collect() // ≤ numPartitions rows
       .sortBy(_._1)
     val offsets = sums.map(_._2).scanLeft(0L)(_ + _)
     val bOffsets = spark.sparkContext.broadcast(offsets)

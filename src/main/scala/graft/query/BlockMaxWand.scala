@@ -174,6 +174,21 @@ object BlockMaxWand {
         bi += 1; i = 0; ids = null
       }
     }
+
+    /** METADATA-ONLY run hop: after [[shallowAdvance]]`(target)`, when the
+      * current block is dense (it holds every id of [docIdMin, docIdMax])
+      * and covers `target`, every id from `target` to docIdMax is a
+      * posting, so this returns docIdMax + 1 without decoding; else
+      * `target`.
+      */
+    def denseRunEnd(target: Long): Long = {
+      shallowAdvance(target)
+      if (exhausted) target
+      else {
+        val b = blocks(bi)
+        if (b.docIdMin <= target && b.docIdMax - b.docIdMin + 1 == b.count) b.docIdMax + 1 else target
+      }
+    }
   }
 
   private val Bound = 1.0 + 1e-9
@@ -571,29 +586,22 @@ object BlockMaxWand {
       if (freq > 0) idfSum * impact(freq, iters(0).docLen, iters(0).avgDocLen) else Double.NaN
     }
 
-  /** Enumerate ALL phrase-matching docs of a slice as (docId, freq,
+  /** Stream ALL phrase-matching docs of a slice as (docId, freq,
     * docLen), ascending docId — no scoring, no top-k cut, no block-max
-    * gate (there is no threshold to gate on). The building block for
-    * FIELDED (most_fields) phrase scoring, where per-field contributions
-    * must merge before any cut. Memory note for callers: matches
-    * materialize per (field, slice); phrase selectivity keeps this far
-    * below slice size in practice.
+    * gate (there is no threshold to gate on): the [[Conjunction]]'s docs
+    * whose positional verify finds an occurrence. The building block for
+    * FIELDED (most_fields) phrase scoring, phrase counts and the
+    * query_string tree's phrase leaves; nothing is buffered.
     */
   def phraseMatches(
       iters: Array[PostingIter],
       offsets: Array[Array[Int]],
       filter: DocFilter = null
-  ): Iterator[(Long, Int, Int)] = {
-    val out = new mutable.ArrayBuffer[(Long, Int, Int)]
-    val conj = new Conjunction(iters, filter)
-    var d = conj.nextDoc()
-    while (d != Long.MaxValue) {
-      val freq = phraseFreq(iters.map(_.positions), offsets)
-      if (freq > 0) out += ((d, freq, iters(0).docLen))
-      d = conj.nextDoc()
-    }
-    out.iterator
-  }
+  ): Iterator[(Long, Int, Int)] =
+    new WalkIterator[(Long, Int, Int)](new Conjunction(iters, filter)) {
+      protected def emit(d: Long): (Long, Int, Int) =
+        (d, phraseFreq(iters.map(_.positions), offsets), iters(0).docLen)
+    }.filter(_._2 > 0)
 
   /** Count exact phrase occurrences given per-distinct-term sorted
     * position arrays. A start p counts iff ∀j ∀o∈offsets(j):

@@ -53,28 +53,29 @@ object FieldedSearch {
     */
   final case class FieldFamily(name: String, segmentDirs: Seq[String], boost: Double)
 
-  /** One view per field, over the field's segments. Slices are doc-id
-    * ranges, so a (segment, slice) task holds all of a doc's fields only
-    * when every field has as many segments and, per segment, the same
-    * n_docs and nSlices — else a doc's score would be split across
-    * tasks, so a mismatch fails here.
+  /** The views of named fields, in order, once their layouts agree.
+    * Slices are doc-id ranges, so a (segment, slice) task holds all of a
+    * doc's fields only when every field has as many segments as the
+    * first and, per segment, the same n_docs and nSlices — else a doc's
+    * score would be split across tasks, so a mismatch fails here, naming
+    * the field.
     */
-  private[query] def views(spark: SparkSession, fieldDirs: Seq[Seq[String]]): Seq[MultiSearcher] = {
-    require(fieldDirs.nonEmpty, "no fields")
-    val vs = fieldDirs.map(new MultiSearcher(spark, _))
-    val layout = vs.head.layout
-    vs.tail.map(_.layout).foreach { l =>
-      require(l.size == layout.size, "every field family must have the same number of segments")
+  private[query] def views(named: Seq[(String, MultiSearcher)]): Seq[MultiSearcher] = {
+    require(named.nonEmpty, "no fields")
+    val layout = named.head._2.layout
+    named.tail.foreach { case (name, v) =>
+      val l = v.layout
+      require(l.size == layout.size, s"field '$name': every field family must have as many segments as the first")
       l.zip(layout).zipWithIndex.foreach { case (((n, s), (n0, s0)), si) =>
-        require(n == n0, s"segment $si docs differ across fields — fields must share the docID space")
-        require(s == s0, s"segment $si slices differ across fields — fields must share the slice layout")
+        require(n == n0, s"field '$name': segment $si docs differ — fields must share the docID space")
+        require(s == s0, s"field '$name': segment $si slices differ — fields must share the slice layout")
       }
     }
-    vs
+    named.map(_._2)
   }
 
   private[query] def fieldViews(spark: SparkSession, fields: Seq[Field]): Seq[MultiSearcher] =
-    views(spark, fields.map(f => Seq(f.indexDir)))
+    views(fields.map(f => f.name -> new MultiSearcher(spark, Seq(f.indexDir))))
 
   /** Filter context = ES bool-query filter clause next to the multi_match,
     * evaluated against the FIRST field's doc attributes (all field indexes
@@ -112,8 +113,8 @@ object FieldedSearch {
       k: Int,
       attrFilter: AttrPred = null
   ): DataFrame =
-    mostFields(views(spark, fields.map(_.segmentDirs)), fields.map(_.boost), queryTerms, k, null,
-      attrFilter, null)
+    mostFields(views(fields.map(f => f.name -> new MultiSearcher(spark, f.segmentDirs))), fields.map(_.boost),
+      queryTerms, k, null, attrFilter, null)
 
   /** A compiled most_fields query: weight = boost_f · idf_f(t) per (field,
     * term).
@@ -261,10 +262,9 @@ object FieldedSearch {
     * nothing (Lucene PhraseQuery semantics). Mirrored exactly by
     * NaiveBm25.fieldedPhraseTopK and the DuckDB oracle.
     *
-    * Scale shape: same as topK — each slice task enumerates phrase
-    * matches per field (leapfrog + positional verify) and merges per-doc
-    * contributions before its local top-k cut (per-field matches
-    * materialize per slice; phrase selectivity keeps that small).
+    * Scale shape: same as topK — each slice task streams phrase matches
+    * per field (leapfrog + positional verify) and merges per-doc
+    * contributions before its local top-k cut.
     */
   def phraseTopK(
       spark: SparkSession,
@@ -293,26 +293,22 @@ object FieldedSearch {
       FieldsPhraseQ(shape, idfSums, fields.map(_.boost).toArray, k))(phraseWalk), k)
   }
 
-  /** Fielded phrase top-k of one (segment, slice). */
+  /** Fielded phrase top-k of one (segment, slice): the per-field phrase
+    * match streams merged per doc, summed in FIELD ORDER (the scoring
+    * contract), each field with a fresh monotone filter.
+    */
   private def phraseWalk(c: SegCtx[FieldsPhraseQ], seg: Int, slice: Int, fields: Array[TermBlocks],
                          base: () => DocFilter): Iterator[QueryHit] = {
     val q = c.q
-    // per-doc sums accumulate in FIELD ORDER (the scoring contract)
-    val acc = new mutable.LongMap[Double]
-    fields.indices.foreach { fi =>
-      val byTerm = fields(fi)
-      if (q.idfSums(fi) > 0.0 && q.shape.terms.forall(byTerm.contains)) {
-        val iters = q.shape.terms.map(t => c.iter(byTerm(t), 0, 0.0, fi))
-        // a fresh monotone filter per field pass
-        BlockMaxWand.phraseMatches(iters, q.shape.offsets, c.filter(seg, slice, base(), Array.empty))
-          .foreach { case (doc, freq, dl) =>
-            val sc = q.boosts(fi) * q.idfSums(fi) * IndexBuilder.impact(freq, dl, c.avgDls(fi))
-            acc.update(doc, acc.getOrElse(doc, 0.0) + sc)
-          }
+    val streams = fields.indices.filter(fi => q.idfSums(fi) > 0.0 && q.shape.terms.forall(fields(fi).contains))
+      .map { fi =>
+        BlockMaxWand.phraseMatches(q.shape.terms.map(t => c.iter(fields(fi)(t), 0, 0.0, fi)), q.shape.offsets,
+          c.filter(seg, slice, base(), Array.empty))
+          .map { case (d, freq, dl) => (d, q.boosts(fi) * q.idfSums(fi) * IndexBuilder.impact(freq, dl, c.avgDls(fi))) }
       }
-    }
-    c.global(seg, acc.toArray.sortBy { case (doc, s) => (-s, doc) }.take(q.k)
-      .map { case (doc, s) => BlockMaxWand.Hit(doc, s) })
+    val top = new BlockMaxWand.TopK(q.k)
+    MultiSearcher.merge(Nil, streams, Nil).foreach { case (doc, s) => top.offer(BlockMaxWand.Hit(doc, s)) }
+    c.global(seg, top.result)
   }
 
   /** ES `combined_fields` (Lucene CombinedFieldQuery / BM25F): the fields

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSidecar, IndexBuilder, Tombstones}
 import graft.query.BlockMaxWand.{BlockRef, PostingIter}
 import graft.query.Search.QueryHit
-import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, TermBlocks, TermQ}
+import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, TermBlocks, TermQ, TreeQ}
 
 /** The BM25 searcher over a segment set: N immutable index segments
   * queried as ONE logical index, no physical merge (≙ Elasticsearch
@@ -53,10 +53,11 @@ import MultiSearcher.{Block, GroupQ, MatchSlice, PhraseQ, PhraseShape, SegCtx, T
   * top-k operator runs through [[walkSlices]], the one filter-context
   * dispatch: term WAND, phrase, phrase-prefix (one phrase walk per
   * expansion in one task), the synonym/dis_max group walk
-  * ([[BlockMaxWand.groupTopK]]), phrase export and, in
-  * [[FieldedSearch]], most_fields WAND (topK, the rewrites and
-  * topKMulti), the fielded phrase and combined_fields' (doc, term,
-  * Σ w·tf) rows. [[phraseCounts]] counts a set of phrases in one walk.
+  * ([[BlockMaxWand.groupTopK]]) and, in [[FieldedSearch]],
+  * most_fields WAND (topK, the rewrites and topKMulti), the fielded
+  * phrase and combined_fields' (doc, term, Σ w·tf) rows.
+  * [[phraseCounts]] counts a set of phrases in one walk, and
+  * [[treeTopK]] runs a whole query_string bool tree in one.
   *
   * Two more executions of the term walk serve [[Searcher]]: the batch
   * walk ([[batchTopK]]) answers a whole query set with one dictionary
@@ -221,11 +222,15 @@ final class MultiSearcher(
     * (pushdown `term IN` on each segment's term-sorted postings), tagged
     * with the field's index; fields without terms are not scanned. Field
     * 0 is this view, whose doc space (segments, slices, doc-id bases,
-    * tombstones, sidecars) every field shares.
+    * tombstones, sidecars) every field shares. `everySlice` adds one
+    * block-less marker row (field -1) per (segment, slice) of this view.
     */
-  private def blocks(fields: Seq[(MultiSearcher, Seq[String])]): Dataset[Block] = {
+  private def blocks(fields: Seq[(MultiSearcher, Seq[String])], everySlice: Boolean): Dataset[Block] = {
     require(fields.head._1 eq this, "field 0 is the view that walks")
-    (for {
+    val markers = if (!everySlice) Nil else Seq(layout.zipWithIndex.flatMap { case ((_, nSlices), si) =>
+      (0 until nSlices).map(Block(-1, si, _, null, 0, 0L, 0L, 0, null, null, null, null, 0.0, 0, 0))
+    }.toDS().toDF())
+    (markers ++ (for {
       ((v, terms), fi) <- fields.zipWithIndex if terms.nonEmpty
       (d, si) <- v.segmentDirs.zipWithIndex
     } yield IndexBuilder.readPostings(spark, d)
@@ -234,20 +239,23 @@ final class MultiSearcher(
         lit(fi).as("fld"), lit(si).as("seg"), $"slice", $"term", $"block_id", $"doc_id_min",
         $"doc_id_max", $"count", $"deltas", $"tfs", $"dls", $"poss",
         $"max_impact", $"max_tf", $"min_dl"
-      ))
+      )))
       .reduce(_ unionByName _)
       .as[Block]
   }
 
   /** Blocks of `fields` grouped by (segment, slice), each group handed to
-    * `walk` by field and term, with this query's broadcast context.
+    * `walk` by field and term, with this query's broadcast context. With
+    * `everySlice`, every (segment, slice) of this view is a group, also
+    * one where no term has blocks.
     */
-  private def walkGroups[Q, R: Encoder](fields: Seq[(MultiSearcher, Seq[String])], q: Q)(
+  private def walkGroups[Q, R: Encoder](fields: Seq[(MultiSearcher, Seq[String])], q: Q,
+                                        everySlice: Boolean = false)(
       walk: (SegCtx[Q], Int, Int, Array[TermBlocks]) => Iterator[R]
   ): Dataset[R] = {
     val b = context(q, fields.map(_._1))
     val n = fields.size
-    blocks(fields).groupByKey(r => (r.seg, r.slice))
+    blocks(fields, everySlice).groupByKey(r => (r.seg, r.slice))
       .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, MultiSearcher.byField(rows, n)))
   }
 
@@ -281,7 +289,7 @@ final class MultiSearcher(
         }
         .reduce(_ unionByName _)
         .as[(Int, Int, Long)]
-      blocks(fields).groupByKey(r => (r.seg, r.slice))
+      blocks(fields, everySlice = false).groupByKey(r => (r.seg, r.slice))
         .cogroup(filterIds.groupByKey(r => (r._1, r._2))) { (key, rows, fids) =>
           val allow = fids.map(_._3).toArray
           if (allow.isEmpty) Iterator.empty
@@ -450,7 +458,7 @@ final class MultiSearcher(
         // only ever scores a COMPLETE block set. One job (a limit may run
         // two): each partition ships, and the driver keeps, ≤ maxBlocks + 1.
         val rows = scala.collection.mutable.ArrayBuffer.empty[Block]
-        spark.sparkContext.runJob(blocks(Seq(this -> (present ++ q.exclude))).rdd,
+        spark.sparkContext.runJob(blocks(Seq(this -> (present ++ q.exclude)), everySlice = false).rdd,
           (it: Iterator[Block]) => it.take(maxBlocks + 1).toArray,
           (_: Int, part: Array[Block]) => rows ++= part.take(maxBlocks + 1 - rows.length))
         if (rows.length > maxBlocks)
@@ -634,8 +642,7 @@ final class MultiSearcher(
     IndexBuilder.readMeta(segmentDirs.head).attrs.map(a => a.name -> a.kind).toMap
 
   /** [[Search.exportMatches]] over the view: each (segment, slice)
-    * streams its full scored match set with global ids — the term leaf
-    * of the composed query_string tree.
+    * streams its full scored match set with global ids.
     */
   def exportMatches(
       queryTerms: Seq[String],
@@ -647,16 +654,6 @@ final class MultiSearcher(
     scoredWalk(queryTerms, mode, attrFilter, mustNot, minShouldMatch) { s =>
       s.hits.map { case (id, score) => QueryHit(s.docBase + id, score) }
     }.toDF()
-
-  /** FULL exact-phrase match set (global ids, BM25 phrase-freq scores) —
-    * the phrase leaf of the query_string tree. No top-k gate: a composed
-    * bool needs every match.
-    */
-  def exportPhrase(phraseTerms: Seq[String], attrFilter: AttrPred = null): DataFrame =
-    phraseQuery(phraseTerms, Nil) match {
-      case None => none
-      case Some(q) => walkTerms(q.terms.toSeq, null, attrFilter, q)(MultiSearcher.phraseExportWalk).toDF()
-    }
 
   /** [[Search.collapseTopK]] over the view: one best hit per keyword
     * value per (segment, slice) task, then one global winner per value,
@@ -687,26 +684,13 @@ final class MultiSearcher(
       .limit(k)
   }
 
-  /** Global doc ids admitted by a pure filter, score 0 — per-(segment,
-    * slice) sidecar enumeration (tombstones composed), base-offset to
-    * global. STREAMED, never buffered: a broad filter like lang:en admits
-    * most of a slice.
+  /** Top-k of a compiled query_string tree ([[QueryString]]) over
+    * `fields` (field 0 is this view): one walk whose exchange covers
+    * EVERY slice of this view — a filter leaf admits docs where no term
+    * has blocks — with [[MultiSearcher.treeSlice]] per task.
     */
-  def filterDocIds(pred: AttrPred): DataFrame = {
-    val tasks = segmentDirs.indices.flatMap(s =>
-      (0 until IndexBuilder.readMeta(segmentDirs(s)).nSlices).map(sl => (s, sl))).toArray
-    val b = context(tasks)
-    spark.range(tasks.length).as[Long]
-      .flatMap { i =>
-        val c = b.value
-        val (seg, slice) = c.q(i.toInt)
-        val cursor = AttrSidecar.openCursor(c.dirs(seg), slice, pred)
-        val docBase = c.bases(seg)
-        Filters.enumerate(c.filter(seg, slice, cursor, Array.empty), 0L, () => cursor.close())
-          .map(id => QueryHit(docBase + id, 0.0))
-      }
-      .toDF()
-  }
+  private[query] def treeTopK(fields: Seq[(MultiSearcher, Seq[String])], tree: TreeQ, k: Int): DataFrame =
+    topOf(walkGroups(fields, (tree, k), everySlice = true)(MultiSearcher.treeSlice), k)
 }
 
 object MultiSearcher {
@@ -942,19 +926,55 @@ object MultiSearcher {
     }
   }
 
-  /** Full phrase match set of one (segment, slice). */
-  private def phraseExportWalk(c: SegCtx[PhraseQ], seg: Int, slice: Int, terms: TermBlocks,
-                               base: () => DocFilter): Iterator[QueryHit] = {
-    if (!c.q.terms.forall(terms.contains)) Iterator.empty
-    else {
-      val iters = c.q.terms.map(t => c.iter(terms(t), 0, 0.0))
-      val docBase = c.bases(seg)
-      BlockMaxWand.phraseMatches(iters, c.q.offsets, c.filter(seg, slice, base(), Array.empty))
-        .map { case (id, freq, dl) =>
-          QueryHit(docBase + id, c.q.idfSum * IndexBuilder.impact(freq, dl, c.avgDl))
-        }
-    }
+  /** A compiled query_string bool tree ([[QueryString]]). A scoring
+    * leaf carries the AND-context filter `ctx` (nullable) pushed into its
+    * own sidecar cursor.
+    */
+  private[query] sealed trait TreeQ
+  private[query] object TreeQ {
+    /** OR of field `fld`'s present `terms` (a term, or a fuzzy or pattern
+      * expansion), each scored at its idf, × `boost`; no terms, no match.
+      */
+    final case class Terms(fld: Int, terms: Array[String], idfs: Array[Double], boost: Double,
+                           ctx: AttrPred) extends TreeQ
+    /** Exact phrase of field 0, scored idfSum · impact(freq) × `boost`. */
+    final case class Phrase(terms: Array[String], offsets: Array[Array[Int]], idfSum: Double,
+                            boost: Double, ctx: AttrPred) extends TreeQ
+    /** The docs a sidecar predicate admits, at score 0. */
+    final case class Filter(pred: AttrPred) extends TreeQ
+    /** A bool node: see [[merge]]. */
+    final case class Bool(must: Seq[TreeQ], should: Seq[TreeQ], mustNot: Seq[TreeQ]) extends TreeQ
   }
+
+  /** One (segment, slice) of [[MultiSearcher.treeTopK]]: each leaf
+    * streams its ascending (local id, score) matches through its kernel,
+    * filtered by its own context cursor ∧ ¬tombstoned; each bool node is
+    * a [[merge]]; the root's stream is cut to a top-k.
+    */
+  private def treeSlice(c: SegCtx[(TreeQ, Int)], seg: Int, slice: Int,
+                        fields: Array[TermBlocks]): Iterator[QueryHit] =
+    withCursors(c.dirs(seg), slice) { open =>
+      def filter(ctx: AttrPred): DocFilter = c.filter(seg, slice, if (ctx == null) null else open(ctx), Array.empty)
+      def boosted(s: Iterator[(Long, Double)], boost: Double) =
+        if (boost == 1.0) s else s.map { case (d, x) => (d, x * boost) }
+      def eval(n: TreeQ): Iterator[(Long, Double)] = n match {
+        case TreeQ.Terms(fi, terms, idfs, boost, ctx) =>
+          val iters = terms.indices.flatMap(ti => fields(fi).get(terms(ti)).map(c.iter(_, ti, idfs(ti), fi))).toArray
+          if (iters.isEmpty) Iterator.empty
+          else boosted(BlockMaxWand.scoredMatches(iters, isAnd = false, 1, filter(ctx)), boost)
+        case TreeQ.Phrase(terms, offsets, idfSum, boost, ctx) =>
+          if (!terms.forall(fields(0).contains)) Iterator.empty
+          else boosted(BlockMaxWand.phraseMatches(terms.map(t => c.iter(fields(0)(t), 0, 0.0)), offsets, filter(ctx))
+            .map { case (d, freq, dl) => (d, idfSum * IndexBuilder.impact(freq, dl, c.avgDl)) }, boost)
+        case TreeQ.Filter(pred) =>
+          Filters.enumerate(filter(pred), 0L).map((_, 0.0))
+        case TreeQ.Bool(must, should, mustNot) =>
+          merge(must.map(eval), should.map(eval), mustNot.map(eval))
+      }
+      val top = new BlockMaxWand.TopK(c.q._2)
+      eval(c.q._1).foreach { case (d, s) => top.offer(BlockMaxWand.Hit(d, s)) }
+      c.global(seg, top.result)
+    }
 
   /** One (segment, slice) of a match walk, as its consumer sees it: the
     * segment dir, the slice, the doc-id base, the ascending match stream
@@ -971,8 +991,10 @@ object MultiSearcher {
       attrCursors: Array[AttrSidecar.AttrCursor]) {
     val dir: String = c.dirs(seg)
     val docBase: Long = c.bases(seg)
-    def ids: Iterator[Long] =
-      union(iters.indices.map(fi => BlockMaxWand.matchingDocIds(iters(fi), c.q.isAnd, c.q.msm, filters(fi))))
+    def ids: Iterator[Long] = {
+      val streams = iters.indices.map(fi => BlockMaxWand.matchingDocIds(iters(fi), c.q.isAnd, c.q.msm, filters(fi)))
+      if (streams.size == 1) streams.head else merge(Nil, streams.map(_.map((_, 0.0))), Nil).map(_._1)
+    }
     def hits: Iterator[(Long, Double)] = {
       require(iters.length == 1, "a scored match walk has one field")
       BlockMaxWand.scoredMatches(iters(0), c.q.isAnd, c.q.msm, filters(0))
@@ -991,20 +1013,37 @@ object MultiSearcher {
     }
   }
 
-  /** Ascending union of ascending id streams, each id once. */
-  private def union(streams: Seq[Iterator[Long]]): Iterator[Long] =
-    if (streams.size == 1) streams.head
-    else {
-      val bs = streams.map(_.buffered)
-      new scala.collection.AbstractIterator[Long] {
-        def hasNext: Boolean = bs.exists(_.hasNext)
-        def next(): Long = {
-          val d = bs.filter(_.hasNext).map(_.head).min
-          bs.foreach(b => if (b.hasNext && b.head == d) b.next())
-          d
-        }
-      }
+  /** One bool node as one ascending merge of ascending (id, score)
+    * streams, each id once: an id matches when every `must` stream holds
+    * it — or, with no must, some `should` stream — and no `mustNot`
+    * stream does; it scores Σ must + Σ should over the streams holding
+    * it, each sum in stream order. [[MatchSlice.ids]]' union of the field
+    * streams is the should-only case.
+    */
+  private[query] def merge(must: Seq[Iterator[(Long, Double)]], should: Seq[Iterator[(Long, Double)]],
+                    mustNot: Seq[Iterator[(Long, Double)]]): Iterator[(Long, Double)] = {
+    val Seq(ms, ss, ns) = Seq(must, should, mustNot).map(_.map(_.buffered))
+    /** The stream's first id ≥ `d`, or Long.MaxValue (at once when `d` is: an ended must ends the merge). */
+    def headAt(b: BufferedIterator[(Long, Double)], d: Long): Long = {
+      while (d != Long.MaxValue && b.hasNext && b.head._1 < d) b.next()
+      if (d == Long.MaxValue || !b.hasNext) Long.MaxValue else b.head._1
     }
+    /** Leapfrog over the musts, else the smallest should head. */
+    def candidate(): Long =
+      if (ms.isEmpty) ss.foldLeft(Long.MaxValue)((d, b) => math.min(d, headAt(b, 0L)))
+      else {
+        var d = 0L
+        var moved = true
+        while (moved) { moved = false; ms.foreach { b => val h = headAt(b, d); if (h > d) { d = h; moved = true } } }
+        d
+      }
+    Iterator.continually(candidate()).takeWhile(_ != Long.MaxValue).flatMap { d =>
+      val mustSum = ms.foldLeft(0.0)((x, b) => x + b.next()._2)
+      val shouldSum = ss.foldLeft(0.0)((x, b) => if (headAt(b, d) == d) x + b.next()._2 else x)
+      if (ns.exists(headAt(_, d) == d)) None
+      else Some((d, if (ms.nonEmpty) mustSum + shouldSum else shouldSum))
+    }
+  }
 
   /** One (segment, slice) of [[MultiSearcher.matchWalk]] and
     * [[MultiSearcher.scoredWalk]]: the AND early exit per field, the

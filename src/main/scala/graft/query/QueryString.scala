@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.index.{AttrPred, AttrSchema}
 
 /** ES/Lucene `query_string` — the Kibana search-bar mini-language the
@@ -46,18 +45,21 @@ import graft.index.{AttrPred, AttrSchema}
   *     FILTER (Kibana/KQL filter context; score 0). Undeclared field →
   *     loud error, never a silent empty result.
   *
-  * Scale shape: the tree is evaluated bottom-up as full per-clause match
-  * sets (ES pays the same — a composed bool has no cross-clause WAND
-  * bound) on [[MultiSearcher]] views — a single index is a one-segment
-  * view, a segment family a multi-segment one, and the tree logic is the
-  * same. Every scoring leaf is one [[MultiSearcher.exportMatches]] /
-  * [[MultiSearcher.exportPhrase]] walk that STREAMS its slice's matches
-  * (never buffered); every filter that is AND-reachable from the root is
-  * compiled into ONE composed [[AttrPred]] and pushed into every leaf
-  * walk's sidecar cursor — zero-exchange, so `source:x AND (a OR b)` scans
-  * only x's docs. Combines are doc_id equi-joins/aggregations (shuffle
-  * bounded by match-set sizes, AQE-planned). Flat single-level queries
-  * short-circuit to the block-max-gated [[MultiSearcher.topK]] fast path.
+  * Scale shape: flat single-level queries take the block-max-gated
+  * [[MultiSearcher.topK]] fast path. Any other tree compiles on the
+  * driver (one dictionary read per field view, plus one per fuzzy or
+  * pattern expansion) and runs as ONE walk of [[MultiSearcher.treeTopK]]
+  * over [[MultiSearcher]] views — a single index is a one-segment view, a
+  * segment family a multi-segment one, a `field:term` leaf walks its
+  * text field's view: one pushdown scan of every leaf's terms per view
+  * and segment, one exchange by (segment, slice), no join. Inside each
+  * task every leaf streams its full ascending match set (ES pays the
+  * same — a composed bool has no cross-clause WAND bound), each bool
+  * node is one sorted merge of its children's streams, and the root's
+  * matches are cut to the slice's top-k. Every filter that is
+  * AND-reachable from a leaf is compiled into ONE composed [[AttrPred]]
+  * and pushed into that leaf's own sidecar cursor, so
+  * `source:x AND (a OR b)` scores only x's docs.
   */
 object QueryString {
 
@@ -355,105 +357,73 @@ object QueryString {
   private def conj(a: AttrPred, b: AttrPred): AttrPred =
     if (a == null) b else if (b == null) a else AttrPred.And(Seq(a, b))
 
-  /** Plain (non-fuzzy) term leaves and phrase terms of the AST grouped
-    * by field (phrases search the default field) — the prefetch set for
-    * one-job term-stats resolution in the tree paths.
+  /** `b`'s pure-filter musts and must_nots folded into the AND context
+    * `ctx` (a new object iff any folded), and its scoring musts and
+    * must_nots.
     */
-  private def plainTermsByField(n: Node): Map[Option[String], Seq[String]] = {
-    def walk(n: Node): Seq[(Option[String], String)] = n match {
-      case TermLeaf(t, _, 0, f) => Seq((f, t))
-      case PhraseLeaf(ts, _)    => ts.map(t => (None, t))
-      case Bool(m, s, x)        => (m ++ s ++ x).flatMap(walk)
-      case _                    => Nil
-    }
-    walk(n).groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).distinct }
-  }
-
-  // ----------------------------------------------------------- tree eval
-  /** Evaluate to the full (doc_id, score) match set; `ctx` is the
-    * AND-context filter pushed into every walk below this node. `view`
-    * maps a leaf's field to the searcher it scores against (None = the
-    * default field; phrases and filters always use it).
-    */
-  private def eval(view: Option[String] => MultiSearcher, node: Node, ctx: AttrPred,
-                   maxExpansions: Int): DataFrame = {
-    val ms = view(None)
-    import ms.spark.implicits._
-    def boosted(df: DataFrame, b: Double): DataFrame =
-      if (b == 1.0) df else df.withColumn("score", $"score" * b)
-    node match {
-      case TermLeaf(t, b, 0, f) =>
-        boosted(view(f).exportMatches(Seq(t), "or", attrFilter = ctx), b)
-      case TermLeaf(t, b, edits, f) =>
-        val v = view(f)
-        boosted(v.exportMatches(v.expandFuzzyTerms(t, edits, maxExpansions), "or", attrFilter = ctx), b)
-      case PatternLeaf(p, b, f) =>
-        val v = view(f)
-        boosted(v.exportMatches(v.expandPatternTerms(p, maxExpansions), "or", attrFilter = ctx), b)
-      case PhraseLeaf(terms, b) =>
-        boosted(ms.exportPhrase(terms, ctx), b)
-      case FilterLeaf(p) =>
-        ms.filterDocIds(conj(ctx, p))
-      case b: Bool => evalBool(view, b, ctx, maxExpansions)
-    }
-  }
-
-  private def evalBool(view: Option[String] => MultiSearcher,
-                       b: Bool, ctx: AttrPred, maxExpansions: Int): DataFrame = {
-    val ms = view(None)
-    import ms.spark.implicits._
-    // 1. every pure-filter MUST / MUST_NOT folds into the pushdown context
+  private def fold(b: Bool, ctx: AttrPred): (AttrPred, Seq[Node], Seq[Node]) = {
     val (filterMusts, scoringMusts) = b.must.partition(asFilter(_).isDefined)
     val (filterNots, scoringNots) = b.mustNot.partition(asFilter(_).isDefined)
-    val ctx2 = (filterMusts.flatMap(asFilter) ++ filterNots.flatMap(asFilter).map(AttrPred.Not))
-      .foldLeft(ctx)(conj)
+    ((filterMusts.flatMap(asFilter) ++ filterNots.flatMap(asFilter).map(AttrPred.Not)).foldLeft(ctx)(conj),
+      scoringMusts, scoringNots)
+  }
 
-    val mustDfs = scoringMusts.map(eval(view, _, ctx2, maxExpansions))
-    val hasMust = mustDfs.nonEmpty || filterMusts.nonEmpty || filterNots.nonEmpty
-
-    // 2. SHOULD clauses: with a MUST present, a pure-filter should is a
-    //    no-op (contributes neither score nor gating — Lucene); scoring
-    //    shoulds always contribute score
-    val shouldChildren =
-      if (mustDfs.nonEmpty || filterMusts.nonEmpty) b.should.filter(asFilter(_).isEmpty)
-      else b.should
-    val shouldDfs = shouldChildren.map(eval(view, _, ctx2, maxExpansions))
-    val shouldSum =
-      if (shouldDfs.isEmpty) None
-      else Some(
-        shouldDfs.reduce(_ unionByName _)
-          .groupBy($"doc_id").agg(sum($"score").as("score")))
-
-    // 3. base = musts joined (score=sum); no scoring must → should-sum is
-    //    the base (msm=1); no scoring clause at all → the filter universe
-    var base: DataFrame =
-      if (mustDfs.nonEmpty)
-        mustDfs.reduce { (l, r) =>
-          l.as("l").join(r.as("r"), "doc_id")
-            .select($"doc_id", ($"l.score" + $"r.score").as("score"))
-        }
-      else shouldSum.getOrElse {
-        require(hasMust, "query has no positive clause")
-        ms.filterDocIds(if (ctx2 != null) ctx2 else AttrPred.And(Nil))
+  // ------------------------------------------------------ tree compile
+  /** A non-flat tree compiled and run as one [[MultiSearcher.treeTopK]]
+    * walk over its field views (0 is `ms`, then each text field a leaf
+    * names, in order of first use). The semantics' gating applies here;
+    * a leaf carries its AND context, scoring must_nots none. The tree is
+    * shaped first and built from the dfs, so each field's terms resolve
+    * in one dictionary read.
+    */
+  private def treeTopK(ms: MultiSearcher, textFields: Map[String, MultiSearcher], ast: Bool, k: Int,
+                       maxExpansions: Int): DataFrame = {
+    import MultiSearcher.TreeQ
+    type Build = Seq[Map[String, Long]] => TreeQ
+    val names = scala.collection.mutable.ArrayBuffer[Option[String]](None)
+    val termsOf = scala.collection.mutable.ArrayBuffer(Seq.empty[String])
+    def field(f: Option[String]): Int = {
+      if (!names.contains(f)) { names += f; termsOf += Nil }
+      names.indexOf(f)
+    }
+    def view(fi: Int): MultiSearcher = names(fi).fold(ms)(textFields)
+    def scoring(fi: Int, expand: MultiSearcher => Seq[String], boost: Double, ctx: AttrPred): Build = {
+      val terms = expand(view(fi))
+      termsOf(fi) ++= terms
+      dfs => {
+        val present = terms.distinct.filter(dfs(fi).contains)
+        TreeQ.Terms(fi, present.toArray, present.map(t => NaiveBm25.idf(view(fi).nDocs, dfs(fi)(t))).toArray,
+          boost, ctx)
       }
-
-    // 4. optional should boost on top of musts (left join, coalesce)
-    if (mustDfs.nonEmpty) shouldSum.foreach { ss =>
-      base = base.as("b").join(ss.as("s"), Seq("doc_id"), "left")
-        .select($"doc_id", ($"b.score" + coalesce($"s.score", lit(0.0))).as("score"))
     }
-
-    // 5. scoring MUST_NOTs: one union'd anti join
-    if (scoringNots.nonEmpty) {
-      val ex = scoringNots.map(eval(view, _, null, maxExpansions))
-        .reduce(_ unionByName _)
-      base = base.join(ex.select($"doc_id"), Seq("doc_id"), "left_anti")
+    def shape(n: Node, ctx: AttrPred): Build = n match {
+      case TermLeaf(t, b, 0, f) => scoring(field(f), _ => Seq(t), b, ctx)
+      case TermLeaf(t, b, edits, f) => scoring(field(f), _.expandFuzzyTerms(t, edits, maxExpansions), b, ctx)
+      case PatternLeaf(p, b, f) => scoring(field(f), _.expandPatternTerms(p, maxExpansions), b, ctx)
+      case PhraseLeaf(ts, b) =>
+        termsOf(0) ++= ts
+        val ps = MultiSearcher.phraseShape(ts)
+        dfs =>
+          if (ps.terms.forall(dfs(0).contains))
+            TreeQ.Phrase(ps.terms, ps.offsets, ts.map(t => NaiveBm25.idf(ms.nDocs, dfs(0)(t))).sum, b, ctx)
+          else TreeQ.Terms(0, Array.empty, Array.empty, b, null)
+      case FilterLeaf(p) => _ => TreeQ.Filter(conj(ctx, p))
+      case b @ Bool(m, s, _) =>
+        val (ctx2, scoringMusts, scoringNots) = fold(b, ctx)
+        val must = scoringMusts.map(shape(_, ctx2))
+        val should = (if (m.nonEmpty) s.filter(asFilter(_).isEmpty) else s).map(shape(_, ctx2))
+        if (must.isEmpty && should.isEmpty) {
+          require(ctx2 ne ctx, "query has no positive clause")
+          _ => TreeQ.Filter(ctx2)
+        } else {
+          val mustNot = scoringNots.map(shape(_, null))
+          dfs => TreeQ.Bool(must.map(_(dfs)), should.map(_(dfs)), mustNot.map(_(dfs)))
+        }
     }
-
-    // 6. when the ONLY musts were filters, scoring-must-less matches must
-    //    still honor membership: base came from shouldSum (already
-    //    ctx2-pushed) or the filter universe — both already gated. Done.
-    base
+    val build = shape(ast, null)
+    val views = FieldedSearch.views(names.indices.map(fi => names(fi).getOrElse("") -> view(fi)))
+    val dfs = views.indices.map(fi => views(fi).dfOf(termsOf(fi)))
+    ms.treeTopK(views.indices.map(fi => views(fi) -> termsOf(fi).distinct.filter(dfs(fi).contains)), build(dfs), k)
   }
 
   // ------------------------------------------------------------- public
@@ -482,15 +452,7 @@ object QueryString {
     compileFlat(ast).map { f =>
       ms.topK(f.terms, f.mode, k, attrFilter = f.attrFilter, mustNot = f.mustNot,
         minShouldMatch = f.minShouldMatch, boosts = f.boosts)
-    }.getOrElse {
-      val view = (f: Option[String]) => f.map(textFields).getOrElse(ms)
-      // warm each searcher's dictionary memo with every plain term in
-      // the AST: one dictionary job per searcher, not one per leaf
-      plainTermsByField(ast).foreach { case (f, ts) => view(f).dfOf(ts) }
-      eval(view, ast, null, maxExpansions)
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(k)
-    }
+    }.getOrElse(treeTopK(ms, textFields, ast, k, maxExpansions))
   }
 
   /** A FLAT query compiled to the engine's standard bool vocabulary —
@@ -518,8 +480,7 @@ object QueryString {
   private def compileFlat(b: Bool): Option[Flat] = {
     def plainTerm(n: Node): Option[(String, Double)] =
       n match { case TermLeaf(t, boost, 0, None) => Some((t, boost)); case _ => None }
-    val (filterMusts, scoringMusts) = b.must.partition(asFilter(_).isDefined)
-    val (filterNots, scoringNots) = b.mustNot.partition(asFilter(_).isDefined)
+    val (pred0, scoringMusts, scoringNots) = fold(b, null)
     // `filter AND (a OR b)` — THE Kibana shape — is flat too: a single
     // scoring must that is itself a pure-should group of plain terms
     // unwraps to (or, its terms)
@@ -534,8 +495,6 @@ object QueryString {
     val notTerms = scoringNots.map(plainTerm)
     if ((mustTerms ++ shouldTerms ++ notTerms).exists(_.isEmpty)) return None
     if (mustTerms.nonEmpty && shouldTerms.nonEmpty) return None // mixed: tree path
-    val pred0 = (filterMusts.flatMap(asFilter) ++ filterNots.flatMap(asFilter).map(AttrPred.Not))
-      .foldLeft(null: AttrPred)(conj)
     val (terms, mode) =
       if (mustTerms.nonEmpty) (mustTerms.flatten, "and") else (shouldTerms.flatten, "or")
     if (terms.isEmpty) return None // pure filter → tree path handles

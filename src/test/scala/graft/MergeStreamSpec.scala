@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.index.{IndexBuilder, SegmentMerge}
+import graft.index.{IndexBuilder, PostingsRef, SegmentMerge}
 import graft.index.IndexBuilder.BuildConfig
 import graft.query.{NaiveBm25, Search}
 import graft.sources.{HtmlText, PagesGen}
@@ -119,7 +119,7 @@ class MergeStreamSpec extends AnyFunSuite {
     }
     val avgDl = IndexBuilder.readStats(spark, d).avg_dl
     val expected = rows.groupBy(_._2 * cfg.nGroups / cfg.nSlices).toSeq.flatMap { case (g, rs) =>
-      IndexBuilder.blockify(rs.sortBy(r => (r._1, r._2, r._3)).iterator, g, cfg.blockSize, avgDl)
+      PostingsRef.blockify(rs.sortBy(r => (r._1, r._2, r._3)).iterator, g, cfg.blockSize, avgDl)
     }
     assert(dumpPostings(d) == expected.map(postingKey).sortBy(t => (t._1, t._2, t._3)),
       "the chunk exchange must produce the row-by-row blocks")
@@ -155,8 +155,8 @@ class MergeStreamSpec extends AnyFunSuite {
         graft.functions.Codec.encodeInts(dls), pos)
     }.sortBy(r => (r._1, r._2, r._3))
     def chunkIt = rows.iterator.map(r => (r._1, r._2, r._4, r._5, r._6, r._7, r._8))
-    val legacy = IndexBuilder
-      .blockify(IndexBuilder.mergeChunks(chunkIt), grp = 0, blockSize = 16, avgDl = 37.5)
+    val legacy = PostingsRef
+      .blockify(PostingsRef.mergeChunks(chunkIt), grp = 0, blockSize = 16, avgDl = 37.5)
       .toSeq
     val fused = IndexBuilder
       .mergeChunksToBlocks(chunkIt, grp = 0, blockSize = 16, avgDl = 37.5)

@@ -172,10 +172,14 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"query_string plan has a non-equi join:\n$plan")
     assert("PushedFilters: [^\\n]*term".r.findFirstIn(plan).isDefined,
       "leaf walks must push term predicates to the postings scan")
+    // the whole tree is one walk: the postings exchange by (segment,
+    // slice), no doc_id join
+    def exchanges(p: String) = "Exchange".r.findAllIn(p).size
+    assert(!plan.contains("Join"), s"query_string tree plan joins:\n$plan")
+    assert(exchanges(plan) == 1, s"query_string tree plan needs one postings exchange:\n$plan")
     // filter pushdown: an AND-reachable attr filter rides the sidecar
     // cursor, so the plan scans no docs table and adds no exchange vs
     // the unfiltered tree
-    def exchanges(p: String) = "Exchange".r.findAllIn(p).size
     val filtered = graft.query.QueryString.topK(spark, dir,
       "lang:ru AND ((w1 AND w2) OR (w3 AND -w4))", 10)
     assert(exchanges(executedPlan(filtered)) == exchanges(plan),

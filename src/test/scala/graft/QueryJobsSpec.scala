@@ -17,8 +17,10 @@ import graft.sources.PagesGen
   * shuffle map stage + result, at most 3 jobs, on one index or a segment
   * family; an expansion query reuses its expansion's doc_freq rows, so it
   * adds no second dictionary job; a query_string tree resolves all its
-  * leaves' terms in one dictionary job; `Searcher` runs on a one-segment
-  * view, so its top-k, batch walk and driver-local walk (gated, or its
+  * leaves' terms in one dictionary job per field view and runs as one
+  * walk, so a bool tree runs at most 3 jobs, or 4 with a fielded leaf;
+  * `Searcher` runs on a one-segment view, so its top-k, batch walk and
+  * driver-local walk (gated, or its
   * distributed fallback) each resolve a query's dictionary once, and the
   * unscored match walks (aggregations, `_count`, sort-by-field) read no
   * dictionary at all. more_like_this selects its terms and retrieves on
@@ -84,6 +86,25 @@ class QueryJobsSpec extends AnyFunSuite {
     assertNoInference("QueryString.topK", tree)
     val dictionary = tree.filter(_.exists(_.startsWith("collect at MultiSearcher.scala")))
     assert(dictionary.size == 1, s"tree dictionary jobs: $tree")
+  }
+
+  test("query_string bool trees run as one walk: serve's two bool shapes run at most 3 and 4 jobs") {
+    val dir = this.dir
+    val title = Files.createTempDirectory("graft-jobs-qs-title").toString
+    IndexBuilder.build(spark, IndexSearchSpec.titlePages(300, _ => true), title,
+      BuildConfig(nPartitions = 4, nGroups = 2, nSlices = 4, blockSize = 16))
+    // (query, text fields, max jobs): the dictionary job per field view,
+    // then the walk's exchange and result
+    val calls = Seq(
+      ("(w0 OR w1) AND w2 -w3 doc_len:[40 TO 160]", Map.empty[String, String], 3),
+      ("title:w0 AND (w1 OR w2) lang:en AND NOT w3", Map("title" -> title), 4))
+    calls.foreach { case (q, textFields, max) =>
+      val jobs = jobsOf(QueryString.topK(spark, dir, q, 10, textFields = textFields).collect())
+      info(s"$q: ${jobs.size} jobs")
+      assertNoInference(q, jobs)
+      assert(jobs.size <= max, s"[$q] ran ${jobs.size} jobs: $jobs")
+    }
+    new scala.reflect.io.Directory(new java.io.File(title)).deleteRecursively()
   }
 
   test("a term query over a two-segment family runs at most 3 jobs; its dictionary lookup does not shuffle") {

@@ -282,6 +282,21 @@ class QueryStringSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a fielded leaf whose field has another slice layout fails, naming the field") {
+    val titleDir = Files.createTempDirectory("graft-qs-title-slices")
+    try {
+      IndexBuilder.build(spark, PagesGen.pages(spark, NDocs, 8), titleDir.toString,
+        BuildConfig(nPartitions = 8, nGroups = 2, nSlices = 2, blockSize = 64))
+      val e = intercept[IllegalArgumentException](
+        QueryString.topK(spark, dir.toString, "title:w1 AND (w2 OR w3)", 10,
+          textFields = Map("title" -> titleDir.toString)).collect())
+      assert(e.getMessage.contains("'title'") && e.getMessage.contains("slice layout"), e.getMessage)
+    } finally {
+      import scala.reflect.io.Directory
+      new Directory(titleDir.toFile).deleteRecursively()
+    }
+  }
+
   test("segment family ≡ single index for every query_string shape") {
     import graft.query.MultiSearcher
     // two url-ordered halves of the SAME corpus: family global ids equal
