@@ -156,11 +156,6 @@ object BlockMaxWand {
       if (i >= ids.length) { bi += 1; i = 0; ids = null; decodeIfNeeded() }
     }
 
-    /** Skip past the current block (BMW shallow skip). */
-    def skipBlock(): Unit = {
-      if (!exhausted) { bi += 1; i = 0; ids = null; decodeIfNeeded() }
-    }
-
     /** METADATA-ONLY advance: move past every block ending before
       * `target` without decoding any payload — the skip-gate loop bounds
       * successive blocks purely from (docIdMax, maxImpact) columns and
@@ -172,21 +167,6 @@ object BlockMaxWand {
       if (bi < blocks.length && blocks(bi).docIdMax >= target) return
       while (bi < blocks.length && blocks(bi).docIdMax < target) {
         bi += 1; i = 0; ids = null
-      }
-    }
-
-    /** METADATA-ONLY run hop: after [[shallowAdvance]]`(target)`, when the
-      * current block is dense (it holds every id of [docIdMin, docIdMax])
-      * and covers `target`, every id from `target` to docIdMax is a
-      * posting, so this returns docIdMax + 1 without decoding; else
-      * `target`.
-      */
-    def denseRunEnd(target: Long): Long = {
-      shallowAdvance(target)
-      if (exhausted) target
-      else {
-        val b = blocks(bi)
-        if (b.docIdMin <= target && b.docIdMax - b.docIdMin + 1 == b.count) b.docIdMax + 1 else target
       }
     }
   }

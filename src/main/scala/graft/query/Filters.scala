@@ -103,22 +103,6 @@ final class PostingSet(iters: Array[PostingIter]) extends DocSet {
     }
     m
   }
-
-  /** Run-aware: a dense block of an excluded term that covers the
-    * target is crossed by its metadata alone ([[PostingIter.denseRunEnd]]),
-    * so the blocks inside an excluded run of consecutive ids are never
-    * decoded; elsewhere the probe-by-one walk.
-    */
-  override def nextAbsent(target: Long): Long = {
-    var t = target
-    var last = -1L
-    while (t != last) {
-      last = t
-      iters.foreach(it => t = it.denseRunEnd(t))
-      if (t == last && t != Long.MaxValue && matches(t)) t += 1
-    }
-    t
-  }
 }
 
 /** Complement of a [[DocSet]] as a [[DocFilter]] — the ES `must_not`
@@ -198,10 +182,4 @@ object Filters {
   /** null-tolerant AND: either side absent → the other. */
   def and(a: DocFilter, b: DocFilter): DocFilter =
     if (a == null) b else if (b == null) a else new AndFilter(a, b)
-
-  /** Stream every allowed id ≥ `from` via the monotone ceil walk —
-    * O(1) memory however many ids the filter admits.
-    */
-  def enumerate(f: DocFilter, from: Long): Iterator[Long] =
-    Iterator.iterate(f.ceil(from))(d => f.ceil(d + 1)).takeWhile(_ != Long.MaxValue)
 }

@@ -204,8 +204,12 @@ final class MultiSearcher(
     hits.toDF().orderBy(desc("score"), asc("doc_id")).limit(k)
 
   /** (n_docs, nSlices) per segment: fields of one doc space agree on it. */
-  private[query] def layout: Seq[(Long, Int)] =
+  private[query] lazy val layout: Seq[(Long, Int)] =
     segStats.map(_.n_docs).zip(segmentDirs.map(IndexBuilder.readMeta(_).nSlices))
+
+  /** Every (segment, slice) of this view. */
+  private def slices: Seq[(Int, Int)] =
+    layout.zipWithIndex.flatMap { case ((_, nSlices), si) => (0 until nSlices).map((si, _)) }
 
   /** This query's context over `views` (this view's doc space, each
     * view's avgdl and bound rule); the driver-local walk uses it as is.
@@ -227,8 +231,8 @@ final class MultiSearcher(
     */
   private def blocks(fields: Seq[(MultiSearcher, Seq[String])], everySlice: Boolean): Dataset[Block] = {
     require(fields.head._1 eq this, "field 0 is the view that walks")
-    val markers = if (!everySlice) Nil else Seq(layout.zipWithIndex.flatMap { case ((_, nSlices), si) =>
-      (0 until nSlices).map(Block(-1, si, _, null, 0, 0L, 0L, 0, null, null, null, null, 0.0, 0, 0))
+    val markers = if (!everySlice) Nil else Seq(slices.map { case (si, slice) =>
+      Block(-1, si, slice, null, 0, 0L, 0L, 0, null, null, null, null, 0.0, 0, 0)
     }.toDS().toDF())
     (markers ++ (for {
       ((v, terms), fi) <- fields.zipWithIndex if terms.nonEmpty
@@ -247,7 +251,9 @@ final class MultiSearcher(
   /** Blocks of `fields` grouped by (segment, slice), each group handed to
     * `walk` by field and term, with this query's broadcast context. With
     * `everySlice`, every (segment, slice) of this view is a group, also
-    * one where no term has blocks.
+    * one where no term has blocks; when no field has terms, the groups
+    * are the (segment, slice) list itself, walked with no scan and no
+    * exchange.
     */
   private def walkGroups[Q, R: Encoder](fields: Seq[(MultiSearcher, Seq[String])], q: Q,
                                         everySlice: Boolean = false)(
@@ -255,7 +261,13 @@ final class MultiSearcher(
   ): Dataset[R] = {
     val b = context(q, fields.map(_._1))
     val n = fields.size
-    blocks(fields, everySlice).groupByKey(r => (r.seg, r.slice))
+    if (everySlice && fields.forall(_._2.isEmpty)) {
+      val tasks = slices.toArray
+      spark.range(tasks.length).as[Long].flatMap { i =>
+        val (seg, slice) = tasks(i.toInt)
+        walk(b.value, seg, slice, Array.fill(n)(Map.empty: TermBlocks))
+      }
+    } else blocks(fields, everySlice).groupByKey(r => (r.seg, r.slice))
       .flatMapGroups((key, rows) => walk(b.value, key._1, key._2, MultiSearcher.byField(rows, n)))
   }
 
@@ -966,8 +978,9 @@ object MultiSearcher {
           if (!terms.forall(fields(0).contains)) Iterator.empty
           else boosted(BlockMaxWand.phraseMatches(terms.map(t => c.iter(fields(0)(t), 0, 0.0)), offsets, filter(ctx))
             .map { case (d, freq, dl) => (d, idfSum * IndexBuilder.impact(freq, dl, c.avgDl)) }, boost)
-        case TreeQ.Filter(pred) =>
-          Filters.enumerate(filter(pred), 0L).map((_, 0.0))
+        case TreeQ.Filter(pred) => // every admitted id, by the monotone ceil walk
+          val f = filter(pred)
+          Iterator.iterate(f.ceil(0L))(d => f.ceil(d + 1)).takeWhile(_ != Long.MaxValue).map((_, 0.0))
         case TreeQ.Bool(must, should, mustNot) =>
           merge(must.map(eval), should.map(eval), mustNot.map(eval))
       }

@@ -52,7 +52,9 @@ import graft.index.{AttrPred, AttrSchema}
   * over [[MultiSearcher]] views — a single index is a one-segment view, a
   * segment family a multi-segment one, a `field:term` leaf walks its
   * text field's view: one pushdown scan of every leaf's terms per view
-  * and segment, one exchange by (segment, slice), no join. Inside each
+  * and segment, one exchange by (segment, slice), no join; a tree of
+  * filters alone scans nothing and runs one task per (segment, slice)
+  * with no exchange. Inside each
   * task every leaf streams its full ascending match set (ES pays the
   * same — a composed bool has no cross-clause WAND bound), each bool
   * node is one sorted merge of its children's streams, and the root's

@@ -184,6 +184,11 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "lang:ru AND ((w1 AND w2) OR (w3 AND -w4))", 10)
     assert(exchanges(executedPlan(filtered)) == exchanges(plan),
       "sidecar filter must not add exchanges to the query_string tree")
+    // a tree of filters alone has no terms to scan: its tasks walk the
+    // (segment, slice) list, with no postings scan and no exchange
+    val pure = executedPlan(graft.query.QueryString.topK(spark, dir, "lang:ru AND doc_len:>50", 10))
+    assert(exchanges(pure) == 0 && !pure.contains("Scan parquet"),
+      s"a pure-filter query_string tree scans or shuffles:\n$pure")
   }
 
   test("percolate is a pure map: zero exchanges, zero joins") {

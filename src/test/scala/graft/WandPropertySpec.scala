@@ -107,54 +107,6 @@ class WandPropertySpec extends AnyFunSuite {
     assert(decodes <= 8, s"AND gate decoded $decodes of ${2 * nBlocks} blocks")
   }
 
-  test("must_not over a run of consecutive ids: the dense-block hop keeps ids and score bits, decodes fewer blocks") {
-    // synthetic blocks, no Spark: every doc holds term 0, every 7th term
-    // 1, and the excluded term's postings are the one run 200..1799 —
-    // 100 dense blocks. Under `or` (a rejected pivot) and `groupTopK` (the
-    // disjunction's filter-gap jump) the filter's ceil crosses the run:
-    // by block metadata with the hop, probe by probe without it
-    import graft.query.{BlockMaxWand, DocFilter, DocSet, NotFilter, PostingSet}
-    import graft.query.BlockMaxWand.{BlockRef, PostingIter}
-    import graft.functions.Codec
-    import graft.index.IndexBuilder.impact
-    val avgDl = 100.0
-    val n = 2000
-    def blocks(ids: Seq[Long], tf: Long => Int): Array[BlockRef] =
-      ids.grouped(16).map { g =>
-        val a = g.toArray
-        val tfs = a.map(tf)
-        val dls = a.map(i => 80 + (i % 40).toInt)
-        BlockRef(a.head, a.last, a.length, Codec.encodeGapsFromBase(a), Codec.encodeIntsAuto(tfs),
-          Codec.encodeIntsAuto(dls), Array.empty[Byte], a.indices.map(j => impact(tfs(j), dls(j), avgDl)).max)
-      }.toArray
-    def iters() = Array(
-      new PostingIter(0, 0.7, blocks(0L until n, i => 1 + (i % 5).toInt), avgDl),
-      new PostingIter(1, 1.3, blocks((0L until n).filter(_ % 7 == 0), _ => 2), avgDl))
-    def mustNot(hop: Boolean): DocFilter = {
-      val set = new PostingSet(Array(new PostingIter(0, 0.0, blocks(200L until 1800L, _ => 1), avgDl)))
-      // without the hop: the same set behind DocSet's probe-by-one nextAbsent
-      new NotFilter(if (hop) set else new DocSet { def matches(t: Long): Boolean = set.matches(t) })
-    }
-    val walks: Seq[(String, DocFilter => Array[BlockMaxWand.Hit])] = Seq(
-      "or" -> (f => BlockMaxWand.or(iters(), n, f)),
-      "groupTopK" -> (f => BlockMaxWand.groupTopK(iters().map(Array(_)), Array(0.7, 1.3), avgDl,
-        isAnd = false, 1, n, f, None)))
-    walks.foreach { case (what, walk) =>
-      def run(hop: Boolean): (Seq[(Long, Long)], Long) = {
-        BlockMaxWand.blockDecodes.reset()
-        val hits = walk(mustNot(hop))
-        (hits.map(h => (h.docId, java.lang.Double.doubleToRawLongBits(h.score))).toSeq,
-          BlockMaxWand.blockDecodes.sum())
-      }
-      val (hopped, hopDecodes) = run(hop = true)
-      val (probed, probeDecodes) = run(hop = false)
-      info(s"$what: $hopDecodes block decodes with the hop, $probeDecodes without")
-      assert(hopped.size == n - 1600, s"$what: ${hopped.size} hits")
-      assert(hopped == probed, s"$what: ids or raw score bits differ with the hop")
-      assert(hopDecodes < probeDecodes, s"$what: $hopDecodes decodes with the hop, $probeDecodes without")
-    }
-  }
-
   test("filtered WAND and phrase ≡ naive oracles on random corpora (8 corpora)") {
     import org.apache.spark.sql.functions.col
     (0 until 8).foreach { trial =>
